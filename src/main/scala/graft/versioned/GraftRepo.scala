@@ -262,76 +262,46 @@ final class GraftRepo private (val root: Path, val io: GraftIO,
     c
   }
 
-  /** Optimistic-retry commit: apply `mutate` to the current head and CAS;
-    * on a lost race, re-read the new head and re-apply (table-level
-    * rebase — `mutate` only touches its own table keys, so replaying onto
-    * the new head is the natural rebase).
+  /** The optimistic-retry commit every head-relative writer shares: read
+    * the head, apply `mutate` to it, CAS the next ref version; on a lost
+    * race re-read the new head and re-apply (table-level rebase —
+    * `mutate` only touches its own keys, so replaying onto the new head
+    * is the natural rebase).
     */
+  private def commitOnHead(branch: String, message: String,
+      marker: Option[String])(
+      mutate: Commit => (Map[String, String],
+        Map[String, Map[String, String]], Map[String, ViewDef])): Commit =
+    GraftRepo.casRetry {
+      val (v, hid) = head(branch)
+      val (tables, namespaces, views) = mutate(commit(hid))
+      commitAt(branch, v, Seq(hid), message, tables, namespaces, views, marker)
+    }
+
+  /** Table + namespace commit; the base's views ride forward untouched. */
   def commitRetry(branch: String, message: String,
       marker: Option[String] = None)(
-      mutate: Commit => (Map[String, String], Map[String, Map[String, String]])): Commit = {
-    var attempts = 0
-    while (true) {
-      val (v, hid) = head(branch)
-      val base = commit(hid)
+      mutate: Commit => (Map[String, String], Map[String, Map[String, String]])): Commit =
+    commitOnHead(branch, message, marker) { base =>
       val (tables, namespaces) = mutate(base)
-      // table commits carry the base's views forward untouched
-      try return commitAt(branch, v, Seq(hid), message, tables, namespaces,
-        base.viewMap, marker)
-      catch {
-        case e: CommitConflictException =>
-          attempts += 1
-          if (attempts >= 10) throw e
-      }
+      (tables, namespaces, base.viewMap)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
-  /** View-map commit with the same optimistic-retry protocol; tables and
-    * namespaces ride through untouched.
-    */
+  /** View-map commit; tables and namespaces ride through untouched. */
   def commitRetryViews(branch: String, message: String)(
-      mutate: Commit => Map[String, ViewDef]): Commit = {
-    var attempts = 0
-    while (true) {
-      val (v, hid) = head(branch)
-      val base = commit(hid)
-      val views = mutate(base)
-      try return commitAt(branch, v, Seq(hid), message, base.tables,
-        base.namespaces, views)
-      catch {
-        case e: CommitConflictException =>
-          attempts += 1
-          if (attempts >= 10) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      mutate: Commit => Map[String, ViewDef]): Commit =
+    commitOnHead(branch, message, None)(base =>
+      (base.tables, base.namespaces, mutate(base)))
 
-  /** Full-map commit (tables + namespaces + views) with the same
-    * optimistic-retry protocol — for operations that atomically touch
-    * more than one map (dropping a db namespace removes its tables AND
-    * its views in ONE commit; two commits would leave a window where
-    * ghost views resolve against a dropped namespace).
+  /** Full-map commit (tables + namespaces + views) — for operations that
+    * atomically touch more than one map (dropping a db namespace removes
+    * its tables AND its views in ONE commit; two commits would leave a
+    * window where ghost views resolve against a dropped namespace).
     */
   def commitRetryAll(branch: String, message: String)(
       mutate: Commit => (Map[String, String],
-        Map[String, Map[String, String]], Map[String, ViewDef])): Commit = {
-    var attempts = 0
-    while (true) {
-      val (v, hid) = head(branch)
-      val base = commit(hid)
-      val (tables, namespaces, views) = mutate(base)
-      try return commitAt(branch, v, Seq(hid), message, tables,
-        namespaces, views)
-      catch {
-        case e: CommitConflictException =>
-          attempts += 1
-          if (attempts >= 10) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+        Map[String, Map[String, String]], Map[String, ViewDef])): Commit =
+    commitOnHead(branch, message, None)(mutate)
 
   // ---- branch / merge / diff -------------------------------------------
 
@@ -542,12 +512,6 @@ final class GraftRepo private (val root: Path, val io: GraftIO,
     else exhaustive()
   }
 
-  /** Merge `srcBranch` into `dstBranch` (mirrors
-    * tests/test_iceberg.py:29-41 delete-on-dev-and-merge semantics).
-    * Fast-forward when dst is an ancestor of src; otherwise a 3-way
-    * table-level merge: per table take whichever side changed vs the
-    * base; both changed -> MergeConflictException.
-    */
   /** Row-level 3-way merge of one table changed on BOTH branches: when
     * each side only APPENDED files to the base snapshot (no deletes, no
     * rewrites, no tombstones, no schema/spec change), the true merge is
@@ -612,69 +576,76 @@ final class GraftRepo private (val root: Path, val io: GraftIO,
       if (props.isEmpty) None else Some(props), b.retired).id
   }
 
-  def merge(srcBranch: String, dstBranch: String, message: String = ""): Commit = {
-    var attempts = 0
-    while (true) {
+  /** Merge `srcBranch` into `dstBranch` (mirrors
+    * tests/test_iceberg.py:29-41 delete-on-dev-and-merge semantics).
+    * Fast-forward when dst is an ancestor of src; otherwise a 3-way
+    * table-level merge: per table take whichever side changed vs the
+    * base; both changed -> MergeConflictException.
+    * CAS-retried like every ref move.
+    */
+  def merge(srcBranch: String, dstBranch: String, message: String = ""): Commit =
+    GraftRepo.casRetry {
       val srcCid = head(srcBranch)._2
       val (dstV, dstCid) = head(dstBranch)
-      if (srcCid == dstCid) return commit(dstCid)
-      val base = mergeBase(srcCid, dstCid)
-      if (base == srcCid) return commit(dstCid) // src already contained
-      try {
-        if (base == dstCid) { // fast-forward
-          casRef(dstBranch, dstV, srcCid)
-          return commit(srcCid)
-        }
-        val b = commit(base); val s = commit(srcCid); val d = commit(dstCid)
-        val keys = b.tables.keySet ++ s.tables.keySet ++ d.tables.keySet
-        val merged = keys.flatMap { k =>
-          val (bv, sv, dv) = (b.tables.get(k), s.tables.get(k), d.tables.get(k))
-          if (sv == bv) dv.map(k -> _)                // src untouched -> dst wins
-          else if (dv == bv) sv.map(k -> _)           // dst untouched -> src wins
-          else if (sv == dv) sv.map(k -> _)           // both converged
-          else (bv, sv, dv) match {
-            // both sides changed: row-level 3-way merge when both only
-            // APPENDED (the dominant concurrent-ingest case)
-            case (Some(bid), Some(sid), Some(did)) =>
-              Some(k -> mergeAppendOnly(k, bid, sid, did))
-            case _ =>
-              throw new MergeConflictException(s"table $k changed on both sides")
-          }
-        }.toMap
-        val nsKeys = b.namespaces.keySet ++ s.namespaces.keySet ++ d.namespaces.keySet
-        val mergedNs = nsKeys.flatMap { k =>
-          val (bv, sv, dv) = (b.namespaces.get(k), s.namespaces.get(k), d.namespaces.get(k))
-          if (sv == bv) dv.map(k -> _) else sv.map(k -> _)
-        }.toMap
-        // views three-way like tables (a view is one definition — no
-        // row-level sub-merge to attempt)
-        val vKeys = b.viewMap.keySet ++ s.viewMap.keySet ++ d.viewMap.keySet
-        val mergedViews = vKeys.flatMap { k =>
-          val (bv, sv, dv) = (b.viewMap.get(k), s.viewMap.get(k), d.viewMap.get(k))
-          if (sv == bv) dv.map(k -> _)
-          else if (dv == bv || sv == dv) sv.map(k -> _)
-          else throw new MergeConflictException(s"view $k changed on both sides")
-        }.toMap
-        // Tables and views merge independently above, so a table db/x
-        // created on one branch and a view db/x on the other would both
-        // land in the merged commit — breaking the shared table/view
-        // namespace that createTable/createView/CTAS enforce (loadTable
-        // and loadView would each resolve the same key). Reject the merge.
-        val shared = merged.keySet.intersect(mergedViews.keySet)
-        shared.headOption.foreach { k =>
-          throw new MergeConflictException(
-            s"$k is a table on one side and a view on the other")
-        }
+      val base = if (srcCid == dstCid) srcCid else mergeBase(srcCid, dstCid)
+      if (base == srcCid) commit(dstCid) // src already contained
+      else if (base == dstCid) { // fast-forward
+        casRef(dstBranch, dstV, srcCid)
+        commit(srcCid)
+      } else {
+        val (tables, namespaces, views) = threeWay(base, srcCid, dstCid)
         val msg = if (message.nonEmpty) message else s"merge $srcBranch into $dstBranch"
-        val c = writeCommit(Seq(dstCid, srcCid), msg, merged, mergedNs, mergedViews)
-        casRef(dstBranch, dstV, c.id)
-        return c
-      } catch {
-        case e: CommitConflictException =>
-          attempts += 1; if (attempts >= 10) throw e
+        commitAt(dstBranch, dstV, Seq(dstCid, srcCid), msg, tables, namespaces, views)
       }
     }
-    throw new IllegalStateException("unreachable")
+
+  /** 3-way merge of the table, namespace and view maps of `srcCid` and
+    * `dstCid` against their merge base: per key take whichever side
+    * changed; both changed -> MergeConflictException (tables first try
+    * the row-level append-union, [[mergeAppendOnly]]).
+    */
+  private def threeWay(baseCid: String, srcCid: String, dstCid: String): (
+      Map[String, String], Map[String, Map[String, String]], Map[String, ViewDef]) = {
+    val b = commit(baseCid); val s = commit(srcCid); val d = commit(dstCid)
+    val keys = b.tables.keySet ++ s.tables.keySet ++ d.tables.keySet
+    val merged = keys.flatMap { k =>
+      val (bv, sv, dv) = (b.tables.get(k), s.tables.get(k), d.tables.get(k))
+      if (sv == bv) dv.map(k -> _)                // src untouched -> dst wins
+      else if (dv == bv) sv.map(k -> _)           // dst untouched -> src wins
+      else if (sv == dv) sv.map(k -> _)           // both converged
+      else (bv, sv, dv) match {
+        // both sides changed: row-level 3-way merge when both only
+        // APPENDED (the dominant concurrent-ingest case)
+        case (Some(bid), Some(sid), Some(did)) =>
+          Some(k -> mergeAppendOnly(k, bid, sid, did))
+        case _ =>
+          throw new MergeConflictException(s"table $k changed on both sides")
+      }
+    }.toMap
+    val nsKeys = b.namespaces.keySet ++ s.namespaces.keySet ++ d.namespaces.keySet
+    val mergedNs = nsKeys.flatMap { k =>
+      val (bv, sv, dv) = (b.namespaces.get(k), s.namespaces.get(k), d.namespaces.get(k))
+      if (sv == bv) dv.map(k -> _) else sv.map(k -> _)
+    }.toMap
+    // views three-way like tables (a view is one definition — no
+    // row-level sub-merge to attempt)
+    val vKeys = b.viewMap.keySet ++ s.viewMap.keySet ++ d.viewMap.keySet
+    val mergedViews = vKeys.flatMap { k =>
+      val (bv, sv, dv) = (b.viewMap.get(k), s.viewMap.get(k), d.viewMap.get(k))
+      if (sv == bv) dv.map(k -> _)
+      else if (dv == bv || sv == dv) sv.map(k -> _)
+      else throw new MergeConflictException(s"view $k changed on both sides")
+    }.toMap
+    // Tables and views merge independently above, so a table db/x
+    // created on one branch and a view db/x on the other would both
+    // land in the merged commit — breaking the shared table/view
+    // namespace that createTable/createView/CTAS enforce (loadTable
+    // and loadView would each resolve the same key). Reject the merge.
+    merged.keySet.intersect(mergedViews.keySet).headOption.foreach { k =>
+      throw new MergeConflictException(
+        s"$k is a table on one side and a view on the other")
+    }
+    (merged, mergedNs, mergedViews)
   }
 
   /** Hard-reset a branch head to an older commit (lakeFS `branches reset`,
@@ -686,19 +657,15 @@ final class GraftRepo private (val root: Path, val io: GraftIO,
     */
   def rollback(branch: String, toRef: String): Commit = {
     val target = resolve(toRef)
-    var attempts = 0
-    while (true) {
+    GraftRepo.casRetry {
       val (v, hid) = head(branch)
-      if (hid == target.id) return target
-      require(ancestors(hid).contains(target.id),
-        s"rollback target ${target.id} is not an ancestor of $branch head $hid")
-      try { casRef(branch, v, target.id); return target }
-      catch {
-        case e: CommitConflictException =>
-          attempts += 1; if (attempts >= 10) throw e
+      if (hid != target.id) {
+        require(ancestors(hid).contains(target.id),
+          s"rollback target ${target.id} is not an ancestor of $branch head $hid")
+        casRef(branch, v, target.id)
       }
+      target
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** History-preserving undo (lakeFS/git `revert` of everything since
@@ -712,17 +679,8 @@ final class GraftRepo private (val root: Path, val io: GraftIO,
     val msg = if (message.nonEmpty) message else s"revert $branch to ${target.id}"
     // views restore to the TARGET's view map too (commitRetry would
     // carry the head's forward)
-    var attempts = 0
-    while (true) {
-      val (v, hid) = head(branch)
-      try return commitAt(branch, v, Seq(hid), msg, target.tables,
-        target.namespaces, target.viewMap)
-      catch {
-        case e: CommitConflictException =>
-          attempts += 1; if (attempts >= 10) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    commitOnHead(branch, msg, None)(_ =>
+      (target.tables, target.namespaces, target.viewMap))
   }
 
   /** Replay a pick's APPEND delta onto an arbitrary head state: legal
@@ -793,10 +751,7 @@ final class GraftRepo private (val root: Path, val io: GraftIO,
     val base = commit(pick.parents.head)
     val msg = if (message.nonEmpty) message
       else s"cherry-pick ${pick.id}: ${pick.message}"
-    var attempts = 0
-    while (true) {
-      val (v, hid) = head(branch)
-      val h = commit(hid)
+    commitOnHead(branch, msg, None) { h =>
       def conflict(kind: String, k: String): Nothing =
         throw new MergeConflictException(s"cherry-pick conflict on $kind " +
           s"$k: $branch diverged from the pick's parent")
@@ -833,13 +788,8 @@ final class GraftRepo private (val root: Path, val io: GraftIO,
         throw new MergeConflictException(
           s"$k is a table on one side and a view on the other")
       }
-      try return commitAt(branch, v, Seq(hid), msg, tables, ns, views)
-      catch {
-        case e: CommitConflictException =>
-          attempts += 1; if (attempts >= 10) throw e
-      }
+      (tables, ns, views)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Expire version metadata unreachable from every branch/tag head
@@ -1005,6 +955,25 @@ object GraftRepo {
   // pattern): counts commit-object loads process-wide
   private val commitReads = new java.util.concurrent.atomic.AtomicLong()
   private[graft] def commitReadCount: Long = commitReads.get()
+
+  /** Attempts a lost-CAS retry makes before its conflict propagates. */
+  private val CasAttempts = 10
+
+  /** The optimistic-retry loop (LakeFSTableOperations.java:115-147): run
+    * `body` — read the current version, publish the next one through a
+    * set-if-absent CAS — and re-run it from a fresh read while it throws
+    * [[CommitConflictException]], up to [[CasAttempts]] times; the last
+    * attempt's conflict propagates. Every ref move and every
+    * registration publish retries through here.
+    */
+  @annotation.tailrec
+  private[versioned] def casRetry[A](body: => A, attempt: Int = 1): A =
+    (try Some(body) catch {
+      case _: CommitConflictException if attempt < CasAttempts => None
+    }) match {
+      case Some(a) => a
+      case None => casRetry(body, attempt + 1)
+    }
 
   /** Create a repo with an empty root commit on branch `main`.
     * `dataRoot` (a Hadoop FS URI, e.g. `s3a://bucket/repo`) relocates

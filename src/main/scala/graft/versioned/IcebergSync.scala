@@ -18,11 +18,17 @@ import java.nio.file.Path
   * IMMUTABLE versioned object `iceberg-sync/r<N>.json`, and `register`
   * publishes version N+1 with the same createExclusive compare-and-set
   * every commit uses — two concurrent registers race on the version
-  * number and the loser re-reads and retries, so neither is lost, on
-  * the local FS and object-store backends alike. Readers take the
-  * highest version present (retrying if a concurrent prune deletes a
-  * just-listed file); a handful of superseded versions are kept as a
-  * reader grace window and pruned beyond that. A pre-seam
+  * number and the loser re-reads and retries through the same
+  * [[GraftRepo.casRetry]] loop and budget, on the local FS and
+  * object-store backends alike. Readers take the highest version
+  * present (retrying if a concurrent prune deletes a just-listed file);
+  * a handful of superseded versions are kept as a reader grace window
+  * and pruned beyond that. A returning register/unregister is held by
+  * the newest version at its return: a won CAS is re-checked against
+  * the newest set, because a writer that stalled past a prune can win a
+  * pruned version number that readers never take. Under sustained
+  * contention a caller gives up with [[CommitConflictException]] after
+  * the budget instead of landing silently lost. A pre-seam
   * `iceberg-sync.json` (single mutable file) is still read as the
   * version-0 fallback and migrated into the versioned stream by the
   * next `register`.
@@ -93,80 +99,79 @@ object IcebergSync {
   /** Current registration set + the version that holds it (0 = legacy
     * file or nothing). Retries when a concurrent prune wins the race
     * between our list and our read — the newer version it protects is
-    * what the re-list finds.
+    * what the re-list finds. Any other read or parse failure propagates:
+    * a corrupt registration file is an error, not churn.
     */
-  private def currentWithVersion(root: Path, io: GraftIO): (Seq[Reg], Int) = {
-    var attempts = 0
-    while (attempts < 10) {
-      versionsPresent(root, io).lastOption match {
-        case Some(v) =>
-          try return (mapper.readValue(io.readString(regFile(root, v)),
-            classOf[Array[Reg]]).toSeq, v)
-          catch { case _: Exception => attempts += 1 } // pruned under us
-        case None =>
-          return (
-            if (io.isFile(legacyPath(root)))
-              mapper.readValue(io.readString(legacyPath(root)),
-                classOf[Array[Reg]]).toSeq
-            else Nil, 0)
-      }
+  private def currentWithVersion(root: Path, io: GraftIO,
+      attempt: Int = 1): (Seq[Reg], Int) =
+    versionsPresent(root, io).lastOption match {
+      case Some(v) =>
+        try (readRegs(io, regFile(root, v)), v)
+        catch {
+          case _: java.nio.file.NoSuchFileException if attempt < 10 =>
+            currentWithVersion(root, io, attempt + 1) // pruned under us
+        }
+      case None =>
+        (if (io.isFile(legacyPath(root))) readRegs(io, legacyPath(root))
+          else Nil, 0)
     }
-    throw new IllegalStateException(
-      "cannot read iceberg-sync registrations: version churn exceeded retries")
-  }
+
+  private def readRegs(io: GraftIO, p: Path): Seq[Reg] =
+    mapper.readValue(io.readString(p), classOf[Array[Reg]]).toSeq
 
   def registrations(repo: GraftRepo): Seq[Reg] =
     currentWithVersion(repo.root, repo.io)._1
 
   /** Record a standing export; idempotent on (ref, table, dest) — a
     * re-register replaces the matching entry (so `snapshots` /
-    * `keepVersions` can be updated in place). Safe under concurrent
-    * callers: createExclusive CAS on the next version number, re-read
-    * and retry on loss.
+    * `keepVersions` can be updated in place).
     */
-  def register(repo: GraftRepo, reg: Reg): Unit = {
-    val root = repo.root
-    val io = repo.io
-    io.mkdirs(regDir(root))
-    var attempts = 0
-    while (attempts < 50) {
-      val (cur, v) = currentWithVersion(root, io)
-      val next = cur.filterNot(r => r.ref == reg.ref && r.table == reg.table &&
-        r.dest == reg.dest) :+ reg
-      if (io.createExclusive(regFile(root, v + 1),
-          mapper.writeValueAsString(next.toArray))) {
-        prune(root, io, v + 1)
-        return
-      }
-      attempts += 1 // lost the CAS: someone else published v+1; merge anew
-    }
-    throw new IllegalStateException(
-      "iceberg-sync register lost the version CAS 50 times — giving up")
-  }
+  def register(repo: GraftRepo, reg: Reg): Unit =
+    update(repo)(_.filterNot(r => r.ref == reg.ref && r.table == reg.table &&
+      r.dest == reg.dest) :+ reg)
 
   /** Remove registrations matching (ref, table[, dest]); returns how
-    * many were dropped. Same CAS discipline as [[register]].
+    * many were dropped.
     */
   def unregister(repo: GraftRepo, ref: String, table: String,
       dest: Option[String] = None): Int = {
+    def matches(r: Reg) = r.ref == ref && r.table == table &&
+      dest.forall(_ == r.dest)
+    update(repo)(_.filterNot(matches)).count(matches)
+  }
+
+  /** Publish `f(current)` as the next registration version; returns the
+    * set `f` was applied to. Nothing is published when `f` leaves the set
+    * unchanged. `f` must be idempotent (register and unregister are):
+    * concurrent callers race on the version number through
+    * [[GraftRepo.casRetry]], and a lost CAS re-reads and re-applies.
+    *
+    * A won CAS is confirmed against the newest version: a caller that
+    * stalled between its read and its publish can re-create a version
+    * number [[prune]] already deleted, win that CAS, and still be shadowed
+    * by the newer versions readers take — so the update re-runs until the
+    * newest set holds it.
+    */
+  private def update(repo: GraftRepo)(f: Seq[Reg] => Seq[Reg]): Seq[Reg] = {
     val root = repo.root
     val io = repo.io
-    var attempts = 0
-    while (attempts < 50) {
+    def holds(regs: Seq[Reg]) = f(regs).toSet == regs.toSet
+    GraftRepo.casRetry {
       val (cur, v) = currentWithVersion(root, io)
-      val keep = cur.filterNot(r => r.ref == ref && r.table == table &&
-        dest.forall(_ == r.dest))
-      if (keep.size == cur.size) return 0
-      io.mkdirs(regDir(root))
-      if (io.createExclusive(regFile(root, v + 1),
-          mapper.writeValueAsString(keep.toArray))) {
+      if (!holds(cur)) {
+        io.mkdirs(regDir(root))
+        if (!io.createExclusive(regFile(root, v + 1),
+            mapper.writeValueAsString(f(cur).toArray)))
+          throw new CommitConflictException(
+            s"iceberg-sync registration version ${v + 1} already published")
+        if (!holds(currentWithVersion(root, io)._1))
+          throw new CommitConflictException(
+            s"iceberg-sync registration version ${v + 1} was shadowed " +
+              "by a newer version")
         prune(root, io, v + 1)
-        return cur.size - keep.size
       }
-      attempts += 1
+      cur
     }
-    throw new IllegalStateException(
-      "iceberg-sync unregister lost the version CAS 50 times — giving up")
   }
 
   private def prune(root: Path, io: GraftIO, published: Int): Unit = {

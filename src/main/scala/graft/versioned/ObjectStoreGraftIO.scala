@@ -172,59 +172,47 @@ object InMemoryObjectStore {
   *    object — never bytes to clean up, unlike the local temp-file
   *    dance.
   */
-final class ObjectStoreGraftIO(
-    client: ObjectStoreClient,
-    maxAttempts: Int = 5,
-    backoffMs: Int = 0) extends GraftIO {
+final class ObjectStoreGraftIO(client: ObjectStoreClient) extends GraftIO {
   import ObjectStoreClient.PutResult
+  import ObjectStoreGraftIO.MaxAttempts
 
   private def k(p: Path): String = p.toAbsolutePath.normalize.toString
   private def marker(key: String): String = key + "/"
 
-  private def retrying[A](what: String)(f: => A): A = {
-    var attempt = 1
-    var last: Throwable = null
-    while (attempt <= maxAttempts) {
-      try return f
-      catch {
-        case e: ObjectStoreTransientException =>
-          last = e
-          if (backoffMs > 0) Thread.sleep(backoffMs.toLong * attempt)
-          attempt += 1
+  /** The transient-fault retry loop: repeat `f` while the store answers
+    * with [[ObjectStoreTransientException]], up to [[MaxAttempts]] times. */
+  @annotation.tailrec
+  private def retrying[A](what: String, attempt: Int = 1)(f: => A): A =
+    (try Right(f) catch {
+      case e: ObjectStoreTransientException => Left(e)
+    }) match {
+      case Right(a) => a
+      case Left(e) if attempt >= MaxAttempts => throw new java.io.IOException(
+        s"$what: $MaxAttempts attempts exhausted", e)
+      case Left(_) => retrying(what, attempt + 1)(f)
+    }
+
+  /** Conditional PUT that survives the ambiguous timeout: true iff THIS
+    * call published `bytes` at `key`. A 412 after a transient failure may
+    * be our own earlier attempt that landed, so only then is the object
+    * read back and byte-compared; a 412 with a clean history is a
+    * foreign object. */
+  private def putIfAbsent(key: String, bytes: Array[Byte]): Boolean = {
+    var ambiguous = false // a lost response may have published our object
+    retrying(s"put-if-absent $key") {
+      try client.put(key, bytes, ifNoneMatch = true) match {
+        case PutResult.Ok => true
+        case PutResult.PreconditionFailed =>
+          ambiguous && retrying(s"get $key")(client.get(key))
+            .exists(o => java.util.Arrays.equals(o._1, bytes))
+      } catch {
+        case e: ObjectStoreTransientException => ambiguous = true; throw e
       }
     }
-    throw new java.io.IOException(
-      s"$what: $maxAttempts attempts exhausted", last)
   }
 
-  override def createExclusive(path: Path, content: String): Boolean = {
-    val key = k(path)
-    val bytes = content.getBytes("UTF-8")
-    var ambiguous = false // a lost response may have published our object
-    var attempt = 1
-    var last: Throwable = null
-    while (attempt <= maxAttempts) {
-      try {
-        client.put(key, bytes, ifNoneMatch = true) match {
-          case PutResult.Ok => return true
-          case PutResult.PreconditionFailed =>
-            // existing object: ours (ambiguous earlier attempt landed)
-            // or a racing winner's. Only the probe can tell — and only
-            // an ambiguous history warrants probing.
-            return ambiguous && retrying(s"get $key")(client.get(key))
-              .exists(o => java.util.Arrays.equals(o._1, bytes))
-        }
-      } catch {
-        case e: ObjectStoreTransientException =>
-          last = e
-          ambiguous = true
-          if (backoffMs > 0) Thread.sleep(backoffMs.toLong * attempt)
-          attempt += 1
-      }
-    }
-    throw new java.io.IOException(
-      s"createExclusive $key: $maxAttempts attempts exhausted", last)
-  }
+  override def createExclusive(path: Path, content: String): Boolean =
+    putIfAbsent(k(path), content.getBytes("UTF-8"))
 
   override def overwrite(path: Path, content: Array[Byte]): Unit =
     retrying(s"put ${k(path)}") {
@@ -307,45 +295,24 @@ final class ObjectStoreGraftIO(
   /** Copy-then-delete — NOT atomic (object stores have no rename): a
     * crash between the put and the delete leaves both keys, which the
     * GraftIO contract documents as permissible for move on stores
-    * without rename. The conditional-PUT leg follows createExclusive's
-    * ambiguity discipline: a lost response may have published OUR copy,
-    * so a 412 after a transient failure triggers the byte-equality
-    * probe instead of a spurious FileAlreadyExistsException (which
-    * would also leave the source undeleted — a duplicate object).
+    * without rename. The conditional-PUT leg is createExclusive's
+    * [[putIfAbsent]]: a lost response may have published OUR copy, so a
+    * 412 after a transient failure triggers the byte-equality probe
+    * instead of a spurious FileAlreadyExistsException (which would also
+    * leave the source undeleted — a duplicate object).
     */
   override def move(path: Path, to: Path): Unit = {
-    val v = getOrThrow(path)
-    if (k(path) == k(to)) return
-    val toKey = k(to)
-    var ambiguous = false
-    var attempt = 1
-    var last: Throwable = null
-    var published = false
-    while (!published && attempt <= maxAttempts) {
-      try {
-        client.put(toKey, v._1, ifNoneMatch = true) match {
-          case PutResult.Ok => published = true
-          case PutResult.PreconditionFailed =>
-            // Ours (an ambiguous earlier attempt landed) or a foreign
-            // object? Only an ambiguous history warrants the probe.
-            if (ambiguous && retrying(s"get $toKey")(client.get(toKey))
-                .exists(o => java.util.Arrays.equals(o._1, v._1)))
-              published = true
-            else
-              throw new java.nio.file.FileAlreadyExistsException(toKey)
-        }
-      } catch {
-        case e: ObjectStoreTransientException =>
-          last = e
-          ambiguous = true
-          if (backoffMs > 0) Thread.sleep(backoffMs.toLong * attempt)
-          attempt += 1
-      }
+    val bytes = getOrThrow(path)._1
+    if (k(path) != k(to)) {
+      if (!putIfAbsent(k(to), bytes))
+        throw new java.nio.file.FileAlreadyExistsException(k(to))
+      retrying(s"delete ${k(path)}")(client.deleteKey(k(path)))
     }
-    if (!published)
-      throw new java.io.IOException(
-        s"move $toKey: $maxAttempts attempts exhausted", last)
-    retrying(s"delete ${k(path)}")(client.deleteKey(k(path)))
-    ()
   }
+}
+
+object ObjectStoreGraftIO {
+  /** Requests one store operation makes before a transient fault surfaces
+    * as an IOException. */
+  private val MaxAttempts = 5
 }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.matchers.should.Matchers
 
-import graft.versioned.{GraftRepo, IcebergSync, InMemoryObjectStore, ObjectStoreGraftIO}
+import graft.versioned.{GraftRepo, IcebergSync, InMemoryGraftIO, InMemoryObjectStore, ObjectStoreGraftIO}
 import graft.versioned.IcebergSync.Reg
 
 /** Sync-mode registration storage and lifecycle (IcebergSync.scala):
@@ -69,6 +69,42 @@ class IcebergSyncSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     } finally pool.shutdown()
     IcebergSync.registrations(repo).map(_.table).sorted shouldBe
       (0 until 8).map(i => f"db/t$i").sorted
+  }
+
+  test("a register that stalls past a prune still lands: its won CAS on " +
+    "a pruned version number is re-checked against the newest set") {
+    val store = new InMemoryGraftIO
+    val root = Paths.get(s"/graft-sync-stall/${java.util.UUID.randomUUID()}")
+    val plain = GraftRepo.init(root, store)
+    val regDir = root.resolve("iceberg-sync")
+    var stalled = false
+    // writer A stalls between its read and its first registration
+    // publish; meanwhile five registers land through a plain handle, and
+    // the last one's prune deletes the version number A then publishes
+    val hooked = new HookedGraftIO(store)(p =>
+      if (!stalled && p.getParent == regDir) {
+        stalled = true
+        (0 until 5).foreach(i => IcebergSync.register(plain,
+          Reg("main", s"db/o$i", s"/tmp/o$i", 1)))
+      })
+    IcebergSync.register(GraftRepo.open(root, hooked),
+      Reg("main", "db/a", "/tmp/a", 1))
+    stalled shouldBe true
+    IcebergSync.registrations(plain).map(_.table).sorted shouldBe
+      ("db/a" +: (0 until 5).map(i => s"db/o$i")).sorted
+  }
+
+  test("a corrupt newest registration version fails loudly with its JSON " +
+    "error instead of reading as version churn") {
+    val repo = osRepo()
+    IcebergSync.register(repo, Reg("main", "db/t", "/tmp/d1", 1))
+    repo.io.createExclusive(
+      repo.root.resolve("iceberg-sync").resolve("r00000002.json"),
+      "{not json") shouldBe true
+    intercept[com.fasterxml.jackson.core.JsonProcessingException](
+      IcebergSync.registrations(repo))
+    intercept[com.fasterxml.jackson.core.JsonProcessingException](
+      IcebergSync.register(repo, Reg("main", "db/u", "/tmp/d2", 1)))
   }
 
   test("pre-seam iceberg-sync.json reads as the fallback and is " +

@@ -154,10 +154,10 @@ class ObjectStoreIOSpec extends AnyFunSuite with Matchers {
     val key = "/r/refs/main/v4"
     val store = new InMemoryObjectStore((op, k, attempt) =>
       if (op == "put" && k == key) Fault.FailBefore else Fault.None)
-    val io = new ObjectStoreGraftIO(store, maxAttempts = 3)
+    val io = new ObjectStoreGraftIO(store)
     intercept[java.io.IOException](
       io.createExclusive(Paths.get(key), "x"))
-    store.requestCount("put", key) shouldBe 3
+    store.requestCount("put", key) shouldBe 5
 
     // reads retry past transient 500s
     val key2 = "/r/refs/main/v5"

@@ -1,13 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.UUID
+
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.matchers.should.Matchers
 
-import graft.versioned.{CommitConflictException, GraftRepo, MergeConflictException, Partitioning, TableOps}
+import graft.versioned.{Commit, CommitConflictException, GraftRepo, InMemoryGraftIO, MergeConflictException, Partitioning, TableOps, ViewDef}
 
 /** Mirrors the reference's behavioral contract (tests/test_iceberg.py:9-57):
   * zero-copy branches, branch-isolated DML, merge convergence — plus the
@@ -128,6 +131,146 @@ class VersionedSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
       (base.tables + ("db/b" -> "s2"), base.namespaces)
     }
     repo.headCommit("main").tables.keySet shouldBe Set("db/a", "db/b")
+  }
+
+  // ---- the lost-CAS path of every ref-moving entry point ----------------
+
+  private val idSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("id",
+      org.apache.spark.sql.types.IntegerType))).json
+
+  /** Commit a fresh empty table `key` on `branch` (one ref publish). */
+  private def addTable(repo: GraftRepo, branch: String, key: String): Commit = {
+    val s = repo.writeSnapshot(key, idSchema, Nil)
+    repo.commitRetry(branch, s"add $key")(b =>
+      (b.tables + (key -> s.id), b.namespaces))
+  }
+
+  /** Outcome of one raced op: the plain handle, the racing commits in
+    * order, the fixture id `setup` returned, how many `refs/main/v*`
+    * publishes the op made, and its result. */
+  private final case class Race(repo: GraftRepo, racers: Seq[String],
+      fixture: String, publishes: Int, result: Either[Throwable, Any])
+
+  /** `setup` builds fixtures through a plain handle on an in-memory
+    * store; `op` then runs on a handle whose `refs/main/v*` publishes
+    * first land a racing commit on main through the plain handle —
+    * before the op's first publish, or before every one with `always`. */
+  private def race(always: Boolean)(setup: GraftRepo => String)(
+      op: (GraftRepo, String) => Any): Race = {
+    val store = new InMemoryGraftIO
+    val root = Paths.get(s"/graft-lost-cas/${UUID.randomUUID()}")
+    val plain = GraftRepo.init(root, store)
+    val fixture = setup(plain)
+    val mainRefs = root.resolve("refs").resolve("main")
+    val racers = ArrayBuffer[String]()
+    var publishes = 0
+    val hooked = new HookedGraftIO(store)(p =>
+      if (p.getParent == mainRefs && p.getFileName.toString.matches("v\\d+")) {
+        publishes += 1
+        if (always || publishes == 1)
+          racers += addTable(plain, "main", s"db/racer${racers.size}").id
+      })
+    val result = scala.util.Try(op(GraftRepo.open(root, hooked), fixture)).toEither
+    Race(plain, racers.toSeq, fixture, publishes, result)
+  }
+
+  /** (name, setup -> fixture id, op, serial-order check of main's head
+    * given the racing commit and the fixture id). */
+  private val lostCasCases: Seq[(String, GraftRepo => String,
+      (GraftRepo, String) => Any, (Commit, String, String) => Unit)] = {
+    def twoCommits(p: GraftRepo): String = {
+      val c1 = addTable(p, "main", "db/a")
+      addTable(p, "main", "db/b")
+      c1.id
+    }
+    Seq(
+      ("commitRetry", _ => "", (r, _) => addTable(r, "main", "db/op"),
+        (h, racer, _) => {
+          h.tables.keySet shouldBe Set("db/racer0", "db/op")
+          h.parents shouldBe Seq(racer)
+        }),
+      ("commitRetryViews", _ => "",
+        (r, _) => r.commitRetryViews("main", "add view")(b =>
+          b.viewMap + ("db/v" -> ViewDef("SELECT 1", "g", Seq("db"), idSchema))),
+        (h, racer, _) => {
+          h.tables.keySet shouldBe Set("db/racer0")
+          h.viewMap.keySet shouldBe Set("db/v")
+          h.parents shouldBe Seq(racer)
+        }),
+      ("commitRetryAll", _ => "",
+        (r, _) => {
+          val s = r.writeSnapshot("db/op", idSchema, Nil)
+          r.commitRetryAll("main", "add all")(b => (b.tables + ("db/op" -> s.id),
+            b.namespaces + ("db" -> Map("owner" -> "op")),
+            b.viewMap + ("db/v" -> ViewDef("SELECT 1", "g", Seq("db"), idSchema))))
+        },
+        (h, racer, _) => {
+          h.tables.keySet shouldBe Set("db/racer0", "db/op")
+          h.namespaces shouldBe Map("db" -> Map("owner" -> "op"))
+          h.viewMap.keySet shouldBe Set("db/v")
+          h.parents shouldBe Seq(racer)
+        }),
+      ("3-way merge",
+        p => {
+          p.createBranch("dev", "main")
+          addTable(p, "main", "db/b")
+          addTable(p, "dev", "db/a").id
+        },
+        (r, _) => r.merge("dev", "main"),
+        (h, racer, dev) => {
+          h.tables.keySet shouldBe Set("db/a", "db/b", "db/racer0")
+          h.parents shouldBe Seq(racer, dev)
+        }),
+      // the racer turns the fast-forward into a 3-way merge
+      ("fast-forward merge",
+        p => { p.createBranch("dev", "main"); addTable(p, "dev", "db/a").id },
+        (r, _) => r.merge("dev", "main"),
+        (h, racer, dev) => {
+          h.tables.keySet shouldBe Set("db/a", "db/racer0")
+          h.parents shouldBe Seq(racer, dev)
+        }),
+      ("rollback", twoCommits, (r, c1) => r.rollback("main", c1),
+        (h, _, c1) => h.id shouldBe c1),
+      ("revert", twoCommits, (r, c1) => r.revert("main", c1),
+        (h, racer, _) => {
+          h.tables.keySet shouldBe Set("db/a")
+          h.parents shouldBe Seq(racer)
+        }),
+      ("cherryPick",
+        p => { p.createBranch("dev", "main"); addTable(p, "dev", "db/p").id },
+        (r, pick) => r.cherryPick("main", pick),
+        (h, racer, _) => {
+          h.tables.keySet shouldBe Set("db/p", "db/racer0")
+          h.parents shouldBe Seq(racer)
+        })
+    )
+  }
+
+  test("a lost ref CAS retries exactly once and lands in the serial order " +
+    "(racer, then op): commitRetry/Views/All, 3-way and fast-forward " +
+    "merge, rollback, revert, cherryPick") {
+    lostCasCases.foreach { case (name, setup, op, serial) =>
+      withClue(s"$name: ") {
+        val r = race(always = false)(setup)(op)
+        r.result.toTry.get
+        r.racers should have size 1
+        r.publishes shouldBe 2
+        serial(r.repo.headCommit("main"), r.racers.head, r.fixture)
+      }
+    }
+  }
+
+  test("a ref CAS that always loses gives up with CommitConflictException " +
+    "after exactly 10 publishes, on every entry point") {
+    lostCasCases.foreach { case (name, setup, op, _) =>
+      withClue(s"$name: ") {
+        val r = race(always = true)(setup)(op)
+        r.result.left.toOption.get shouldBe a[CommitConflictException]
+        r.publishes shouldBe 10
+        r.racers should have size 10
+      }
+    }
   }
 
   test("table-level diff + row-level diff between refs") {
