@@ -47,11 +47,6 @@ object StageProfile {
     time("p3 + dup-mark equi-join")(hits.count())
     time("p4 full dd_dupspans")(
       graft.SparkEntry.queries("dd_dupspans")(spark, sfDir).count())
-    // the scale-path key: 8-byte LongType xxhash64 vs BINARY(16) md5
-    spark.conf.set("spark.graft.dupspans.hash", "xxhash64")
-    try time("p5 full (xxhash64 key)")(
-      graft.SparkEntry.queries("dd_dupspans")(spark, sfDir).count())
-    finally spark.conf.unset("spark.graft.dupspans.hash")
 
     // ---- dd_incr_persist lifecycle decomposition (the top bench row):
     // init (build + persist the posting index for the corpus slice),

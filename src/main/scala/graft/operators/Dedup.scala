@@ -2,8 +2,9 @@ package graft.operators
 
 import graft.{Q, Tables => T}
 import graft.functions.TextVec._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointLifecycle
 
 /** Deduplication pack (SURVEY.md §2.3) over the `documents` /
   * `embeddings` tables.
@@ -34,6 +35,11 @@ object Dedup {
     * [[dupSpans]] (the "min dup length" knob of suffix-based dedup). */
   private[graft] val DupSpanL = 8
 
+  /** PPJoin posting-list chunk size ([[setsimPairs]]'s `maxPost`). */
+  private val MaxPostings = 1024
+  /** Most ids one retire may carry (they become a metadata predicate). */
+  private[operators] val RetireMaxIds = 100000
+
   /** Duplicate-SUBSTRING spans — the within-document repeat detector of
     * suffix-array training-data dedup (Lee et al. 2021, "Deduplicating
     * Training Data Makes Language Models Better"), re-expressed
@@ -63,17 +69,12 @@ object Dedup {
     * GRAM KEY (`spark.graft.dupspans.hash`) — the key never leaves the
     * query (the OUTPUT is token spans, identical under any
     * collision-free key; the oracle gate re-proves span equality every
-    * round), so the choice is width vs collision bound:
+    * round), so the choice is cost vs cross-engine portability:
     *  - `xx128` (DEFAULT): a struct of TWO independent-seed xxhash64
     *    longs — 16 bytes, no hex-string materialization, no md5 cost.
     *    128-bit birthday bound keeps a cross-gram collision (which
     *    would manufacture a false duplicate span, silently) negligible
     *    even at ~10^13 grams, i.e. a full 100 TB text corpus.
-    *  - `xxhash64`: single 8-byte LongType key, half the shuffle width
-    *    — measured 10-17% faster end to end at sf0.1 (r18). SAFE ONLY
-    *    BELOW ~2^32 distinct grams per corpus: past that, 64-bit
-    *    birthday collisions are certain and silently corrupt spans.
-    *    An explicit per-corpus opt-in, never the default.
     *  - `md5`: the engine-portable BINARY(16) key (DuckDB's
     *    unhex(md5(...)) replays it bit-for-bit) for cross-engine
     *    debugging of the intermediate gram relation.
@@ -89,11 +90,10 @@ object Dedup {
           // stream — an independent 64-bit family member, so the pair
           // is a true 128-bit key (two equal halves never co-collide)
           struct(xxhash64(txt), xxhash64(lit("graft:dupspans:g2"), txt))
-        case "xxhash64" => txt => xxhash64(txt)
         case "md5" => txt => unhex(md5(txt))
         case other => throw new IllegalArgumentException(
-          s"spark.graft.dupspans.hash=$other — expected xx128 (default), " +
-            "xxhash64, or md5")
+          s"spark.graft.dupspans.hash=$other — expected xx128 (default) " +
+            "or md5")
       }
     val toks = T.documents(s, d)
       .select(col("doc_id"), split(trim(lower(col("text"))), " ").as("toks"))
@@ -293,11 +293,9 @@ object Dedup {
     * same shuffle shape as minhashLsh verification).
     */
   private def setsimJoin(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val maxPost = s.conf.getOption("spark.graft.setsim.maxPostings")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1024)
     val docs = T.documents(s, d)
       .select(col("doc_id"), wordSet(col("text")).as("ws"))
-    setsimPairs(s, docs, 0.9, maxPost)
+    setsimPairs(s, docs, 0.9, MaxPostings)
   }
 
   /** The exact prefix-filter join over an arbitrary (doc_id, ws) corpus —
@@ -330,8 +328,8 @@ object Dedup {
     // pairs with skinny mask-keyed joins. The probe costs one tiny
     // distinct; corpora past 64 tokens (any real text) fall through to
     // the PPJoin path untouched.
-    val vocabMax = s.conf.getOption("spark.graft.setsim.bitmaskVocabMax")
-      .flatMap(_.toIntOption).getOrElse(64)
+    val vocabMax = graft.GraftConf.int(s,
+      "spark.graft.setsim.bitmaskVocabMax", 64, min = 0)
     if (vocabMax > 0) {
       val probe = corpus.select(explode(col("ws")).as("tok"))
         .distinct().limit(math.min(vocabMax, 64) + 1)
@@ -380,14 +378,15 @@ object Dedup {
       .localCheckpoint() // skinny (doc_id, mask); feeds 4 plan legs
     // checkpointed for the guard + both joins; the guard count rides
     // the checkpoint job itself (observe), nothing is recomputed
-    val (gm, nMasks) = checkpointWithCount(
-      masked.select(col("mask")).where(col("mask") =!= 0L).distinct())
+    val (gm, Row(nMasks: Long)) = CheckpointLifecycle.observedCheckpoint(
+      masked.select(col("mask")).where(col("mask") =!= 0L).distinct(),
+      count(lit(1)))
     // guard the M×M popcount pass: past maxMasks distinct masks the
     // size-bucketed join's pair volume (M × ~2·(1-t)/t·M/|sizes|) stops
     // being a broadcast-cheap pass — fall back to the PPJoin path,
     // which is corpus-size-linear in its index.
-    val maxMasks = s.conf.getOption("spark.graft.setsim.bitmaskMasksMax")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1 << 17)
+    val maxMasks =
+      graft.GraftConf.int(s, "spark.graft.setsim.bitmaskMasksMax", 1 << 17)
     if (nMasks > maxMasks) return None // caller takes the PPJoin path
     // Pair enumeration as a broadcast HASH join, not a nested loop: a
     // bare `mask_a < mask_b` theta-join plans as BroadcastNestedLoopJoin
@@ -427,8 +426,7 @@ object Dedup {
     // would otherwise emit its (quadratic, inherent) output through
     // ONE reducer — chunking spreads it over nch² cells of bounded
     // work, exactness-preserving (each pair from exactly one cell)
-    val maxGroup = s.conf.getOption("spark.graft.setsim.maxGroup")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1024)
+    val maxGroup = graft.GraftConf.int(s, "spark.graft.setsim.maxGroup", 1024)
     val counts = masked.where(col("mask") =!= 0L)
       .groupBy(col("mask")).agg(count(lit(1)).as("cnt"))
     val chunked = masked.join(counts, "mask")
@@ -505,15 +503,13 @@ object Dedup {
     * DuckDB-oracle-checked (list_cosine via double-widened lists).
     */
   private def embedCosine(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val maxGroup = s.conf.getOption("spark.graft.embedcosine.maxGroup")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1024)
     // Norms precomputed per vector BEFORE the pair join: one codegen'd dot
     // per pair instead of three HOF folds (same fold order -> identical
     // doubles -> oracle-safe).
     val e = T.embeddings(s, d)
       .select(col("vec_id"), col("label"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", l2norm(col("v")))
-    embedCosinePairs(e, 0.35, maxGroup)
+    embedCosinePairs(e, 0.35, maxGroup = 1024)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -594,8 +590,8 @@ object Dedup {
     // graph diameters to ~2^20 — any real dedup graph. Configurable so a
     // pathological chain can raise it; exit-with-changes REFUSES below
     // rather than silently mislabel.
-    val maxRounds = vertices.sparkSession.conf
-      .getOption("spark.graft.cc.maxRounds").map(_.toInt).getOrElse(20)
+    val maxRounds =
+      graft.GraftConf.int(vertices.sparkSession, "spark.graft.cc.maxRounds", 20)
     while (changed > 0 && rounds < maxRounds) {
       // min(label) over each vertex's neighborhood: the labels side is
       // shuffled by doc_id to meet the pre-partitioned edges — one |V|
@@ -615,31 +611,25 @@ object Dedup {
       // pointer jumping (label := label's label): halves chain depth each
       // round, so long chains converge in O(log diameter) rounds
       val parent = prop.select(col("doc_id").as("p_id"), col("label").as("p_label"))
-      val obsName = s"graft_cc_${rounds}_" +
-        java.util.UUID.randomUUID().toString.take(8)
       // the convergence check rides the round's checkpoint job via
       // observe — it was its own count() job per round (O(log diameter)
       // extra jobs per clustering)
-      val nextObs = prop
+      val (next, obs) = CheckpointLifecycle.observedCheckpoint(prop
         .join(parent, prop("label") === parent("p_id"), "left")
         .select(col("doc_id"), col("old"),
-          least(col("label"), coalesce(col("p_label"), col("label"))).as("label"))
-        .observe(obsName,
-          count(when(col("label") =!= col("old"), 1)).as("changed"))
-      val next = nextObs.localCheckpoint()
-      changed = nextObs.queryExecution.observedMetrics.get(obsName)
-        .map(_.getAs[Long]("changed")).getOrElse(
-          next.filter(col("label") =!= col("old")).count())
+          least(col("label"), coalesce(col("p_label"), col("label"))).as("label")),
+        count(when(col("label") =!= col("old"), 1)).as("changed"))
+      changed = obs.getLong(0)
       labels = next.select(col("doc_id"), col("label"))
       // next is materialized (eager checkpoint, convergence count
       // riding it), so this round's prop and the previous labels are dead
-      org.apache.spark.sql.graftbridge.CheckpointLifecycle.unpersist(prop)
-      org.apache.spark.sql.graftbridge.CheckpointLifecycle.unpersist(prevRound)
+      CheckpointLifecycle.unpersist(prop)
+      CheckpointLifecycle.unpersist(prevRound)
       prevRound = next
       rounds += 1
     }
     // the returned labels derive from the FINAL round's checkpoint only
-    org.apache.spark.sql.graftbridge.CheckpointLifecycle.unpersist(sym)
+    CheckpointLifecycle.unpersist(sym)
     // a silent exit with unconverged labels would MISLABEL clusters
     // (different docs of one component keep different labels) — refuse
     // loudly instead; the cap is a lineage-depth bound, not a result
@@ -718,9 +708,11 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // feeds centroid sample, assignment, and verify; the √N sizing
     // count rides the checkpoint job (observe)
-    val (e, n) = checkpointWithCount(T.embeddings(s, d)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", l2norm(col("v"))))
+    val (e, Row(n: Long)) = CheckpointLifecycle.observedCheckpoint(
+      T.embeddings(s, d)
+        .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
+        .withColumn("nrm", l2norm(col("v"))),
+      count(lit(1)))
     val k = math.ceil(math.sqrt(n.toDouble)).toLong
     val cents = e.orderBy(col("vec_id")).limit(k.toInt)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
@@ -785,8 +777,6 @@ object Dedup {
       raw: DataFrame, isDelta: org.apache.spark.sql.Column =>
         org.apache.spark.sql.Column, t: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val maxPost = s.conf.getOption("spark.graft.setsim.maxPostings")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1024)
     val par = s.sparkContext.defaultParallelism
     def admit(dup: DataFrame): DataFrame =
       raw.filter(isDelta(col("doc_id"))).select(col("doc_id"))
@@ -796,8 +786,8 @@ object Dedup {
     // DENSE-VOCABULARY fast path (the setsimPairs dispatch, same caps):
     // prefix probing is structurally useless under ≤64 tokens — reuse
     // the popcount kernel and keep only delta-vs-corpus pairs
-    val vocabMax = s.conf.getOption("spark.graft.setsim.bitmaskVocabMax")
-      .flatMap(_.toIntOption).getOrElse(64)
+    val vocabMax = graft.GraftConf.int(s,
+      "spark.graft.setsim.bitmaskVocabMax", 64, min = 0)
     if (vocabMax > 0) {
       val probe = raw.select(explode(col("ws")).as("tok"))
         .distinct().limit(math.min(vocabMax, 64) + 1)
@@ -831,7 +821,7 @@ object Dedup {
       .repartition(par, col("tok"))
     val index = prefix.filter(!col("dl"))
     val probes = prefix.filter(col("dl"))
-    val cand = probeCandidates(index, probes, t, maxPost)
+    val cand = probeCandidates(index, probes, t, MaxPostings)
     val dupDelta = verifyPairs(s, docs, cand, t)
       .select(col("id_a").as("doc_id")).distinct()
     admit(dupDelta)
@@ -994,28 +984,11 @@ object Dedup {
     * Callers pass the count that actually bounds THEIR key set (vocab,
     * doc ids, band keys, candidate partners — they differ per site).
     */
-  /** Eager localCheckpoint + row count in ONE job: the count rides the
-    * checkpoint's own execution via Dataset.observe instead of a second
-    * pass over the blocks — every screen/admit needs its key-set counts
-    * for the [[semiPrune]] broadcast dispatch, and each was its own
-    * Spark job (pure fixed cost on micro-batch-sized deltas). Falls
-    * back to a real count() only if the observed metric surprisingly
-    * fails to surface (belt, not a second pass).
-    */
-  private def checkpointWithCount(df: DataFrame): (DataFrame, Long) = {
-    val name = "graft_cnt_" + java.util.UUID.randomUUID().toString.take(8)
-    val obs = df.observe(name, count(lit(1)).as("n"))
-    val ck = obs.localCheckpoint()
-    val n = obs.queryExecution.observedMetrics.get(name)
-      .map(_.getAs[Long]("n")).getOrElse(ck.count())
-    (ck, n)
-  }
-
   private def semiPrune(s: org.apache.spark.sql.SparkSession,
       big: DataFrame, keys: DataFrame, on: Seq[String],
       keyCount: Long): DataFrame = {
-    val bcastMax = s.conf.getOption("spark.graft.dedup.broadcastKeysMax")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4000000)
+    val bcastMax =
+      graft.GraftConf.int(s, "spark.graft.dedup.broadcastKeysMax", 4000000)
     if (keyCount <= bcastMax)
       big.join(org.apache.spark.sql.functions.broadcast(keys), on,
         "left_semi")
@@ -1113,9 +1086,10 @@ object Dedup {
       rowsPerBand: Int): (DataFrame, DataFrame) = {
     // checkpointed ONCE with the count riding the checkpoint job (it
     // feeds clash guard, band rows, and verify dict)
-    val (deltaDocs, deltaCount) = checkpointWithCount(delta
-      .select(col("doc_id").cast("long").as("doc_id"),
-        wordSet(col("text")).as("ws")))
+    val (deltaDocs, Row(deltaCount: Long)) =
+      CheckpointLifecycle.observedCheckpoint(delta
+        .select(col("doc_id").cast("long").as("doc_id"),
+          wordSet(col("text")).as("ws")), count(lit(1)))
     // same clash guard as the PPJoin screen: a reused id would
     // self-match at J=1.0 in the verify dict → silent wrongful rejection
     val clash = semiPrune(s, s.table(s"$pre.docs").select(col("doc_id")),
@@ -1129,8 +1103,9 @@ object Dedup {
     // to the delta's keys — never shuffled whole per screen
     val dBands = minhashBandRows(deltaDocs, bands, rowsPerBand)
       .localCheckpoint() // feeds the key set AND the collision join
-    val (keys, keyCount) = checkpointWithCount(
-      dBands.select(col("band"), col("bh")).distinct())
+    val (keys, Row(keyCount: Long)) = CheckpointLifecycle
+      .observedCheckpoint(dBands.select(col("band"), col("bh")).distinct(),
+        count(lit(1)))
     val matched = semiPrune(s, s.table(s"$pre.bands"), keys,
       Seq("band", "bh"), keyCount)
     val cand = dBands.as("a")
@@ -1140,8 +1115,9 @@ object Dedup {
       .distinct()
       .localCheckpoint() // feeds the partner prune AND the verify join
     // exact verify reads only the CANDIDATE partners' word sets
-    val (partnerIds, partnerCount) = checkpointWithCount(
-      cand.select(col("id_b").as("doc_id")).distinct())
+    val (partnerIds, Row(partnerCount: Long)) =
+      CheckpointLifecycle.observedCheckpoint(
+        cand.select(col("id_b").as("doc_id")).distinct(), count(lit(1)))
     val partners = semiPrune(s, s.table(s"$pre.docs"), partnerIds,
       Seq("doc_id"), partnerCount)
     val dup = verifyPairs(s, deltaDocs.unionByName(partners), cand, t)
@@ -1171,8 +1147,6 @@ object Dedup {
   private def indexScreenWith(s: org.apache.spark.sql.SparkSession,
       cat: String, repoName: String, branch: String, delta: DataFrame,
       t: Double): (DataFrame, DataFrame) = {
-    val maxPost = s.conf.getOption("spark.graft.setsim.maxPostings")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1024)
     val pre = s"$cat.$repoName.$branch.dd"
     ddMetaCached(s, cat, repoName, branch, pre) match {
       case Some((b, rp)) => return indexScreenMinhash(s, pre, delta, t, b, rp)
@@ -1183,9 +1157,10 @@ object Dedup {
     // (it's the daily batch), so the checkpoint is cheap and every
     // downstream use reads blocks instead of re-running wordSet
     // checkpointed ONCE with the count riding the checkpoint job
-    val (deltaDocs, deltaCount) = checkpointWithCount(delta
-      .select(col("doc_id").cast("long").as("doc_id"),
-        wordSet(col("text")).as("ws")))
+    val (deltaDocs, Row(deltaCount: Long)) =
+      CheckpointLifecycle.observedCheckpoint(delta
+        .select(col("doc_id").cast("long").as("doc_id"),
+          wordSet(col("text")).as("ws")), count(lit(1)))
     // O(delta · matched postings), ENFORCED not just claimed: every
     // join of delta-derived keys against a stored table is a left-semi
     // with the delta side BROADCAST — the big stored side is scanned
@@ -1201,9 +1176,11 @@ object Dedup {
     // row count: a delta can have vocab >> docs or docs >> vocab or
     // candidate partners >> both, so each caller passes the count that
     // actually bounds its broadcast (each count rides its key set's
-    // checkpoint job — see checkpointWithCount)
-    val (deltaToks, vocabCount) = checkpointWithCount(
-      deltaDocs.select(explode(col("ws")).as("tok")).distinct())
+    // checkpoint job — see CheckpointLifecycle.observedCheckpoint)
+    val (deltaToks, Row(vocabCount: Long)) =
+      CheckpointLifecycle.observedCheckpoint(
+        deltaDocs.select(explode(col("ws")).as("tok")).distinct(),
+        count(lit(1)))
     // ids must be disjoint from the corpus: a delta doc_id already in
     // dd.docs would join BOTH word sets in the verify dict (a corpus
     // row self-matches at J=1.0 → silent wrongful rejection) — refuse
@@ -1227,14 +1204,15 @@ object Dedup {
     val matched =
       semiPrune(s, s.table(s"$pre.postings"), deltaToks, Seq("tok"),
         vocabCount)
-    val cand = probeCandidates(matched, probes, t, maxPost)
+    val cand = probeCandidates(matched, probes, t, MaxPostings)
       .localCheckpoint() // feeds the partner prune AND the verify join
     // the verify dictionary likewise reads only the CANDIDATE partners'
     // word sets from the stored docs table — never the whole corpus.
     // Partner ids get their OWN broadcast dispatch: a pathological
     // delta can match far more distinct partners than it has tokens
-    val (partnerIds, partnerCount) = checkpointWithCount(
-      cand.select(col("id_b").as("doc_id")).distinct())
+    val (partnerIds, Row(partnerCount: Long)) =
+      CheckpointLifecycle.observedCheckpoint(
+        cand.select(col("id_b").as("doc_id")).distinct(), count(lit(1)))
     val partners = semiPrune(s, s.table(s"$pre.docs"), partnerIds,
       Seq("doc_id"), partnerCount)
     val dict = deltaDocs.unionByName(partners)
@@ -1279,8 +1257,10 @@ object Dedup {
     // same delta-proportional rule as the screen: the admitted docs'
     // postings rank against dfreq pruned to THEIR vocabulary (broadcast
     // semi — the stored vocab is scanned, never shuffled per admit)
-    val (adToks, adTokCount) = checkpointWithCount(
-      adDocs.select(explode(col("ws")).as("tok")).distinct())
+    val (adToks, Row(adTokCount: Long)) =
+      CheckpointLifecycle.observedCheckpoint(
+        adDocs.select(explode(col("ws")).as("tok")).distinct(),
+        count(lit(1)))
     val dfreqPruned = semiPrune(s, s.table(s"$pre.dfreq"), adToks,
       Seq("tok"), adTokCount)
     graft.versioned.TableOps.atomicAppend(s, repo, branch, Seq(
@@ -1333,8 +1313,8 @@ object Dedup {
     * it costs at most slightly conservative prefixes later.
     *
     * The id set becomes a metadata predicate, so it must be
-    * driver-sized — bounded by `spark.graft.retire.maxIds` (default
-    * 100k; retire batches are control-plane-sized). Bulk purges that
+    * driver-sized — bounded by [[RetireMaxIds]] (100k; retire
+    * batches are control-plane-sized). Bulk purges that
     * exceed it should run as several bounded retires, or as a COLUMN
     * predicate via [[graft.versioned.TableOps.atomicDeleteMoR]]
     * directly ("delete every doc from source X" is O(1) metadata at
@@ -1344,11 +1324,9 @@ object Dedup {
       repo: graft.versioned.GraftRepo, branch: String,
       ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "indexRetire needs at least one doc_id")
-    val maxIds = s.conf.getOption("spark.graft.retire.maxIds")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(100000)
-    require(ids.size <= maxIds,
-      s"retire batch of ${ids.size} ids exceeds spark.graft.retire.maxIds" +
-        s"=$maxIds — split the batch or retire by column predicate")
+    require(ids.size <= RetireMaxIds,
+      s"retire batch of ${ids.size} ids exceeds the $RetireMaxIds-id cap " +
+        "— split the batch or retire by column predicate")
     val p = Seq[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("doc_id",
         ids.map(Long.box).toArray[Any]))
@@ -1365,16 +1343,14 @@ object Dedup {
   /** Repeated bounded retires COMPOUND: each one appends an id-list
     * tombstone to snapshot properties, and every later commit
     * re-carries the JSON until compaction materializes the deletes.
-    * Warn past `spark.graft.retire.tombstoneWarnBytes` (default 256
-    * KiB) so the hot commit path never silently drags megabytes of
-    * retire predicates.
+    * Warn past 256 KiB per table so the hot commit
+    * path never silently drags megabytes of retire predicates.
     */
   private[operators] def warnTombstoneBytes(
       s: org.apache.spark.sql.SparkSession,
       repo: graft.versioned.GraftRepo, branch: String,
       keys: Seq[String], compactHint: String): Unit = {
-    val warnBytes = s.conf.getOption("spark.graft.retire.tombstoneWarnBytes")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(256L << 10)
+    val warnBytes = 256L << 10
     keys.map(k => k ->
       graft.versioned.TableOps.tombstonePropBytes(repo, branch, k))
       .filter(_._2 > warnBytes)
@@ -1639,8 +1615,6 @@ object Dedup {
         |       true AS recall_ok, true AS precision_ok
         |FROM p""".stripMargin
     ) { (s, d) =>
-      val maxPost = s.conf.getOption("spark.graft.setsim.maxPostings")
-        .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1024)
       val par = s.sparkContext.defaultParallelism
       // ONE corpus pass (word sets + sizes + signatures checkpointed
       // together), ONE pair-dedup aggregate over the union of both
@@ -1678,7 +1652,8 @@ object Dedup {
       // candidate joins, so skipped pairs are dropped at emission.
       val coinPass = pmod(shiftright(col("id_a") * lit(2654435761L) +
         col("id_b") * lit(2246822519L), 16), lit(4)) === 0
-      val tagged = ppCandidates(s, docs, 0.9, maxPost).withColumn("src", lit(0))
+      val tagged = ppCandidates(s, docs, 0.9, MaxPostings)
+        .withColumn("src", lit(0))
         .unionByName(lshCandidates(s, docs).withColumn("src", lit(1)))
         .filter(coinPass)
         .groupBy(col("id_a"), col("id_b"))

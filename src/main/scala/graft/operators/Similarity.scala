@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.{Q, Tables => T}
 import graft.functions.TextVec._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointLifecycle
 
 /** Approximate-nearest-neighbor pack over the `embeddings` table
   * (SURVEY.md §2.3).
@@ -190,8 +191,7 @@ object Similarity {
     * DISTRIBUTED-centroid path ([[kmeansIndexDistributedOf]]).
     */
   private def maxModelK(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.kmeans.maxModelK")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4096)
+    graft.GraftConf.int(s, "spark.graft.kmeans.maxModelK", 4096)
 
   /** BELT for the model-size rule: the only way ANN code collects
     * centroid rows to the driver. Throws (rather than OOMing three
@@ -259,38 +259,27 @@ object Similarity {
     transform(slice(reverse(array_sort(scoredCellsLocal(model, u))),
       1, probes), x => x.getField("cell"))
 
-  /** `(vec_id, nv, nn, u)` CHECKPOINTED — the shared trainer input.
-    * Inputs already carrying the normalized shape (kmeansIndexAuto
-    * preps and checkpoints once for its sizing count) pass through
-    * untouched, so the corpus is never materialized into block storage
-    * twice on the dispatch path.
-    */
-  /** `(vec_id, nv, nn, u)` checkpointed + the corpus row count for the
-    * √N sizing rule,
-    * the count riding the checkpoint's own job via Dataset.observe
-    * (`nKnown` ≥ 0 skips it — the caller already sized this corpus; the
-    * fallback count() never runs unless the observed metric surprisingly
-    * fails to surface). The separate sizing count() per trainer entry
-    * was a whole extra corpus-length job.
+  /** `(vec_id, nv, nn, u)` CHECKPOINTED — the shared trainer input —
+    * plus the corpus row count for the √N sizing rule, the count riding
+    * the checkpoint's own job, not a corpus-length job of its own
+    * (`nKnown` ≥ 0: the caller already sized this corpus). Inputs
+    * already carrying the normalized shape (kmeansIndexAuto preps and
+    * checkpoints once for its sizing count) pass through untouched, so
+    * the corpus is never materialized into block storage twice on the
+    * dispatch path.
     */
   private def normalizedCorpusWithCount(corpusIn: DataFrame,
       nKnown: Long = -1L): (DataFrame, Long) =
     if (corpusIn.columns.contains("u") && corpusIn.columns.contains("nn"))
       (corpusIn, if (nKnown >= 0) nKnown else corpusIn.count())
     else {
-      val name =
-        "graft_corpus_" + java.util.UUID.randomUUID().toString.take(8)
-      val obs = corpusIn
+      // reused per Lloyd round + final index
+      val (ck, Row(n: Long)) = CheckpointLifecycle.observedCheckpoint(corpusIn
         .select(col("vec_id"), col("nv"))
         .withColumn("nn", l2norm(col("nv")))
-        .withColumn("u", expr("transform(nv, x -> x / nn)")) // unit vectors
-        .observe(name, count(lit(1)).as("n"))
-      val ck = obs.localCheckpoint() // reused per Lloyd round + final index
-      val n =
-        if (nKnown >= 0) nKnown
-        else obs.queryExecution.observedMetrics.get(name)
-          .map(_.getAs[Long]("n")).getOrElse(ck.count())
-      (ck, n)
+        .withColumn("u", expr("transform(nv, x -> x / nn)")), // unit vectors
+        count(lit(1)))
+      (ck, if (nKnown >= 0) nKnown else n)
     }
 
   private[graft] def kmeansIndexOf(s: SparkSession, corpusIn: DataFrame,
@@ -920,21 +909,15 @@ object Similarity {
     // the assignment. Distributed mode measures top-1 against the
     // COARSE router (kc = √k rows): the same quantity every append's
     // drift row measures, so the baseline and the samples agree.
-    val obsName =
-      "graft_drift_" + java.util.UUID.randomUUID().toString.take(8)
-    val top1obs = (if (coarse.isEmpty)
-      withU.join(broadcast(centsDf), Seq("cell"))
-        .select(col("vec_id"), dot(col("u"), col("cv")).as("top1"))
-    else top1ModelSim(withU, s.createDataFrame(coarse).toDF("cell", "cv")))
-      // the p05 percentile rides the checkpoint job via observe (it was
-      // its own aggregate job per init/retrain)
-      .observe(obsName,
-        percentile_approx(col("top1"), lit(0.05), lit(10000)).as("p05"))
-    val top1 = top1obs.localCheckpoint() // feeds the seed row
-    val driftRef = top1obs.queryExecution.observedMetrics.get(obsName)
-      .map(_.getAs[Double]("p05")).getOrElse(
-        top1.agg(percentile_approx(col("top1"), lit(0.05), lit(10000)))
-          .head().getDouble(0))
+    // the checkpoint feeds the seed row; the p05 percentile rides its
+    // job instead of an aggregate job of its own
+    val (top1, p05) = CheckpointLifecycle.observedCheckpoint(
+      if (coarse.isEmpty)
+        withU.join(broadcast(centsDf), Seq("cell"))
+          .select(col("vec_id"), dot(col("u"), col("cv")).as("top1"))
+      else top1ModelSim(withU, s.createDataFrame(coarse).toDF("cell", "cv")),
+      percentile_approx(col("top1"), lit(0.05), lit(10000)).as("p05"))
+    val driftRef = p05.getAs[Double]("p05")
     // max_model_k = the clamp the model was BUILT under: serve-time
     // collects validate against THIS, not the probing session's conf
     val metaDf = s.createDataFrame(
@@ -1161,22 +1144,14 @@ object Similarity {
     // argmax row's sim IS the top-1 model similarity, so count/drift
     // ride the checkpoint job for free instead of re-scanning the delta
     // (the old shape ran them as separate jobs).
-    val obsName =
-      "graft_append_" + java.util.UUID.randomUUID().toString.take(8)
     val driftAggs: Seq[Column] =
       if (logDrift && meta.coarseK == 0)
         Seq(count(when(col("sim") < lit(meta.driftRef), 1)).as("n_below"))
       else Nil
-    val observed = assigned0.observe(obsName,
-      count(lit(1)).as("n"), driftAggs: _*)
-    val assigned =
-      observed.localCheckpoint() // feeds guard, encode, store, and drift
-    // observed metrics come off the checkpoint's own execution; the
-    // fallback aggregate never runs unless the metrics surprisingly
-    // fail to surface (belt, not a second pass)
-    val metrics = observed.queryExecution.observedMetrics.get(obsName)
-    val deltaCount =
-      metrics.map(_.getAs[Long]("n")).getOrElse(assigned.count())
+    // the checkpoint feeds guard, encode, store, and drift
+    val (assigned, metrics) = CheckpointLifecycle.observedCheckpoint(
+      assigned0, count(lit(1)).as("n"), driftAggs: _*)
+    val deltaCount = metrics.getAs[Long]("n")
     // id guards, fused into ONE job (they were two): ids must be unique
     // WITHIN the delta (a doubled vec_id would store two vectors under
     // one identity — the ADC sum would double its approx score and the
@@ -1186,8 +1161,8 @@ object Similarity {
     // provably bounded; past the guard a keyed semi join does the same
     // check without an unbounded driver collect (the stored vec_id
     // column is scanned pruned either way).
-    val bcastMax = s.conf.getOption("spark.graft.dedup.broadcastKeysMax")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4000000)
+    val bcastMax =
+      graft.GraftConf.int(s, "spark.graft.dedup.broadcastKeysMax", 4000000)
     val deltaIds = assigned.select(col("vec_id"))
     val dupProbe = assigned.groupBy(col("vec_id"))
       .agg(count(lit(1)).as("cnt")).filter(col("cnt") > 1)
@@ -1228,10 +1203,7 @@ object Similarity {
       if (!logDrift) Nil
       else {
         val (nRows, nBelow) = coarseDriftModel match {
-          case None =>
-            (deltaCount, metrics.map(_.getAs[Long]("n_below")).getOrElse(
-              assigned.agg(count(when(col("sim") < lit(meta.driftRef), 1)))
-                .head().getLong(0)))
+          case None => (deltaCount, metrics.getAs[Long]("n_below"))
           case Some(mdl) =>
             val r = driftRow(top1ModelSim(assigned, mdl), meta.driftRef)
               .head()
@@ -1242,18 +1214,15 @@ object Similarity {
         val frac = if (nRows == 0L) 0.0 else nBelow.toDouble / nRows
         val row = s.createDataFrame(Seq((nRows, nBelow, frac)))
           .toDF("n_rows", "n_below", "frac_below")
-        // a batch whose below-baseline fraction exceeds the warn knob is
+        // a batch whose below-baseline fraction reaches warnFrac is
         // homing badly under the stored model — surface it at append
         // time (the log alone is silent until someone reads it)
-        val warnFrac = s.conf.getOption("spark.graft.ann.drift.warnFrac")
-          .flatMap(_.toDoubleOption).filter(f => f > 0 && f <= 1)
-          .getOrElse(0.5)
+        val warnFrac = 0.5
         if (frac >= warnFrac)
           System.err.println(f"[graft] WARNING: ann append drift " +
             f"frac_below=$frac%.3f >= $warnFrac%.2f (ref p05=" +
             f"${meta.driftRef}%.4f) — the delta homes poorly under the " +
-            "stored router; consider Similarity.annIndexRetrain " +
-            "(knob: spark.graft.ann.drift.warnFrac)")
+            "stored router; consider Similarity.annIndexRetrain")
         Seq("ann/drift" -> row)
       }
     graft.versioned.TableOps.atomicAppend(s, repo, branch,
@@ -1287,7 +1256,7 @@ object Similarity {
     * correct — the guard no longer sees the id).
     *
     * The id set becomes a metadata predicate, so it must be driver-
-    * sized — bounded by `spark.graft.retire.maxIds` like the dedup
+    * sized — bounded by [[Dedup.RetireMaxIds]] like the dedup
     * index's retire; bulk purges go through
     * [[graft.versioned.TableOps.atomicDeleteMoR]] with a column
     * predicate instead.
@@ -1295,11 +1264,9 @@ object Similarity {
   def annIndexRetire(s: SparkSession, repo: graft.versioned.GraftRepo,
       branch: String, vecIds: Seq[Long]): Unit = {
     require(vecIds.nonEmpty, "annIndexRetire needs at least one vec_id")
-    val maxIds = s.conf.getOption("spark.graft.retire.maxIds")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(100000)
-    require(vecIds.size <= maxIds,
-      s"retire batch of ${vecIds.size} ids exceeds " +
-        s"spark.graft.retire.maxIds=$maxIds — split the batch or retire " +
+    require(vecIds.size <= Dedup.RetireMaxIds,
+      s"retire batch of ${vecIds.size} ids exceeds the " +
+        s"${Dedup.RetireMaxIds}-id cap — split the batch or retire " +
         "by column predicate")
     graft.versioned.TableOps.atomicDeleteMoR(repo, branch,
       Seq("ann/vectors" -> Seq[org.apache.spark.sql.sources.Filter](
@@ -1390,12 +1357,11 @@ object Similarity {
     })
     // union of probed cells, pushed down so the cell-partitioned scan
     // prunes to the probed files. The set is ≤ |Q|·nprobe ids — guarded:
-    // past spark.graft.ann.pruneCellsMax (a huge query batch probing
-    // most of the index) the static prune is SKIPPED and the keyed join
-    // alone narrows candidates — correct either way, the prune is a
+    // past pruneMax cells (a huge query batch probing most of the
+    // index) the static prune is SKIPPED and the keyed join alone
+    // narrows candidates — correct either way, the prune is a
     // file-open optimization, never a filter the join doesn't re-apply
-    val pruneMax = s.conf.getOption("spark.graft.ann.pruneCellsMax")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(10000)
+    val pruneMax = 10000
     val probedRows = queryCells.select(col("cell")).distinct()
       .limit(pruneMax + 1).collect()
     val probed: Option[Seq[Long]] =

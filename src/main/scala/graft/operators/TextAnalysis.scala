@@ -445,8 +445,7 @@ object TextAnalysis {
     // pass 1 windows within (source, chunk) — every partition ≤ C
     // rows — pass 2 windows the tiny (source, chunk) totals table for
     // running offsets; cum = offset + within-chunk cumsum.
-    val chunkDocs = s.conf.getOption("spark.graft.mix.chunkDocs")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(1L << 20)
+    val chunkDocs = 1L << 20
     val toks = T.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("tokens"))

@@ -1952,8 +1952,8 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       // can only dirty files it lists, and a sane engine's per-commit
       // delete manifest names far fewer — a post past the cap is
       // malformed (or an attack on driver memory) and refuses 400.
-      val maxDirty = spark.flatMap(ss => scala.util.Try(ss.conf.get(
-        "spark.graft.rest.maxDirtyFiles").toInt).toOption).getOrElse(1000000)
+      val maxDirty = spark.fold(1000000)(ss =>
+        graft.GraftConf.int(ss, "spark.graft.rest.maxDirtyFiles", 1000000))
       def guarded(df: org.apache.spark.sql.DataFrame): Seq[String] = {
         val rows = df.limit(maxDirty + 1).collect()
         if (rows.length > maxDirty) throw new IllegalArgumentException(

@@ -64,43 +64,34 @@ object Manifests {
   private def manifestsDir(root: Path): Path =
     root.resolve("snapshots").resolve("manifests")
 
-  /** The shared bounded IO pool (sys prop `graft.manifest.load.threads`,
-    * default 16, read once at first use) for manifest chunk GET/PUT/HEAD
-    * fan-out — one pool per JVM, daemon threads, instead of building and
-    * tearing down a fresh pool on every commit's load/write/verify pass.
-    * None disables fan-out (`threads <= 1`).
+  /** The shared bounded IO pool (16 threads, started at first use) for
+    * manifest chunk GET/PUT/HEAD fan-out — one pool per JVM, daemon
+    * threads, instead of building and tearing down a fresh pool on
+    * every commit's load/write/verify pass.
     */
-  private lazy val ioPool: Option[java.util.concurrent.ExecutorService] = {
-    val threads =
-      Integer.getInteger("graft.manifest.load.threads", 16).intValue()
-    if (threads <= 1) None
-    else Some(java.util.concurrent.Executors.newFixedThreadPool(threads,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-manifest-io")
-        t.setDaemon(true)
-        t
-      }))
-  }
+  private lazy val ioPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(16, (r: Runnable) => {
+      val t = new Thread(r, "graft-manifest-io")
+      t.setDaemon(true)
+      t
+    })
 
   /** Map `f` over `items` on the shared pool (serial when the batch is
-    * at most `serialAtMost` or fan-out is disabled), unwrapping
-    * ExecutionException so callers surface the backend's own failure
-    * type, not the pool's wrapper.
+    * at most `serialAtMost`), unwrapping ExecutionException so callers
+    * surface the backend's own failure type, not the pool's wrapper.
     */
   private[versioned] def fanOut[A, B](items: Seq[A], serialAtMost: Int)(
-      f: A => B): Seq[B] = ioPool match {
-    case Some(pool) if items.size > serialAtMost =>
-      items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = f(a)
-      })).map { fut =>
-        try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
+      f: A => B): Seq[B] =
+    if (items.size <= serialAtMost) items.map(f)
+    else items.map(a => ioPool.submit(new java.util.concurrent.Callable[B] {
+      def call(): B = f(a)
+    })).map { fut =>
+      try fut.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          throw Option(e.getCause).getOrElse(e)
       }
-    case _ => items.map(f)
-  }
+    }
 
   /** Split an ordered file list into content-defined chunks (cut points
     * from each entry's path hash — [[ChunkStore.chunkBy]]).
@@ -250,7 +241,7 @@ object Manifests {
     * object store each chunk GET is tens of milliseconds of latency, and
     * a thousand-chunk snapshot loaded serially would turn cold planning
     * into a multi-second driver stall — latency-bound work, so the pool
-    * (sys prop `graft.manifest.load.threads`, default 16) costs nothing
+    * (16 threads) costs nothing
     * locally and collapses cold-load latency to O(chunks/threads)
     * remotely. Cache hits never enter the pool.
     */

@@ -263,9 +263,7 @@ object TableOps {
     // the file exactly as it reads an executor-written one. Partitioned
     // or bloom-opted tables keep the cluster path (the rebalance /
     // parquet-native-bloom machinery lives there).
-    val localWriteMax = spark.conf
-      .getOption("spark.graft.stats.localWriteMaxRows")
-      .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(10000)
+    val localWriteMax = 10000
     val localRows =
       if (spec.nonEmpty ||
         bloomCols.exists(c => schema.fields.exists(_.name == c))) None
@@ -376,8 +374,7 @@ object TableOps {
     // stages six). Past the threshold the read distributes exactly as
     // before — a 100 TB compaction's thousands of footers are real
     // parallel I/O, not job overhead.
-    val localMax = spark.conf.getOption("spark.graft.stats.localFooterMax")
-      .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(64)
+    val localMax = 64
     val hconf = spark.sparkContext.hadoopConfiguration
     val raw: IndexedSeq[FooterStats.WrittenFile] =
       if (paths.size <= localMax)

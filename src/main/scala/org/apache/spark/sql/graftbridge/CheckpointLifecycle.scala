@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Storage lifecycle for `localCheckpoint()`ed DataFrames.
@@ -26,8 +26,29 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    of finished queries are unreachable-by-construction between
   *    harness queries; `df.persist` users in this codebase are all
   *    query-scoped too).
+  *
+  * [[observedCheckpoint]] is the one way operators take a checkpoint
+  * together with an aggregate over it.
   */
 object CheckpointLifecycle {
+
+  /** Eager `localCheckpoint()` of `df` plus the aggregates
+    * `metric +: more` observed on the checkpoint's own job
+    * (Dataset.observe) — a row count, a convergence count or a drift
+    * percentile costs no second pass over the blocks. Returns the
+    * checkpoint and the observed row. A row that fails to surface
+    * throws: recomputing it would silently double the job.
+    */
+  def observedCheckpoint(df: DataFrame, metric: Column, more: Column*)
+      : (DataFrame, Row) = {
+    val name = "graft_obs_" + java.util.UUID.randomUUID().toString.take(8)
+    val observed = df.observe(name, metric, more: _*)
+    val ck = observed.localCheckpoint()
+    val row = observed.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(
+        s"observation $name did not surface after localCheckpoint()"))
+    (ck, row)
+  }
 
   /** Free the checkpoint blocks backing `df`. The caller asserts `df`
     * (and every DataFrame derived from it) is dead: the blocks are the

@@ -1078,9 +1078,9 @@ class LlmOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     }
     // every gram-key family must produce the identical span set: only
     // the hash changes, and at this corpus size none collide. The
-    // default (already exercised above) is xx128; this pins the 64-bit
-    // opt-in AND the engine-portable md5 fallback.
-    Seq("xxhash64", "md5").foreach { h =>
+    // default (already exercised above) is xx128; this pins the
+    // engine-portable md5 key.
+    Seq("md5").foreach { h =>
       spark.conf.set("spark.graft.dupspans.hash", h)
       try {
         val alt = SparkEntry.queries("dd_dupspans")(spark, sfDir)
@@ -1089,11 +1089,14 @@ class LlmOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
         withClue(s"hash=$h: ") { alt shouldBe expect.toSeq }
       } finally spark.conf.unset("spark.graft.dupspans.hash")
     }
-    // a typo'd key must throw, never silently pick a hash
-    spark.conf.set("spark.graft.dupspans.hash", "sha1")
-    try intercept[IllegalArgumentException] {
-      SparkEntry.queries("dd_dupspans")(spark, sfDir).collect()
-    } finally spark.conf.unset("spark.graft.dupspans.hash")
+    // a typo'd key, or the removed 64-bit key, must throw, never
+    // silently pick a hash
+    Seq("sha1", "xxhash64").foreach { h =>
+      spark.conf.set("spark.graft.dupspans.hash", h)
+      try intercept[IllegalArgumentException] {
+        SparkEntry.queries("dd_dupspans")(spark, sfDir).collect()
+      } finally spark.conf.unset("spark.graft.dupspans.hash")
+    }
   }
   test("text ops survive EDGE documents under ANSI mode: empty text, " +
     "1-4 word docs — OOB subscripts and zero divisions must match the " +
