@@ -1281,8 +1281,8 @@ object Versioned {
     * external MoR engine posts), and the engine-shaped snapshot commits
     * against the base table: the server lowers the posted positions
     * onto a server-side CoW rewrite of exactly the dirty files
-    * (IcebergRestServer.commitTable posdel branch → readPlan sub-plan →
-    * commitRewrite). The gate reads the final table natively; DuckDB
+    * (IcebergRestServer.materializePosDeletes → readPlan sub-plan →
+    * one member commit). The gate reads the final table natively; DuckDB
     * replays the predicate.
     */
   private def restPosDel(s: SparkSession, d: String): DataFrame = {

@@ -6,7 +6,7 @@ import java.util.concurrent.{ConcurrentHashMap, Executors}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -88,9 +88,9 @@ import org.apache.spark.sql.functions.col
   *    footer reads — no Spark job, no data scan. An `append` may not
   *    drop base files; `overwrite`/`delete` is the engine's
   *    copy-on-write rewrite — dropped base files leave the live set and
-  *    added files register at the table's next sequence in ONE commit
-  *    ([[TableOps.commitRewrite]]), which is how an external CoW
-  *    DELETE/UPDATE/MERGE lands on the graft branch. EQUALITY delete
+  *    added files register at the table's next sequence in ONE commit,
+  *    which is how an external CoW DELETE/UPDATE/MERGE lands on the
+  *    graft branch. EQUALITY delete
   *    files (content=2) lower onto graft predicate tombstones — the
   *    inverse of the exporter's tombstone → equality-delete mapping:
   *    value rows become ONE tombstone at the table's next sequence,
@@ -101,8 +101,8 @@ import org.apache.spark.sql.functions.col
   *    CoW rewrite of exactly the referenced files: the posted positions
   *    apply through the independent importer's sequence semantics
   *    ([[IcebergImport.readPlan]] on a dirty-files sub-plan), survivors
-  *    land as native graft files, and [[TableOps.commitRewrite]] swaps
-  *    them atomically — O(dirty files + delete rows), the cost the
+  *    land as native graft files, and one commit swaps them in
+  *    atomically — O(dirty files + delete rows), the cost the
   *    engine's own CoW would have paid, with the same stale-base 409
   *    (reference parity: LakeFSTableOperations.commit, java:115-147,
   *    accepts any metadata swap). The FULL Flink-upsert checkpoint
@@ -111,11 +111,18 @@ import org.apache.spark.sql.functions.col
   *    dedup — those adds fold into the rewrite), the equality predicate
   *    applied physically to dirty files and as a tombstone for
   *    untouched ones, same-commit adds exempt per the strictly-lower
-  *    rule. What still refuses loudly with 400: NULL-valued or
-  *    oversized (> [[IcebergExport.MaxEqualityRows]]) equality deletes,
-  *    positional deletes referencing files neither live at the base nor
-  *    added by the commit, MoR deletes mixed with CoW file drops, and
-  *    replace summaries.
+  *    rule. A `replace` summary (the engine's own compaction) lands as
+  *    a structural compaction commit once its row count and retired
+  *    delete files check out. What still refuses loudly with 400:
+  *    NULL-valued or oversized (> [[IcebergExport.MaxEqualityRows]])
+  *    equality deletes, positional deletes referencing files neither
+  *    live at the base nor added by the commit, MoR deletes mixed with
+  *    CoW file drops, and new delete files on a `replace`.
+  *    Every change parses and lowers ONCE: a table commit is a
+  *    one-member transaction (`POST /v1/transactions/commit` takes a
+  *    list of the same bodies), so both routes accept and refuse
+  *    alike; only tag writes, rollbacks, partition-spec changes and
+  *    `replace` are single-table commits.
   *  - `DELETE .../tables/{t}` drops (optionally `purgeRequested=true`
   *    with the engine catalog's purge semantics); `POST /tables/rename`
   *    re-keys the commit map in one metadata commit, same-branch only
@@ -153,6 +160,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     maxSnapshots: Int, formatVersion: Int, writable: Boolean,
     token: Option[String], credential: Option[String], oauthTtlSec: Long,
     server: HttpServer) {
+  import IcebergRestServer._
 
   def port: Int = server.getAddress.getPort
 
@@ -654,6 +662,19 @@ final class IcebergRestServer private (single: Option[GraftRepo],
   private def stageRel(ref: String, key: String): String =
     s"data/rest/$ref/$key"
 
+  /** The served table location of `(ref, key)` — where staged-create
+    * metadata points engines and where non-compliant writers stage. */
+  private def destRootOf(prefix: Option[String], ref: String,
+      key: String): Path =
+    prefix.fold(exportRoot)(exportRoot.resolve)
+      .resolve(ref).resolve(key).toAbsolutePath.normalize
+
+  /** Hadoop conf for footer and delete-file reads: the serving
+    * session's, or a default one on a session-less server. */
+  private def hadoopConf(): org.apache.hadoop.conf.Configuration =
+    spark.map(_.sessionState.newHadoopConf())
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
   /** The current metadata file for `(ref, key)` — re-exported at the
     * next version iff the graft snapshot moved (or a writable server is
     * serving metadata that predates the `write.data.path` stamp).
@@ -752,7 +773,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * (schema, spec, location, `write.data.path`) is all an engine
     * needs to write the CTAS data; the table materializes atomically
     * when the engine posts the staged commit (requirement
-    * `assert-create` — [[commitStagedCreate]]). A stage that is never
+    * `assert-create` — [[stageChange]]). A stage that is never
     * committed leaves NOTHING behind.
     */
   private def createTable(repo: GraftRepo, prefix: Option[String],
@@ -772,12 +793,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     val schemaNode = Option(req.get("schema")).getOrElse(
       throw new IllegalArgumentException("create carries no schema"))
     val schema = IcebergImport.structOf(schemaNode)
-    val idToName = Option(schemaNode.get("fields")).toSeq
-      .flatMap(_.elements().asScala).map(fieldIdName).toMap
-    val spec = Option(req.get("partition-spec"))
-      .map(n => Option(n.get("fields")).getOrElse(n)) // spec object or bare list
-      .map(_.elements().asScala.map(partitionFieldOf(_, idToName)).toSeq)
-      .getOrElse(Nil)
+    val spec = specOf(Option(req.get("partition-spec")), schemaNode)
     TableOps.validateSpec(schema, spec)
     val props = Option(req.get("properties")).map(_.fields().asScala
       .map(e => e.getKey -> e.getValue.asText()).toMap)
@@ -809,14 +825,13 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * spec's marker that the metadata is staged, not committed); the
     * served `location` and `write.data.path` point where a compliant
     * engine stages the CTAS data files, which the staged commit
-    * ([[commitStagedCreate]]) then registers zero-copy.
+    * ([[stageChange]]) then registers zero-copy.
     */
   private def stagedCreateResult(repo: GraftRepo, prefix: Option[String],
       ref: String, key: String,
       schema: org.apache.spark.sql.types.StructType,
       spec: Seq[PartitionField], props: Map[String, String]): ObjectNode = {
-    val destRoot = prefix.fold(exportRoot)(exportRoot.resolve)
-      .resolve(ref).resolve(key).toAbsolutePath.normalize
+    val destRoot = destRootOf(prefix, ref, key)
     val schemaNode = mapper.readTree(
       IcebergExport.icebergSchemaJson(schema)).asInstanceOf[ObjectNode]
     schemaNode.put("schema-id", 0)
@@ -868,6 +883,17 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     o
   }
 
+  /** A posted partition spec (spec object or bare field list) → graft
+    * [[PartitionField]]s, source ids resolved against `schemaNode`. */
+  private def specOf(specNode: Option[JsonNode],
+      schemaNode: JsonNode): Seq[PartitionField] = {
+    val idToName = Option(schemaNode.get("fields")).toSeq
+      .flatMap(_.elements().asScala).map(fieldIdName).toMap
+    specNode.map(n => Option(n.get("fields")).getOrElse(n))
+      .map(_.elements().asScala.map(partitionFieldOf(_, idToName)).toSeq)
+      .getOrElse(Nil)
+  }
+
   /** One posted Iceberg partition field → graft [[PartitionField]]. */
   private def partitionFieldOf(f: com.fasterxml.jackson.databind.JsonNode,
       idToName: Map[Int, String]): PartitionField = {
@@ -892,16 +918,39 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     }
   }
 
-  /** CommitTableRequest → graft commit (class doc: WRITE PATH).
-    * Dispatch: an existing table takes the append / CoW-rewrite /
-    * MoR-equality-delete / schema-update path; an absent table commits
-    * only with an `assert-create` requirement — the spec's staged
-    * CREATE (CTAS) publish, which creates the table and its first
-    * snapshot in ONE graft commit.
+  // ---- table commits: one parser, one fold ---------------------------------
+
+  /** CommitTableRequest → graft commit (class doc: WRITE PATH): the
+    * change parses once ([[stageChange]]), then lands as a one-member
+    * transaction ([[land]]) — or, for the single-table-only kinds, as
+    * its own commit.
     */
   private def commitTable(repo: GraftRepo, prefix: Option[String],
-      ns: Seq[String], name: String,
-      req: com.fasterxml.jackson.databind.JsonNode): ObjectNode = {
+      ns: Seq[String], name: String, req: JsonNode): ObjectNode = {
+    val st = stageChange(repo, prefix, ns, name, req)
+    st match {
+      case s: SingleTable => s.run()
+      case m: Member if m.noop => ()
+      case l: Landable => land(repo, l.ref, Seq(l), l.message)
+    }
+    loadResult(serve(repo, prefix, st.ref, st.key))
+  }
+
+  /** The ONE parser of a REST table change (a CommitTableRequest body or
+    * a transaction member): requirements are validated against the
+    * served metadata, updates parsed once, and whatever the change
+    * needs (footer reads, the positional-delete rewrite's Spark jobs)
+    * is staged BEFORE any commit closure runs, so a commit retry never
+    * re-runs it. An existing table takes the append / CoW-rewrite /
+    * MoR-delete / schema-update vocabulary ([[stageUpdate]]); an absent
+    * table stages only with an `assert-create` requirement — the
+    * spec's staged CREATE (CTAS) publish ([[stageCreate]]).
+    * Requirements validated here are re-checked inside the commit race
+    * by the fold's base pin (a requirement that no longer holds at
+    * publish time answers 409).
+    */
+  private def stageChange(repo: GraftRepo, prefix: Option[String],
+      ns: Seq[String], name: String, change: JsonNode): Staged = {
     val (ref, dirs) = ns match {
       case r +: ds if ds.nonEmpty => (r, ds)
       case _ => throw new NoSuchElementException(
@@ -912,133 +961,108 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       throw new NoSuchElementException(s"no such table: $key @ $ref")
     if (!repo.branchExists(ref)) throw new IllegalArgumentException(
       s"commits target a branch; $ref is a tag")
-    val reqs = Option(req.get("requirements")).toSeq
+    val reqs = Option(change.get("requirements")).toSeq
       .flatMap(_.elements().asScala).toSeq
-    if (!repo.resolve(ref).tables.contains(key)) {
-      if (reqs.exists(r => text(r, "type") == "assert-create"))
-        return commitStagedCreate(repo, prefix, ref, dirs, key, reqs, req)
-      throw new NoSuchElementException(s"no such table: $key @ $ref")
+    val metaPath =
+      if (repo.resolve(ref).tables.contains(key))
+        Some(serve(repo, prefix, ref, key))
+      else if (reqs.exists(r => text(r, "type") == "assert-create")) None
+      else throw new NoSuchElementException(s"no such table: $key @ $ref")
+    val served = metaPath.map(p => mapper.readTree(Files.readString(p)))
+    reqs.foreach(checkRequirement(_, served, ref, key))
+    val u = parseUpdates(change, served, key)
+    // TAG ref writes (set-snapshot-ref type=tag / remove-snapshot-ref)
+    // are their own commit: combining a tag write with data/schema
+    // updates would entangle the tag with an uncommitted snapshot
+    if ((u.tagCreate.isDefined || u.tagRemove.isDefined) &&
+        u.copy(tagCreate = None, tagRemove = None) != Updates())
+      throw new UnsupportedOperationException(
+        "tag ref writes are their own commit over REST — post other " +
+          "updates separately")
+    val destRoot = destRootOf(prefix, ref, key)
+    metaPath match {
+      case Some(p) => stageUpdate(repo, ref, key, destRoot, p, served.get, u)
+      case None => stageCreate(repo, ref, dirs, key, destRoot, u)
     }
-    val metaPath = serve(repo, prefix, ref, key)
-    val served = mapper.readTree(Files.readString(metaPath))
-    val servedGraftSnap =
-      served.get("properties").get("graft.source-snapshot").asText()
-    val servedSnapId = Option(served.get("current-snapshot-id"))
-      .map(_.asLong()).filter(_ != -1L)
-    val servedSchemaId =
-      Option(served.get("current-schema-id")).map(_.asInt()).getOrElse(0)
+  }
 
-    // ---- requirements: against the served state now, re-checked
-    // against the branch head inside the commit race (precheck below)
-    reqs.foreach { r =>
-        text(r, "type") match {
-          case "assert-table-uuid" =>
-            val want = text(r, "uuid")
-            val have = served.get("table-uuid").asText()
-            if (want != have) throw new RestConflict("CommitFailedException",
-              s"table uuid changed: expected $want, found $have")
-          case "assert-ref-snapshot-id" =>
-            val rn = Option(r.get("ref")).map(_.asText()).getOrElse("main")
-            val want = Option(r.get("snapshot-id")).filterNot(_.isNull)
-              .map(_.asLong())
-            if (rn == "main") {
-              if (want != servedSnapId)
-                throw new RestConflict("CommitFailedException",
-                  s"branch main moved: expected snapshot ${want.getOrElse("<none>")}, " +
-                    s"now at ${servedSnapId.getOrElse("<none>")}")
-            } else {
-              // a NAMED ref requirement (iceberg-core posts snapshot-id
-              // null on createTag: "the ref must not exist yet"):
-              // validate against the served refs map, which bakes graft
-              // tag state in
-              val have = Option(served.get("refs"))
-                .flatMap(rs => Option(rs.get(rn)))
-                .flatMap(n => Option(n.get("snapshot-id"))).map(_.asLong())
-              if (want != have)
-                throw new RestConflict("CommitFailedException",
-                  s"ref $rn changed: expected ${want.getOrElse("<none>")}, " +
-                    s"now at ${have.getOrElse("<none>")}")
-            }
-          case "assert-current-schema-id" =>
-            val want = Option(r.get("current-schema-id")).map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "assert-current-schema-id carries no current-schema-id"))
-            if (want != servedSchemaId)
-              throw new RestConflict("CommitFailedException",
-                s"current schema changed: expected $want, found $servedSchemaId")
-          case "assert-last-assigned-field-id" =>
-            val want = Option(r.get("last-assigned-field-id")).map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "assert-last-assigned-field-id carries no last-assigned-field-id"))
-            val have = Option(served.get("last-column-id")).map(_.asInt()).getOrElse(0)
-            if (want != have)
-              throw new RestConflict("CommitFailedException",
-                s"last assigned field id changed: expected $want, found $have")
-          case "assert-default-sort-order-id" =>
-            // graft serves sort-order 0 always (orders are advisory) —
-            // validate so an engine's sort-order commit round-trips
-            val want = Option(r.get("default-sort-order-id"))
-              .map(_.asInt()).getOrElse(
-                throw new IllegalArgumentException(
-                  "assert-default-sort-order-id carries no " +
-                    "default-sort-order-id"))
-            val have = Option(served.get("default-sort-order-id"))
-              .map(_.asInt()).getOrElse(0)
-            if (want != have)
-              throw new RestConflict("CommitFailedException",
-                s"default sort order changed: expected $want, found $have")
-          case "assert-default-spec-id" =>
-            // iceberg-core's UpdateRequirements posts these two on every
-            // partition-evolution commit — a real engine's ALTER TABLE
-            // ADD PARTITION FIELD must not 400 on the requirement
-            val want = Option(r.get("default-spec-id")).map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "assert-default-spec-id carries no default-spec-id"))
-            val have = Option(served.get("default-spec-id"))
-              .map(_.asInt()).getOrElse(0)
-            if (want != have)
-              throw new RestConflict("CommitFailedException",
-                s"default partition spec changed: expected $want, found $have")
-          case "assert-last-assigned-partition-id" =>
-            val want = Option(r.get("last-assigned-partition-id"))
-              .map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "assert-last-assigned-partition-id carries no " +
-                  "last-assigned-partition-id"))
-            val have = Option(served.get("last-partition-id"))
-              .map(_.asInt()).getOrElse(999)
-            if (want != have)
-              throw new RestConflict("CommitFailedException",
-                s"last assigned partition field id changed: " +
-                  s"expected $want, found $have")
-          case "assert-create" =>
-            // definitive, not retryable: the CTAS lost its race (or the
-            // name was taken all along) — same answer the in-commit
-            // race gives, so the losing engine sees ONE failure shape
-            throw new RestConflict("AlreadyExistsException",
-              s"table already exists: $key @ $ref")
-          case other => throw new UnsupportedOperationException(
-            s"unsupported commit requirement: $other")
-        }
+  /** Validate one requirement against the served metadata (`served`
+    * is None for a table the change creates: only `assert-create`
+    * holds there).
+    */
+  private def checkRequirement(r: JsonNode, served: Option[JsonNode],
+      ref: String, key: String): Unit = (text(r, "type"), served) match {
+    case ("assert-create", exists) =>
+      // definitive, not retryable: the CTAS lost its race (or the
+      // name was taken all along) — same answer the in-commit race
+      // gives, so the losing engine sees ONE failure shape
+      if (exists.isDefined) throw new RestConflict("AlreadyExistsException",
+        s"table already exists: $key @ $ref")
+    case (other, None) => throw new UnsupportedOperationException(
+      s"unsupported requirement on a staged create: $other")
+    case ("assert-table-uuid", Some(served)) =>
+      val want = text(r, "uuid")
+      val have = served.get("table-uuid").asText()
+      if (want != have) throw new RestConflict("CommitFailedException",
+        s"table uuid changed for $key: expected $want, found $have")
+    case ("assert-ref-snapshot-id", Some(served)) =>
+      val rn = Option(r.get("ref")).map(_.asText()).getOrElse("main")
+      val want = Option(r.get("snapshot-id")).filterNot(_.isNull)
+        .map(_.asLong())
+      // main is the served current snapshot; a NAMED ref requirement
+      // (iceberg-core posts snapshot-id null on createTag: "the ref
+      // must not exist yet") validates against the served refs map,
+      // which bakes graft tag state in
+      val have =
+        if (rn == "main") Option(served.get("current-snapshot-id"))
+          .map(_.asLong()).filter(_ != -1L)
+        else Option(served.get("refs")).flatMap(rs => Option(rs.get(rn)))
+          .flatMap(n => Option(n.get("snapshot-id"))).map(_.asLong())
+      if (want != have) throw new RestConflict("CommitFailedException",
+        s"ref $rn of $key moved: expected snapshot " +
+          s"${want.getOrElse("<none>")}, now at ${have.getOrElse("<none>")}")
+    case (t, Some(served)) =>
+      // the integer-valued requirements iceberg-core's UpdateRequirements
+      // posts (schema updates; partition evolution; sort orders, which
+      // graft serves as 0 always — orders are advisory — validated so an
+      // engine's sort-order commit round-trips): requirement field,
+      // served field, served default
+      val (field, servedField, default, what) = t match {
+        case "assert-current-schema-id" => ("current-schema-id",
+          "current-schema-id", 0, "current schema")
+        case "assert-last-assigned-field-id" => ("last-assigned-field-id",
+          "last-column-id", 0, "last assigned field id")
+        case "assert-default-sort-order-id" => ("default-sort-order-id",
+          "default-sort-order-id", 0, "default sort order")
+        case "assert-default-spec-id" => ("default-spec-id",
+          "default-spec-id", 0, "default partition spec")
+        case "assert-last-assigned-partition-id" =>
+          ("last-assigned-partition-id", "last-partition-id", 999,
+            "last assigned partition field id")
+        case other => throw new UnsupportedOperationException(
+          s"unsupported commit requirement: $other")
       }
+      val want = Option(r.get(field)).map(_.asInt()).getOrElse(
+        throw new IllegalArgumentException(s"$t carries no $field"))
+      val have = Option(served.get(servedField)).map(_.asInt())
+        .getOrElse(default)
+      if (want != have) throw new RestConflict("CommitFailedException",
+        s"$what changed: expected $want, found $have")
+  }
 
-    // ---- updates: at most one add-snapshot (+ its set-snapshot-ref),
-    // at most one add-schema (+ set-current-schema) — the spec's
-    // schema-evolution commit, lowered onto graft's metadata-only
-    // evolution (reference parity: LakeFSTableOperations.commit,
-    // java:115-147, accepts ANY metadata swap — schema changes
-    // included) — and optional set-properties; anything else refuses
-    var snapNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var newSchemaNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var newSpecNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var sawSetDefaultSpec = false
-    var setCurrentSchema: Option[Int] = None
-    var sawAdvisory = false
-    var setRefTarget: Option[Long] = None
-    var tagCreate: Option[(String, Long)] = None
-    var tagRemove: Option[String] = None
-    var setProps = Map.empty[String, String]
-    var removeProps = Set.empty[String]
+  /** Parse a change's updates: at most one add-snapshot (+ its
+    * set-snapshot-ref), at most one add-schema (+ set-current-schema)
+    * — the spec's schema-evolution commit, lowered onto graft's
+    * metadata-only evolution (reference parity:
+    * LakeFSTableOperations.commit, java:115-147, accepts ANY metadata
+    * swap — schema changes included) — partition-spec and tag ref
+    * writes, property updates, and the advisory updates graft accepts
+    * as validated no-ops; anything else refuses. `served` is None for
+    * a staged create, whose identity/serving details (uuid, format
+    * version, location) graft assigns itself on export.
+    */
+  private def parseUpdates(change: JsonNode, served: Option[JsonNode],
+      key: String): Updates = {
     // graft.* table properties are engine state (MoR tombstones, commit
     // sequence, staging markers): a REST client rewriting them could
     // resurrect deleted rows — same guard as native ALTER's SetProperty
@@ -1048,30 +1072,31 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           s"$k is engine-managed graft state; not settable over REST")
       k
     }
-    Option(req.get("updates")).toSeq
-      .flatMap(_.elements().asScala).foreach { u =>
+    def once(what: String, seen: Option[JsonNode],
+        node: => Option[JsonNode]): Option[JsonNode] = {
+      if (seen.isDefined) throw new UnsupportedOperationException(
+        s"one $what per commit ($key)")
+      Some(node.getOrElse(throw new IllegalArgumentException(
+        s"$what carries no ${what.stripPrefix("add-")}")))
+    }
+    Option(change.get("updates")).toSeq.flatMap(_.elements().asScala)
+      .foldLeft(Updates()) { (acc, u) =>
         text(u, "action") match {
           case "add-snapshot" =>
-            if (snapNode.isDefined) throw new UnsupportedOperationException(
-              "one add-snapshot per commit")
-            snapNode = Some(Option(u.get("snapshot")).getOrElse(
-              throw new IllegalArgumentException(
-                "add-snapshot carries no snapshot")))
+            acc.copy(snap = once("add-snapshot", acc.snap,
+              Option(u.get("snapshot"))))
           case "set-snapshot-ref" =>
             val rn = Option(u.get("ref-name")).map(_.asText()).getOrElse("main")
             val rt = Option(u.get("type")).map(_.asText()).getOrElse("branch")
-            if (rn == "main")
-              setRefTarget = Option(u.get("snapshot-id")).filterNot(_.isNull)
-                .map(_.asLong())
-            else if (rt == "tag")
-              // named TAG ref write (Spark's ALTER TABLE ... CREATE TAG,
-              // ManageSnapshots.createTag): lowers onto a graft repo tag
-              // at the commit where this table served the named snapshot
-              // — handled as its own commit below
-              tagCreate = Some((rn, Option(u.get("snapshot-id"))
-                .filterNot(_.isNull).map(_.asLong()).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"set-snapshot-ref tag $rn carries no snapshot-id"))))
+            val sid = Option(u.get("snapshot-id")).filterNot(_.isNull)
+              .map(_.asLong())
+            if (rn == "main") acc.copy(refTarget = sid)
+            // named TAG ref write (Spark's ALTER TABLE ... CREATE TAG,
+            // ManageSnapshots.createTag): lowers onto a graft repo tag
+            // at the commit where this table served the named snapshot
+            else if (rt == "tag") acc.copy(tagCreate = Some(rn ->
+              sid.getOrElse(throw new IllegalArgumentException(
+                s"set-snapshot-ref tag $rn carries no snapshot-id"))))
             else throw new UnsupportedOperationException(
               s"named BRANCH refs are repo-level in graft — create a " +
                 s"graft branch and address it as its own namespace " +
@@ -1080,35 +1105,29 @@ final class IcebergRestServer private (single: Option[GraftRepo],
             val rn = text(u, "ref-name")
             if (rn == "main") throw new IllegalArgumentException(
               "cannot remove the main ref")
-            tagRemove = Some(rn)
+            acc.copy(tagRemove = Some(rn))
           case "set-properties" =>
-            setProps ++= Option(u.get("updates")).toSeq
-              .flatMap(_.fields().asScala)
-              .map(e => guardProp(e.getKey) -> e.getValue.asText())
+            acc.copy(setProps = acc.setProps ++ Option(u.get("updates"))
+              .toSeq.flatMap(_.fields().asScala)
+              .map(e => guardProp(e.getKey) -> e.getValue.asText()))
           case "remove-properties" =>
-            removeProps ++= Option(u.get("removals")).toSeq
-              .flatMap(_.elements().asScala).map(n => guardProp(n.asText()))
+            acc.copy(removeProps = acc.removeProps ++
+              Option(u.get("removals")).toSeq
+                .flatMap(_.elements().asScala).map(n => guardProp(n.asText())))
           case "add-schema" =>
-            if (newSchemaNode.isDefined) throw new UnsupportedOperationException(
-              "one add-schema per commit")
-            newSchemaNode = Some(Option(u.get("schema")).getOrElse(
-              throw new IllegalArgumentException(
-                "add-schema carries no schema")))
+            acc.copy(schema = once("add-schema", acc.schema,
+              Option(u.get("schema"))))
           case "set-current-schema" =>
-            setCurrentSchema = Some(Option(u.get("schema-id")).map(_.asInt())
-              .getOrElse(-1))
+            acc.copy(currentSchema = Some(Option(u.get("schema-id"))
+              .map(_.asInt()).getOrElse(-1)))
           case "add-partition-spec" =>
-            if (newSpecNode.isDefined) throw new UnsupportedOperationException(
-              "one add-partition-spec per commit")
-            newSpecNode = Option(u.get("spec")).orElse(Some(u))
-          case "set-default-spec" =>
-            sawSetDefaultSpec = true
+            acc.copy(spec = once("add-partition-spec", acc.spec,
+              Option(u.get("spec")).orElse(Some(u))))
+          case "set-default-spec" => acc.copy(setDefaultSpec = true)
           // graft tables have no sort orders; an engine's declared
-          // order is advisory (write-side clustering) and drops here
-          // exactly as it does on a staged CREATE — the served
-          // default-sort-order-id stays 0
-          case "add-sort-order" | "set-default-sort-order" =>
-            sawAdvisory = true
+          // order is advisory (write-side clustering) and drops here —
+          // the served default-sort-order-id stays 0
+          case "add-sort-order" | "set-default-sort-order" => acc
           // an engine's ANALYZE TABLE posts Puffin statistics-file
           // pointers; graft computes its own stats (snapshot metadata +
           // footer NDV), so the pointers are accepted and discarded —
@@ -1116,15 +1135,14 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           // metadata would be worse than not serving it back
           case "set-statistics" | "remove-statistics" |
                "set-partition-statistics" | "remove-partition-statistics" =>
-            sawAdvisory = true // same validated-no-op return path
+            acc
           // an engine's expire_snapshots posts remove-snapshots; graft
           // is a VERSIONED catalog — history retention is governed by
           // graft's own expire/vacuum (branch semantics), and the
           // served history depth is maxSnapshots-bounded anyway, so the
           // request is accepted as a validated no-op rather than
           // failing the engine's maintenance job
-          case "remove-snapshots" =>
-            sawAdvisory = true
+          case "remove-snapshots" => acc
           // upgrading to the version ALREADY SERVED is a validated
           // no-op (iceberg-core posts it defensively); an actual
           // version change is server configuration, not table state
@@ -1132,23 +1150,28 @@ final class IcebergRestServer private (single: Option[GraftRepo],
             val want = Option(u.get("format-version")).map(_.asInt())
               .getOrElse(throw new IllegalArgumentException(
                 "upgrade-format-version carries no format-version"))
-            val have = Option(served.get("format-version")).map(_.asInt())
-              .getOrElse(2)
-            if (want != have) throw new UnsupportedOperationException(
-              s"this server serves format-version $have; start the " +
-                s"REST server with formatVersion=$want to change it " +
-                "(a graft table has no per-table format version)")
-            sawAdvisory = true
+            served.foreach { s =>
+              val have = Option(s.get("format-version")).map(_.asInt())
+                .getOrElse(2)
+              if (want != have) throw new UnsupportedOperationException(
+                s"this server serves format-version $have; start the " +
+                  s"REST server with formatVersion=$want to change it " +
+                  "(a graft table has no per-table format version)")
+            }
+            acc
           // assign-uuid matching the served identity is a no-op; a
           // different uuid is a client addressing bug
           case "assign-uuid" =>
             val want = text(u, "uuid")
-            val have = Option(served.get("table-uuid")).map(_.asText())
-              .getOrElse("")
-            if (want != have) throw new IllegalArgumentException(
-              s"assign-uuid $want does not match the table's identity " +
-                s"$have")
-            sawAdvisory = true
+            served.foreach { s =>
+              val have = Option(s.get("table-uuid")).map(_.asText())
+                .getOrElse("")
+              if (want != have) throw new IllegalArgumentException(
+                s"assign-uuid $want does not match the table's identity " +
+                  s"$have")
+            }
+            acc
+          case "set-location" if served.isEmpty => acc
           case other => throw new UnsupportedOperationException(
             s"unsupported metadata update over REST: $other (supported: " +
               "add-snapshot + set-snapshot-ref + set-properties + " +
@@ -1157,6 +1180,63 @@ final class IcebergRestServer private (single: Option[GraftRepo],
               "orders / statistics / remove-snapshots)")
         }
       }
+  }
+
+  /** The data and delete files a posted snapshot's manifest list names.
+    * An unreadable/garbage manifest list is the CLIENT's error — the
+    * posted location either does not exist or is not avro — never a
+    * commit-state-unknown 500.
+    */
+  private def postedFiles(snap: JsonNode, version: Int)
+      : (Seq[IcebergImport.DataFile], Seq[IcebergImport.DeleteFile]) =
+    try IcebergImport.filesOfManifestList(text(snap, "manifest-list"),
+      version)
+    catch {
+      case e @ (_: java.io.IOException |
+                _: org.apache.avro.AvroRuntimeException) =>
+        throw new IllegalArgumentException(
+          s"posted manifest-list is unreadable: ${e.getMessage}")
+    }
+
+  /** A staged-create publish: the posted updates carry the full table
+    * build — schema, partition spec, properties, first snapshot. */
+  private def stageCreate(repo: GraftRepo, ref: String, dirs: Seq[String],
+      key: String, destRoot: Path, u: Updates): Create = {
+    val schemaNode = u.schema.getOrElse(throw new IllegalArgumentException(
+      "staged create commit carries no add-schema"))
+    val schema = IcebergImport.structOf(schemaNode)
+    val spec = specOf(u.spec, schemaNode)
+    TableOps.validateSpec(schema, spec)
+    // first snapshot's files (a zero-row CTAS may post none); the
+    // engine wrote its manifest list against the staged metadata this
+    // server handed out, which serves at `formatVersion`
+    val entries = u.snap.map { snap =>
+      val (postedData, postedDeletes) = postedFiles(snap, formatVersion)
+      if (postedDeletes.nonEmpty) throw new UnsupportedOperationException(
+        "a staged create's first snapshot carries delete files")
+      ingestEntries(repo, ref, key, destRoot, postedData, schema,
+        Map.empty, spec, hadoopConf())
+    }.getOrElse(Nil)
+    Create(ref, key, dirs, schema, spec, u.setProps -- u.removeProps,
+      entries, s"rest: create table $key (staged, ${entries.size} " +
+        s"files, ${entries.map(_.rows).sum} rows)")
+  }
+
+  /** A change to an existing table, lowered against its served
+    * metadata at `metaPath`. */
+  private def stageUpdate(repo: GraftRepo, ref: String, key: String,
+      destRoot: Path, metaPath: Path, served: JsonNode, u: Updates)
+      : Staged = {
+    val Updates(snapNode, newSchemaNode, newSpecNode, sawSetDefaultSpec,
+      setCurrentSchema, setRefTarget, tagCreate, tagRemove, setProps,
+      removeProps) = u
+    val servedGraftSnap =
+      served.get("properties").get("graft.source-snapshot").asText()
+    val servedSnapId = Option(served.get("current-snapshot-id"))
+      .map(_.asLong()).filter(_ != -1L)
+    val servedSchemaId =
+      Option(served.get("current-schema-id")).map(_.asInt()).getOrElse(0)
+
     // set-current-schema must point at the schema this commit added
     // (-1 = "last added", the form engines post) or the served current
     setCurrentSchema.foreach { sid =>
@@ -1167,24 +1247,28 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           s"set-current-schema references schema-id $sid, which this " +
             "commit does not add")
     }
+    val curSchemaNode = Option(served.get("schemas"))
+      .map(_.elements().asScala.toSeq).getOrElse(Nil)
+      .find(s => Option(s.get("schema-id")).exists(_.asInt() == servedSchemaId))
+      .getOrElse(throw new IllegalStateException(
+        s"served metadata has no schema $servedSchemaId"))
     // lower the posted Iceberg schema onto graft TableChanges by FIELD
     // ID diff against the served schema (field ids are the identity
     // Iceberg evolution preserves)
     val schemaChanges: Seq[org.apache.spark.sql.connector.catalog.TableChange] =
-      newSchemaNode.map { n =>
-        val cur = Option(served.get("schemas"))
-          .map(_.elements().asScala.toSeq).getOrElse(Nil)
-          .find(s => Option(s.get("schema-id")).exists(_.asInt() == servedSchemaId))
-          .getOrElse(throw new IllegalStateException(
-            s"served metadata has no schema $servedSchemaId"))
-        schemaChangesOf(cur, n)
-      }.getOrElse(Nil)
+      newSchemaNode.map(schemaChangesOf(curSchemaNode, _)).getOrElse(Nil)
 
     val pin: graft.versioned.Commit => Unit =
       b => if (!b.tables.get(key).contains(servedGraftSnap))
         throw new RestConflict("CommitFailedException",
-          s"branch $ref moved since the served base — refresh and retry")
+          s"branch $ref moved since the served base of $key — refresh " +
+            "and retry")
     val head = repo.snapshot(repo.resolve(ref).tables(key))
+    def member(entries: Seq[FileEntry],
+        eqFilter: Option[org.apache.spark.sql.sources.Filter],
+        dropRels: Seq[String], message: String): Member =
+      Member(ref, key, servedGraftSnap, entries, eqFilter, dropRels,
+        schemaChanges, setProps, removeProps, message)
 
     // set-default-spec must point at the spec THIS commit adds: graft
     // stores exactly one current spec, so switching back to a
@@ -1205,20 +1289,10 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         throw new UnsupportedOperationException(
           "a partition-spec change is its own commit over REST " +
             "(no add-snapshot / add-schema alongside)")
-      val curSchemaNode = Option(served.get("schemas"))
-        .map(_.elements().asScala.toSeq).getOrElse(Nil)
-        .find(s => Option(s.get("schema-id")).exists(_.asInt() == servedSchemaId))
-        .getOrElse(throw new IllegalStateException(
-          s"served metadata has no schema $servedSchemaId"))
-      val idToName = Option(curSchemaNode.get("fields")).toSeq
-        .flatMap(_.elements().asScala).map(fieldIdName).toMap
-      val spec = newSpecNode
-        .map(n => Option(n.get("fields")).getOrElse(n))
-        .map(_.elements().asScala.map(partitionFieldOf(_, idToName)).toSeq)
-        .getOrElse(Nil)
-      TableOps.setPartitionSpec(repo, ref, key, spec, precheck = pin,
-        setProps = setProps, removeProps = removeProps)
-      return loadResult(serve(repo, prefix, ref, key))
+      val spec = specOf(newSpecNode, curSchemaNode)
+      return SingleTable(ref, key, "a partition-spec change", () =>
+        TableOps.setPartitionSpec(repo, ref, key, spec, precheck = pin,
+          setProps = setProps, removeProps = removeProps))
     }
 
     // ---- TAG ref writes (set-snapshot-ref type=tag / remove-snapshot-
@@ -1230,65 +1304,59 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     // table's state at the tagged commit", so the repo-level scope is a
     // superset, never a lie — SURVEY §6). Its own commit: combining a
     // tag write with data/schema updates would entangle the tag with an
-    // uncommitted snapshot.
-    if (tagCreate.isDefined || tagRemove.isDefined) {
-      if (snapNode.isDefined || newSchemaNode.isDefined ||
-        newSpecNode.isDefined || setRefTarget.isDefined ||
-        setProps.nonEmpty || removeProps.nonEmpty)
-        throw new UnsupportedOperationException(
-          "tag ref writes are their own commit over REST — post other " +
-            "updates separately")
-      tagCreate.foreach { case (name, sid) =>
-        // newest-first walk over ALL parents (bounded breadth-first),
-        // O(distance to target) commit loads — tag creation is
-        // control-plane rare, no memo needed. All parents, not just the
-        // first: a snapshot reachable only through a merge's SECOND
-        // parent is still one an engine observed via the served
-        // metadata, so it must be taggable (the first-parent-only walk
-        // 400'd it as "not a version"). A path stops at the table's
-        // creation commit (table absent → parents not walked).
-        val head = repo.resolve(ref)
-        val seen = scala.collection.mutable.HashSet[String](head.id)
-        val queue = scala.collection.mutable.Queue[graft.versioned.Commit](head)
-        var found: Option[String] = None
-        var hops = 0
-        while (found.isEmpty && queue.nonEmpty && hops < 100000) {
-          val c = queue.dequeue()
-          hops += 1
-          c.tables.get(key) match {
-            case Some(gid) if IcebergExport.icebergSnapshotId(gid) == sid =>
-              found = Some(c.id)
-            case Some(_) =>
-              c.parents.filter(seen.add).foreach(p => queue.enqueue(repo.commit(p)))
-            case None => ()
+    // uncommitted snapshot ([[stageChange]] refuses the mix). Tag state
+    // is baked into the serve memo's graft.source-tags signature, so
+    // commitTable's re-serve re-exports with the fresh refs map.
+    if (tagCreate.isDefined || tagRemove.isDefined)
+      return SingleTable(ref, key, "a tag ref write", () => {
+        tagCreate.foreach { case (name, sid) =>
+          // newest-first walk over ALL parents (bounded breadth-first),
+          // O(distance to target) commit loads — tag creation is
+          // control-plane rare, no memo needed. All parents, not just the
+          // first: a snapshot reachable only through a merge's SECOND
+          // parent is still one an engine observed via the served
+          // metadata, so it must be taggable (the first-parent-only walk
+          // 400'd it as "not a version"). A path stops at the table's
+          // creation commit (table absent → parents not walked).
+          val head = repo.resolve(ref)
+          val seen = scala.collection.mutable.HashSet[String](head.id)
+          val queue = scala.collection.mutable.Queue[graft.versioned.Commit](head)
+          var found: Option[String] = None
+          var hops = 0
+          while (found.isEmpty && queue.nonEmpty && hops < 100000) {
+            val c = queue.dequeue()
+            hops += 1
+            c.tables.get(key) match {
+              case Some(gid) if IcebergExport.icebergSnapshotId(gid) == sid =>
+                found = Some(c.id)
+              case Some(_) =>
+                c.parents.filter(seen.add).foreach(p => queue.enqueue(repo.commit(p)))
+              case None => ()
+            }
           }
+          val cid = found.getOrElse(throw new IllegalArgumentException(
+            s"set-snapshot-ref tag $name names snapshot $sid, which is " +
+              s"not a version of $key on $ref"))
+          if (repo.tagExists(name)) {
+            // IDEMPOTENT when the existing tag serves the SAME snapshot
+            // for this table (not same-commit: an unrelated commit can
+            // move head so a retried create resolves a different commit
+            // with the identical table state); a genuinely different
+            // target refuses — graft tags are immutable while they live
+            val sameState = scala.util.Try(repo.resolve(name)).toOption
+              .flatMap(_.tables.get(key))
+              .exists(g => IcebergExport.icebergSnapshotId(g) == sid)
+            if (!sameState)
+              throw new RestConflict("AlreadyExistsException",
+                s"tag already exists: $name")
+          } else repo.createTag(name, cid)
         }
-        val cid = found.getOrElse(throw new IllegalArgumentException(
-          s"set-snapshot-ref tag $name names snapshot $sid, which is " +
-            s"not a version of $key on $ref"))
-        if (repo.tagExists(name)) {
-          // IDEMPOTENT when the existing tag serves the SAME snapshot
-          // for this table (not same-commit: an unrelated commit can
-          // move head so a retried create resolves a different commit
-          // with the identical table state); a genuinely different
-          // target refuses — graft tags are immutable while they live
-          val sameState = scala.util.Try(repo.resolve(name)).toOption
-            .flatMap(_.tables.get(key))
-            .exists(g => IcebergExport.icebergSnapshotId(g) == sid)
-          if (!sameState)
-            throw new RestConflict("AlreadyExistsException",
-              s"tag already exists: $name")
-        } else repo.createTag(name, cid)
-      }
-      tagRemove.foreach { name =>
-        if (!repo.tagExists(name))
-          throw new NoSuchElementException(s"no such tag: $name")
-        repo.dropTag(name)
-      }
-      // tag state is baked into the serve memo's graft.source-tags
-      // signature, so this re-serve re-exports with the fresh refs map
-      return loadResult(serve(repo, prefix, ref, key))
-    }
+        tagRemove.foreach { name =>
+          if (!repo.tagExists(name))
+            throw new NoSuchElementException(s"no such tag: $name")
+          repo.dropTag(name)
+        }
+      })
 
     // ---- engine ROLLBACK (Spark's rollback_to_snapshot / Iceberg's
     // ManageSnapshots.setCurrentSnapshot): a bare set-snapshot-ref to a
@@ -1304,204 +1372,19 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           "rollback (set-snapshot-ref to a prior snapshot) is its own " +
             "commit over REST — post property updates separately")
       val target = setRefTarget.get
-      def sidOf(gid: String): Long = IcebergExport.icebergSnapshotId(gid)
-      // the sid→gid inversion is MEMOIZED per served table keyed by
-      // the head commit, and the walk is LAZY: it stops at the
-      // requested sid and records the frontier (next unwalked commit),
-      // so a rollback loads O(distance to target) commits — never the
-      // whole first-parent history of a deep table (one commit load =
-      // one RPC on a remote GraftIO backend). A repeat rollback to an
-      // indexed id loads ZERO commits; a deeper target resumes from
-      // the frontier; new commits above the old head splice onto the
-      // cached index (the NEWER walk wins on a sid collision, matching
-      // head-first order).
-      val targetGid: Option[String] = {
-        val headC = repo.resolve(ref)
-        val cacheKey = s"${repo.root}\u0000$ref\u0000$key"
-        val cached = Option(rollbackSidIndex.get(cacheKey))
-        var idx = Map.empty[Long, String]
-        var frontierId: Option[String] = Some(headC.id)
-        // headC is already loaded — spare the first walk step its RPC
-        var preloaded: Option[graft.versioned.Commit] = Some(headC)
-        // a stale-head cache still splices when the walk reaches its head
-        var splice = cached
-        cached match {
-          case Some((hid, i, f)) if hid == headC.id =>
-            idx = i; frontierId = f; splice = None
-          case _ => ()
-        }
-        var hops = 0
-        while (!idx.contains(target) && frontierId.isDefined &&
-          hops < 100000) {
-          splice.filter(_._1 == frontierId.get) match {
-            case Some((_, old, oldF)) =>
-              idx = old ++ idx
-              frontierId = oldF
-              splice = None
-            case None =>
-              val c = preloaded.filter(_.id == frontierId.get)
-                .getOrElse(repo.commit(frontierId.get))
-              preloaded = None
-              if (!c.tables.contains(key)) frontierId = None
-              else {
-                val gid = c.tables(key)
-                val sid = sidOf(gid)
-                if (!idx.contains(sid)) idx += (sid -> gid)
-                frontierId = c.parents.headOption
-                hops += 1
-              }
-          }
-        }
-        rollbackSidIndex.put(cacheKey, (headC.id, idx, frontierId))
-        idx.get(target)
-      }
-      val gid = targetGid.getOrElse(throw new IllegalArgumentException(
-        s"set-snapshot-ref names snapshot $target, which is not a " +
-          s"version of $key on $ref — nothing to roll back to"))
-      val targetSnap = repo.snapshot(gid)
-      // vacuum check: only files the HEAD no longer lists can have been
-      // GC'd (vacuum spares everything reachable from a branch head).
-      // Segmented tables diff content-addressed manifest refs — files
-      // in chunks the head still carries are alive for free, and only
-      // the differing chunks load, so the probe is O(changed chunks)
-      // metadata + O(their files) stats, never an O(table)
-      // materialization or stat storm on a million-file table. (A file
-      // in a differing chunk may still be alive under a shifted chunk
-      // boundary — its stat is then merely redundant, never wrong.)
-      // The probe runs INSIDE each commit closure against the retry
-      // base's head (not the pre-commit head), so a ref that moved
-      // between probe and publish is re-checked against the base the
-      // CAS actually publishes on. RESIDUAL RACE, documented: vacuum
-      // never advances the branch ref, so a sweep that starts after
-      // the in-closure probe and deletes target-only files before the
-      // CAS lands is invisible to commitRetry — the probe shrinks the
-      // window from "serve → publish" to "stat → publish" but cannot
-      // close it without a repo-level GC/commit mutual exclusion the
-      // format does not have (Iceberg proper has the same
-      // expire-vs-rollback race). Operationally covered by running
-      // vacuum with a generous age threshold and not concurrently
-      // with restores, which the age guard's default encodes.
-      def requireRestorable(hd: graft.versioned.Snapshot): Unit = {
-        val missing: Seq[FileEntry] =
-          if (hd.manifestRefs.nonEmpty && targetSnap.manifestRefs.nonEmpty) {
-            val headChunks = hd.manifestRefs.map(_.path).toSet
-            targetSnap.manifestRefs.filterNot(r => headChunks(r.path))
-              .flatMap(r => Manifests.load(repo.root, repo.io, r))
-              .filterNot(f => repo.dataIO.isFile(f.path))
-          } else if (targetSnap.manifestRefs.isEmpty) {
-            // inline target: bounded by the inline threshold
-            targetSnap.files.filterNot(f => repo.dataIO.isFile(f.path))
-          } else {
-            // target segmented, head inline (table shrank): the inline
-            // head is small — membership-filter against it, stat the rest
-            val headLive = hd.files.iterator.map(_.path).toSet
-            targetSnap.files.iterator
-              .filterNot(f => headLive(f.path))
-              .filterNot(f => repo.dataIO.isFile(f.path)).toSeq
-          }
-        if (missing.nonEmpty) throw new IllegalArgumentException(
-          s"rollback target of $key references ${missing.size} vacuumed " +
-            s"file(s) (e.g. ${missing.head.path}) — not restorable")
-      }
-      // Iceberg's rollback moves only the ref — schema, spec, mapping
-      // and properties stay CURRENT — but a graft snapshot bundles all
-      // of them, so a bare pointer swap across ANY metadata evolution
-      // would silently revert state Iceberg keeps current. Served
-      // history never crosses an evolution (export eligibility checks
-      // all of these), so every id the engine can SEE takes the
-      // zero-copy swap; a remembered id from before a metadata change
-      // lowers onto a FILE-SET REVERT instead (r15): one commit whose
-      // snapshot carries the TARGET's live files and MoR tombstone
-      // state under the HEAD's schema/spec/mapping/user properties —
-      // exactly the Iceberg observable state (rows revert, metadata
-      // does not). Old files read under the current schema the same
-      // way any post-evolution read does: physical column names are
-      // write-stable (renames rebind only the logical name) and graft
-      // evolution is metadata-only, so every file the target listed is
-      // still readable and prunable under the head metadata. MoR
-      // tombstone state (graft.mor.*) comes from the TARGET: delete
-      // state legitimately differs per snapshot and reverting it IS
-      // the rollback's point. NOTE the one protocol-visible
-      // divergence: the reverted state re-exports under a FRESH
-      // snapshot id (a new graft snapshot), where Iceberg proper would
-      // re-serve the remembered id — a client that re-posts the same
-      // rollback hits the already-reverted guard below and gets a
-      // validated no-op.
-      def userProps(sn: graft.versioned.Snapshot): Map[String, String] =
-        sn.properties.filterNot(_._1.startsWith("graft.mor."))
-      def morProps(sn: graft.versioned.Snapshot): Map[String, String] =
-        sn.properties.filter(_._1.startsWith("graft.mor."))
-      val metadataMatches =
-        targetSnap.schemaJson == head.schemaJson &&
-        targetSnap.partitionFields == head.partitionFields &&
-        targetSnap.nameMapping == head.nameMapping &&
-        userProps(targetSnap) == userProps(head)
-      // file-set equality: segmented snapshots compare O(chunks) of
-      // content-addressed manifest refs (identical lists chunk
-      // identically — content-defined cuts), never materializing a
-      // million-file list on the driver; inline snapshots compare the
-      // lists directly
-      val sameFiles =
-        if (head.manifestRefs.nonEmpty && targetSnap.manifestRefs.nonEmpty)
-          head.manifestRefs.map(_.path) == targetSnap.manifestRefs.map(_.path)
-        else if (head.manifestRefs.isEmpty && targetSnap.manifestRefs.isEmpty)
-          head.files.map(f => (f.path, f.seqNo)).toSet ==
-            targetSnap.files.map(f => (f.path, f.seqNo)).toSet
-        else false // one segmented, one inline — sizes differ by design
-      val alreadyReverted =
-        sameFiles && morProps(head) == morProps(targetSnap)
-      if (metadataMatches)
-        repo.commitRetry(ref, s"rest: rollback $key to snapshot $target") {
-          base =>
-            pin(base)
-            requireRestorable(repo.snapshot(base.tables(key)))
-            (base.tables + (key -> gid), base.namespaces)
-        }
-      else if (!alreadyReverted)
-        repo.commitRetry(ref, s"rest: rollback $key to snapshot $target " +
-          "(file-set revert across a metadata change)") { base =>
-          pin(base)
-          val prior = repo.snapshot(base.tables(key))
-          requireRestorable(prior)
-          val props = userProps(prior) ++ morProps(targetSnap)
-          val ns2 = repo.writeSnapshot(key, prior.schemaJson,
-            targetSnap.files, prior.partitionBy, prior.physicalNames,
-            if (props.isEmpty) None else Some(props), prior.retired)
-          (base.tables + (key -> ns2.id), base.namespaces)
-        }
-      return loadResult(serve(repo, prefix, ref, key))
+      return SingleTable(ref, key, "a rollback", () =>
+        rollback(repo, ref, key, head, target, pin))
     }
-    // a no-op set-snapshot-ref to the CURRENT snapshot with nothing
-    // else riding: validated no-op (engines post it after refresh)
-    if (snapNode.isEmpty && newSchemaNode.isEmpty &&
-        setProps.isEmpty && removeProps.isEmpty &&
-        setRefTarget.exists(id => servedSnapId.contains(id)))
-      return loadResult(serve(repo, prefix, ref, key))
 
-    // ---- metadata-only commit (ALTER TABLE over REST): no snapshot
-    if (snapNode.isEmpty) {
-      if (newSchemaNode.isEmpty && setProps.isEmpty && removeProps.isEmpty) {
-        // a PURE advisory commit (a bare WRITE ORDERED BY, an ANALYZE
-        // TABLE statistics pointer) is a validated no-op; anything
-        // else empty is a client bug
-        if (sawAdvisory)
-          return loadResult(serve(repo, prefix, ref, key))
-        throw new IllegalArgumentException("commit carries no updates")
-      }
-      repo.commitRetry(ref, s"rest: update schema $key") { base =>
-        pin(base)
-        val prior = repo.snapshot(base.tables(key))
-        val ev = SchemaEvolution.evolve(prior, schemaChanges)
-        val props = (ev.props -- removeProps) ++ setProps
-        val ns2 = repo.writeSnapshot(key, ev.schema.json, prior.files,
-          if (ev.spec.isEmpty) None else Some(ev.spec),
-          if (ev.mapping.isEmpty) None else Some(ev.mapping),
-          if (props.isEmpty) None else Some(props),
-          if (ev.retired.isEmpty) None else Some(ev.retired.toSeq.sorted))
-        (base.tables + (key -> ns2.id), base.namespaces)
-      }
-      return loadResult(serve(repo, prefix, ref, key))
-    }
+    // ---- no snapshot: a metadata-only commit (ALTER TABLE over REST),
+    // or a validated no-op — advisory updates only (a bare WRITE
+    // ORDERED BY, an ANALYZE TABLE statistics pointer) or a
+    // set-snapshot-ref to the CURRENT snapshot (engines post it after
+    // refresh)
+    if (snapNode.isEmpty)
+      return member(Nil, None, Nil, s"rest: update schema $key").copy(
+        noop = newSchemaNode.isEmpty && setProps.isEmpty &&
+          removeProps.isEmpty)
 
     val snap = snapNode.get
     // a set-snapshot-ref riding an add-snapshot must name the ADDED
@@ -1553,21 +1436,12 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     // strictly-lower rule, graft's strict `>` applicability — the
     // Flink-upsert shape). POSITIONAL delete files and v3 DVs — the
     // default Spark MoR DELETE/UPDATE shape — lower onto a server-side
-    // CoW rewrite of exactly the files they reference (see below):
-    // reference parity with LakeFSTableOperations.commit (java:115-147),
-    // which accepts any metadata swap.
-    val v = served.get("format-version").asInt()
-    // an unreadable/garbage manifest list is the CLIENT's error — the
-    // posted location either does not exist or is not avro — never a
-    // commit-state-unknown 500
+    // CoW rewrite of exactly the files they reference
+    // ([[materializePosDeletes]]): reference parity with
+    // LakeFSTableOperations.commit (java:115-147), which accepts any
+    // metadata swap.
     val (postedData, postedDeletes) =
-      try IcebergImport.filesOfManifestList(text(snap, "manifest-list"), v)
-      catch {
-        case e @ (_: java.io.IOException |
-                  _: org.apache.avro.AvroRuntimeException) =>
-          throw new IllegalArgumentException(
-            s"posted manifest-list is unreadable: ${e.getMessage}")
-      }
+      postedFiles(snap, served.get("format-version").asInt())
     val basePlan = IcebergImport.plan(metaPath.toString, None)
     // delete files the posted snapshot RELISTS from the served export
     // are the table's OWN tombstones coming back (a real engine reuses
@@ -1585,25 +1459,25 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       newDeletes.partition(d => d.content == 2 && d.dv.isEmpty)
     if (posDeletes.nonEmpty && op == "append")
       throw new IllegalArgumentException(
-        "append commit carries positional delete files (post " +
+        s"append commit for $key carries positional delete files (post " +
           "operation=overwrite or delete)")
     if (posDeletes.nonEmpty && schemaChanges.nonEmpty)
       throw new UnsupportedOperationException(
         "schema changes and positional deletes cannot share one commit")
     if (eqDeletes.nonEmpty && op == "append")
       throw new IllegalArgumentException(
-        "append commit carries equality delete files (post " +
+        s"append commit for $key carries equality delete files (post " +
           "operation=overwrite or delete)")
     if (eqDeletes.nonEmpty && schemaChanges.nonEmpty)
       throw new UnsupportedOperationException(
         "schema changes and equality deletes cannot share one commit")
     val basePaths = basePlan.dataPaths.toSet
-    val postedPaths = postedData.map(_.path)
-    val dropped = basePaths -- postedPaths.toSet
+    val dropped = basePaths -- postedData.map(_.path).toSet
     if (op == "append" && dropped.nonEmpty)
       throw new UnsupportedOperationException(
-        s"posted snapshot drops ${dropped.size} base data file(s) — not " +
-          "an append (post operation=overwrite to rewrite files)")
+        s"posted snapshot for $key drops ${dropped.size} base data " +
+          "file(s) — not an append (post operation=overwrite to rewrite " +
+          "files)")
     if (eqDeletes.nonEmpty && dropped.nonEmpty)
       throw new UnsupportedOperationException(
         "one commit mixes dropped data files (CoW) with equality " +
@@ -1613,11 +1487,14 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         "one commit mixes dropped data files (CoW) with positional " +
           "delete files (MoR) — post them as two commits")
     val addedFiles = postedData.filterNot(d => basePaths(d.path))
-
-    val hconf = spark.map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val destRoot = prefix.fold(exportRoot)(exportRoot.resolve)
-      .resolve(ref).resolve(key).toAbsolutePath.normalize
+    // dropped base files must be data-plane rels (they are — the
+    // served export references them in place)
+    val dropRels = dropped.toSeq.sorted.map { loc =>
+      repo.dataIO.relOf(loc).getOrElse(
+        throw new IllegalStateException(
+          s"base data file outside the repo data plane: $loc"))
+    }
+    lazy val hconf = hadoopConf()
 
     // ---- operation=replace: an external engine's OWN maintenance —
     // Spark's rewrite_data_files, Flink's compaction — posting a
@@ -1660,249 +1537,373 @@ final class IcebergRestServer private (single: Option[GraftRepo],
             "still apply to surviving base file(s) — the rows it masks " +
             "would resurrect; rewrite those files too or relist it")
       }
-      val entries = ingestEntries(repo, ref, key, destRoot, addedFiles,
-        ev.schema, ev.mapping, ev.spec, hconf)
-      val dropRels = basePlan.dataFiles.filter(f => dropped(f.path)).map { f =>
-        repo.dataIO.relOf(f.path).getOrElse(
-          throw new IllegalStateException(
-            s"base data file outside the repo data plane: ${f.path}"))
-      }
-      repo.commitRetry(ref, s"rest: replace $key (engine compaction: " +
-        s"-${dropRels.size} +${entries.size} files)",
-        marker = Some(Commit.CompactMarker)) { base =>
-        pin(base)
-        val prior = repo.snapshot(base.tables(key))
-        val live = prior.files.iterator.map(_.path).toSet
-        val missing = dropRels.toSet -- live
-        if (missing.nonEmpty) throw new MergeConflictException(
-          s"replace of $key drops ${missing.size} file(s) not live at " +
-            s"the commit base (e.g. ${missing.head}) — refresh and retry")
-        if (Tombstones.signature(prior) != Tombstones.signature(head))
-          throw new MergeConflictException(
-            s"replace of $key conflicts with a concurrent merge-on-read " +
-              "delete since the served base — refresh and re-run")
-        // row-preservation sanity: a replace may only SHRINK rows, and
-        // only by materializing deletes that masked the dropped files;
-        // when nothing masked them it must preserve rows EXACTLY. The
-        // CompactMarker makes changesBetween net this commit to zero,
-        // so a lying rewrite would otherwise hide inserts (or silent
-        // row loss) from every CDC consumer.
-        val droppedEntries = {
-          val ds = dropRels.toSet
-          prior.files.filter(f => ds(f.path))
-        }
-        val droppedRows = droppedEntries.map(_.rows).sum
-        val addedRows = entries.map(_.rows).sum
-        if (addedRows > droppedRows) throw new IllegalArgumentException(
-          s"replace of $key posts $addedRows rows where the dropped " +
-            s"files held $droppedRows — a compaction never grows rows " +
-            "(post new rows as operation=append)")
-        val tombs = Tombstones.of(prior)
-        // seqNo, NOT seq.getOrElse: jackson materializes small JSON
-        // numbers as boxed Integers inside Option[Long] (Model.scala),
-        // so a loaded snapshot's f.seq unboxes to ClassCastException
-        val anyMasked = retiredDels.nonEmpty || droppedEntries.exists(f =>
-          tombs.exists(_.seq > f.seqNo))
-        if (!anyMasked && addedRows != droppedRows)
-          throw new IllegalArgumentException(
+      return SingleTable(ref, key, "a replace (compaction) commit", () => {
+        val entries = ingestEntries(repo, ref, key, destRoot, addedFiles,
+          ev.schema, ev.mapping, ev.spec, hconf)
+        repo.commitRetry(ref, s"rest: replace $key (engine compaction: " +
+          s"-${dropRels.size} +${entries.size} files)",
+          marker = Some(Commit.CompactMarker)) { base =>
+          pin(base)
+          val prior = repo.snapshot(base.tables(key))
+          val live = prior.files.iterator.map(_.path).toSet
+          val missing = dropRels.toSet -- live
+          if (missing.nonEmpty) throw new MergeConflictException(
+            s"replace of $key drops ${missing.size} file(s) not live at " +
+              s"the commit base (e.g. ${missing.head}) — refresh and retry")
+          if (Tombstones.signature(prior) != Tombstones.signature(head))
+            throw new MergeConflictException(
+              s"replace of $key conflicts with a concurrent merge-on-read " +
+                "delete since the served base — refresh and re-run")
+          // row-preservation sanity: a replace may only SHRINK rows, and
+          // only by materializing deletes that masked the dropped files;
+          // when nothing masked them it must preserve rows EXACTLY. The
+          // CompactMarker makes changesBetween net this commit to zero,
+          // so a lying rewrite would otherwise hide inserts (or silent
+          // row loss) from every CDC consumer.
+          val droppedEntries = {
+            val ds = dropRels.toSet
+            prior.files.filter(f => ds(f.path))
+          }
+          val droppedRows = droppedEntries.map(_.rows).sum
+          val addedRows = entries.map(_.rows).sum
+          if (addedRows > droppedRows) throw new IllegalArgumentException(
             s"replace of $key posts $addedRows rows where the dropped " +
-              s"files held $droppedRows and no delete masked them — a " +
-              "row-preserving rewrite must keep the count exact")
-        val props0 = (prior.properties -- removeProps) ++ setProps
-        val next = Tombstones.lastSeq(props0) + 1
-        val stamped = entries.map(_.copy(seq = Some(next)))
-        val dropSet = dropRels.toSet
-        val kept = prior.files.filterNot(f => dropSet(f.path))
-        val snap2 = repo.writeSnapshot(key, prior.schemaJson,
-          kept ++ stamped, prior.partitionBy, prior.physicalNames,
-          Some(props0 + (Tombstones.SeqProp -> next.toString)),
-          prior.retired)
-        (base.tables + (key -> snap2.id), base.namespaces)
-      }
-      return loadResult(serve(repo, prefix, ref, key))
+              s"files held $droppedRows — a compaction never grows rows " +
+              "(post new rows as operation=append)")
+          val tombs = Tombstones.of(prior)
+          // seqNo, NOT seq.getOrElse: jackson materializes small JSON
+          // numbers as boxed Integers inside Option[Long] (Model.scala),
+          // so a loaded snapshot's f.seq unboxes to ClassCastException
+          val anyMasked = retiredDels.nonEmpty || droppedEntries.exists(f =>
+            tombs.exists(_.seq > f.seqNo))
+          if (!anyMasked && addedRows != droppedRows)
+            throw new IllegalArgumentException(
+              s"replace of $key posts $addedRows rows where the dropped " +
+                s"files held $droppedRows and no delete masked them — a " +
+                "row-preserving rewrite must keep the count exact")
+          val props0 = (prior.properties -- removeProps) ++ setProps
+          val next = Tombstones.lastSeq(props0) + 1
+          val stamped = entries.map(_.copy(seq = Some(next)))
+          val dropSet = dropRels.toSet
+          val kept = prior.files.filterNot(f => dropSet(f.path))
+          val snap2 = repo.writeSnapshot(key, prior.schemaJson,
+            kept ++ stamped, prior.partitionBy, prior.physicalNames,
+            Some(props0 + (Tombstones.SeqProp -> next.toString)),
+            prior.retired)
+          (base.tables + (key -> snap2.id), base.namespaces)
+        }
+      })
     }
 
-    // ---- positional deletes / DVs → a server-side CoW rewrite of
-    // EXACTLY the referenced (dirty) files: the posted delete rows are
-    // applied through the independent importer's spec-sequence
-    // semantics (IcebergImport.readPlan on a sub-plan of the dirty
-    // files), the survivors land as native graft files, and one commit
-    // swaps them in atomically with the same stale-base 409 every REST
-    // commit gets. Cost is O(dirty files + delete rows) — what the
-    // engine's own CoW DELETE would have paid. The FULL Flink-upsert
-    // commit shape lands in one piece (r13):
-    //  - new data files in the same commit (Spark MoR UPDATE: new rows
-    //    + positions masking the old) ride the same commit;
-    //  - positions may reference SAME-COMMIT added files (Flink's
-    //    intra-checkpoint dedup) — those adds are rewritten instead of
-    //    registered verbatim;
-    //  - equality deletes may ride the same commit: per the spec they
-    //    apply STRICTLY BELOW the commit's sequence, so they are
-    //    applied physically to the dirty base files' survivors during
-    //    the rewrite and land as a tombstone for the untouched files;
-    //    same-commit adds stay exempt.
     if (posDeletes.nonEmpty) {
       val pm = materializePosDeletes(repo, ref, key, destRoot, head,
         basePlan, addedFiles, posDeletes, eqDeletes, hconf)
-      repo.commitRetry(ref, s"rest: $op $key (positional deletes " +
-        s"materialized: ${pm.dirtyBase} base file(s) rewritten, " +
-        s"${pm.dirtyAdds} add(s) folded, +${pm.cleanEntries.size} new" +
-        (if (pm.eqFilter.isDefined) ", equality tombstone" else "") + ")") {
-        base =>
-          pin(base)
-          val prior = repo.snapshot(base.tables(key))
-          // the shared member lowering: survivors + clean adds stamp at
-          // the next sequence (exempt from the equality tombstone by
-          // the strictly-lower rule), dirty base files leave the live
-          // set — identical to a transaction member's
-          val snap2 = memberSnapshot(repo, key, prior,
-            pm.rewritten ++ pm.cleanEntries, pm.eqFilter,
-            pm.dropBaseRels, Nil, setProps, removeProps)
-          (base.tables + (key -> snap2.id), base.namespaces)
-      }
-      return loadResult(serve(repo, prefix, ref, key))
+      return member(pm.rewritten ++ pm.cleanEntries, pm.eqFilter,
+        pm.dropBaseRels, s"rest: $op $key (positional deletes " +
+          s"materialized: ${pm.dirtyBase} base file(s) rewritten, " +
+          s"${pm.dirtyAdds} add(s) folded, +${pm.cleanEntries.size} new" +
+          (if (pm.eqFilter.isDefined) ", equality tombstone" else "") + ")")
     }
-
-
-    val entries = ingestEntries(repo, ref, key, destRoot, addedFiles,
-      ev.schema, ev.mapping, ev.spec, hconf)
-
-    // equality deletes → ONE tombstone predicate (Or across files/rows)
-    val morFilter: Option[org.apache.spark.sql.sources.Filter] =
+    // equality deletes → ONE tombstone predicate (Or across files/rows),
+    // built before any file registers: a NULL-valued or oversized
+    // equality delete refuses first
+    val eqFilter =
       if (eqDeletes.isEmpty) None
       else Some(equalityTombstoneFilter(repo, destRoot, eqDeletes,
         basePlan.fieldIdToName, hconf))
-
-    val pinMsg: graft.versioned.Commit => Unit = pin
-    if (morFilter.isDefined) {
-      // MoR commit: tombstone + (optionally) same-sequence new files —
-      // graft's morUpdate commit shape, arriving over REST (the shared
-      // member lowering — identical to a transaction member's)
-      repo.commitRetry(ref, s"rest: $op $key (merge-on-read, " +
-        s"+${entries.size} files)") { base =>
-        pinMsg(base)
-        val prior = repo.snapshot(base.tables(key))
-        val ns2 = memberSnapshot(repo, key, prior, entries, morFilter,
-          Nil, Nil, setProps, removeProps)
-        (base.tables + (key -> ns2.id), base.namespaces)
-      }
-    } else if (op == "append" && schemaChanges.nonEmpty) {
-      // evolution + first write under the new schema, atomically (the
-      // shared member lowering — identical to a transaction member's)
-      repo.commitRetry(ref, s"rest: evolve+append $key " +
-        s"(+${entries.size} files)") { base =>
-        pinMsg(base)
-        val prior = repo.snapshot(base.tables(key))
-        val ns2 = memberSnapshot(repo, key, prior, entries, None, Nil,
-          schemaChanges, setProps, removeProps)
-        (base.tables + (key -> ns2.id), base.namespaces)
-      }
-    } else if (op == "append")
-      TableOps.commitAppend(repo, ref, key, entries, overwrite = false,
-        ev.spec, ev.mapping, head.schemaJson,
-        Some(s"rest: append $key (${entries.size} files, " +
-          s"${entries.map(_.rows).sum} rows)"),
-        setProps, precheck = pin, removeProps = removeProps)
-    else {
-      // the engine's CoW rewrite: dropped base files must be data-plane
-      // rels (they are — the served export references them in place)
-      val dropRels = dropped.toSeq.sorted.map { loc =>
-        repo.dataIO.relOf(loc).getOrElse(
-          throw new IllegalStateException(
-            s"base data file outside the repo data plane: $loc"))
-      }
-      TableOps.commitRewrite(repo, ref, key, dropRels.toSet, entries,
-        Some(s"rest: $op $key (+${entries.size}/-${dropRels.size} files, " +
-          s"+${entries.map(_.rows).sum} rows)"),
-        setProps, precheck = pin, removeProps = removeProps)
-    }
-    loadResult(serve(repo, prefix, ref, key))
+    val entries = ingestEntries(repo, ref, key, destRoot, addedFiles,
+      ev.schema, ev.mapping, ev.spec, hconf)
+    val rows = entries.map(_.rows).sum
+    member(entries, eqFilter, dropRels,
+      if (eqFilter.isDefined)
+        s"rest: $op $key (merge-on-read, +${entries.size} files)"
+      else if (schemaChanges.nonEmpty)
+        s"rest: evolve+append $key (+${entries.size} files)"
+      else if (op == "append")
+        s"rest: append $key (${entries.size} files, $rows rows)"
+      else s"rest: $op $key (+${entries.size}/-${dropRels.size} files, " +
+        s"+$rows rows)")
   }
 
+  /** Engine ROLLBACK of `key` on `ref` to the exported snapshot id
+    * `target` (class doc: WRITE PATH; [[stageChange]] classifies it):
+    * a zero-copy table pointer swap, or a file-set revert across a
+    * metadata change. `pin` is the served-base check every REST commit
+    * runs inside its race.
+    */
+  private def rollback(repo: GraftRepo, ref: String, key: String,
+      head: graft.versioned.Snapshot, target: Long,
+      pin: graft.versioned.Commit => Unit): Unit = {
+    def sidOf(gid: String): Long = IcebergExport.icebergSnapshotId(gid)
+    // the sid→gid inversion is MEMOIZED per served table keyed by
+    // the head commit, and the walk is LAZY: it stops at the
+    // requested sid and records the frontier (next unwalked commit),
+    // so a rollback loads O(distance to target) commits — never the
+    // whole first-parent history of a deep table (one commit load =
+    // one RPC on a remote GraftIO backend). A repeat rollback to an
+    // indexed id loads ZERO commits; a deeper target resumes from
+    // the frontier; new commits above the old head splice onto the
+    // cached index (the NEWER walk wins on a sid collision, matching
+    // head-first order).
+    val targetGid: Option[String] = {
+      val headC = repo.resolve(ref)
+      val cacheKey = s"${repo.root}\u0000$ref\u0000$key"
+      val cached = Option(rollbackSidIndex.get(cacheKey))
+      var idx = Map.empty[Long, String]
+      var frontierId: Option[String] = Some(headC.id)
+      // headC is already loaded — spare the first walk step its RPC
+      var preloaded: Option[graft.versioned.Commit] = Some(headC)
+      // a stale-head cache still splices when the walk reaches its head
+      var splice = cached
+      cached match {
+        case Some((hid, i, f)) if hid == headC.id =>
+          idx = i; frontierId = f; splice = None
+        case _ => ()
+      }
+      var hops = 0
+      while (!idx.contains(target) && frontierId.isDefined &&
+        hops < 100000) {
+        splice.filter(_._1 == frontierId.get) match {
+          case Some((_, old, oldF)) =>
+            idx = old ++ idx
+            frontierId = oldF
+            splice = None
+          case None =>
+            val c = preloaded.filter(_.id == frontierId.get)
+              .getOrElse(repo.commit(frontierId.get))
+            preloaded = None
+            if (!c.tables.contains(key)) frontierId = None
+            else {
+              val gid = c.tables(key)
+              val sid = sidOf(gid)
+              if (!idx.contains(sid)) idx += (sid -> gid)
+              frontierId = c.parents.headOption
+              hops += 1
+            }
+        }
+      }
+      rollbackSidIndex.put(cacheKey, (headC.id, idx, frontierId))
+      idx.get(target)
+    }
+    val gid = targetGid.getOrElse(throw new IllegalArgumentException(
+      s"set-snapshot-ref names snapshot $target, which is not a " +
+        s"version of $key on $ref — nothing to roll back to"))
+    val targetSnap = repo.snapshot(gid)
+    // vacuum check: only files the HEAD no longer lists can have been
+    // GC'd (vacuum spares everything reachable from a branch head).
+    // Segmented tables diff content-addressed manifest refs — files
+    // in chunks the head still carries are alive for free, and only
+    // the differing chunks load, so the probe is O(changed chunks)
+    // metadata + O(their files) stats, never an O(table)
+    // materialization or stat storm on a million-file table. (A file
+    // in a differing chunk may still be alive under a shifted chunk
+    // boundary — its stat is then merely redundant, never wrong.)
+    // The probe runs INSIDE each commit closure against the retry
+    // base's head (not the pre-commit head), so a ref that moved
+    // between probe and publish is re-checked against the base the
+    // CAS actually publishes on. RESIDUAL RACE, documented: vacuum
+    // never advances the branch ref, so a sweep that starts after
+    // the in-closure probe and deletes target-only files before the
+    // CAS lands is invisible to commitRetry — the probe shrinks the
+    // window from "serve → publish" to "stat → publish" but cannot
+    // close it without a repo-level GC/commit mutual exclusion the
+    // format does not have (Iceberg proper has the same
+    // expire-vs-rollback race). Operationally covered by running
+    // vacuum with a generous age threshold and not concurrently
+    // with restores, which the age guard's default encodes.
+    def requireRestorable(hd: graft.versioned.Snapshot): Unit = {
+      val missing: Seq[FileEntry] =
+        if (hd.manifestRefs.nonEmpty && targetSnap.manifestRefs.nonEmpty) {
+          val headChunks = hd.manifestRefs.map(_.path).toSet
+          targetSnap.manifestRefs.filterNot(r => headChunks(r.path))
+            .flatMap(r => Manifests.load(repo.root, repo.io, r))
+            .filterNot(f => repo.dataIO.isFile(f.path))
+        } else if (targetSnap.manifestRefs.isEmpty) {
+          // inline target: bounded by the inline threshold
+          targetSnap.files.filterNot(f => repo.dataIO.isFile(f.path))
+        } else {
+          // target segmented, head inline (table shrank): the inline
+          // head is small — membership-filter against it, stat the rest
+          val headLive = hd.files.iterator.map(_.path).toSet
+          targetSnap.files.iterator
+            .filterNot(f => headLive(f.path))
+            .filterNot(f => repo.dataIO.isFile(f.path)).toSeq
+        }
+      if (missing.nonEmpty) throw new IllegalArgumentException(
+        s"rollback target of $key references ${missing.size} vacuumed " +
+          s"file(s) (e.g. ${missing.head.path}) — not restorable")
+    }
+    // Iceberg's rollback moves only the ref — schema, spec, mapping
+    // and properties stay CURRENT — but a graft snapshot bundles all
+    // of them, so a bare pointer swap across ANY metadata evolution
+    // would silently revert state Iceberg keeps current. Served
+    // history never crosses an evolution (export eligibility checks
+    // all of these), so every id the engine can SEE takes the
+    // zero-copy swap; a remembered id from before a metadata change
+    // lowers onto a FILE-SET REVERT instead (r15): one commit whose
+    // snapshot carries the TARGET's live files and MoR tombstone
+    // state under the HEAD's schema/spec/mapping/user properties —
+    // exactly the Iceberg observable state (rows revert, metadata
+    // does not). Old files read under the current schema the same
+    // way any post-evolution read does: physical column names are
+    // write-stable (renames rebind only the logical name) and graft
+    // evolution is metadata-only, so every file the target listed is
+    // still readable and prunable under the head metadata. MoR
+    // tombstone state (graft.mor.*) comes from the TARGET: delete
+    // state legitimately differs per snapshot and reverting it IS
+    // the rollback's point. NOTE the one protocol-visible
+    // divergence: the reverted state re-exports under a FRESH
+    // snapshot id (a new graft snapshot), where Iceberg proper would
+    // re-serve the remembered id — a client that re-posts the same
+    // rollback hits the already-reverted guard below and gets a
+    // validated no-op.
+    def userProps(sn: graft.versioned.Snapshot): Map[String, String] =
+      sn.properties.filterNot(_._1.startsWith("graft.mor."))
+    def morProps(sn: graft.versioned.Snapshot): Map[String, String] =
+      sn.properties.filter(_._1.startsWith("graft.mor."))
+    val metadataMatches =
+      targetSnap.schemaJson == head.schemaJson &&
+      targetSnap.partitionFields == head.partitionFields &&
+      targetSnap.nameMapping == head.nameMapping &&
+      userProps(targetSnap) == userProps(head)
+    // file-set equality: segmented snapshots compare O(chunks) of
+    // content-addressed manifest refs (identical lists chunk
+    // identically — content-defined cuts), never materializing a
+    // million-file list on the driver; inline snapshots compare the
+    // lists directly
+    val sameFiles =
+      if (head.manifestRefs.nonEmpty && targetSnap.manifestRefs.nonEmpty)
+        head.manifestRefs.map(_.path) == targetSnap.manifestRefs.map(_.path)
+      else if (head.manifestRefs.isEmpty && targetSnap.manifestRefs.isEmpty)
+        head.files.map(f => (f.path, f.seqNo)).toSet ==
+          targetSnap.files.map(f => (f.path, f.seqNo)).toSet
+      else false // one segmented, one inline — sizes differ by design
+    val alreadyReverted =
+      sameFiles && morProps(head) == morProps(targetSnap)
+    if (metadataMatches)
+      repo.commitRetry(ref, s"rest: rollback $key to snapshot $target") {
+        base =>
+          pin(base)
+          requireRestorable(repo.snapshot(base.tables(key)))
+          (base.tables + (key -> gid), base.namespaces)
+      }
+    else if (!alreadyReverted)
+      repo.commitRetry(ref, s"rest: rollback $key to snapshot $target " +
+        "(file-set revert across a metadata change)") { base =>
+        pin(base)
+        val prior = repo.snapshot(base.tables(key))
+        requireRestorable(prior)
+        val props = userProps(prior) ++ morProps(targetSnap)
+        val ns2 = repo.writeSnapshot(key, prior.schemaJson,
+          targetSnap.files, prior.partitionBy, prior.physicalNames,
+          if (props.isEmpty) None else Some(props), prior.retired)
+        (base.tables + (key -> ns2.id), base.namespaces)
+      }
+  }
 
+  /** The ONE fold every REST member and staged create lands through —
+    * a single-table commit is a one-member transaction. All of
+    * `staged` publish in ONE graft commit on `ref` or not at all:
+    *  - a member's served base must still be the table's state at the
+    *    commit base (the pin), or the WHOLE commit 409s — the engine
+    *    refreshes and replays;
+    *  - a create decides the `assert-create` race atomically: exactly
+    *    one concurrent creator wins, a loser 409s with its siblings
+    *    rolled back, and the table's namespace registers with it (a
+    *    no-op when it already exists).
+    */
+  private def land(repo: GraftRepo, ref: String, staged: Seq[Landable],
+      message: String): Unit =
+    repo.commitRetry(ref, message) { base =>
+      val tables = staged.foldLeft(base.tables) {
+        case (acc, c: Create) =>
+          if (acc.contains(c.key))
+            throw new RestConflict("AlreadyExistsException",
+              s"table already exists: ${c.key} @ $ref")
+          val stamped = c.entries.map(_.copy(seq = Some(1L)))
+          val props = c.props ++
+            (if (stamped.isEmpty) Map.empty
+             else Map(Tombstones.SeqProp -> "1"))
+          val snap = repo.writeSnapshot(c.key, c.schema.json, stamped,
+            if (c.spec.isEmpty) None else Some(c.spec), None,
+            if (props.isEmpty) None else Some(props))
+          acc + (c.key -> snap.id)
+        case (acc, m: Member) =>
+          if (!base.tables.get(m.key).contains(m.servedGraftSnap))
+            throw new RestConflict("CommitFailedException",
+              s"branch $ref moved since the served base of ${m.key} — " +
+                "refresh and retry")
+          acc + (m.key -> memberSnapshot(repo, repo.snapshot(acc(m.key)), m).id)
+      }
+      val namespaces = staged.foldLeft(base.namespaces) {
+        case (acc, c: Create) if !acc.contains(c.dirs.mkString("/")) =>
+          acc + (c.dirs.mkString("/") -> Map.empty[String, String])
+        case (acc, _) => acc
+      }
+      (tables, namespaces)
+    }
 
-  /** The ONE commit-member lowering: builds (and writes) the snapshot a
-    * member's validated pieces produce against `prior`. Shared by the
-    * single-table MoR / evolve+append / positional-delete commit
-    * closures AND every multi-table transaction member, so the
-    * semantics cannot drift between the one-table and atomic-fold
-    * paths: a metadata-only member (no files, no deletes, no drops)
-    * evolves schema/properties with NO sequence bump; an evolve+append
-    * member stamps its files at the next MoR sequence under the schema
-    * it adds; otherwise entries stamp at the next sequence, an equality
+  /** The snapshot a member's validated pieces produce against `prior`
+    * (the commit base's snapshot of the member's table): a
+    * metadata-only member (no files, no deletes, no drops) evolves
+    * schema/properties with NO sequence bump; an evolve+append member
+    * stamps its files at the next MoR sequence under the schema it
+    * adds; otherwise entries stamp at the next sequence, an equality
     * filter lands as a tombstone masking strictly-lower sequences
     * (same-commit adds exempt by graft's strict `>` applicability),
     * and drops leave the live set — re-validated live against `prior`
-    * (the caller's base pin makes a violation unreachable; the check
+    * (the fold's base pin makes a violation unreachable; the check
     * guards the invariant). writeSnapshot retires any tombstone the
     * drops leave with nothing to apply to.
     */
-  private def memberSnapshot(repo: GraftRepo, key: String,
-      prior: graft.versioned.Snapshot,
-      entries: Seq[FileEntry],
-      eqFilter: Option[org.apache.spark.sql.sources.Filter],
-      dropRels: Seq[String],
-      schemaChanges: Seq[org.apache.spark.sql.connector.catalog.TableChange],
-      setProps: Map[String, String],
-      removeProps: Set[String]): graft.versioned.Snapshot =
-    if (entries.isEmpty && eqFilter.isEmpty && dropRels.isEmpty) {
-      val ev = SchemaEvolution.evolve(prior, schemaChanges)
-      val props = (ev.props -- removeProps) ++ setProps
-      repo.writeSnapshot(key, ev.schema.json, prior.files,
+  private def memberSnapshot(repo: GraftRepo,
+      prior: graft.versioned.Snapshot, m: Member): graft.versioned.Snapshot =
+    if (m.entries.isEmpty && m.eqFilter.isEmpty && m.dropRels.isEmpty) {
+      val ev = SchemaEvolution.evolve(prior, m.schemaChanges)
+      val props = (ev.props -- m.removeProps) ++ m.setProps
+      repo.writeSnapshot(m.key, ev.schema.json, prior.files,
         if (ev.spec.isEmpty) None else Some(ev.spec),
         if (ev.mapping.isEmpty) None else Some(ev.mapping),
         if (props.isEmpty) None else Some(props),
         if (ev.retired.isEmpty) None else Some(ev.retired.toSeq.sorted))
-    } else if (schemaChanges.nonEmpty) {
-      require(eqFilter.isEmpty && dropRels.isEmpty,
+    } else if (m.schemaChanges.nonEmpty) {
+      require(m.eqFilter.isEmpty && m.dropRels.isEmpty,
         "schema changes combine only with plain appends") // guarded upstream
-      val ev = SchemaEvolution.evolve(prior, schemaChanges)
-      val props0 = (ev.props -- removeProps) ++ setProps
+      val ev = SchemaEvolution.evolve(prior, m.schemaChanges)
+      val props0 = (ev.props -- m.removeProps) ++ m.setProps
       val next = Tombstones.lastSeq(props0) + 1
-      val stamped = entries.map(_.copy(seq = Some(next)))
-      repo.writeSnapshot(key, ev.schema.json,
+      val stamped = m.entries.map(_.copy(seq = Some(next)))
+      repo.writeSnapshot(m.key, ev.schema.json,
         Manifests.appended(prior.files, stamped),
         if (ev.spec.isEmpty) None else Some(ev.spec),
         if (ev.mapping.isEmpty) None else Some(ev.mapping),
         Some(props0 + (Tombstones.SeqProp -> next.toString)),
         if (ev.retired.isEmpty) None else Some(ev.retired.toSeq.sorted))
     } else {
-      val props0 = (prior.properties -- removeProps) ++ setProps
+      val props0 = (prior.properties -- m.removeProps) ++ m.setProps
       val next = Tombstones.lastSeq(props0) + 1
-      val stamped = entries.map(_.copy(seq = Some(next)))
-      val props1 = eqFilter match {
+      val stamped = m.entries.map(_.copy(seq = Some(next)))
+      val props1 = m.eqFilter match {
         case Some(f) => Tombstones.append(props0, next, f)
         case None => props0 + (Tombstones.SeqProp -> next.toString)
       }
       val files2 =
-        if (dropRels.isEmpty) Manifests.appended(prior.files, stamped)
+        if (m.dropRels.isEmpty) Manifests.appended(prior.files, stamped)
         else {
-          val dropSet = dropRels.toSet
+          val dropSet = m.dropRels.toSet
           val live = prior.files.iterator.map(_.path).toSet
           val missing = dropSet -- live
           if (missing.nonEmpty) throw new RestConflict(
             "CommitFailedException",
-            s"rewrite of $key drops ${missing.size} file(s) not live " +
+            s"rewrite of ${m.key} drops ${missing.size} file(s) not live " +
               s"at the commit base (e.g. ${missing.head}) — refresh " +
               "and retry")
           prior.files.filterNot(f => dropSet(f.path)) ++ stamped
         }
-      repo.writeSnapshot(key, prior.schemaJson, files2,
+      repo.writeSnapshot(m.key, prior.schemaJson, files2,
         prior.partitionBy, prior.physicalNames,
         Some(props1), prior.retired)
     }
-
-  /** Rewritten-file pieces of a lowered positional-delete commit (see
-    * [[materializePosDeletes]]): registered inside whichever atomic
-    * commit the caller runs — the single-table commit or a member slot
-    * of a multi-table transaction.
-    */
-  private final case class PosMaterialized(
-      rewritten: Seq[FileEntry], dropBaseRels: Seq[String],
-      cleanEntries: Seq[FileEntry],
-      eqFilter: Option[org.apache.spark.sql.sources.Filter],
-      dirtyBase: Int, dirtyAdds: Int)
-
   /** Lower posted POSITIONAL deletes / v3 DVs onto a server-side CoW
     * rewrite of EXACTLY the referenced (dirty) files: the posted delete
     * rows apply through the independent importer's spec-sequence
@@ -2067,354 +2068,51 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * Iceberg catalogs cannot give — graft's native commit model serves
     * it directly (the REST analog of [[TableOps.atomicAppend]]).
     *
-    * Scope: each change may carry an APPEND snapshot (posted state ⊇
-    * base; the table's own served delete files may be relisted as
-    * always), a schema update — alone (metadata-only) or COMBINED
-    * with the snapshot (the engine checkpoint that widens and appends
-    * one table while siblings append; lowered like the single-table
-    * evolve+append) — equality delete files (the Flink-upsert member
-    * shape, lowered onto a predicate tombstone with same-commit adds
-    * exempt), a CoW REWRITE (r15: dropped base files leave the live
-    * set, adds register at the member's sequence — the single-table
-    * commitRewrite lowering riding the one commit), POSITIONAL delete
-    * files / DVs (r15: lowered onto the same per-table server-side CoW
-    * rewrite the single-table path runs; the distributed rewrite
-    * happens in STAGING, before the atomic fold, so a commit retry
-    * never re-runs Spark jobs and the per-member base pin still 409s
-    * the whole transaction on staleness), and set/remove-properties,
-    * with `assert-table-uuid` / `assert-ref-snapshot-id` requirements.
-    * All tables must live on ONE branch (a graft commit is
-    * per-branch). A member may also be a staged CREATE
-    * (`assert-create` — the Flink side-output-table checkpoint shape);
-    * replace (compaction) and rollbacks stay single-table commits (no
-    * mainstream engine posts them multi-table).
+    * Scope: a member is exactly a CommitTableRequest body — each one
+    * parses through the same [[stageChange]] as `POST .../tables/{t}`,
+    * with the same requirements, updates and error answers — and the
+    * members land through the same fold ([[land]]) a single-table
+    * commit does. So a member may be an append, a CoW rewrite, an
+    * equality or positional delete (the positional rewrite's Spark jobs
+    * run in staging, before the atomic fold, so a commit retry never
+    * re-runs them), an evolve+append, a metadata-only change, a
+    * validated no-op or a staged CREATE (`assert-create` — the Flink
+    * side-output-table checkpoint shape). The single-table-only kinds —
+    * tag ref writes, rollbacks, partition-spec changes and `replace`
+    * (engine compaction) — refuse with 400: each is its own commit,
+    * and no mainstream engine posts them multi-table. All tables must
+    * live on ONE branch (a graft commit is per-branch), each named
+    * once.
     */
   private def commitTransaction(repo: GraftRepo, prefix: Option[String],
-      req: com.fasterxml.jackson.databind.JsonNode): Unit = {
+      req: JsonNode): Unit = {
     val changes = Option(req.get("table-changes")).toSeq
       .flatMap(_.elements().asScala).toSeq
     if (changes.isEmpty) throw new IllegalArgumentException(
       "transaction carries no table-changes")
-    val hconf = spark.map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-    final case class Staged(ref: String, key: String,
-      servedGraftSnap: String, entries: Seq[FileEntry],
-      setProps: Map[String, String], removeProps: Set[String],
-      schemaChanges: Seq[org.apache.spark.sql.connector.catalog.TableChange],
-      eqFilter: Option[org.apache.spark.sql.sources.Filter],
-      dropRels: Seq[String],
-      create: Option[StagedCreate] = None, createDirs: Seq[String] = Nil)
-
-    def stageMember(ch: com.fasterxml.jackson.databind.JsonNode,
-        ns: Seq[String], name: String): Staged = {
-      val (ref, key) = resolveKey(repo, ns, name)
-      if (!repo.branchExists(ref)) throw new IllegalArgumentException(
-        s"transactions commit to a branch; $ref is a tag")
-      val metaPath = serve(repo, prefix, ref, key)
-      val served = mapper.readTree(Files.readString(metaPath))
-      val servedGraftSnap =
-        served.get("properties").get("graft.source-snapshot").asText()
-      val servedSnapId = Option(served.get("current-snapshot-id"))
-        .map(_.asLong()).filter(_ != -1L)
-      Option(ch.get("requirements")).toSeq
-        .flatMap(_.elements().asScala).foreach { r =>
-          text(r, "type") match {
-            case "assert-table-uuid" =>
-              val want = text(r, "uuid")
-              val have = served.get("table-uuid").asText()
-              if (want != have)
-                throw new RestConflict("CommitFailedException",
-                  s"table uuid changed for $key: expected $want, found $have")
-            case "assert-ref-snapshot-id" =>
-              val rn = Option(r.get("ref")).map(_.asText()).getOrElse("main")
-              if (rn != "main") throw new IllegalArgumentException(
-                s"graft serves one Iceberg branch (main) per graft ref: $rn")
-              val want = Option(r.get("snapshot-id")).filterNot(_.isNull)
-                .map(_.asLong())
-              if (want != servedSnapId)
-                throw new RestConflict("CommitFailedException",
-                  s"branch main moved for $key: expected " +
-                    s"${want.getOrElse("<none>")}, now at " +
-                    s"${servedSnapId.getOrElse("<none>")}")
-            case other => throw new UnsupportedOperationException(
-              s"unsupported requirement inside a transaction: $other")
-          }
-        }
-      var snapNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-      var newSchemaNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-      var setCurrentSchema: Option[Int] = None
-      var setRefTargetTxn: Option[Long] = None
-      var setProps = Map.empty[String, String]
-      var removeProps = Set.empty[String]
-      def guardProp(k: String): String = {
-        if (k.startsWith("graft."))
-          throw new UnsupportedOperationException(
-            s"$k is engine-managed graft state; not settable over REST")
-        k
-      }
-      Option(ch.get("updates")).toSeq
-        .flatMap(_.elements().asScala).foreach { u =>
-          text(u, "action") match {
-            case "add-snapshot" =>
-              if (snapNode.isDefined)
-                throw new UnsupportedOperationException(
-                  s"one add-snapshot per table in a transaction ($key)")
-              snapNode = Some(Option(u.get("snapshot")).getOrElse(
-                throw new IllegalArgumentException(
-                  "add-snapshot carries no snapshot")))
-            case "set-snapshot-ref" =>
-              val rn = Option(u.get("ref-name")).map(_.asText())
-                .getOrElse("main")
-              if (rn != "main") throw new IllegalArgumentException(
-                s"graft serves one Iceberg branch (main) per graft ref: $rn")
-              setRefTargetTxn = Option(u.get("snapshot-id"))
-                .filterNot(_.isNull).map(_.asLong())
-            case "set-properties" =>
-              setProps ++= Option(u.get("updates")).toSeq
-                .flatMap(_.fields().asScala)
-                .map(e => guardProp(e.getKey) -> e.getValue.asText())
-            case "remove-properties" =>
-              removeProps ++= Option(u.get("removals")).toSeq
-                .flatMap(_.elements().asScala).map(n => guardProp(n.asText()))
-            // a METADATA-ONLY schema evolution riding a multi-table
-            // checkpoint (the common Flink shape: one table's columns
-            // widened while its siblings append) — lowered onto graft's
-            // metadata-only evolution, same as the single-table path
-            case "add-schema" =>
-              if (newSchemaNode.isDefined)
-                throw new UnsupportedOperationException(
-                  s"one add-schema per table in a transaction ($key)")
-              newSchemaNode = Some(Option(u.get("schema")).getOrElse(
-                throw new IllegalArgumentException(
-                  "add-schema carries no schema")))
-            case "set-current-schema" =>
-              setCurrentSchema = Some(Option(u.get("schema-id"))
-                .map(_.asInt()).getOrElse(-1))
-            case other => throw new UnsupportedOperationException(
-              s"unsupported update inside a transaction: $other — " +
-                "transactions bundle append/evolve+append/rewrite/" +
-                "equality- and positional-delete commits, property " +
-                "updates, schema updates, and staged CREATEs " +
-                "(assert-create); replace (compaction) and rollbacks " +
-                "stay single-table commits")
-          }
-        }
-      // a member's ref target must be the snapshot IT adds (or the
-      // served current): anything else is a rollback riding a
-      // transaction — silently landing a no-op while the engine
-      // believes the ref moved would be worse than refusing
-      setRefTargetTxn.foreach { tgt =>
-        val addedId = snapNode.flatMap(n =>
-          Option(n.get("snapshot-id")).map(_.asLong()))
-        if (!addedId.contains(tgt) && !servedSnapId.contains(tgt))
-          throw new UnsupportedOperationException(
-            s"transactional change for $key sets main to snapshot $tgt," +
-              " which this member does not add — rollbacks stay " +
-              "single-table commits")
-      }
-      val servedSchemaId = Option(served.get("current-schema-id"))
-        .map(_.asInt()).getOrElse(0)
-      setCurrentSchema.foreach { sid =>
-        val addedId = newSchemaNode.flatMap(sn =>
-          Option(sn.get("schema-id")).map(_.asInt()))
-        if (sid != -1 && !addedId.contains(sid) && sid != servedSchemaId)
-          throw new IllegalArgumentException(
-            s"set-current-schema references schema-id $sid, which this " +
-              "transaction member does not add")
-      }
-      val schemaChanges: Seq[org.apache.spark.sql.connector.catalog.TableChange] =
-        newSchemaNode.map { n =>
-          val cur = Option(served.get("schemas"))
-            .map(_.elements().asScala.toSeq).getOrElse(Nil)
-            .find(sn => Option(sn.get("schema-id"))
-              .exists(_.asInt() == servedSchemaId))
-            .getOrElse(throw new IllegalStateException(
-              s"served metadata has no schema $servedSchemaId"))
-          schemaChangesOf(cur, n)
-        }.getOrElse(Nil)
-      val (entries: Seq[FileEntry],
-           eqFilter: Option[org.apache.spark.sql.sources.Filter],
-           dropRels: Seq[String]) =
-        snapNode match {
-        case None => (Nil, None, Nil)
-        case Some(snap) =>
-          val op = Option(snap.get("summary")).flatMap(s =>
-            Option(s.get("operation"))).map(_.asText()).getOrElse("append")
-          if (!Set("append", "overwrite", "delete")(op))
-            throw new UnsupportedOperationException(
-              s"unsupported transactional commit operation: '$op' " +
-                "(accepted: append, overwrite, delete)")
-          val v = served.get("format-version").asInt()
-          val (postedData, postedDeletes) =
-            try IcebergImport.filesOfManifestList(
-              text(snap, "manifest-list"), v)
-            catch {
-              case e @ (_: java.io.IOException |
-                        _: org.apache.avro.AvroRuntimeException) =>
-                throw new IllegalArgumentException(
-                  s"posted manifest-list is unreadable: ${e.getMessage}")
-            }
-          val basePlan = IcebergImport.plan(metaPath.toString, None)
-          val servedDeletePaths = basePlan.deleteFiles
-            .map(d => IcebergImport.normStr(d.path)).toSet
-          val newDeletes = postedDeletes.filterNot(d =>
-            servedDeletePaths(IcebergImport.normStr(d.path)))
-          // EQUALITY delete members — the Flink-upsert checkpoint
-          // shape — lower onto graft predicate tombstones exactly as
-          // the single-table path does (same-commit adds land at the
-          // tombstone's sequence and are exempt by graft's strict `>`
-          // applicability). POSITIONAL delete / DV members (r15) lower
-          // onto the same per-table server-side CoW rewrite the
-          // single-table path runs ([[materializePosDeletes]]): the
-          // Spark jobs run here in STAGING, the atomic fold only
-          // registers the survivors — so a member's rewrite never
-          // re-runs on a commit retry, and the per-member base pin
-          // still 409s the whole transaction on any staleness.
-          val (eqDels, posDels) =
-            newDeletes.partition(d => d.content == 2 && d.dv.isEmpty)
-          if (posDels.nonEmpty && op == "append")
-            throw new IllegalArgumentException(
-              s"transactional append for $key carries positional " +
-                "delete files (post operation=overwrite or delete)")
-          if (posDels.nonEmpty && schemaChanges.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes a schema update " +
-                "with positional deletes — post them as two members " +
-                "or two transactions")
-          if (eqDels.nonEmpty && op == "append")
-            throw new IllegalArgumentException(
-              s"transactional append for $key carries equality delete " +
-                "files (post operation=overwrite or delete)")
-          if (eqDels.nonEmpty && schemaChanges.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes a schema update " +
-                "with equality deletes — post them as two members or " +
-                "two transactions")
-          val basePaths = basePlan.dataPaths.toSet
-          val dropped = basePaths -- postedData.map(_.path).toSet
-          // a CoW REWRITE member (r15): dropped base files leave the
-          // live set, added files register at the member's sequence —
-          // the single-table commitRewrite lowering riding the one
-          // multi-table commit (an engine checkpoint that compacts or
-          // CoW-deletes one table while siblings append)
-          if (dropped.nonEmpty && op == "append")
-            throw new UnsupportedOperationException(
-              s"transactional change for $key drops ${dropped.size} " +
-                "base data file(s) — not an append (post " +
-                "operation=overwrite to rewrite files)")
-          if (dropped.nonEmpty && eqDels.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes dropped data files " +
-                "(CoW) with equality delete files (MoR) — post them as " +
-                "two members")
-          if (dropped.nonEmpty && posDels.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes dropped data files " +
-                "(CoW) with positional delete files (MoR) — post them " +
-                "as two members")
-          if (dropped.nonEmpty && schemaChanges.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes a schema update " +
-                "with dropped data files — schema changes combine only " +
-                "with appends")
-          val head = repo.snapshot(repo.resolve(ref).tables(key))
-          val destRoot = prefix.fold(exportRoot)(exportRoot.resolve)
-            .resolve(ref).resolve(key).toAbsolutePath.normalize
-          // a member combining a schema update WITH a snapshot (the
-          // engine checkpoint that widens AND appends one table while
-          // siblings append) ingests its files under the schema it
-          // ADDS — the same lowering as the single-table evolve+append
-          val ev = SchemaEvolution.evolve(head, schemaChanges)
-          if (posDels.nonEmpty) {
-            val pm = materializePosDeletes(repo, ref, key, destRoot,
-              head, basePlan, postedData.filterNot(d => basePaths(d.path)),
-              posDels, eqDels, hconf)
-            (pm.rewritten ++ pm.cleanEntries, pm.eqFilter, pm.dropBaseRels)
-          } else {
-            val filt =
-              if (eqDels.isEmpty) None
-              else Some(equalityTombstoneFilter(repo, destRoot, eqDels,
-                basePlan.fieldIdToName, hconf))
-            val dropRels = dropped.toSeq.sorted.map { loc =>
-              repo.dataIO.relOf(loc).getOrElse(
-                throw new IllegalStateException(
-                  s"base data file outside the repo data plane: $loc"))
-            }
-            (ingestEntries(repo, ref, key, destRoot,
-              postedData.filterNot(d => basePaths(d.path)),
-              ev.schema, ev.mapping, ev.spec, hconf), filt, dropRels)
-          }
-      }
-      Staged(ref, key, servedGraftSnap, entries, setProps, removeProps,
-        schemaChanges, eqFilter, dropRels)
-    }
-
-    // members stage on up to 3 driver threads (the TableOps
-    // .stageConcurrently shape — guide §2.6): each member touches its
+    // members stage on up to 3 driver threads: each member touches its
     // OWN table (duplicates rejected below), serve() locks per served
     // table, and the heavy member work (footer reads, the positional-
-    // delete CoW lowering's Spark jobs) is independent — staging them
-    // serially idled the cluster through each member's job-submission
-    // latency. Failures surface in member order exactly as before
-    // (first failing member's error wins; siblings' already-staged
-    // files are orphans until vacuum — the same contract as a serial
-    // partial failure), with the remaining stages cancelled.
-    def stageOne(ch: com.fasterxml.jackson.databind.JsonNode): Staged = {
+    // delete lowering's Spark jobs) is independent. The first failing
+    // member's error wins, with the remaining stages cancelled
+    // (siblings' already-staged files are orphans until vacuum).
+    val staged = TableOps.stageConcurrently(changes) { ch =>
       val ident = Option(ch.get("identifier")).getOrElse(
         throw new IllegalArgumentException(
           "table-change carries no identifier"))
       val ns = Option(ident.get("namespace")).toSeq
         .flatMap(_.elements().asScala).map(_.asText()).toSeq
-      val name = text(ident, "name")
-      val reqNodes = Option(ch.get("requirements")).toSeq
-        .flatMap(_.elements().asScala).toSeq
-      // a CTAS MEMBER (requirement assert-create): the engine
-      // checkpoint that creates a side-output table in the same atomic
-      // commit as its siblings' appends. Staging reuses the
-      // single-table staged-create machinery; the existence race is
-      // decided inside the atomic fold (a losing racer 409s the WHOLE
-      // transaction, and an abandoned stage never touched the branch).
-      if (reqNodes.exists(r => text(r, "type") == "assert-create")) {
-        val (ref, dirs) = ns match {
-          case r +: ds if ds.nonEmpty && refNames(repo).contains(r) =>
-            (r, ds)
-          case _ => throw new NoSuchElementException(
-            s"no such namespace: ${ns.mkString(".")}")
-        }
-        if (!repo.branchExists(ref)) throw new IllegalArgumentException(
-          s"transactions commit to a branch; $ref is a tag")
-        val key = (dirs :+ name).mkString("/")
-        // fast-fail before files stage; the fold re-checks atomically
-        if (repo.resolve(ref).tables.contains(key))
-          throw new RestConflict("AlreadyExistsException",
-            s"table already exists: $key @ $ref")
-        val sc = parseStagedCreate(repo, prefix, ref, key, reqNodes, ch)
-        Staged(ref, key, "", sc.entries, sc.props, Set.empty,
-          Nil, None, Nil, create = Some(sc), createDirs = dirs)
-      } else stageMember(ch, ns, name)
-    }
-    val staged: Seq[Staged] =
-      if (changes.size <= 1) changes.map(stageOne)
-      else {
-        val pool = Executors.newFixedThreadPool(math.min(changes.size, 3))
-        try {
-          val futures = changes.map(ch =>
-            pool.submit(new java.util.concurrent.Callable[Staged] {
-              override def call(): Staged = stageOne(ch)
-            }))
-          futures.map(f =>
-            try f.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                futures.foreach(_.cancel(true))
-                pool.shutdownNow()
-                pool.awaitTermination(30,
-                  java.util.concurrent.TimeUnit.SECONDS)
-                throw Option(e.getCause).getOrElse(e)
-            })
-        } finally pool.shutdown()
+      stageChange(repo, prefix, ns, text(ident, "name"), ch) match {
+        case l: Landable => l
+        case s: SingleTable => throw new UnsupportedOperationException(
+          s"unsupported inside a transaction: ${s.what} for ${s.key} — " +
+            "transactions bundle append/evolve+append/rewrite/equality- " +
+            "and positional-delete commits, property updates, schema " +
+            "updates, and staged CREATEs (assert-create); tag ref " +
+            "writes, partition-spec changes, replace (compaction) and " +
+            "rollbacks stay single-table commits")
       }
+    }
     val refs = staged.map(_.ref).distinct
     if (refs.size != 1) throw new IllegalArgumentException(
       s"a transaction commits to ONE branch; got ${refs.mkString(", ")} " +
@@ -2423,191 +2121,8 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     if (dupKeys.nonEmpty) throw new IllegalArgumentException(
       s"a transaction names each table once; duplicated: " +
         dupKeys.mkString(", "))
-    val ref = refs.head
-    // ONE graft commit: all tables' appends + property updates publish
-    // together or not at all; any table's served base gone stale → 409
-    // for the WHOLE transaction (the engine refreshes and replays)
-    repo.commitRetry(ref, s"rest: transaction " +
-      s"(${staged.map(_.key).mkString(", ")})") { base =>
-      val updated = staged.foldLeft(base.tables) { case (acc, st) =>
-        st.create match {
-          case Some(sc) =>
-            // the assert-create race, decided atomically: exactly one
-            // concurrent creator wins; the loser 409s the WHOLE
-            // transaction (its siblings' appends roll back with it).
-            // acc is checked too as a belt — duplicate same-key members
-            // are already rejected by the names-each-table-once guard
-            // above, so acc cannot differ from base here today
-            if (base.tables.contains(st.key) || acc.contains(st.key))
-              throw new RestConflict("AlreadyExistsException",
-                s"table already exists: ${st.key} @ $ref")
-            val stamped = st.entries.map(_.copy(seq = Some(1L)))
-            val allProps = sc.props ++
-              (if (st.entries.isEmpty) Map.empty
-               else Map(Tombstones.SeqProp -> "1"))
-            val snap = repo.writeSnapshot(st.key, sc.schema.json, stamped,
-              if (sc.spec.isEmpty) None else Some(sc.spec), None,
-              if (allProps.isEmpty) None else Some(allProps))
-            acc + (st.key -> snap.id)
-          case None =>
-            if (!base.tables.get(st.key).contains(st.servedGraftSnap))
-              throw new RestConflict("CommitFailedException",
-                s"branch $ref moved since the served base of ${st.key} — " +
-                  "refresh and retry")
-            val prior = acc.get(st.key).map(repo.snapshot).getOrElse(
-              throw new NoSuchElementException(s"no such table: ${st.key}"))
-            val snap2 = memberSnapshot(repo, st.key, prior, st.entries,
-              st.eqFilter, st.dropRels, st.schemaChanges, st.setProps,
-              st.removeProps)
-            acc + (st.key -> snap2.id)
-        }
-      }
-      // a create member registers its namespace too (same rule as the
-      // single-table staged create: no-op when it already exists)
-      val ns2 = staged.foldLeft(base.namespaces) { (acc, st) =>
-        if (st.create.isEmpty || st.createDirs.isEmpty) acc
-        else {
-          val k = st.createDirs.mkString("/")
-          if (acc.contains(k)) acc
-          else acc + (k -> Map.empty[String, String])
-        }
-      }
-      (updated, ns2)
-    }
-  }
-
-  /** The spec's staged-create publish (`stage-create: true` then a
-    * commit with requirement `assert-create`): the posted metadata
-    * updates carry the full table build — schema, partition spec,
-    * properties, first snapshot — and land as ONE graft commit, so a
-    * CTAS from an external engine is atomic: concurrent staged creates
-    * race on `base.tables.contains(key)` and exactly one wins; an
-    * abandoned stage never touched the branch and leaves nothing.
-    */
-  /** Parsed staged-create publish: the posted metadata updates carry
-    * the full table build (shared by the single-table staged-create
-    * route and CTAS members inside [[commitTransaction]]).
-    */
-  private final case class StagedCreate(
-      schema: org.apache.spark.sql.types.StructType,
-      spec: Seq[PartitionField], props: Map[String, String],
-      entries: Seq[FileEntry])
-
-  private def parseStagedCreate(repo: GraftRepo, prefix: Option[String],
-      ref: String, key: String,
-      reqs: Seq[com.fasterxml.jackson.databind.JsonNode],
-      req: com.fasterxml.jackson.databind.JsonNode): StagedCreate = {
-    reqs.foreach { r =>
-      text(r, "type") match {
-        case "assert-create" => ()
-        case other => throw new UnsupportedOperationException(
-          s"unsupported requirement on a staged create: $other")
-      }
-    }
-    var schemaNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var specNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var snapNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var props = Map.empty[String, String]
-    Option(req.get("updates")).toSeq
-      .flatMap(_.elements().asScala).foreach { u =>
-        text(u, "action") match {
-          // identity/serving details graft assigns itself on export:
-          case "assign-uuid" | "upgrade-format-version" | "set-location" => ()
-          // graft tables have no sort orders; an engine's declared
-          // order is advisory (write-side clustering), safe to drop
-          case "add-sort-order" | "set-default-sort-order" => ()
-          case "set-current-schema" | "set-default-spec" => ()
-          case "add-schema" =>
-            if (schemaNode.isDefined) throw new UnsupportedOperationException(
-              "one add-schema per staged create")
-            schemaNode = Some(Option(u.get("schema")).getOrElse(
-              throw new IllegalArgumentException("add-schema carries no schema")))
-          case "add-partition-spec" =>
-            if (specNode.isDefined) throw new UnsupportedOperationException(
-              "one add-partition-spec per staged create")
-            specNode = Option(u.get("spec")).orElse(Some(u))
-          case "set-properties" =>
-            props ++= Option(u.get("updates")).toSeq
-              .flatMap(_.fields().asScala)
-              .map { e =>
-                if (e.getKey.startsWith("graft."))
-                  throw new UnsupportedOperationException(
-                    s"${e.getKey} is engine-managed graft state; not " +
-                      "settable over REST")
-                e.getKey -> e.getValue.asText()
-              }
-          case "add-snapshot" =>
-            if (snapNode.isDefined) throw new UnsupportedOperationException(
-              "one add-snapshot per staged create")
-            snapNode = Some(Option(u.get("snapshot")).getOrElse(
-              throw new IllegalArgumentException(
-                "add-snapshot carries no snapshot")))
-          case "set-snapshot-ref" =>
-            val rn = Option(u.get("ref-name")).map(_.asText()).getOrElse("main")
-            if (rn != "main") throw new IllegalArgumentException(
-              s"graft serves one Iceberg branch (main) per graft ref: $rn")
-          case other => throw new UnsupportedOperationException(
-            s"unsupported metadata update on a staged create: $other")
-        }
-      }
-    val sNode = schemaNode.getOrElse(throw new IllegalArgumentException(
-      "staged create commit carries no add-schema"))
-    val schema = IcebergImport.structOf(sNode)
-    val idToName = Option(sNode.get("fields")).toSeq
-      .flatMap(_.elements().asScala).map(fieldIdName).toMap
-    val spec = specNode
-      .map(n => Option(n.get("fields")).getOrElse(n))
-      .map(_.elements().asScala.map(partitionFieldOf(_, idToName)).toSeq)
-      .getOrElse(Nil)
-    TableOps.validateSpec(schema, spec)
-
-    // first snapshot's files (a zero-row CTAS may post none)
-    val destRoot = prefix.fold(exportRoot)(exportRoot.resolve)
-      .resolve(ref).resolve(key).toAbsolutePath.normalize
-    val hconf = spark.map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val entries = snapNode.map { snap =>
-      // the engine wrote its manifest list against the staged metadata
-      // this server handed out, which serves at `formatVersion`
-      val (postedData, postedDeletes) = IcebergImport.filesOfManifestList(
-        text(snap, "manifest-list"), formatVersion)
-      if (postedDeletes.nonEmpty) throw new UnsupportedOperationException(
-        "a staged create's first snapshot carries delete files")
-      ingestEntries(repo, ref, key, destRoot, postedData, schema,
-        Map.empty, spec, hconf)
-    }.getOrElse(Nil)
-    StagedCreate(schema, spec, props, entries)
-  }
-
-  /** The spec's staged-create publish as its own commit (the
-    * single-table CTAS route). */
-  private def commitStagedCreate(repo: GraftRepo, prefix: Option[String],
-      ref: String, dirs: Seq[String], key: String,
-      reqs: Seq[com.fasterxml.jackson.databind.JsonNode],
-      req: com.fasterxml.jackson.databind.JsonNode): ObjectNode = {
-    val sc = parseStagedCreate(repo, prefix, ref, key, reqs, req)
-    val schema = sc.schema
-    val spec = sc.spec
-    val props = sc.props
-    val entries = sc.entries
-
-    repo.commitRetry(ref, s"rest: create table $key (staged, " +
-      s"${entries.size} files, ${entries.map(_.rows).sum} rows)") { base =>
-      if (base.tables.contains(key))
-        throw new RestConflict("AlreadyExistsException",
-          s"table already exists: $key @ $ref")
-      val stamped = entries.map(_.copy(seq = Some(1L)))
-      val allProps = props ++
-        (if (entries.isEmpty) Map.empty
-         else Map(Tombstones.SeqProp -> "1"))
-      val snap = repo.writeSnapshot(key, schema.json, stamped,
-        if (spec.isEmpty) None else Some(spec), None,
-        if (allProps.isEmpty) None else Some(allProps))
-      (base.tables + (key -> snap.id),
-        if (base.namespaces.contains(dirs.mkString("/"))) base.namespaces
-        else base.namespaces + (dirs.mkString("/") -> Map.empty[String, String]))
-    }
-    loadResult(serve(repo, prefix, ref, key))
+    land(repo, refs.head, staged,
+      s"rest: transaction (${staged.map(_.key).mkString(", ")})")
   }
 
   /** Register the posted added files and derive their [[FileEntry]]
@@ -3031,7 +2546,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     // ZERO-COPY fast path: when every data file of the posted metadata
     // already resolves under THIS repo's data plane (a sync-dest or
     // sibling-branch export being re-homed — the same containment check
-    // commitTable's zero-copy staging uses) and no delete files change
+    // ingestEntries' zero-copy staging uses) and no delete files change
     // the live rows, the files register in place: O(metadata) adoption,
     // no Spark job. Foreign files (or a MoR source whose live rows are
     // not its raw files) take the copy path below.
@@ -3045,11 +2560,10 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       }
     val entries = zeroCopyRels match {
       case Some(rels) =>
-        val hconf = spark.map(_.sessionState.newHadoopConf())
-          .getOrElse(new org.apache.hadoop.conf.Configuration())
         // footer stats pass only (the cost any Iceberg catalog commit
         // pays per registered file); the rows are never read
-        TableOps.entriesFromFootersLocal(repo, rels, plan.schema, hconf)
+        TableOps.entriesFromFootersLocal(repo, rels, plan.schema,
+          hadoopConf())
           .map(_.copy(seq = Some(1L)))
       case None =>
         val s = spark.getOrElse(throw new UnsupportedOperationException(
@@ -3674,6 +3188,78 @@ private final class RestConflict(val typ: String, msg: String)
   extends RuntimeException(msg)
 
 object IcebergRestServer {
+
+  /** One parsed and validated REST table change: the body of a
+    * CommitTableRequest, or one member of a CommitTransactionRequest
+    * (the spec's transaction is a list of the same objects).
+    */
+  private sealed trait Staged {
+    def ref: String
+    def key: String
+  }
+
+  /** A change the transaction fold ([[land]]) publishes; `message` is
+    * its single-table commit message. */
+  private sealed trait Landable extends Staged {
+    def message: String
+  }
+
+  /** A data/metadata change, lowered by [[memberSnapshot]] against the
+    * commit base: append, CoW rewrite, equality deletes, positional
+    * deletes / DVs (already rewritten in staging), evolve+append, and
+    * metadata-only changes. `noop` marks a validated no-op (no
+    * snapshot, schema or property update): the single-table route
+    * commits nothing for it, a transaction folds it as a pinned member
+    * that changes nothing.
+    */
+  private final case class Member(ref: String, key: String,
+      servedGraftSnap: String, entries: Seq[FileEntry],
+      eqFilter: Option[org.apache.spark.sql.sources.Filter],
+      dropRels: Seq[String],
+      schemaChanges: Seq[org.apache.spark.sql.connector.catalog.TableChange],
+      setProps: Map[String, String], removeProps: Set[String],
+      message: String, noop: Boolean = false) extends Landable
+
+  /** A staged CREATE publish (`stage-create: true`, then a commit with
+    * requirement `assert-create`): the posted updates carry the full
+    * table build — schema, partition spec, properties, first snapshot's
+    * files — and land as ONE graft commit through [[land]], alone or as
+    * a transaction member, so a CTAS from an external engine is atomic:
+    * concurrent staged creates race on the key and exactly one wins; an
+    * abandoned stage never touched the branch and leaves nothing.
+    */
+  private final case class Create(ref: String, key: String,
+      dirs: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      spec: Seq[PartitionField], props: Map[String, String],
+      entries: Seq[FileEntry], message: String) extends Landable
+
+  /** The updates of one table change, parsed once ([[parseUpdates]]). */
+  private final case class Updates(snap: Option[JsonNode] = None,
+      schema: Option[JsonNode] = None, spec: Option[JsonNode] = None,
+      setDefaultSpec: Boolean = false, currentSchema: Option[Int] = None,
+      refTarget: Option[Long] = None,
+      tagCreate: Option[(String, Long)] = None,
+      tagRemove: Option[String] = None,
+      setProps: Map[String, String] = Map.empty,
+      removeProps: Set[String] = Set.empty)
+
+  /** A change only the single-table route takes, as its own commit: a
+    * tag ref write, a rollback, a partition-spec change or a `replace`
+    * (engine compaction). `run` lands it; a transaction refuses it
+    * before anything runs.
+    */
+  private final case class SingleTable(ref: String, key: String,
+      what: String, run: () => Unit) extends Staged
+
+  /** Rewritten-file pieces of a lowered positional-delete commit (see
+    * [[materializePosDeletes]]): a [[Member]]'s entries, equality
+    * filter and drops, registered by the fold.
+    */
+  private final case class PosMaterialized(
+      rewritten: Seq[FileEntry], dropBaseRels: Seq[String],
+      cleanEntries: Seq[FileEntry],
+      eqFilter: Option[org.apache.spark.sql.sources.Filter],
+      dirtyBase: Int, dirtyAdds: Int)
 
   /** Start serving ONE `repo` on 127.0.0.1:`port` (0 = ephemeral; read
     * the bound port back from [[IcebergRestServer.port]]). `exportRoot`

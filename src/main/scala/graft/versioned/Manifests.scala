@@ -46,14 +46,14 @@ object Manifests {
     * strictly better for small tables: one read, no extra objects.
     */
   def inlineMax: Int =
-    Integer.getInteger("graft.manifest.inline.max", 256).intValue()
+    graft.GraftConf.sysProp("graft.manifest.inline.max", 256, min = 0).toInt
 
   /** Expected entries per manifest chunk (sys prop
     * `graft.manifest.target`). Cut probability is 1/target per entry;
     * a hard cap of 4× bounds the pathological no-cut run.
     */
   def targetChunk: Int =
-    Integer.getInteger("graft.manifest.target", 1024).intValue()
+    graft.GraftConf.sysProp("graft.manifest.target", 1024, min = 1).toInt
 
   /** Record a manifest's distinct partition tuples only up to this many
     * (beyond it the summary would approach the size of the chunk
@@ -309,10 +309,11 @@ object Manifests {
   // Capped in cached FileEntry rows, not chunk count (sys prop
   // `graft.manifest.cache.entries`, default 1M ≈ a few hundred MB).
 
-  private val cache = new ChunkStore.LruCache[Seq[FileEntry]](
-    () => java.lang.Long.getLong("graft.manifest.cache.entries", 1000000L)
-      .longValue(),
-    _.size)
+  private[graft] def cacheEntries: Long = graft.GraftConf.sysProp(
+    "graft.manifest.cache.entries", 1000000L, min = 0, max = Long.MaxValue)
+
+  private val cache =
+    new ChunkStore.LruCache[Seq[FileEntry]](() => cacheEntries, _.size)
 
   /** Test hooks / observability. */
   private[graft] def clearCache(): Unit = cache.clear()

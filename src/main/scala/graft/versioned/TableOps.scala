@@ -165,28 +165,29 @@ object TableOps {
 
   // ---- write -----------------------------------------------------------
 
-  /** Stage each table of a multi-table commit on its own driver thread,
-    * preserving input order. The per-table write jobs are independent
-    * (writeFiles lands each table under its own UUID dir and reads its
-    * own session clone for conf overrides), and Spark happily runs
-    * several jobs at once — staging them sequentially left the cluster
-    * idle through each small table's job-submission + footer-read
-    * latency (an ANN index init commits SIX tables, five of them
-    * model-sized). 2-3 jobs in flight is plenty (guide §2.6): enough to
-    * fill the tail, not so many that they fight for executors. Failures
-    * propagate exactly as before — the first staging exception aborts
-    * the commit before anything is published (already-written files are
+  /** Stage each part of a multi-part commit on its own driver thread,
+    * preserving input order: the tables of a multi-table write, the
+    * members of a REST transaction. The parts' staging jobs are
+    * independent (writeFiles lands each table under its own UUID dir
+    * and reads its own session clone for conf overrides), and Spark
+    * happily runs several jobs at once — staging them sequentially left
+    * the cluster idle through each small part's job-submission +
+    * footer-read latency (an ANN index init commits SIX tables, five of
+    * them model-sized). 2-3 jobs in flight is plenty (guide §2.6):
+    * enough to fill the tail, not so many that they fight for
+    * executors. The first staging failure (in input order) aborts the
+    * commit before anything is published (already-written files are
     * orphans until vacuum, the same contract as a sequential partial
     * failure).
     */
-  private def stageConcurrently[A](tables: Seq[(String, DataFrame)])(
-      stage: ((String, DataFrame)) => A): Seq[A] =
-    if (tables.size <= 1) tables.map(stage)
+  private[versioned] def stageConcurrently[T, A](parts: Seq[T])(
+      stage: T => A): Seq[A] =
+    if (parts.size <= 1) parts.map(stage)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(tables.size, 3))
+        math.min(parts.size, 3))
       try {
-        val futures = tables.map(t =>
+        val futures = parts.map(t =>
           pool.submit(new java.util.concurrent.Callable[A] {
             override def call(): A = stage(t)
           }))
@@ -204,7 +205,7 @@ object TableOps {
               pool.shutdownNow()
               pool.awaitTermination(30,
                 java.util.concurrent.TimeUnit.SECONDS)
-              throw e.getCause
+              throw Option(e.getCause).getOrElse(e)
           })
       } finally pool.shutdown()
     }
@@ -507,22 +508,14 @@ object TableOps {
       newFiles: Seq[FileEntry], overwrite: Boolean,
       spec: Seq[PartitionField], mapping: Map[String, String],
       fallbackSchemaJson: String, message: Option[String] = None,
-      extraProps: Map[String, String] = Map.empty,
-      precheck: Commit => Unit = _ => (),
-      removeProps: Set[String] = Set.empty): Unit = {
+      extraProps: Map[String, String] = Map.empty): Unit = {
     val msg = message.getOrElse(s"${if (overwrite) "overwrite" else "append"} $key")
     repo.commitRetry(branch, msg) { base =>
-      // caller-supplied optimistic-base validation, re-evaluated INSIDE
-      // the commit race on every retry (the REST catalog's
-      // assert-ref-snapshot-id requirement must hold at commit time,
-      // not merely at request-validation time)
-      precheck(base)
       // props re-read from the rebased head inside the race so a
       // concurrent property change (or stream-batch marker) is not lost
       val prior = base.tables.get(key).map(repo.snapshot)
-      val props0 =
-        (prior.map(_.properties).getOrElse(Map.empty) -- removeProps) ++
-          extraProps
+      val props0 = prior.map(_.properties).getOrElse(Map.empty) ++
+        extraProps
       // new files stamped with the table's next commit sequence: MoR
       // tombstones committed EARLIER never apply to these rows
       val next = Tombstones.lastSeq(props0) + 1
@@ -545,30 +538,21 @@ object TableOps {
     }
   }
 
-  /** Publish an external engine's copy-on-write rewrite as one commit:
-    * drop `removeRels` from the live file set, append `newFiles` at the
-    * table's next sequence — the metadata half of a REST
-    * `overwrite`/`delete` commit ([[graft.versioned.IcebergRestServer]];
-    * the reference's pointer-swap commit, `LakeFSTableOperations
-    * .commit`, java:115-147, covers exactly this shape when the engine
-    * ran a CoW DELETE/UPDATE/MERGE). Kept files' merge-on-read
-    * tombstones stay live — the rewrite replaced only the files the
-    * writer posted, whose rows it read delete-applied — and tombstones
-    * left with nothing to apply to retire inside `writeSnapshot`.
-    * `precheck` runs INSIDE the commit race on every retry; REST uses
-    * it to pin the branch head to the served base, so a concurrent MoR
-    * delete or rewrite can never be silently materialized away (compare
-    * the weaker signature check `compact` needs because its base is
-    * allowed to advance).
+  /** Publish a copy-on-write rewrite as one commit: drop `removeRels`
+    * from the live file set, append `newFiles` at the table's next
+    * sequence (the reference's pointer-swap commit, `LakeFSTableOperations
+    * .commit`, java:115-147, covers exactly this shape when an engine ran
+    * a CoW DELETE/UPDATE/MERGE). Kept files' merge-on-read tombstones
+    * stay live — the rewrite replaced only the files the writer posted,
+    * whose rows it read delete-applied — and tombstones left with
+    * nothing to apply to retire inside `writeSnapshot`. A dropped file
+    * no longer live at the commit base (another rewrite removed it)
+    * throws [[MergeConflictException]].
     */
   def commitRewrite(repo: GraftRepo, branch: String, key: String,
       removeRels: Set[String], newFiles: Seq[FileEntry],
-      message: Option[String] = None,
-      extraProps: Map[String, String] = Map.empty,
-      precheck: Commit => Unit = _ => (),
-      removeProps: Set[String] = Set.empty): Unit =
+      message: Option[String] = None): Unit =
     repo.commitRetry(branch, message.getOrElse(s"rewrite $key")) { base =>
-      precheck(base)
       val prior = base.tables.get(key).map(repo.snapshot).getOrElse(
         throw new NoSuchElementException(s"no such table: $key"))
       val live = prior.files.iterator.map(_.path).toSet
@@ -576,11 +560,10 @@ object TableOps {
       if (missing.nonEmpty) throw new MergeConflictException(
         s"rewrite of $key drops ${missing.size} file(s) not live at the " +
           s"commit base (e.g. ${missing.head}) — refresh and retry")
-      val props0 = (prior.properties -- removeProps) ++ extraProps
-      val next = Tombstones.lastSeq(props0) + 1
+      val next = Tombstones.lastSeq(prior.properties) + 1
       val stamped = newFiles.map(_.copy(seq = Some(next)))
       val kept = prior.files.filterNot(f => removeRels(f.path))
-      val props = props0 + (Tombstones.SeqProp -> next.toString)
+      val props = prior.properties + (Tombstones.SeqProp -> next.toString)
       val snap = repo.writeSnapshot(key, prior.schemaJson,
         kept ++ stamped, prior.partitionBy, prior.physicalNames,
         Some(props), prior.retired)

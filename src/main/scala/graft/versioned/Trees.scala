@@ -38,9 +38,9 @@ object Trees {
   final case class TreeBody(entries: Seq[TreeEntry])
 
   def inlineMax: Int =
-    Integer.getInteger("graft.tree.inline.max", 256).intValue()
+    graft.GraftConf.sysProp("graft.tree.inline.max", 256, min = 0).toInt
   def targetChunk: Int =
-    Integer.getInteger("graft.tree.target", 512).intValue()
+    graft.GraftConf.sysProp("graft.tree.target", 512, min = 1).toInt
 
   private[graft] def chunk(tables: Map[String, String]): Seq[Seq[TreeEntry]] =
     ChunkStore.chunkBy(
@@ -195,10 +195,11 @@ object Trees {
   // ---- process-wide LRU cache (immutable objects) ----------------------
   // Capped in cached entries (sys prop `graft.tree.cache.entries`).
 
-  private val cache = new ChunkStore.LruCache[Seq[TreeEntry]](
-    () => java.lang.Long.getLong("graft.tree.cache.entries", 500000L)
-      .longValue(),
-    _.size)
+  private[graft] def cacheEntries: Long = graft.GraftConf.sysProp(
+    "graft.tree.cache.entries", 500000L, min = 0, max = Long.MaxValue)
+
+  private val cache =
+    new ChunkStore.LruCache[Seq[TreeEntry]](() => cacheEntries, _.size)
 
   private[graft] def clearCache(): Unit = cache.clear()
   private[graft] def chunkReadCount: Long = cache.readCount

@@ -2856,20 +2856,28 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
         java.nio.file.Paths.get(loadW2.get("metadata-location").asText()))
         .dataPaths.map(java.nio.file.Paths.get(_))
       val listW = stageWriterCommit(scratch, 9103L, baseW2 :+ fW)
-      val sibAppend =
+      def sibAppend(schemaId: Int) =
         s"""{"identifier":{"namespace":["main","db"],"name":"wide"},
            |"requirements":${reqsOf(metaW2)},
            |"updates":[
            |{"action":"add-snapshot","snapshot":{"snapshot-id":9103,
-           |"timestamp-ms":1700000000000,"schema-id":1,
+           |"timestamp-ms":1700000000000,"schema-id":$schemaId,
            |"manifest-list":"${listW.toUri}",
            |"summary":{"operation":"append"}}},
            |{"action":"set-snapshot-ref","ref-name":"main",
            |"snapshot-id":9103,"type":"branch"}]}"""
           .stripMargin.replaceAll("\n", "")
       val headBefore2 = g.headCommit("main").id
+      // a snapshot written under a schema id the server never served
+      // (nor the member added) refuses, as on the single-table route
+      val (cX, eX) = send("POST", "/v1/transactions/commit",
+        s"""{"table-changes":[$mixed,${sibAppend(1)}]}""", srv)
+      cX shouldBe 400
+      eX.get("error").get("message").asText() should include ("matches neither")
+      g.headCommit("main").id shouldBe headBefore2
       val (cM, eM) = send("POST", "/v1/transactions/commit",
-        s"""{"table-changes":[$mixed,$sibAppend]}""", srv)
+        s"""{"table-changes":[$mixed,${
+          sibAppend(metaW2.get("current-schema-id").asInt())}]}""", srv)
       withClue(eM.toString) { cM shouldBe 204 }
       g.headCommit("main").parents shouldBe Seq(headBefore2)
       // fact widened AND appended atomically: old rows NULL-read the
@@ -3106,6 +3114,182 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
       // it still masks the live (2,'b') file the rewrite never touched)
       val snapU2 = g.snapshot(g.resolve("main").tables("db/ups"))
       graft.versioned.Tombstones.of(snapU2).size should be <= 1
+    } finally srv.close()
+  }
+
+  test("transaction requirement parity: a schema-update member carrying " +
+    "iceberg-core's assert-current-schema-id and assert-last-assigned-" +
+    "field-id lands like the table route's; a stale value answers 409 " +
+    "CommitFailedException and lands nothing") {
+    sql("CREATE NAMESPACE g.txnrq")
+    sql("CREATE NAMESPACE g.txnrq.main.db")
+    sql("CREATE TABLE g.txnrq.main.db.t (id INT, v STRING)")
+    sql("INSERT INTO g.txnrq.main.db.t VALUES (1,'a')")
+    val root = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.catalog.g.root"), "txnrq")
+    val srv = IcebergRestServer.start(GraftRepo.open(root),
+      Files.createTempDirectory("graft-txnrq-exports"), Some(spark),
+      writable = true)
+    try {
+      import scala.jdk.CollectionConverters._
+      def meta(): JsonNode =
+        get(s"/v1/namespaces/${enc("main", "db")}/tables/t", srv)
+          ._2.get("metadata")
+      // the member UpdateRequirements builds for add-schema +
+      // set-current-schema, asserting the given schema id and field id
+      def member(m: JsonNode, schemaId: Int, lastId: Int): String = {
+        val cur = m.get("schemas").elements().asScala.find(
+          _.get("schema-id").asInt() == m.get("current-schema-id").asInt()).get
+        val fields = cur.get("fields").elements().asScala.toSeq
+        val next = m.get("last-column-id").asInt() + 1
+        s"""{"identifier":{"namespace":["main","db"],"name":"t"},
+           |"requirements":[
+           |{"type":"assert-table-uuid","uuid":"${m.get("table-uuid").asText()}"},
+           |{"type":"assert-current-schema-id","current-schema-id":$schemaId},
+           |{"type":"assert-last-assigned-field-id",
+           |"last-assigned-field-id":$lastId}],
+           |"updates":[{"action":"add-schema","schema":{"type":"struct",
+           |"schema-id":${schemaId + 1},"fields":[${fields.mkString(",")},
+           |{"id":$next,"name":"w$next","required":false,"type":"long"}]},
+           |"last-column-id":$next},
+           |{"action":"set-current-schema","schema-id":-1}]}"""
+          .stripMargin.replaceAll("\n", "")
+      }
+      def txn(change: String) = send("POST", "/v1/transactions/commit",
+        s"""{"table-changes":[$change]}""", srv)
+      val m0 = meta()
+      val schemaId0 = m0.get("current-schema-id").asInt()
+      val last0 = m0.get("last-column-id").asInt()
+      val g = GraftRepo.open(root)
+      val head0 = g.headCommit("main").id
+      val (c, e) = txn(member(m0, schemaId0, last0))
+      withClue(e.toString) { c shouldBe 204 }
+      g.headCommit("main").parents shouldBe Seq(head0)
+      spark.table("g.txnrq.main.db.t").columns.toSeq shouldBe
+        Seq("id", "v", s"w${last0 + 1}")
+      // stale field id (the replayed member) and stale schema id: 409,
+      // and the branch does not move
+      val m1 = meta()
+      val head1 = g.headCommit("main").id
+      val stale = Seq(
+        member(m0, m1.get("current-schema-id").asInt(), last0) ->
+          "last assigned field id",
+        member(m1, m1.get("current-schema-id").asInt() + 1,
+          m1.get("last-column-id").asInt()) -> "current schema")
+      stale.foreach { case (body, what) =>
+        val (cS, eS) = txn(body)
+        withClue(eS.toString) { cS shouldBe 409 }
+        eS.get("error").get("type").asText() shouldBe "CommitFailedException"
+        eS.get("error").get("message").asText() should include (what)
+      }
+      g.headCommit("main").id shouldBe head1
+    } finally srv.close()
+  }
+
+  test("DIFFERENTIAL: the same append, CoW overwrite and equality " +
+    "delete posted to POST .../tables/{t} and as a one-member " +
+    "transaction on twin tables — equal rows, one commit each, the " +
+    "same 409 on a stale base") {
+    import spark.implicits._
+    sql("CREATE NAMESPACE g.twin")
+    sql("CREATE NAMESPACE g.twin.main.db")
+    Seq("a", "b").foreach { t =>
+      sql(s"CREATE TABLE g.twin.main.db.$t (id INT, v STRING)")
+      sql(s"INSERT INTO g.twin.main.db.$t VALUES (1,'a'), (2,'b'), (3,'c')")
+    }
+    val root = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.catalog.g.root"), "twin")
+    val srv = IcebergRestServer.start(GraftRepo.open(root),
+      Files.createTempDirectory("graft-twin-exports"), Some(spark),
+      writable = true)
+    val scratch = Files.createTempDirectory("rest-twin-scratch")
+    try {
+      import scala.jdk.CollectionConverters._
+      val g = GraftRepo.open(root)
+      var snapId = 9400L
+      // the CommitTableRequest an engine posts for `shape` on table t
+      def change(t: String, shape: String): String = {
+        val load = get(s"/v1/namespaces/${enc("main", "db")}/tables/$t",
+          srv)._2
+        val meta = load.get("metadata")
+        val stage = java.nio.file.Paths.get(URI.create(
+          meta.get("properties").get("write.data.path").asText() + "/"))
+        val base = graft.versioned.IcebergImport.plan(
+          java.nio.file.Paths.get(load.get("metadata-location").asText()))
+          .dataPaths.map(java.nio.file.Paths.get(_))
+        snapId += 1
+        val f = stage.resolve(s"$t-$snapId.parquet")
+        val (list, op) = shape match {
+          case "append" =>
+            writeOneParquet(Seq((4, "d")).toDF("id", "v"), f)
+            (stageWriterCommit(scratch, snapId, base :+ f), "append")
+          case "overwrite" => // every base file rewritten into one
+            writeOneParquet(Seq((2, "B"), (3, "c"), (4, "d"))
+              .toDF("id", "v"), f)
+            (stageWriterCommit(scratch, snapId, Seq(f)), "overwrite")
+          case "eqdelete" =>
+            writeOneParquet(Seq(3).toDF("id"), f)
+            val idField = meta.get("schemas").elements().next()
+              .get("fields").elements().asScala
+              .find(_.get("name").asText() == "id").get.get("id").asInt()
+            (stageMixedDeleteCommit(scratch, snapId, base,
+              Seq((f, 2, Some(Seq(idField))))), "delete")
+        }
+        val refSnap = meta.get("refs").get("main").get("snapshot-id").asLong()
+        s"""{"requirements":[
+           |{"type":"assert-table-uuid","uuid":"${meta.get("table-uuid").asText()}"},
+           |{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$refSnap}],
+           |"updates":[
+           |{"action":"add-snapshot","snapshot":{"snapshot-id":$snapId,
+           |"timestamp-ms":1700000000000,"schema-id":0,
+           |"manifest-list":"${list.toUri}","summary":{"operation":"$op"}}},
+           |{"action":"set-snapshot-ref","ref-name":"main",
+           |"snapshot-id":$snapId,"type":"branch"}]}"""
+          .stripMargin.replaceAll("\n", "")
+      }
+      def viaTable(body: String) = send("POST",
+        s"/v1/namespaces/${enc("main", "db")}/tables/a", body, srv)
+      def viaTxn(body: String) = send("POST", "/v1/transactions/commit",
+        s"""{"table-changes":[{"identifier":{"namespace":["main","db"],
+           |"name":"b"},${body.stripPrefix("{")}]}"""
+          .stripMargin.replaceAll("\n", ""), srv)
+      def rows(t: String) = sql(s"SELECT id, v FROM g.twin.main.db.$t " +
+        "ORDER BY id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+      // one commit on main that changes exactly `key`
+      def landedOnce(before: graft.versioned.Commit, key: String) = {
+        val after = g.headCommit("main")
+        after.parents shouldBe Seq(before.id)
+        (after.tables - key) shouldBe (before.tables - key)
+        after.tables(key) should not be before.tables(key)
+        after
+      }
+      // error text with table names and snapshot ids normalized away
+      def shape409(e: JsonNode) = (e.get("error").get("type").asText(),
+        e.get("error").get("message").asText()
+          .replace("db/b", "db/a").replaceAll("-?\\d+", "N"))
+      val expected = Seq(
+        "append" -> Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")),
+        "overwrite" -> Seq((2, "B"), (3, "c"), (4, "d")),
+        "eqdelete" -> Seq((2, "B"), (4, "d")))
+      expected.foreach { case (shape, want) => withClue(s"$shape: ") {
+        val (bodyA, bodyB) = (change("a", shape), change("b", shape))
+        val h0 = g.headCommit("main")
+        val (cA, eA) = viaTable(bodyA)
+        withClue(eA.toString) { cA shouldBe 200 }
+        val h1 = landedOnce(h0, "db/a")
+        val (cB, eB) = viaTxn(bodyB)
+        withClue(eB.toString) { cB shouldBe 204 }
+        val h2 = landedOnce(h1, "db/b")
+        rows("a") shouldBe want
+        rows("b") shouldBe want
+        // replayed against the moved base: the same 409, nothing lands
+        val (sA, xA) = viaTable(bodyA)
+        val (sB, xB) = viaTxn(bodyB)
+        (sA, sB) shouldBe ((409, 409))
+        shape409(xA)._1 shouldBe "CommitFailedException"
+        shape409(xB) shouldBe shape409(xA)
+        g.headCommit("main").id shouldBe h2.id
+      } }
     } finally srv.close()
   }
 

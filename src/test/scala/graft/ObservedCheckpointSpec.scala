@@ -11,7 +11,7 @@ import org.scalatest.matchers.should.Matchers
 /** `CheckpointLifecycle.observedCheckpoint` — the one observe-and-
   * checkpoint helper the operators take their row counts, convergence
   * counts and drift percentiles from — and `GraftConf`, the one reader
-  * of the `spark.graft.*` session confs.
+  * of the `spark.graft.*` session confs and `graft.*` system properties.
   */
 class ObservedCheckpointSpec extends AnyFunSuite with Matchers
     with BeforeAndAfterAll {
@@ -89,6 +89,29 @@ class ObservedCheckpointSpec extends AnyFunSuite with Matchers
       }
       e.getMessage should include("spark.graft.cc.maxRounds=abc")
     } finally spark.conf.unset("spark.graft.cc.maxRounds")
+    // the graft.* JVM system properties: unset reads as the default, an
+    // unparseable value (`1k`) throws instead of reading as the default
+    val props: Seq[(String, Long, () => Long)] = Seq(
+      ("graft.manifest.inline.max", 256L,
+        () => versioned.Manifests.inlineMax.toLong),
+      ("graft.manifest.target", 1024L,
+        () => versioned.Manifests.targetChunk.toLong),
+      ("graft.manifest.cache.entries", 1000000L,
+        () => versioned.Manifests.cacheEntries),
+      ("graft.tree.inline.max", 256L, () => versioned.Trees.inlineMax.toLong),
+      ("graft.tree.target", 512L, () => versioned.Trees.targetChunk.toLong),
+      ("graft.tree.cache.entries", 500000L,
+        () => versioned.Trees.cacheEntries))
+    props.foreach { case (key, default, read) =>
+      val saved = sys.props.get(key)
+      try {
+        sys.props -= key
+        read() shouldBe default
+        sys.props(key) = "1k"
+        intercept[IllegalArgumentException](read())
+          .getMessage should include(s"$key=1k")
+      } finally saved.fold(sys.props -= key)(sys.props += key -> _)
+    }
   }
 
   test("GraftConf: an out-of-range spark.graft.* value throws naming the " +
