@@ -1,54 +1,31 @@
 package graft.catalog
 
-import java.util.UUID
-
-import scala.collection.mutable
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.graftbridge.PartitionedWriteBridge
-import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriterCommitMessage}
+import org.apache.spark.sql.types.StructType
 
-import graft.versioned.{GraftRepo, PartitionField, Partitioning, TableOps}
+import graft.versioned.{FileEntry, GraftRepo, LayoutWriter, PartitionField}
 
-/** Native DSv2 batch write through graft's OWN layout machinery —
-  * hive-style partition directories, per-file stats, bloom sidecars —
-  * shared by partitioned/bloomed INSERT ([[GraftTable.newWriteBuilder]])
-  * and atomic CTAS/RTAS ([[GraftStagedTable]]); what happens to the
-  * collected [[FileEntry]]s is the caller's `onCommit` (an optimistic
-  * append commit for INSERT; accumulation until `commitStagedChanges`
-  * for CTAS). Spark's own `ParquetTable` writer cannot route rows into
-  * this layout, and the old V1 bridge's clustering came from an internal
-  * AQE rebalance invisible to Spark's planner. This Write closes both
-  * gaps:
+/** The DSv2 face of graft's one data-file writer ([[LayoutWriter]]):
+  * SQL INSERT/INSERT OVERWRITE ([[GraftTable.newWriteBuilder]]), atomic
+  * CTAS/RTAS ([[GraftStagedTable]]), the CoW row-level rewrite behind
+  * UPDATE/MERGE/DELETE ([[GraftRowLevelOperation]]) and the streaming
+  * sink all write through it; what happens to the collected
+  * [[FileEntry]]s is the caller's `onCommit` (an optimistic append
+  * commit for INSERT; accumulation until `commitStagedChanges` for CTAS;
+  * the file swap for CoW).
   *
-  *  - it DECLARES its layout via [[RequiresDistributionAndOrdering]]:
-  *    clustering on the partition transforms (advisory, so AQE plans a
-  *    skew-splitting rebalance — one hot day cannot funnel through one
-  *    task) plus a within-task sort on the same transforms. Every
-  *    transform resolves against [[GraftFunctions.transforms]] in this
-  *    catalog's FunctionCatalog — the same functions storage-partitioned
-  *    joins use — so the request survives analysis for bucket/temporal/
-  *    truncate specs, not just identity;
-  *  - executor tasks evaluate the write-side partition-value projection
-  *    ([[Partitioning.partitionColumn]], resolved ONCE driver-side
-  *    against the physical write schema) per row and stream the row into
-  *    an [[OutputWriter]] opened per partition directory. The requested
-  *    sort makes that one open writer at a time in the common case; a
-  *    small LRU (capped, roll-on-evict) keeps memory bounded even if the
-  *    ordering is not delivered — correctness never depends on it;
-  *  - `BatchWrite.commit` computes stats/blooms for EXACTLY the files
-  *    named in the task commit messages (stray files from failed
-  *    attempts are never picked up) before handing the entries to
-  *    `onCommit`. Readers never see staged files: nothing references
-  *    them until a snapshot commit publishes the entries.
+  * The Write DECLARES its layout via [[RequiresDistributionAndOrdering]]:
+  * clustering on the partition transforms (advisory, so AQE plans a
+  * skew-splitting rebalance — one hot day cannot funnel through one
+  * task) plus a within-task sort on the same transforms. Every transform
+  * resolves against [[GraftFunctions.transforms]] in this catalog's
+  * FunctionCatalog — the same functions storage-partitioned joins use —
+  * so the request survives analysis for bucket/temporal/truncate specs,
+  * not just identity. The writer's LRU of open files keeps memory
+  * bounded even if the ordering is not delivered.
   */
 final class GraftLayoutWrite(
     repo: GraftRepo,
@@ -59,20 +36,20 @@ final class GraftLayoutWrite(
     blooms: Seq[String], // physical bloom column names
     bloomItems: Long,
     label: String,
-    onCommit: Seq[graft.versioned.FileEntry] => Unit,
+    onCommit: Seq[FileEntry] => Unit,
     // epoch-aware commit for the STREAMING sink (exactly-once append);
     // None = this write surface is batch-only (CTAS staging)
-    onEpochCommit: Option[(Long, Seq[graft.versioned.FileEntry]) => Unit] = None,
+    onEpochCommit: Option[(Long, Seq[FileEntry]) => Unit] = None,
     // batch-only executor-side adapter around the writer factory — the
     // row-level (CoW) surface wraps it to strip Spark's __row_operation
     // routing column (see GraftCoWWriterFactory)
     wrapBatchFactory: DataWriterFactory => DataWriterFactory = identity)
     extends Write with RequiresDistributionAndOrdering {
 
-  private val physSchema = TableOps.toPhysical(tableSchema, mapping)
-  private val stagingRel =
-    s"data/$key/${UUID.randomUUID().toString.replace("-", "")}"
-  private val staging = repo.dataLocation(stagingRel)
+  // one LayoutWriter (= one staging dir) per toBatch/toStreaming
+  private def layoutWriter(): LayoutWriter =
+    new LayoutWriter(SparkSession.active, repo, key, tableSchema, mapping,
+      spec, blooms, bloomItems)
 
   override def description(): String = label
 
@@ -93,118 +70,15 @@ final class GraftLayoutWrite(
     GraftTable.specTransforms(spec)
       .map(t => Expressions.sort(t, SortDirection.ASCENDING))
 
-  /** Shared batch/streaming setup: writer factory + the
-    * messages→FileEntry conversion (footer stats or the bloom-sidecar
-    * scan).
-    */
-  private def writeSetup(): (GraftPartitionedWriterFactory,
-      Array[WriterCommitMessage] => Seq[graft.versioned.FileEntry],
-      Array[WriterCommitMessage] => Unit, // batch abort (staging wipe ok)
-      Array[WriterCommitMessage] => Unit) = { // epoch abort (listed files only)
-    val spark = SparkSession.active
-    // parquet-native (footer) bloom filters ride the job conf — the
-    // sidecar file-level blooms are built in the commit stats pass.
-    // Timestamps are FORCED to MICROS (not the INT96 default): INT96
-    // chunks carry no usable parquet statistics, and the footer IS the
-    // write path's stats source now.
-    val writerConf = blooms.flatMap(c => Seq(
-      s"parquet.bloom.filter.enabled#$c" -> "true",
-      s"parquet.bloom.filter.expected.ndv#$c" -> bloomItems.toString)).toMap +
-      ("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
-    val (owf, conf) = PartitionedWriteBridge.parquetWriterFactory(
-      spark, physSchema, writerConf)
-    // the SAME expressions the old V1 layout path fed partitionBy —
-    // resolved by the analyzer (session time zone included), bound to
-    // physical-name ordinals, cast to the directory string
-    val dirCols = spec.map { pf =>
-      val srcType = tableSchema.fields.find(_.name == pf.source)
-        .map(_.dataType).getOrElse(throw new IllegalArgumentException(
-          s"partition source column not in table schema: ${pf.source}"))
-      Partitioning.partitionColumn(pf, srcType, mapping).cast("string")
-    }
-    val dirExprs = PartitionedWriteBridge.boundProjection(spark, physSchema, dirCols)
-    val dirNames = spec.map(Partitioning.dirColName)
-    // inline-NDV hash projection: one codegen'd xxhash64 per statable
-    // column, fed into a per-file HLL as rows stream through — the only
-    // stat a parquet footer cannot supply
-    val statFields = physSchema.fields.zipWithIndex.toIndexedSeq
-      .filter { case (f, _) => TableOps.statable(f.dataType) }
-    val hashExprs: Seq[Expression] = statFields.map { case (f, i) =>
-      new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
-        org.apache.spark.sql.catalyst.expressions.BoundReference(
-          i, f.dataType, nullable = true)))
-    }
-    val jobTrackerId = java.time.LocalDateTime.now()
-      .format(java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss"))
-    val factory = new GraftPartitionedWriterFactory(owf, conf, physSchema,
-      dirNames, dirExprs, statFields.map { case (f, i) => (f.name, i) },
-      hashExprs, staging, jobTrackerId)
-
-    val entriesOf = (messages: Array[WriterCommitMessage]) => {
-      val files = messages.flatMap {
-        case m: GraftWrittenFiles => m.files
-        case _ => Nil
-      }.toIndexedSeq
-      if (blooms.nonEmpty)
-        // sidecar builds genuinely need the data: keep the scan pass
-        TableOps.statsForFiles(SparkSession.active, repo,
-          files.map(_.path), physSchema, spec, blooms, bloomItems)
-      else files.map { wf =>
-        // SINGLE-PASS stats: footer min/max/nulls/rows + inline HLL
-        // NDV, rendered to the same stat strings the scan produced
-        val rel = repo.dataRelOf(wf.path)
-        def render(m: Map[String, Any]): Map[String, String] =
-          m.map { case (c, v) =>
-            c -> graft.versioned.FooterStats.render(v,
-              graft.versioned.TableOps.leafType(physSchema, c))
-          }
-        graft.versioned.FileEntry(rel, wf.rows,
-          render(wf.mins), render(wf.maxs),
-          if (spec.isEmpty) None
-          else Some(Partitioning.valuesFromPath(rel)),
-          Some(wf.bytes),
-          nulls = Some(wf.nulls),
-          ndv = Some(wf.ndv))
-      }
-    }
-
-    // Driver-side abort, two flavors. Deleting the files the completed
-    // tasks reported is always safe (nothing references them until a
-    // snapshot commit publishes the entries). The recursive staging-dir
-    // wipe is ONLY safe for batch: one staging dir serves every epoch of
-    // a streaming query, and committed epochs' files are published IN
-    // PLACE inside it — a failed micro-batch after the first committed
-    // epoch must not touch them.
-    val abortEpoch = (messages: Array[WriterCommitMessage]) => {
-      messages.foreach {
-        case m: GraftWrittenFiles =>
-          m.files.foreach(f =>
-            try repo.dataIO.relOf(f.path).foreach(repo.dataIO.delete)
-            catch { case _: Exception => () })
-        case _ => ()
-      }
-    }
-    val abortBatch = (messages: Array[WriterCommitMessage]) => {
-      abortEpoch(messages)
-      try {
-        repo.dataIO.walkFiles(stagingRel).foreach(repo.dataIO.delete)
-        (repo.dataIO.walkDirs(stagingRel) :+ stagingRel)
-          .sorted(Ordering[String].reverse).foreach(repo.dataIO.delete)
-      } catch { case _: Exception => () }
-    }
-
-    (factory, entriesOf, abortBatch, abortEpoch)
-  }
-
   override def toBatch: BatchWrite = {
-    val (factory, entriesOf, abortBatch, _) = writeSetup()
+    val w = layoutWriter()
     new BatchWrite {
       override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
-        wrapBatchFactory(factory)
+        wrapBatchFactory(w.factory)
       override def commit(messages: Array[WriterCommitMessage]): Unit =
-        onCommit(entriesOf(messages))
+        onCommit(w.entriesOf(messages.toIndexedSeq))
       override def abort(messages: Array[WriterCommitMessage]): Unit =
-        abortBatch(messages)
+        w.abortStaging(messages.toIndexedSeq)
     }
   }
 
@@ -220,157 +94,19 @@ final class GraftLayoutWrite(
     val commitEpoch = onEpochCommit.getOrElse(
       throw new UnsupportedOperationException(
         s"$label does not support streaming writes"))
-    val (factory, entriesOf, _, abortEpoch) = writeSetup()
+    val w = layoutWriter()
     new org.apache.spark.sql.connector.write.streaming.StreamingWrite {
       override def createStreamingWriterFactory(p: PhysicalWriteInfo)
           : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-        factory
+        w.factory
       override def commit(epochId: Long,
           messages: Array[WriterCommitMessage]): Unit =
-        commitEpoch(epochId, entriesOf(messages))
+        commitEpoch(epochId, w.entriesOf(messages.toIndexedSeq))
+      // files only: committed epochs are published inside the one
+      // staging dir every epoch shares
       override def abort(epochId: Long,
           messages: Array[WriterCommitMessage]): Unit =
-        abortEpoch(messages)
+        w.abortFiles(messages.toIndexedSeq)
     }
-  }
-}
-
-/** Task commit message: the parquet files this task attempt wrote,
-  * with their executor-collected statistics (footer min/max/nulls/rows
-  * + inline HLL NDV) — the driver never re-reads the data.
-  */
-final case class GraftWrittenFiles(
-    files: Seq[graft.versioned.FooterStats.WrittenFile])
-    extends WriterCommitMessage
-
-private[catalog] final class GraftPartitionedWriterFactory(
-    owf: OutputWriterFactory,
-    conf: SerializableConfiguration,
-    physSchema: StructType,
-    dirNames: Seq[String],
-    dirExprs: Seq[Expression],
-    statCols: Seq[(String, Int)], // (physical name, row ordinal)
-    hashExprs: Seq[Expression],
-    stagingDir: String,
-    jobTrackerId: String) extends DataWriterFactory
-    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftPartitionedDataWriter(owf, conf, physSchema, dirNames, dirExprs,
-      statCols, hashExprs, stagingDir, jobTrackerId, partitionId, taskId)
-
-  // streaming epochs reuse the same writer — file names are uniquified
-  // by a per-writer UUID, so replayed epochs can never collide
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    createWriter(partitionId, taskId)
-}
-
-private final class GraftPartitionedDataWriter(
-    owf: OutputWriterFactory,
-    conf: SerializableConfiguration,
-    physSchema: StructType,
-    dirNames: Seq[String],
-    dirExprs: Seq[Expression],
-    statCols: Seq[(String, Int)],
-    hashExprs: Seq[Expression],
-    stagingDir: String,
-    jobTrackerId: String,
-    partitionId: Int,
-    taskId: Long) extends DataWriter[InternalRow] {
-
-  import graft.versioned.FooterStats
-
-  /** Open-writer cap: with the requested sort delivered this never
-    * exceeds 1; without it (strict-off rebalance edge, manual writes)
-    * eviction rolls a partition into an extra file instead of holding
-    * an unbounded writer (and parquet memory) per distinct value.
-    */
-  private val MaxOpen = 16
-
-  private final class Sink(val path: String, val writer: OutputWriter) {
-    val hlls: Array[FooterStats.Hll] =
-      Array.fill(statCols.size)(new FooterStats.Hll)
-  }
-
-  private val ctx = PartitionedWriteBridge.taskAttemptContext(
-    conf.value, jobTrackerId, partitionId, 0)
-  private val ext = owf.getFileExtension(ctx)
-  private val proj = PartitionedWriteBridge.projection(dirExprs)
-  private val hashProj = PartitionedWriteBridge.projection(hashExprs)
-  private val open = mutable.LinkedHashMap.empty[String, Sink]
-  // path -> per-column NDV, recorded when a sink closes
-  private val closedNdv = mutable.ArrayBuffer.empty[(String, Map[String, Long])]
-  // every path this attempt created (open or closed) — the abort list
-  private val written = mutable.ArrayBuffer.empty[String]
-  private val uid = UUID.randomUUID().toString.replace("-", "")
-  private var fileSeq = 0
-
-  private def newSink(frag: String): Sink = {
-    val dir = if (frag.isEmpty) stagingDir else s"$stagingDir/$frag"
-    val file = f"part-$partitionId%05d-$taskId-$uid-$fileSeq$ext"
-    fileSeq += 1
-    val path = s"$dir/$file"
-    written += path
-    new Sink(path, owf.newInstance(path, physSchema, ctx))
-  }
-
-  private def closeSink(s: Sink): Unit = {
-    s.writer.close()
-    closedNdv += ((s.path, statCols.indices.map(i =>
-      statCols(i)._1 -> s.hlls(i).estimate).toMap))
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val vals = proj(row)
-    val frag = dirNames.indices.map { i =>
-      val v =
-        if (vals.isNullAt(i)) Partitioning.NullMarker
-        else PartitionedWriteBridge.escapePathName(vals.getUTF8String(i).toString)
-      s"${dirNames(i)}=$v"
-    }.mkString("/")
-    val s = open.remove(frag) match {
-      case Some(s0) => s0 // re-insert below: LinkedHashMap head = LRU victim
-      case None =>
-        if (open.size >= MaxOpen) {
-          val (k, victim) = open.head
-          open.remove(k)
-          closeSink(victim)
-        }
-        newSink(frag)
-    }
-    open.put(frag, s)
-    val hashes = hashProj(row)
-    var i = 0
-    while (i < statCols.size) {
-      if (!row.isNullAt(statCols(i)._2)) s.hlls(i).add(hashes.getLong(i))
-      i += 1
-    }
-    s.writer.write(row)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    open.valuesIterator.foreach(closeSink)
-    open.clear()
-    // footers of files THIS task just wrote: local, page-hot, a few KB —
-    // the stats collection is fully distributed, the driver only renders
-    GraftWrittenFiles(closedNdv.toSeq.map { case (path, ndv) =>
-      FooterStats.read(path, conf.value, physSchema, ndv)
-    })
-  }
-
-  override def abort(): Unit = {
-    open.valuesIterator.foreach(s =>
-      try s.writer.close() catch { case _: Exception => () })
-    open.clear()
-    val fs = new Path(stagingDir).getFileSystem(conf.value)
-    written.foreach(p =>
-      try fs.delete(new Path(p), false) catch { case _: Exception => () })
-  }
-
-  override def close(): Unit = {
-    open.valuesIterator.foreach(s =>
-      try s.writer.close() catch { case _: Exception => () })
-    open.clear()
   }
 }

@@ -104,15 +104,17 @@ final class GraftTable(
 
   // ---- write (INSERT INTO / INSERT OVERWRITE / CTAS / df.writeTo) ------
 
-  /** Every INSERT/CTAS/df.writeTo path is ONE native DSv2 write —
-    * [[GraftLayoutWrite]]: no V1 `InsertableRelation` bridge anywhere,
-    * partitioned tables DECLARE clustering + ordering on their
-    * transforms via `RequiresDistributionAndOrdering` (the AQE rebalance
-    * + sort are visible in the INSERT plan), executor tasks route rows
-    * into the hive-style layout and collect file statistics AS THEY
-    * WRITE (parquet footers + inline HLL NDV — no second read of the
-    * data; bloom-sidecar tables keep the one stats scan their sidecar
-    * build needs). Commit converges on [[TableOps.commitAppend]]'s
+  /** Every INSERT/df.writeTo path is ONE native DSv2 write —
+    * [[GraftLayoutWrite]], the DSv2 face of graft's one data-file writer
+    * ([[graft.versioned.LayoutWriter]], which `TableOps.writeFiles`,
+    * CTAS, CoW rewrites and the streaming sink share): partitioned
+    * tables DECLARE clustering + ordering on their transforms via
+    * `RequiresDistributionAndOrdering` (the AQE rebalance + sort are
+    * visible in the INSERT plan), executor tasks route rows into the
+    * hive-style layout and collect file statistics AS THEY WRITE
+    * (parquet footers + inline HLL NDV — no second read of the data;
+    * bloom-sidecar tables keep the one stats scan their sidecar build
+    * needs). Commit converges on [[TableOps.commitAppend]]'s
     * optimistic-retry snapshot publish.
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =

@@ -23,11 +23,12 @@ import graft.versioned.{FileEntry, GraftRepo, Snapshot, TableOps}
   *     returned, because unchanged rows must be copied into the
   *     replacement. Nothing is reported as pushed.
   *  2. Spark computes the full replacement content of those files
-  *     (updated + copied rows) and writes it through the SAME native
-  *     layout write as INSERT/CTAS ([[GraftLayoutWrite]]) — hive
-  *     partition routing, per-file partition tuples, bloom sidecars,
-  *     inline footer stats + HLL NDV — so none of the table's pruning
-  *     machinery decays under row-level churn.
+  *     (updated + copied rows) and writes it through graft's one
+  *     data-file writer ([[GraftLayoutWrite]] over
+  *     [[graft.versioned.LayoutWriter]]) — hive partition routing,
+  *     per-file partition tuples, bloom sidecars, inline footer stats +
+  *     HLL NDV — so none of the table's pruning machinery decays under
+  *     row-level churn.
   *  3. [[GraftCoWWrite.publish]] swaps exactly the scanned files for
   *     the staged ones in a new snapshot (optimistic retry; concurrent
   *     appends to OTHER files survive untouched).
@@ -58,8 +59,8 @@ final class GraftRowLevelOperation(
     new GraftCoWScanBuilder(this, repo, snap, tableSchema)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // replacement files route through the SAME native layout write as
-    // INSERT/CTAS (GraftLayoutWrite): hive-style partition directories
+    // replacement files route through graft's one data-file writer
+    // (GraftLayoutWrite over LayoutWriter): hive-style partition directories
     // (per-file partition tuples survive row-level churn — pruning must
     // not decay), bloom sidecars when the table opted in, inline
     // footer-stats + HLL NDV, and the clustered-distribution request

@@ -26,9 +26,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *    names; resolved to physical at write). `graft.bloom.items` sizes
   *    the filter (expected distinct items per file, default 100k,
   *    16 bits/item ⇒ ~0.5% false-positive rate at capacity).
-  *  - Built in the SAME single stats pass `writeFiles` already runs
-  *    (one `BloomFilterAggregate(xxhash64(col))` per column, grouped by
-  *    file) — no extra scan of the written data.
+  *  - Built in the one stats scan a bloom table's write runs
+  *    ([[TableOps.statsForFiles]]: one `BloomFilterAggregate(xxhash64(col))`
+  *    per column, grouped by file, beside min/max/nulls/NDV).
   *  - Stored as SIDECAR files (`<datafile>.bloom`, JSON col→base64),
   *    NOT in the snapshot: at 10k files × 200 KB a bloom-in-manifest
   *    design would bloat every snapshot read to gigabytes; sidecars

@@ -3,14 +3,11 @@ package graft.versioned
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.types._
 
-/** Single-pass write statistics — the footer/inline replacement for the
-  * post-write stats SCAN.
-  *
-  * The original write path re-read every freshly written parquet file to
-  * aggregate min/max/nulls/NDV (TableOps.writeFiles/statsForFiles): at
-  * 100 TB that is a second full pass over everything ingested. Iceberg's
-  * writers collect the same stats as they go; this module gives graft's
-  * native DSv2 writers the same property:
+/** Single-pass write statistics of graft's one data-file writer
+  * ([[LayoutWriter]]) — no post-write stats SCAN. Re-reading every
+  * freshly written file to aggregate min/max/nulls/NDV would be, at
+  * 100 TB, a second full pass over everything ingested. Iceberg's writers
+  * collect the same stats as they go; the layout writer does too:
   *
   *  - min / max / null counts / row counts decode from the PARQUET
   *    FOOTERS of the just-written files (executor-side, page-hot, a few

@@ -1,7 +1,6 @@
 package graft.versioned
 
 import java.nio.file.Path
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -69,17 +68,6 @@ object TableOps {
         case _ => None
       }
     }
-
-  /** Per-file long-valued stats (null counts / NDVs) out of one stats
-    * row, keyed `<prefix>:<col>` — shared by both write-side stat
-    * collection passes.
-    */
-  private def longStatsOf(r: Row, leaves: Seq[(String, DataType)],
-      prefix: String): Map[String, Long] =
-    leaves.flatMap { case (n, _) =>
-      Option(r.getAs[Any](s"$prefix:$n"))
-        .map(v => n -> v.asInstanceOf[Number].longValue())
-    }.toMap
 
   /** Stat targets for the data-scan stats pass (bloom tables): every
     * top-level statable field PLUS struct-nested leaves — the same set
@@ -168,8 +156,9 @@ object TableOps {
   /** Stage each part of a multi-part commit on its own driver thread,
     * preserving input order: the tables of a multi-table write, the
     * members of a REST transaction. The parts' staging jobs are
-    * independent (writeFiles lands each table under its own UUID dir
-    * and reads its own session clone for conf overrides), and Spark
+    * independent (writeFiles lands each table under its own UUID dir,
+    * and its [[LayoutWriter]] pins its conf overrides in its own job
+    * conf, never in the shared session), and Spark
     * happily runs several jobs at once — staging them sequentially left
     * the cluster idle through each small part's job-submission +
     * footer-read latency (an ANN index init commits SIX tables, five of
@@ -211,11 +200,12 @@ object TableOps {
     }
 
   /** Write `df` as immutable parquet files under
-    * `data/<db>/<table>/<uuid>/` and return FileEntry metadata with
-    * per-file row counts and min/max column stats (collected in ONE scan
-    * of the freshly written files, grouped by input_file_name). The
-    * per-table directory keeps a stable glob per table, which is what
-    * makes [[readStreamAppends]] possible.
+    * `data/<db>/<table>/<uuid>/` through graft's one data-file writer
+    * ([[LayoutWriter]]) and return their FileEntries: row counts,
+    * min/max/null-count stats from the footers, per-file NDV from the
+    * writer's inline HLL, bloom sidecars for `bloomCols`. The per-table
+    * directory keeps a stable glob per table, which is what makes
+    * [[readStreamAppends]] possible.
     *
     * With a partition `spec`, rows land in hive-style
     * `__p_<field>=<value>` directories (synthetic transform columns, so
@@ -228,190 +218,56 @@ object TableOps {
       physicalNames: Map[String, String] = Map.empty,
       preserveLayout: Boolean = false,
       bloomCols: Seq[String] = Nil,
-      bloomItems: Long = Blooms.DefaultItems,
-      ndvHint: Map[String, Long] = Map.empty): Seq[FileEntry] = {
-    // files are ALWAYS written (and stats keyed) under physical names —
-    // the invariant that keeps renames metadata-only
-    val logical = df.schema
-    val out =
-      if (physicalNames.isEmpty) df
-      else df.toDF(logical.fieldNames.toIndexedSeq
-        .map(n => physicalNames.getOrElse(n, n)): _*)
-    val schema = out.schema
-    val dirRel = s"data/$key/${UUID.randomUUID().toString.replace("-", "")}"
-    val dir = repo.dataLocation(dirRel)
-    // bloom columns get parquet-NATIVE bloom filters too (footer-level,
-    // per row group): the sidecar prunes whole FILES at plan time, the
-    // parquet bloom prunes ROW GROUPS inside files the sidecar admits —
-    // both fed by the same opt-in, both invisible to correctness
-    def withBlooms(w: org.apache.spark.sql.DataFrameWriter[Row])
-        : org.apache.spark.sql.DataFrameWriter[Row] =
-      bloomCols.filter(c => schema.fields.exists(_.name == c))
-        .foldLeft(w)((w2, c) => w2
-          .option(s"parquet.bloom.filter.enabled#$c", "true")
-          .option(s"parquet.bloom.filter.expected.ndv#$c", bloomItems.toString))
-    // stats come from FOOTERS after the write (see entriesFromFooters):
-    // INT96 chunks carry no statistics, so pin MICROS — via a CLONED
-    // session (no shared-conf mutation; concurrent writes on one
-    // session must not race on the override)
-    val outM = org.apache.spark.sql.graftbridge.ParquetWriteBridge
-      .withMicrosTimestamps(out)
+      bloomItems: Long = Blooms.DefaultItems): Seq[FileEntry] = {
+    val bridge = org.apache.spark.sql.graftbridge.ParquetWriteBridge
+    val w = new LayoutWriter(spark, repo, key, bridge.asNullable(df.schema),
+      physicalNames, spec, bloomCols, bloomItems)
     // DRIVER-LOCAL frames (model/metadata-sized tables: a 1-row drift
-    // log, the PQ codebook, ann/meta, dd/meta…) write their single file
-    // on the driver — a whole Spark job per tiny staged table was pure
-    // fixed commit cost. Identical parquet encoding (Spark's own
-    // ParquetWriteSupport, MICROS pinned); the footer-stats pass reads
-    // the file exactly as it reads an executor-written one. Partitioned
-    // or bloom-opted tables keep the cluster path (the rebalance /
-    // parquet-native-bloom machinery lives there).
-    val localWriteMax = 10000
-    val localRows =
-      if (spec.nonEmpty ||
-        bloomCols.exists(c => schema.fields.exists(_.name == c))) None
-      else org.apache.spark.sql.graftbridge.ParquetWriteBridge
-        .localRows(out, localWriteMax)
-    if (localRows.isDefined) {
-      val (sch, rows) = localRows.get
-      org.apache.spark.sql.graftbridge.ParquetWriteBridge.writeLocalFile(
-        spark, s"$dir/part-00000-${UUID.randomUUID()}.parquet", sch, rows)
-    } else if (spec.isEmpty) withBlooms(outM.write).parquet(dir)
-    else {
-      val dirCols = spec.map { pf =>
-        val srcType = logical.fields.find(_.name == pf.source).map(_.dataType)
-          .getOrElse(throw new IllegalArgumentException(
-            s"partition source column not in write schema: ${pf.source}"))
-        Partitioning.partitionColumn(pf, srcType, physicalNames)
-          .as(Partitioning.dirColName(pf))
-      }
-      // cluster rows by partition value BEFORE the write: without this,
-      // EVERY task writes a file into EVERY partition value it happens to
-      // hold (tasks × values files per insert — the small-files explosion
-      // at scale). The clustering is a REBALANCE (AQE-managed) shuffle,
-      // not a plain repartition: plain hash-by-value pins each partition
-      // value to ONE task, so a hot value (the skew case at 100 TB — one
-      // day holding half the ingest) funnels through a single core into
-      // one giant file. Rebalance lets AQE split oversized value groups
-      // into several advisory-sized files AND coalesce small ones — the
-    // same request Iceberg spells write.distribution-mode=hash +
-      // advisory partitioning. Without AQE it degrades to the plain
-      // keyed shuffle (correct, just unsplit). `preserveLayout` skips
-      // the shuffle: compaction feeds data it has ALREADY
-      // range-partitioned + sorted (all rows of a rewrite unit share one
-      // partition value, so the clustering shuffle would collapse them
-      // into one task and destroy the sort).
-      val projected = outM.select(
-        schema.fieldNames.toIndexedSeq.map(col) ++ dirCols: _*)
-      val laid =
-        if (preserveLayout) projected
-        else projected.hint("rebalance",
-          spec.map(pf => col(Partitioning.dirColName(pf))): _*)
-      withBlooms(laid.write).partitionBy(spec.map(Partitioning.dirColName): _*)
-        .parquet(dir)
-    }
-    val paths = repo.dataIO.walkFiles(dirRel)
-      .filter(_.endsWith(".parquet"))
-      .map(repo.dataLocation)
-    val blooms = bloomCols.filter(c => schema.fields.exists(_.name == c))
-    if (blooms.isEmpty)
-      // SINGLE-PASS stats: the parquet writer already computed
-      // min/max/nulls/rows — read the FOOTERS, not the data
-      entriesFromFooters(spark, repo, paths, schema, spec, ndvHint)
-    else {
-      // bloom tables: sidecar builds genuinely need the values, so
-      // rows/min/max/nulls/NDV/blooms all ride ONE scan of the files
-      val written = spark.read.schema(schema).parquet(paths: _*)
-      val leaves = scanStatLeaves(schema)
-      val statCols = leaves.flatMap { case (n, _) =>
-        Seq(min(col(n)).cast("string").as(s"min:$n"),
-          max(col(n)).cast("string").as(s"max:$n"),
-          sum(isnull(col(n)).cast("long")).as(s"nulls:$n"),
-          approx_count_distinct(col(n)).as(s"ndv:$n"))
-      }
-      val bloomAggs = blooms.map(c =>
-        Blooms.aggColumn(c, schema.fields.find(_.name == c).get.dataType,
-          bloomItems).as(s"bloom:$c"))
-      val rows = written
-        .groupBy(input_file_name().as("__file"))
-        .agg(count(lit(1)).as("__rows"), (statCols.toIndexedSeq ++ bloomAggs): _*)
-        .collect()
-      rows.toIndexedSeq.map { r =>
-        val rel = repo.dataRelOf(r.getAs[String]("__file"))
-        def stats(prefix: String): Map[String, String] =
-          leaves.flatMap { case (n, _) =>
-            Option(r.getAs[String](s"$prefix:$n")).map(n -> _)
-          }.toMap
-        val pvals =
-          if (spec.isEmpty) None else Some(Partitioning.valuesFromPath(rel))
-        val sidecar = blooms.flatMap(c =>
-          Option(r.getAs[Array[Byte]](s"bloom:$c")).map(c -> _)).toMap
-        if (sidecar.nonEmpty) Blooms.write(repo.dataIO, rel, sidecar)
-        FileEntry(rel, r.getAs[Long]("__rows"), stats("min"), stats("max"), pvals,
-          Some(repo.dataIO.size(rel)),
-          bloomCols = if (sidecar.isEmpty) None else Some(sidecar.keys.toSeq.sorted),
-          nulls = Some(longStatsOf(r, leaves, "nulls")),
-          ndv = Some(longStatsOf(r, leaves, "ndv")))
-      }
+    // log, the PQ codebook, ann/meta, dd/meta…) run the writer inline on
+    // the driver — a whole Spark job per tiny staged table was pure
+    // fixed commit cost
+    bridge.localRows(df, 10000) match {
+      case Some((_, rows)) => w.writeLocal(rows)
+      case None =>
+        // cluster rows by partition value BEFORE the write: without this,
+        // EVERY task writes a file into EVERY partition value it happens
+        // to hold (tasks × values files per insert — the small-files
+        // explosion at scale). The clustering is a REBALANCE (AQE-managed)
+        // shuffle, not a plain repartition: plain hash-by-value pins each
+        // partition value to ONE task, so a hot value (the skew case at
+        // 100 TB — one day holding half the ingest) funnels through a
+        // single core into one giant file. Rebalance lets AQE split
+        // oversized value groups into several advisory-sized files AND
+        // coalesce small ones — the same request Iceberg spells
+        // write.distribution-mode=hash + advisory partitioning. Without
+        // AQE it degrades to the plain keyed shuffle (correct, just
+        // unsplit). `preserveLayout` skips the shuffle and the sort:
+        // compaction feeds data it has ALREADY range-partitioned + sorted
+        // (all rows of a rewrite unit share one partition value, so the
+        // clustering shuffle would collapse them into one task and
+        // destroy the sort).
+        val laid =
+          if (spec.isEmpty || preserveLayout) df
+          else {
+            // sources exist: the LayoutWriter above resolved them
+            val dirs = spec.map(Partitioning.dirColName)
+            val dirCols = spec.map(pf => Partitioning.partitionColumn(pf,
+              df.schema(pf.source).dataType).as(Partitioning.dirColName(pf)))
+            df.select(col("*") +: dirCols: _*)
+              .hint("rebalance", dirs: _*)
+              .sortWithinPartitions(dirs.map(col): _*)
+              .drop(dirs: _*)
+          }
+        // the tasks capture the serializable factory, not the writer
+        val factory = w.factory
+        w.entriesOf(bridge.writeTasks(laid)((pid, taskId, rows) =>
+          LayoutWriter.drive(factory.newWriter(pid, taskId), rows)))
     }
   }
 
-  /** FileEntries from parquet FOOTERS — the zero-data-read stats pass
-    * shared by every non-bloom write (the native DSv2 writes collect
-    * these executor-side during the write itself; this variant serves
-    * the DataFrame-writer paths: compaction, CoW staging, MV/stream
-    * helpers). Footer reads distribute across the cluster — the driver
-    * only renders. NDV (no footer equivalent) comes from `ndvHint`
-    * (e.g. compaction passes its INPUT files' merged NDV) apportioned
-    * per file by row share; absent a hint the entries carry no NDV and
-    * CBO extrapolates from whatever files still have one.
-    */
-  def entriesFromFooters(spark: SparkSession, repo: GraftRepo,
-      paths: Seq[String], schema: StructType, spec: Seq[PartitionField],
-      ndvHint: Map[String, Long] = Map.empty): Seq[FileEntry] = {
-    if (paths.isEmpty) return Nil
-    // SMALL commits read footers on the DRIVER's IO pool — a footer is
-    // a few KB of metadata, and spinning a whole Spark job (submit +
-    // schedule + collect) to read a handful of them was a fixed
-    // ~100 ms tax on EVERY staged table of every commit (an ANN init
-    // stages six). Past the threshold the read distributes exactly as
-    // before — a 100 TB compaction's thousands of footers are real
-    // parallel I/O, not job overhead.
-    val localMax = 64
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val raw: IndexedSeq[FooterStats.WrittenFile] =
-      if (paths.size <= localMax)
-        Manifests.fanOut(paths, 2)(p =>
-          FooterStats.read(p, hconf, schema, Map.empty)).toIndexedSeq
-      else {
-        val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
-        val slices = math.max(1, math.min(paths.size, 64))
-        spark.sparkContext.parallelize(paths, slices)
-          .map(p => FooterStats.read(p, conf.value, schema, Map.empty))
-          .collect().toIndexedSeq
-      }
-    val totalRows = math.max(1L, raw.map(_.rows).sum)
-    raw.map { wf =>
-      val rel = repo.dataRelOf(wf.path)
-      def render(m: Map[String, Any]): Map[String, String] =
-        m.map { case (c, v) =>
-          c -> FooterStats.render(v, leafType(schema, c))
-        }
-      val ndv =
-        if (ndvHint.isEmpty) None
-        else Some(ndvHint.map { case (c, n) =>
-          c -> math.max(1L, math.min(wf.rows,
-            math.round(n.toDouble * wf.rows / totalRows)))
-        })
-      FileEntry(rel, wf.rows, render(wf.mins), render(wf.maxs),
-        if (spec.isEmpty) None else Some(Partitioning.valuesFromPath(rel)),
-        Some(wf.bytes),
-        nulls = Some(wf.nulls),
-        ndv = ndv)
-    }
-  }
-
-  /** Driver-side [[entriesFromFooters]] — no Spark session required
-    * (fanned out over the shared IO pool instead of a parallelize job).
-    * The REST catalog's commit path uses this: a catalog server
+  /** Driver-side FileEntries for already-written files, from their
+    * footers — no Spark session required (fanned out over the shared IO
+    * pool). The REST catalog's commit path uses this: a catalog server
     * registering an external engine's already-written files should not
     * need a cluster to read O(new files) footers.
     */
@@ -419,24 +275,17 @@ object TableOps {
       schema: StructType,
       hadoopConf: org.apache.hadoop.conf.Configuration): Seq[FileEntry] =
     Manifests.fanOut(rels, 2) { rel =>
-      val wf = FooterStats.read(repo.dataLocation(rel), hadoopConf,
-        schema, Map.empty)
-      def render(m: Map[String, Any]): Map[String, String] =
-        m.map { case (c, v) =>
-          c -> FooterStats.render(v, leafType(schema, c))
-        }
-      FileEntry(rel, wf.rows, render(wf.mins), render(wf.maxs),
-        None, Some(wf.bytes), nulls = Some(wf.nulls))
+      LayoutWriter.entryOf(rel, FooterStats.read(repo.dataLocation(rel),
+        hadoopConf, schema, Map.empty), schema, Nil)
     }
 
   /** FileEntry metadata for an EXPLICIT list of parquet files (absolute
-    * paths) — the native DSv2 layout write's commit pass (INSERT, CTAS,
-    * and the CoW row-level rewrite, which all stage through
-    * [[graft.catalog.GraftLayoutWrite]]). Only files named in task
-    * commit messages are read, so stray output from failed/speculative
-    * attempts can never leak into a snapshot. Partition values parse
-    * from the hive-style path segments; bloom sidecars (when the table
-    * opted in) ride the same single aggregation pass as min/max/NDV.
+    * paths) from one scan of their data — the bloom-table commit pass of
+    * [[LayoutWriter]], whose sidecar build needs the values. Only files
+    * named in task commit messages are read, so stray output from
+    * failed/speculative attempts can never leak into a snapshot.
+    * Partition values parse from the hive-style path segments; bloom
+    * sidecars ride the same single aggregation pass as min/max/NDV.
     */
   def statsForFiles(spark: SparkSession, repo: GraftRepo,
       paths: Seq[String], schema: StructType, spec: Seq[PartitionField],
@@ -463,6 +312,11 @@ object TableOps {
           leaves.flatMap { case (n, _) =>
             Option(r.getAs[String](s"$prefix:$n")).map(n -> _)
           }.toMap
+        def longStats(prefix: String): Map[String, Long] =
+          leaves.flatMap { case (n, _) =>
+            Option(r.getAs[Any](s"$prefix:$n"))
+              .map(v => n -> v.asInstanceOf[Number].longValue())
+          }.toMap
         val pvals =
           if (spec.isEmpty) None else Some(Partitioning.valuesFromPath(rel))
         val sidecar = blooms.flatMap(c =>
@@ -471,8 +325,8 @@ object TableOps {
         FileEntry(rel, r.getAs[Long]("__rows"), stats("min"), stats("max"),
           pvals, Some(repo.dataIO.size(rel)),
           bloomCols = if (sidecar.isEmpty) None else Some(sidecar.keys.toSeq.sorted),
-          nulls = Some(longStatsOf(r, leaves, "nulls")),
-          ndv = Some(longStatsOf(r, leaves, "ndv")))
+          nulls = Some(longStats("nulls")),
+          ndv = Some(longStats("ndv")))
       }
   }
 
@@ -1042,11 +896,11 @@ object TableOps {
         val (bcols, bitems) = bloomArgs(snap, schema)
         // no isEmpty pre-probe: it runs a take(1) job over the same
         // candidate scan the write pays anyway (a FULL duplicate scan
-        // when every row is deleted) — write once, drop empty outputs
+        // when every row is deleted) — the writer opens no file for a
+        // task without rows
         val rewritten = writeFiles(spark, repo, kept, key,
           snap.partitionFields, snap.nameMapping,
           bloomCols = bcols, bloomItems = bitems)
-          .filter(_.rows > 0)
           .map(_.copy(seq = Some(next)))
         val newSnap = repo.writeSnapshot(key, snap.schemaJson,
           untouched ++ rewritten, snap.partitionBy, snap.physicalNames,
@@ -1190,7 +1044,7 @@ object TableOps {
           // source must shuffle-join, never broadcast
           val srcKeys = src.select(keyCols.map(col): _*)
           // no isEmpty pre-probe: the write below scans once and
-          // empty outputs drop by row count
+          // writes no file for a task without rows
           Some(candDf.join(
             if (enumerable.isDefined) broadcast(srcKeys) else srcKeys,
             keyCols, "left_anti"))
@@ -1201,7 +1055,6 @@ object TableOps {
         .map(writeFiles(spark, repo, _, key, snap.partitionFields,
           snap.nameMapping, bloomCols = bcols, bloomItems = bitems))
         .getOrElse(Nil)
-        .filter(_.rows > 0)
       val appended = writeFiles(spark, repo,
         src.select(schema.fieldNames.toIndexedSeq.map(col): _*), key,
         snap.partitionFields, snap.nameMapping,
@@ -1494,21 +1347,10 @@ object TableOps {
           df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
         }
         else df.coalesce(1)
-      // NDV hint for the footer-stats path: the rewrite unit's merged
-      // input NDV (Σ per-file, capped by rows — the same upper-bound
-      // merge CBO applies), so compaction keeps column statistics alive
-      // without re-scanning what it just wrote
-      val unitRows = math.max(1L, unit.map(_.rows).sum)
-      val hint = physSchema.fields.map(_.name).flatMap { c =>
-        val vals = unit.flatMap(_.ndvCounts.get(c))
-        if (vals.size != unit.size) None
-        else Some(c -> math.min(vals.sum, unitRows))
-      }.toMap
       writeFiles(spark, repo, out, key, snap.partitionFields, snap.nameMapping,
         preserveLayout = true,
         bloomCols = Blooms.physCols(snap, physSchema),
-        bloomItems = Blooms.items(snap),
-        ndvHint = hint)
+        bloomItems = Blooms.items(snap))
     }
     val committed = repo.commitRetry(branch, s"compact $key",
       marker = Some(Commit.CompactMarker)) { base =>

@@ -1,76 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.write.WriterCommitMessage
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Bridge to Spark's native DSv2 parquet BatchWrite (`private[sql]`
-  * surface): a throwaway ParquetTable aimed at a staging directory
-  * provides the distributed writer (task commit protocol, codegen'd
-  * parquet encoding) that graft's copy-on-write row-level operations
-  * stream their replacement rows through.
+/** Bridge for `graft.versioned.TableOps.writeFiles` (`private[sql]`
+  * surface): how a DataFrame's rows reach graft's one data-file writer —
+  * either already local on the driver, or streamed through one Spark job
+  * that runs a writer per partition.
   */
 object ParquetWriteBridge {
-
-  def writeBuilder(
-      spark: SparkSession,
-      path: String,
-      schema: StructType,
-      info: LogicalWriteInfo): WriteBuilder = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // a cloned session pins MICROS timestamps for the staged files: the
-    // CoW stats pass reads FOOTERS now, and INT96 chunks (the session
-    // default) carry no statistics — a rewrite would silently drop
-    // timestamp min/max from every file it touches
-    val writeSession = classic.cloneSession()
-    writeSession.conf.set("spark.sql.parquet.outputTimestampType",
-      "TIMESTAMP_MICROS")
-    val table = new ParquetTable(
-      "graft-cow-staging",
-      writeSession,
-      CaseInsensitiveStringMap.empty(),
-      Seq(path),
-      Some(schema),
-      classOf[ParquetFileFormat])
-    val inner = table.newWriteBuilder(info)
-    // FileWrite.toBatch snapshots SQLConf from SparkSession.ACTIVE (not
-    // the table's session — verified against FileWrite bytecode), so
-    // the cloned session's pin must be active exactly while the write
-    // job description (and its serialized Hadoop conf) is created.
-    // Without this the pin silently does nothing and staged files land
-    // as INT96 — zero timestamp footer stats.
-    new WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write = {
-        val w = inner.build()
-        new org.apache.spark.sql.connector.write.Write {
-          private def withActive[A](f: => A): A = {
-            val prev = SparkSession.getActiveSession
-            try { SparkSession.setActiveSession(writeSession); f }
-            finally prev.foreach(SparkSession.setActiveSession)
-          }
-          override def description(): String = w.description()
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            withActive(w.toBatch)
-          // same ACTIVE-session exposure as toBatch — pin there too, so a
-          // future streaming use of the bridge keeps MICROS stats
-          override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            withActive(w.toStreaming)
-          // pass metric surfaces through — the interface defaults would
-          // silently drop the parquet write's metrics for CoW writes
-          override def supportedCustomMetrics()
-              : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-            w.supportedCustomMetrics()
-          override def reportDriverMetrics()
-              : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-            w.reportDriverMetrics()
-        }
-      }
-    }
-  }
 
   /** The already-local rows (and their exact attribute schema) of a
     * frame whose optimized plan is a LocalRelation of at most `maxRows`
@@ -105,72 +46,24 @@ object ParquetWriteBridge {
     }
   }
 
-  /** Driver-side single-file parquet write of already-local rows: the
-    * commit path stages model/metadata-sized frames, and spinning a
-    * whole Spark job (submit + schedule + task) to write one small file
-    * was pure fixed cost per staged table. Encodes through Spark's OWN
-    * ParquetWriteSupport with the exact conf the executor write path
-    * pins (3-level lists, MICROS timestamps, EXCEPTION rebase, field
-    * ids), via parquet's Hadoop writer — so any Hadoop scheme the data
-    * plane uses (file://, s3a://) works unchanged and the footer carries
-    * the same statistics the stats pass reads.
+  /** `schema` with every field, element and value nullable — the shape
+    * Spark's own file writers give the files they write.
     */
-  def writeLocalFile(spark: SparkSession, pathStr: String,
-      schema: StructType,
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Unit = {
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.newHadoopConf())
-    ParquetWriteSupport.setSchema(schema, conf)
-    // the four confs ParquetWriteSupport.init asserts/reads — identical
-    // to what the session-pinned executor path serializes
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "EXCEPTION")
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite", "EXCEPTION")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
-      "false")
-    val codec = spark.conf.getOption("spark.sql.parquet.compression.codec")
-      .getOrElse("snappy").toUpperCase(java.util.Locale.ROOT) match {
-      case "NONE" | "UNCOMPRESSED" =>
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED
-      case c => scala.util.Try(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.valueOf(c))
-        .getOrElse(
-          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-    }
-    final class B(p: org.apache.hadoop.fs.Path)
-        extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-          org.apache.spark.sql.catalyst.InternalRow, B](p) {
-      override def self(): B = this
-      override def getWriteSupport(c: org.apache.hadoop.conf.Configuration)
-          : org.apache.parquet.hadoop.api.WriteSupport[
-            org.apache.spark.sql.catalyst.InternalRow] =
-        new ParquetWriteSupport
-    }
-    val writer = new B(new org.apache.hadoop.fs.Path(pathStr))
-      .withConf(conf)
-      .withCompressionCodec(codec)
-      .build()
-    try rows.foreach(writer.write) finally writer.close()
-  }
+  def asNullable(schema: StructType): StructType = schema.asNullable
 
-  /** Rebind a DataFrame to a CLONED session pinned to MICROS parquet
-    * timestamps. The per-session pin replaces mutate-then-restore of the
-    * SHARED session conf (TableOps.writeFiles's old pattern), which
-    * raced under concurrent writes on one session — a thread could
-    * capture another's override as "previous" and leak the setting, or
-    * write INT96 and silently lose timestamp footer stats.
+  /** Run `df` as ONE Spark job (one SQL execution) whose tasks each hand
+    * their partition's rows to `task` (partition id, task attempt id,
+    * rows) and return its commit message.
     */
-  def withMicrosTimestamps(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val writeSession = ds.sparkSession.cloneSession()
-    writeSession.conf.set("spark.sql.parquet.outputTimestampType",
-      "TIMESTAMP_MICROS")
-    org.apache.spark.sql.classic.Dataset.ofRows(writeSession,
-      ds.queryExecution.analyzed)
+  def writeTasks(df: org.apache.spark.sql.DataFrame)(
+      task: (Int, Long, Iterator[InternalRow]) => WriterCommitMessage)
+      : Seq[WriterCommitMessage] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      qe.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+        Iterator.single(task(pid, TaskContext.get().taskAttemptId(), rows))
+      }.collect().toSeq
+    }
   }
 }

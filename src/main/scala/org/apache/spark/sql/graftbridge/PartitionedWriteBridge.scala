@@ -13,8 +13,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** `private[sql]` surface the NATIVE partitioned DSv2 batch write needs
-  * (see `graft.catalog.GraftPartitionedInsertWrite`):
+/** `private[sql]` surface graft's one data-file writer needs
+  * (see `graft.versioned.LayoutWriter`):
   *
   *  - Spark's own parquet [[OutputWriterFactory]] (codegen'd encoder,
   *    compression, timestamp handling all from the session conf) so

@@ -411,4 +411,78 @@ class PartitionedWriteSpec extends AnyFunSuite with Matchers with BeforeAndAfter
     sql("SELECT id, region FROM g.pw8.main.db.t")
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq shouldBe Seq((9, "z"))
   }
+
+  test("spark.sql.files.maxRecordsPerFile rolls the writer: an INSERT of " +
+    "40 rows at 4 records per file lands as 10 files") {
+    sql("CREATE NAMESPACE g.pw16")
+    sql("CREATE NAMESPACE g.pw16.main.db")
+    sql("CREATE TABLE g.pw16.main.db.t (id BIGINT, v STRING)")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
+    try sql("INSERT INTO g.pw16.main.db.t " +
+      "SELECT id, concat('v', id) FROM range(0, 40, 1, 2)")
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    val files = fileEntries(repo("pw16"), "db/t")
+    files should have size 10
+    files.map(_.rows).foreach(_ shouldBe 4L)
+    sql("SELECT count(*) FROM g.pw16.main.db.t").collect().head.getLong(0) shouldBe 40
+  }
+
+  test("SQL DELETE (copy-on-write): every rewritten file carries NDV for " +
+    "every statable column") {
+    sql("CREATE NAMESPACE g.pw17")
+    sql("CREATE NAMESPACE g.pw17.main.db")
+    sql("CREATE TABLE g.pw17.main.db.t (id BIGINT, name STRING, " +
+      "ts TIMESTAMP, d DATE, tags ARRAY<STRING>)")
+    sql("INSERT INTO g.pw17.main.db.t SELECT id, concat('n', id % 13), " +
+      "timestamp'2024-05-01 00:00:00' + make_interval(0,0,0,0,0,0,CAST(id AS INT)), " +
+      "date'2024-01-01' + CAST(id % 30 AS INT), array('a') FROM range(0, 200, 1, 4)")
+    val r = repo("pw17")
+    val before = fileEntries(r, "db/t").map(_.path).toSet
+    sql("DELETE FROM g.pw17.main.db.t WHERE id < 30")
+    val rewritten = fileEntries(r, "db/t").filterNot(f => before(f.path))
+    rewritten should not be empty
+    rewritten.foreach { f =>
+      f.ndvCounts.keySet shouldBe Set("id", "name", "ts", "d")
+      f.ndvCounts.values.foreach(_ should be > 0L)
+    }
+    sql("SELECT count(*) FROM g.pw17.main.db.t").collect().head.getLong(0) shouldBe 170
+  }
+
+  test("a driver-local partitioned frame appended through " +
+    "TableOps.atomicAppend runs no Spark job: one file per partition " +
+    "value, entries carry partition values and NDV") {
+    sql("CREATE NAMESPACE g.pw18")
+    sql("CREATE NAMESPACE g.pw18.main.db")
+    sql("CREATE TABLE g.pw18.main.db.t (id INT, region STRING) PARTITIONED BY (region)")
+    val r = repo("pw18")
+    import spark.implicits._
+    // values interleaved, so one file per value needs the writer's grouping
+    val df = (1 to 60).map(i => (i, s"r${i % 3}")).toDF("id", "region")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.TestListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.versioned.TableOps.atomicAppend(spark, r, "main",
+        Seq("db/t" -> df), "local partitioned append")
+      org.apache.spark.graftbridge.TestListenerBridge.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get() shouldBe 0
+    val files = fileEntries(r, "db/t")
+    files should have size 3
+    files.map(_.partValues) should contain theSameElementsAs
+      Seq("r0", "r1", "r2").map(v => Map("region" -> v))
+    files.foreach { f =>
+      f.path should include(s"__p_region=${f.partValues("region")}")
+      f.rows shouldBe 20L
+      f.ndvCounts("id") should (be >= 19L and be <= 21L)
+      f.ndvCounts("region") shouldBe 1L
+    }
+    sql("SELECT count(*) FROM g.pw18.main.db.t WHERE region = 'r1'")
+      .collect().head.getLong(0) shouldBe 20
+  }
 }

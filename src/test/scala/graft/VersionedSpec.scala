@@ -1360,6 +1360,9 @@ class VersionedSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     // old files are unreferenced, not deleted (time travel still works);
     // vacuum keeps everything while ancestor commits reference them
     repo.snapshot(repo.headCommit("main").tables("db/t")).files should have size 1
+    // the compacted file carries the writer's own per-file NDV
+    repo.snapshot(repo.headCommit("main").tables("db/t")).files.head
+      .ndvCounts.keySet shouldBe Set("id", "v")
   }
 
   test("compaction with sort clustering: files get disjoint ranges, " +
