@@ -126,7 +126,7 @@ final class GraftMicroBatchStream(
   private def scanFor(files: Seq[FileEntry]) =
     graftbridge.ParquetReadBridge.scan(
       SparkSession.active,
-      files.map(f => new org.apache.hadoop.fs.Path(repo.dataLocation(f.path))),
+      TableOps.statusesOf(repo, files),
       physSchema, physRequired, physFilters)
 
   /** Backlog visibility in StreamingQueryProgress.sources[i].metrics:

@@ -262,6 +262,9 @@ final class GraftScanBuilder(repo: GraftRepo, snap: Snapshot, fullSchema: Struct
   * `ParquetScan` over the pruned file list, and carries the planner
   * integration a 100 TB table needs:
   *
+  *  - planning reads only snapshot metadata: the surviving entries'
+  *    paths and recorded lengths seed the file index
+  *    ([[TableOps.statusesOf]]), so no read lists or stats storage.
   *  - [[SupportsReportStatistics]]: EXACT row counts + on-disk bytes
   *    from snapshot metadata (post file-pruning), so Catalyst/AQE make
   *    the right broadcast/shuffle choices for versioned-table joins.
@@ -314,10 +317,8 @@ final class GraftScan(
   private def inner: Scan = {
     if (cached == null) {
       val m = snap.nameMapping
-      val paths = liveFiles.map(f =>
-        new org.apache.hadoop.fs.Path(repo.dataLocation(f.path)))
       cached = graftbridge.ParquetReadBridge.scan(
-        SparkSession.active, paths,
+        SparkSession.active, TableOps.statusesOf(repo, liveFiles),
         TableOps.toPhysical(schema, m),
         TableOps.toPhysical(required, m),
         (pushed ++ runtime).map(TableOps.renameFilter(_, m)))
@@ -431,13 +432,12 @@ final class GraftScan(
     case Some(groups) =>
       val m = snap.nameMapping
       val live = liveFiles.map(_.path).toSet // runtime filters prune within groups
-      val keyedPaths = groups.map { case (key, fs) =>
+      val keyed = groups.map { case (key, fs) =>
         (org.apache.spark.sql.catalyst.InternalRow.fromSeq(key),
-          fs.filter(f => live(f.path)).map(f =>
-            new org.apache.hadoop.fs.Path(repo.dataLocation(f.path))))
+          TableOps.statusesOf(repo, fs.filter(f => live(f.path))))
       }
       graftbridge.KeyedReadBridge.keyedBatch(
-        SparkSession.active, keyedPaths,
+        SparkSession.active, keyed,
         TableOps.toPhysical(schema, m),
         TableOps.toPhysical(required, m),
         (pushed ++ runtime).map(TableOps.renameFilter(_, m)))
@@ -448,12 +448,11 @@ final class GraftScan(
           Some(repo.dataIO))
       if (dirty.isEmpty) inner.toBatch
       else {
-        def pathsOf(fs: Seq[graft.versioned.FileEntry]) =
-          fs.map(f => new org.apache.hadoop.fs.Path(repo.dataLocation(f.path)))
         graftbridge.TombstoneReadBridge.scan(
-          SparkSession.active, pathsOf(clean),
+          SparkSession.active, TableOps.statusesOf(repo, clean),
           dirty.map { case (fs, tombs) =>
-            (pathsOf(fs), graft.versioned.Tombstones.filterJsons(tombs))
+            (TableOps.statusesOf(repo, fs),
+              graft.versioned.Tombstones.filterJsons(tombs))
           },
           physDataSchema,
           TableOps.toPhysical(required, m),

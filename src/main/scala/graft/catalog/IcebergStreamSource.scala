@@ -451,13 +451,20 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
   override def createReaderFactory(): PartitionReaderFactory =
     scanFor(Nil).toBatch.createReaderFactory()
 
-  private def scanFor(paths: Seq[String]) =
+  // foreign files: stat'ed here on the driver, so the scan itself never lists
+  private def scanFor(paths: Seq[String]) = {
+    val spark = SparkSession.active
+    val conf = spark.sessionState.newHadoopConf()
     graftbridge.ParquetReadBridge.scan(
-      SparkSession.active,
-      paths.map(p => new org.apache.hadoop.fs.Path(
-        if (p.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*")) p
-        else new java.io.File(p).toURI.toString)),
+      spark,
+      paths.map { p =>
+        val path = new org.apache.hadoop.fs.Path(
+          if (p.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*")) p
+          else new java.io.File(p).toURI.toString)
+        path.getFileSystem(conf).getFileStatus(path)
+      },
       schema, schema, Array.empty)
+  }
 
   override def deserializeOffset(json: String): Offset = {
     val m = Json.readAny(json).asInstanceOf[Map[String, Any]]

@@ -110,8 +110,6 @@ final class GraftCoWScanBuilder(
     val m = snap.nameMapping
     val physData = TableOps.toPhysical(fullSchema, m)
     val physRequired = TableOps.toPhysical(required, m)
-    def pathsOf(fs: Seq[FileEntry]) = fs.map(f =>
-      new org.apache.hadoop.fs.Path(repo.dataLocation(f.path)))
     // merge-on-read tombstones are applied here too: the replacement
     // content a row-level rewrite publishes must never carry
     // MoR-deleted rows back to life. NO query filters go into the
@@ -120,12 +118,13 @@ final class GraftCoWScanBuilder(
       graft.versioned.Tombstones.of(snap), physData, live, Some(repo.dataIO))
     val inner =
       if (dirty.isEmpty)
-        graftbridge.ParquetReadBridge.scan(
-          SparkSession.active, pathsOf(live), physData, physRequired, Array.empty)
+        graftbridge.ParquetReadBridge.scan(SparkSession.active,
+          TableOps.statusesOf(repo, live), physData, physRequired, Array.empty)
       else graftbridge.TombstoneReadBridge.scan(
-        SparkSession.active, pathsOf(clean),
+        SparkSession.active, TableOps.statusesOf(repo, clean),
         dirty.map { case (fs, tombs) =>
-          (pathsOf(fs), graft.versioned.Tombstones.filterJsons(tombs))
+          (TableOps.statusesOf(repo, fs),
+            graft.versioned.Tombstones.filterJsons(tombs))
         },
         physData, physRequired, Array.empty)
     if (m.isEmpty) inner

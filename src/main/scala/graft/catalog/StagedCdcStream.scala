@@ -95,7 +95,7 @@ private[catalog] trait StagedCdcStream extends MicroBatchStream
       computeDiff(Option(a).filter(_.nonEmpty), b)
         .write.mode("overwrite").parquet(dir.toString)
     val parts = fs.listStatus(dir).toSeq
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .filter(_.getPath.getName.endsWith(".parquet"))
     if (parts.isEmpty) return Array.empty
     graftbridge.ParquetReadBridge.scan(SparkSession.active, parts,
       cdcSchema, cdcSchema, Array.empty).toBatch.planInputPartitions()

@@ -10,6 +10,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetReadBridge
 import org.apache.spark.sql.types._
 
 /** Export a graft snapshot as APACHE ICEBERG table metadata so external
@@ -1199,8 +1200,7 @@ object IcebergExport {
       // EXPLICIT physical schema, matching TableOps.readFiles: after an
       // ADD COLUMN a predicate on the new column must null-fill over
       // older files that lack it, exactly like the engine's own MoR read
-      s.read.schema(phys)
-        .parquet(files.map(f => repo.dataLocation(f.path)): _*)
+      ParquetReadBridge.frame(s, TableOps.statusesOf(repo, files), phys)
         .where(delCond)
         .select(
           regexp_replace(col("_metadata.file_path"), "^file:/+", "file:///")
@@ -1378,8 +1378,7 @@ object IcebergExport {
         coalesce(TableOps.filterToColumn(t.filter).getOrElse(
           throw new IllegalStateException(s"unevaluable tombstone: ${t.filter}")),
           lit(false))).reduce(_ || _)
-      s.read.schema(phys)
-        .parquet(files.map(f => repo.dataLocation(f.path)): _*)
+      ParquetReadBridge.frame(s, TableOps.statusesOf(repo, files), phys)
         .where(delCond)
         .select(
           regexp_replace(col("_metadata.file_path"), "^file:/+", "file:///")

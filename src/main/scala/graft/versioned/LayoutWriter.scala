@@ -109,8 +109,9 @@ final class LayoutWriter(
     }
     if (blooms.nonEmpty)
       // sidecar builds genuinely need the data: keep the scan pass
-      TableOps.statsForFiles(spark, repo, files.map(_.path), physSchema,
-        spec, blooms, bloomItems)
+      TableOps.statsForFiles(spark, repo,
+        files.map(wf => TableOps.statusOf(repo, repo.dataRelOf(wf.path), wf.bytes)),
+        physSchema, spec, blooms, bloomItems)
     else files.map(wf =>
       LayoutWriter.entryOf(repo.dataRelOf(wf.path), wf, physSchema, spec))
   }

@@ -3,7 +3,9 @@ package graft.versioned
 import java.nio.file.Path
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetReadBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
@@ -279,20 +281,35 @@ object TableOps {
         hadoopConf, schema, Map.empty), schema, Nil)
     }
 
-  /** FileEntry metadata for an EXPLICIT list of parquet files (absolute
-    * paths) from one scan of their data — the bloom-table commit pass of
-    * [[LayoutWriter]], whose sidecar build needs the values. Only files
-    * named in task commit messages are read, so stray output from
-    * failed/speculative attempts can never leak into a snapshot.
-    * Partition values parse from the hive-style path segments; bloom
-    * sidecars ride the same single aggregation pass as min/max/NDV.
+  /** [[statsForFiles]] over bare locations with no recorded length: each
+    * file is stat'ed once on the driver.
     */
   def statsForFiles(spark: SparkSession, repo: GraftRepo,
-      paths: Seq[String], schema: StructType, spec: Seq[PartitionField],
-      bloomCols: Seq[String] = Nil,
-      bloomItems: Long = Blooms.DefaultItems): Seq[FileEntry] = {
-    if (paths.isEmpty) return Nil
-    val written = spark.read.schema(schema).parquet(paths: _*)
+      paths: Seq[String], schema: StructType,
+      spec: Seq[PartitionField]): Seq[FileEntry] = {
+    val conf = spark.sessionState.newHadoopConf()
+    statsForFiles(spark, repo, paths.map { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(conf).getFileStatus(path)
+    }, schema, spec, Nil, Blooms.DefaultItems)
+  }
+
+  /** FileEntry metadata for an EXPLICIT list of parquet files (statuses
+    * carrying the writer-reported lengths) from one scan of their data —
+    * the bloom-table commit pass of [[LayoutWriter]], whose sidecar build
+    * needs the values. Only files named in task commit messages are read,
+    * so stray output from failed/speculative attempts can never leak into
+    * a snapshot. Partition values parse from the hive-style path
+    * segments; bloom sidecars ride the same single aggregation pass as
+    * min/max/NDV.
+    */
+  def statsForFiles(spark: SparkSession, repo: GraftRepo,
+      files: Seq[FileStatus], schema: StructType, spec: Seq[PartitionField],
+      bloomCols: Seq[String], bloomItems: Long): Seq[FileEntry] = {
+    if (files.isEmpty) return Nil
+    // keyed as input_file_name() renders a path
+    val bytesOf = files.map(f => f.getPath.toUri.toString -> f.getLen).toMap
+    val written = ParquetReadBridge.frame(spark, files, schema)
     val leaves = scanStatLeaves(schema)
     val statCols = leaves.flatMap { case (n, _) =>
       Seq(min(col(n)).cast("string").as(s"min:$n"),
@@ -307,7 +324,8 @@ object TableOps {
     written.groupBy(input_file_name().as("__file"))
       .agg(count(lit(1)).as("__rows"), (statCols.toIndexedSeq ++ bloomAggs): _*)
       .collect().toIndexedSeq.map { r =>
-        val rel = repo.dataRelOf(r.getAs[String]("__file"))
+        val file = r.getAs[String]("__file")
+        val rel = repo.dataRelOf(file)
         def stats(prefix: String): Map[String, String] =
           leaves.flatMap { case (n, _) =>
             Option(r.getAs[String](s"$prefix:$n")).map(n -> _)
@@ -323,7 +341,7 @@ object TableOps {
           Option(r.getAs[Array[Byte]](s"bloom:$c")).map(c -> _)).toMap
         if (sidecar.nonEmpty) Blooms.write(repo.dataIO, rel, sidecar)
         FileEntry(rel, r.getAs[Long]("__rows"), stats("min"), stats("max"),
-          pvals, Some(repo.dataIO.size(rel)),
+          pvals, Some(bytesOf(file)),
           bloomCols = if (sidecar.isEmpty) None else Some(sidecar.keys.toSeq.sorted),
           nulls = Some(longStats("nulls")),
           ndv = Some(longStats("ndv")))
@@ -426,8 +444,19 @@ object TableOps {
 
   // ---- read ------------------------------------------------------------
 
-  def absolutePaths(repo: GraftRepo, snap: Snapshot): Seq[String] =
-    snap.files.map(f => repo.dataLocation(f.path))
+  /** The Hadoop statuses a read of `files` plans from: each path in the
+    * Hadoop-normalized form Spark's own listing reports (`file:/…`), each
+    * length the entry's recorded `bytes` — so a read never lists or stats
+    * storage. Only a legacy entry without `bytes` stats its file.
+    */
+  def statusesOf(repo: GraftRepo, files: Seq[FileEntry]): Seq[FileStatus] =
+    files.map(f => statusOf(repo, f.path,
+      f.exactBytes.getOrElse(repo.dataIO.size(f.path))))
+
+  private[versioned] def statusOf(repo: GraftRepo, rel: String,
+      bytes: Long): FileStatus =
+    new FileStatus(bytes, false, 0, 0L, 0L,
+      new org.apache.hadoop.fs.Path(repo.dataLocation(rel)))
 
   /** DataFrame over a snapshot, scanning only files that survive stats
     * pruning against `filters`.
@@ -451,8 +480,8 @@ object TableOps {
       schema: StructType, files: Seq[FileEntry]): DataFrame = {
     val m = snap.nameMapping
     val physSchema = toPhysical(schema, m)
-    def read(fs: Seq[FileEntry]): DataFrame = spark.read.schema(physSchema)
-      .parquet(fs.map(f => repo.dataLocation(f.path)): _*)
+    def read(fs: Seq[FileEntry]): DataFrame =
+      ParquetReadBridge.frame(spark, statusesOf(repo, fs), physSchema)
     val (clean, dirty) = Tombstones.split(Tombstones.of(snap), physSchema, files,
       Some(repo.dataIO))
     val parts =

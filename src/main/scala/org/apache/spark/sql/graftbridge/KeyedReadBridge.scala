@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory}
@@ -18,31 +18,33 @@ import org.apache.spark.sql.types.StructType
   * At 100 TB that deletes the two largest exchanges of a fact-fact join.
   *
   * Decode still delegates to Spark's vectorized `ParquetScan` machinery:
-  * the per-group file lists are split/packed by the normal parquet batch
-  * planner, then merged into one `FilePartition` per key (SPJ requires
-  * the key->partition mapping to be 1:1; in exchange a group is read by
-  * a single task, the same trade Iceberg's preserve-data-grouping makes).
+  * the per-group files (statuses from the snapshot's entries — nothing
+  * is listed) are split/packed by the normal parquet batch planner, then
+  * merged into one `FilePartition` per key (SPJ requires the
+  * key->partition mapping to be 1:1; in exchange a group is read by a
+  * single task, the same trade Iceberg's preserve-data-grouping makes).
   */
 object KeyedReadBridge {
 
   def keyedBatch(
       spark: SparkSession,
-      groups: Seq[(InternalRow, Seq[Path])],
+      groups: Seq[(InternalRow, Seq[FileStatus])],
       dataSchema: StructType,
       readSchema: StructType,
       pushed: Array[Filter]): Batch = {
-    // ONE parquet scan over the union of files (one file listing, one
-    // reader-factory config), then the planned splits are re-bucketed
-    // into their key groups by file path
+    // ONE parquet scan over the union of files (one seeded file index,
+    // one reader-factory config), then the planned splits are
+    // re-bucketed into their key groups by file path
     val union = ParquetReadBridge.scan(
       spark, groups.flatMap(_._2), dataSchema, readSchema, pushed).toBatch
     val byPath = union.planInputPartitions()
       .flatMap(_.asInstanceOf[FilePartition].files)
       .groupBy(_.filePath.toPath.toString)
     val parts: Array[InputPartition] = groups.zipWithIndex.map {
-      case ((key, paths), i) =>
-        val files = paths.toArray.flatMap(p => byPath.getOrElse(p.toString,
-          Array.empty[org.apache.spark.sql.execution.datasources.PartitionedFile]))
+      case ((key, statuses), i) =>
+        val files = statuses.toArray.flatMap(f =>
+          byPath.getOrElse(f.getPath.toString, Array.empty[
+            org.apache.spark.sql.execution.datasources.PartitionedFile]))
         GraftKeyedPartition(key, FilePartition(i, files)): InputPartition
     }.toArray
     new Batch {

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualNullSafe, Expression, Literal, Not, Predicate, UnsafeProjection}
@@ -32,8 +32,8 @@ object TombstoneReadBridge {
     */
   def scan(
       spark: SparkSession,
-      clean: Seq[Path],
-      dirty: Seq[(Seq[Path], Seq[String])],
+      clean: Seq[FileStatus],
+      dirty: Seq[(Seq[FileStatus], Seq[String])],
       dataSchema: StructType,
       readSchema: StructType,
       pushed: Array[Filter]): Scan = {
@@ -56,9 +56,9 @@ object TombstoneReadBridge {
           if (clean.isEmpty) None
           else Some(ParquetReadBridge.scan(
             spark, clean, dataSchema, querySchema, pushed).toBatch)
-        val dirtyBatches = dirty.map { case (paths, filters) =>
+        val dirtyBatches = dirty.map { case (files, filters) =>
           (ParquetReadBridge.scan(
-            spark, paths, dataSchema, expanded, pushed).toBatch, filters)
+            spark, files, dataSchema, expanded, pushed).toBatch, filters)
         }
         val cleanParts = cleanBatch.toSeq.flatMap(_.planInputPartitions())
         val dirtyParts = dirtyBatches.flatMap { case (b, filters) =>

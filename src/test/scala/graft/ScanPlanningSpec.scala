@@ -1,0 +1,214 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.matchers.should.Matchers
+
+import graft.versioned.{FileEntry, GraftRepo, TableOps}
+
+/** Reads plan from the snapshot's file entries: every read of graft data
+  * files builds its file index from the entries' paths and recorded
+  * lengths, so no read lists or stats storage — in particular none
+  * starts Spark's "Listing leaf files" job, which a plain path-based
+  * index runs once a read passes 32 paths
+  * (`spark.sql.sources.parallelPartitionDiscovery.threshold`). Because
+  * reads trust the recorded `bytes`, every writer route is pinned to
+  * record the exact on-disk length.
+  */
+class ScanPlanningSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+
+  private val catRoot = Files.createTempDirectory("graft-scanplan")
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.adaptive.enabled", "false")
+    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+    .config("spark.sql.catalog.g", classOf[graft.catalog.GraftCatalog].getName)
+    .config("spark.sql.catalog.g.root", catRoot.toString)
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  private def sql(q: String) = spark.sql(q)
+  private def repoOf(r: String): GraftRepo = GraftRepo.open(catRoot.resolve(r))
+  private def entries(r: String): Seq[FileEntry] = {
+    val repo = repoOf(r)
+    repo.snapshot(repo.headCommit("main").tables("db/t")).files
+  }
+
+  // the description of every job started while a body runs
+  private val started = new ConcurrentLinkedQueue[String]
+  private lazy val listener = {
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(l)
+    l
+  }
+
+  /** Runs `body`, failing if it started a file-listing job. */
+  private def noListing[T](body: => T): T = {
+    listener
+    org.apache.spark.graftbridge.TestListenerBridge.drain(spark.sparkContext)
+    started.clear()
+    val out = body
+    org.apache.spark.graftbridge.TestListenerBridge.drain(spark.sparkContext)
+    started.asScala.filter(_.startsWith("Listing leaf files")) shouldBe empty
+    out
+  }
+
+  private var n = 0
+  /** A fresh repo whose `db/t` holds rows `(id, k = id % 5, v)` for
+    * id 0..199 in exactly 40 files (5 rows each: every file spans k 0..4).
+    */
+  private def fortyFiles(tblProps: String = "", partitionedBy: String = "",
+      table: String = "t", repo: Option[String] = None): String = {
+    val r = repo.getOrElse { n += 1; val r = s"sp$n"
+      sql(s"CREATE NAMESPACE g.$r")
+      sql(s"CREATE NAMESPACE g.$r.main.db")
+      r
+    }
+    sql(s"CREATE TABLE g.$r.main.db.$table (id BIGINT, k INT, v STRING)" +
+      s"$partitionedBy$tblProps")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "5")
+    try sql(s"INSERT INTO g.$r.main.db.$table VALUES " +
+      (0 until 200).map(i => s"($i, ${i % 5}, 'v$i')").mkString(", "))
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    r
+  }
+
+  private def rowsOf(q: String): Seq[(Long, Int, String)] =
+    sql(q).collect().toIndexedSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sortBy(_._1)
+  private def expected(keep: Long => Boolean = _ => true) =
+    (0L until 200L).filter(keep).map(i => (i, (i % 5).toInt, s"v$i"))
+
+  test("a SQL full scan of 40 files plans from the snapshot: no listing job") {
+    val r = fortyFiles()
+    entries(r) should have size 40
+    noListing(rowsOf(s"SELECT * FROM g.$r.main.db.t")) shouldBe expected()
+  }
+
+  test("an SPJ keyed read of 40-file tables starts no listing job") {
+    val r = fortyFiles(partitionedBy = " PARTITIONED BY (bucket(4, id))")
+    fortyFiles(partitionedBy = " PARTITIONED BY (bucket(4, id))",
+      table = "u", repo = Some(r))
+    entries(r).size should be > 32 // buckets split unevenly into files
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    try {
+      val df = sql(s"SELECT t.id, t.k, u.v FROM g.$r.main.db.t t " +
+        s"JOIN g.$r.main.db.u u ON t.id = u.id")
+      noListing(df.collect())
+      // keyed (shuffle-free) join: the SPJ route was the one measured
+      df.queryExecution.executedPlan.toString should not include
+        "Exchange hashpartitioning"
+      rowsOf(s"SELECT t.id, t.k, u.v FROM g.$r.main.db.t t " +
+        s"JOIN g.$r.main.db.u u ON t.id = u.id") shouldBe expected()
+    } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
+  }
+
+  test("a merge-on-read read of a tombstoned 40-file table starts no " +
+    "listing job") {
+    val r = fortyFiles(
+      tblProps = " TBLPROPERTIES('graft.delete.mode'='merge-on-read')")
+    sql(s"DELETE FROM g.$r.main.db.t WHERE k = 2")
+    entries(r) should have size 40 // tombstoned, not rewritten
+    noListing(rowsOf(s"SELECT * FROM g.$r.main.db.t")) shouldBe
+      expected(_ % 5 != 2)
+  }
+
+  test("a CoW DELETE and a compaction over all 40 files start no listing job") {
+    // every file holds a k = 2 row: the rewrite reads all 40
+    val d = fortyFiles()
+    noListing(sql(s"DELETE FROM g.$d.main.db.t WHERE k = 2"))
+    rowsOf(s"SELECT * FROM g.$d.main.db.t") shouldBe expected(_ % 5 != 2)
+    val c = fortyFiles()
+    val (before, after) = noListing(
+      TableOps.compact(spark, repoOf(c), "main", "db/t"))
+    before shouldBe 40
+    after should be < 40
+    rowsOf(s"SELECT * FROM g.$c.main.db.t") shouldBe expected()
+  }
+
+  /** Every entry records its file's exact on-disk length. */
+  private def exact(repo: GraftRepo, es: Seq[FileEntry]): Unit = {
+    es should not be empty
+    es.foreach(e => e.exactBytes shouldBe
+      Some(Files.size(repo.root.resolve(e.path))))
+  }
+
+  test("every writer route records each file's exact bytes") {
+    import spark.implicits._
+    val r = fortyFiles(partitionedBy = " PARTITIONED BY (k)")
+    val repo = repoOf(r)
+    // SQL INSERT (the job route through the DSv2 write)
+    exact(repo, entries(r))
+    // local route: a driver-local frame, written inline
+    exact(repo, TableOps.writeFiles(spark, repo,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), key = "db/local"))
+    // job route: a non-local frame
+    exact(repo, TableOps.writeFiles(spark, repo,
+      spark.range(0, 20000).selectExpr("id", "CAST(id AS STRING) AS v"),
+      key = "db/job"))
+    // bloom route: the sidecar scan takes the writer's lengths
+    exact(repo, TableOps.writeFiles(spark, repo,
+      spark.range(0, 2000).selectExpr("id", "CAST(id AS STRING) AS v"),
+      key = "db/bloom", bloomCols = Seq("id")))
+    // REST append: entries from footers of externally written files
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType)))
+    val ext = catRoot.resolve(s"$r/data/db/ext")
+    spark.range(0, 300, 1, 3).selectExpr("id", "CAST(id AS STRING) AS v")
+      .write.parquet(ext.toString)
+    val rels = Files.list(ext).iterator().asScala.toSeq
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).sorted
+      .map(f => s"data/db/ext/$f")
+    exact(repo, TableOps.entriesFromFootersLocal(repo, rels, schema,
+      spark.sessionState.newHadoopConf()))
+    // compaction
+    TableOps.compact(spark, repo, "main", "db/t")
+    exact(repo, entries(r))
+  }
+
+  test("a legacy snapshot without bytes reads the same rows through the " +
+    "stat fallback") {
+    val r = fortyFiles()
+    val repo = repoOf(r)
+    repo.commitRetry("main", "strip bytes") { base =>
+      val s = repo.snapshot(base.tables("db/t"))
+      val legacy = repo.writeSnapshot("db/t", s.schemaJson,
+        s.files.map(_.copy(bytes = None)), s.partitionBy, s.physicalNames,
+        s.props, s.retired)
+      (base.tables + ("db/t" -> legacy.id), base.namespaces)
+    }
+    entries(r).map(_.exactBytes).distinct shouldBe Seq(None)
+    noListing(rowsOf(s"SELECT * FROM g.$r.main.db.t")) shouldBe expected()
+    rowsOf(s"SELECT * FROM g.$r.main.db.t WHERE id >= 100") shouldBe
+      expected(_ >= 100)
+  }
+
+  test("a read whose data file was deleted underneath it fails naming " +
+    "the file") {
+    val r = fortyFiles()
+    val gone = entries(r).head.path
+    Files.delete(catRoot.resolve(r).resolve(gone))
+    val e = intercept[Exception](sql(s"SELECT * FROM g.$r.main.db.t").collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    messages.exists(_.contains(gone.split('/').last)) shouldBe true
+  }
+}

@@ -343,7 +343,7 @@ class VersionedSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   }
 
   test("CoW UPDATE keeps column statistics alive on the rewritten files " +
-    "(NDV hint transfer + timestamp footer stats)") {
+    "(per-file HLL NDV from the writer + timestamp footer stats)") {
     sql("CREATE NAMESPACE g.rnd")
     sql("CREATE NAMESPACE g.rnd.main.db")
     sql("CREATE TABLE g.rnd.main.db.t (id INT, qty BIGINT, ts TIMESTAMP)")
@@ -365,14 +365,14 @@ class VersionedSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
       // staging writer pins MICROS so footers carry real ts stats)
       f.min.keySet should contain allOf ("id", "qty", "ts")
       f.max.keySet should contain allOf ("id", "qty", "ts")
-      // NDV carried through the replaced-files hint (was: absent -> CBO
+      // NDV from the writer's per-file HLL sketch (was: absent -> CBO
       // extrapolated)
       f.ndvCounts.keySet should contain allOf ("id", "qty", "ts")
       f.ndvCounts.values.foreach(_ should be > 0L)
     }
-    // the carried estimate is SANE: id had ~100 distincts across the
-    // replaced input; the apportioned sum lands within sketch+rounding
-    // slack of that
+    // the estimate is SANE: id has ~100 distincts across the rewritten
+    // files; the sum of the per-file sketches lands within sketch slack
+    // of that
     val idSum = after.flatMap(_.ndvCounts.get("id")).sum
     idSum should be >= 85L
     idSum should be <= 115L
