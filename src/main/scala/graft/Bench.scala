@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -17,16 +16,7 @@ object Bench {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
       sys.props("java.io.tmpdir") = tmp
     }
-    val ckpt = sys.props("java.io.tmpdir") + "/graft-bench-ckpt-" +
-      java.util.UUID.randomUUID()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.checkpointLocation", ckpt)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession(cpus)
     // dev loop: SPARK_GRAFT_ONLY=q01_agg,dd_minhash_lsh benches a subset
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).toSet)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan (and optionally run) one
   * query from SparkEntry, for .explain audits.
   */
@@ -10,13 +8,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val run = args.contains("--run")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession("8")
     // any k=v arg becomes a session conf (e.g. spark.graft.dupspans.hash=md5)
     args.filter(_.contains('=')).foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)

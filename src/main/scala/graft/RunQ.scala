@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run ONE named SparkEntry query and print its rows + oracle
   * SQL — per-query iteration without a full Verify dump.
   * Usage: runMain graft.RunQ <name> [sfDir] [showN]
@@ -11,13 +9,7 @@ object RunQ {
     val name = args(0)
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val n = if (args.length > 2) args(2).toInt else 50
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession("8")
     val df = SparkEntry.queries(name)(spark, d)
     df.show(n, truncate = false)
     println(s"rows = ${df.count()}")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-side 10× scale smoke (SURVEY §5b's r1 protocol, re-run per
@@ -20,15 +19,7 @@ object ScaleSmoke {
     // (SPARK_GRAFT_SCALE=30) measure the scaling CURVE of the heavy ops
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val dst = "/tmp/graft-scale10-" + java.util.UUID.randomUUID().toString.take(8)
-    val ckpt = s"$dst/ckpt"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.streaming.checkpointLocation", ckpt)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("8")
 
     // ---- build the 10× replica -----------------------------------------
     // documents ×10 (shifted doc_ids — the dd_dupspans corpus), nation

@@ -367,9 +367,9 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
     p.dataFiles.foreach(f => require(f.format == "PARQUET",
       s"iceberg-changes streams parquet data files only; " +
         s"${f.format} at ${f.path} — read via CALL iceberg_import"))
-    val fresh = p.dataFiles.map(_.path).filterNot(bindChecked)
+    val fresh = p.dataFiles.filterNot(f => bindChecked(f.path))
     IcebergImport.assertNameBindable(SparkSession.active, p, fresh)
-    bindChecked ++= fresh
+    bindChecked ++= fresh.map(_.path)
     p
   }
 
@@ -445,25 +445,18 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
       end: Offset): Array[InputPartition] = {
     val batch = batchFiles(start, end)
     if (batch.isEmpty) return Array.empty
-    scanFor(batch.map(_.path)).toBatch.planInputPartitions()
+    scanFor(batch).toBatch.planInputPartitions()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     scanFor(Nil).toBatch.createReaderFactory()
 
-  // foreign files: stat'ed here on the driver, so the scan itself never lists
-  private def scanFor(paths: Seq[String]) = {
+  // foreign files: planned from their manifest lengths, so the scan
+  // never lists or stats storage
+  private def scanFor(files: Seq[IcebergImport.DataFile]) = {
     val spark = SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    graftbridge.ParquetReadBridge.scan(
-      spark,
-      paths.map { p =>
-        val path = new org.apache.hadoop.fs.Path(
-          if (p.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*")) p
-          else new java.io.File(p).toURI.toString)
-        path.getFileSystem(conf).getFileStatus(path)
-      },
-      schema, schema, Array.empty)
+    graftbridge.ParquetReadBridge.scan(spark,
+      IcebergImport.statusesOf(spark, files), schema, schema, Array.empty)
   }
 
   override def deserializeOffset(json: String): Offset = {

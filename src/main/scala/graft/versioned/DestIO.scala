@@ -92,12 +92,14 @@ private[graft] object DestIO {
   // `file:/x` (Hadoop's rendering) and `file:///x` both count
   private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.-]*:/.*".r
 
+  /** Does `s` carry a URI scheme (and so route through Hadoop)? */
+  def hasScheme(s: String): Boolean = SchemeRe.matches(s)
+
   /** A dest string with a URI scheme routes through Hadoop; a plain
     * path keeps the local nio fast path. */
-  def of(dest: String): DestIO = dest match {
-    case SchemeRe() => HadoopDestIO(dest)
-    case _ => new NioDestIO(java.nio.file.Paths.get(dest))
-  }
+  def of(dest: String): DestIO =
+    if (hasScheme(dest)) HadoopDestIO(dest)
+    else new NioDestIO(java.nio.file.Paths.get(dest))
 }
 
 /** Local-filesystem dest — the pre-seam java.nio behavior. */

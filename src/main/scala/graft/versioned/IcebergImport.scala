@@ -6,9 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col, count, lit,
   monotonically_increasing_id, regexp_replace, row_number, sum}
+import org.apache.spark.sql.graftbridge.ParquetReadBridge
 import org.apache.spark.sql.types._
 
 /** Read an APACHE ICEBERG table (spec v1, v2 or v3) from its metadata
@@ -58,7 +62,20 @@ import org.apache.spark.sql.types._
   */
 object IcebergImport {
 
-  /** Planned current-snapshot file sets of an Iceberg table. */
+  /** A file a manifest names: its location, data sequence number,
+    * `file_format`, and the `file_size_in_bytes` every read of it plans
+    * from ([[statusesOf]]). [[UnknownBytes]] marks a file built in code
+    * rather than decoded from a manifest.
+    */
+  sealed trait IceFile {
+    def path: String
+    def seq: Long
+    def format: String
+    def bytes: Long
+  }
+
+  val UnknownBytes: Long = -1L
+
   /** One live data file: path + its data sequence number (v1 → 0).
     * `partition` is the manifest's avro-decoded partition record keyed
     * by spec field name (Utf8 pre-lowered to String; logical types stay
@@ -66,7 +83,8 @@ object IcebergImport {
     */
   final case class DataFile(path: String, seq: Long,
       format: String = "PARQUET",
-      partition: Map[String, Any] = Map.empty)
+      partition: Map[String, Any] = Map.empty,
+      bytes: Long = UnknownBytes) extends IceFile
 
   /** One live delete file. `equalityIds` is empty for positional
     * deletes (content=1) and the referenced schema field ids for
@@ -74,7 +92,8 @@ object IcebergImport {
     */
   final case class DeleteFile(path: String, content: Int, seq: Long,
       equalityIds: Seq[Int], format: String = "PARQUET",
-      dv: Option[DvRef] = None)
+      dv: Option[DvRef] = None,
+      bytes: Long = UnknownBytes) extends IceFile
 
   /** A v3 DELETION VECTOR's location: a blob inside a Puffin file,
     * scoped to exactly one data file. */
@@ -96,10 +115,7 @@ object IcebergImport {
   // that scheme — so an import can read a table living in the object
   // store an external engine wrote it to.
 
-  // single-slash forms included: Hadoop renders file URIs as
-  // `file:/tmp/x`, and both are legal URI spellings of one location
-  private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.-]*:/.*".r
-  private def hasScheme(s: String): Boolean = SchemeRe.matches(s)
+  import DestIO.hasScheme
 
   private def hadoopFs(s: String): org.apache.hadoop.fs.FileSystem = {
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
@@ -214,89 +230,93 @@ object IcebergImport {
     // manifest list → (manifest path, content, sequence number); v1 has
     // neither content nor sequence numbers
     val manifests = readAvro(listPath).map { r =>
-      val content = Option(r.getSchema.getField("content"))
-        .map(_ => r.get("content").asInstanceOf[Int]).getOrElse(0)
-      val seq = Option(r.getSchema.getField("sequence_number"))
-        .map(_ => r.get("sequence_number").asInstanceOf[Long]).getOrElse(0L)
+      val content = opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0)
+      val seq = opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
       (toLocal(r.get("manifest_path").toString), content, seq)
     }
     val data = Seq.newBuilder[DataFile]
     val deletes = Seq.newBuilder[DeleteFile]
     manifests.foreach { case (mPath, mContent, mSeq) =>
       readAvro(mPath).foreach { e =>
-        val status = e.get("status").asInstanceOf[Int]
-        if (status != 2) { // 2 = DELETED: file no longer live
-          val df = e.get("data_file").asInstanceOf[GenericRecord]
-          val fmt = df.get("file_format").toString.toUpperCase
-          val content = Option(df.getSchema.getField("content"))
-            .map(_ => df.get("content").asInstanceOf[Int]).getOrElse(0)
-          val path = toLocal(df.get("file_path").toString)
+        if (e.get("status").asInstanceOf[Int] != 2) { // 2 = DELETED: no longer live
           // spec inheritance: a null entry sequence_number on an ADDED
           // entry inherits the manifest's sequence number
-          val seq = Option(e.getSchema.getField("sequence_number"))
-            .flatMap(_ => Option(e.get("sequence_number")))
-            .map(_.asInstanceOf[Long]).getOrElse(mSeq)
-          content match {
-            case 0 =>
-              require(mContent == 0, s"data file $path in a delete manifest")
-              // parquet/ORC through Spark's native sources, AVRO via
-              // the explicit per-file reader (boundAvroScan); anything
-              // else is a loud refusal, never a silent mis-read
-              require(fmt == "PARQUET" || fmt == "ORC" || fmt == "AVRO",
-                s"unsupported data file format: $fmt ($path)")
-              val part = Option(df.getSchema.getField("partition"))
-                .flatMap(_ => Option(df.get("partition")))
-                .map(_.asInstanceOf[GenericRecord]).map { p =>
-                  p.getSchema.getFields.asScala.map { f =>
-                    f.name() -> (p.get(f.name()) match {
-                      case u: org.apache.avro.util.Utf8 => u.toString
-                      case other => other
-                    })
-                  }.toMap
-                }.getOrElse(Map.empty[String, Any])
-              data += DataFile(path, seq, fmt, part)
-            case 1 if fmt == "PUFFIN" =>
-              // v3 DELETION VECTOR: a blob inside a Puffin file scoped
-              // to exactly one data file (replaces that file's position
-              // deletes); the manifest carries the blob coordinates
-              require(v >= 3,
-                s"PUFFIN deletion vector in a format-version $v table ($path)")
-              def longField(n: String): Long =
-                Option(df.getSchema.getField(n)).flatMap(_ => Option(df.get(n)))
-                  .map(_.asInstanceOf[Number].longValue()).getOrElse(
-                    throw new IllegalArgumentException(
-                      s"deletion vector without $n: $path"))
-              val ref = Option(df.getSchema.getField("referenced_data_file"))
-                .flatMap(_ => Option(df.get("referenced_data_file")))
-                .map(r => toLocal(r.toString)).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"deletion vector without referenced_data_file: $path"))
-              deletes += DeleteFile(path, 1, seq, Nil, fmt, Some(DvRef(
-                ref, longField("content_offset"),
-                longField("content_size_in_bytes"))))
-            case 1 =>
-              require(fmt == "PARQUET" || fmt == "ORC" || fmt == "AVRO",
-                s"unsupported delete file format: $fmt ($path)")
-              deletes += DeleteFile(path, 1, seq, Nil, fmt)
-            case 2 =>
-              require(fmt == "PARQUET" || fmt == "ORC" || fmt == "AVRO",
-                s"unsupported delete file format: $fmt ($path)")
-              val ids = Option(df.getSchema.getField("equality_ids"))
-                .flatMap(_ => Option(df.get("equality_ids"))).map {
-                  case l: java.util.List[_] =>
-                    l.asScala.map(_.asInstanceOf[Number].intValue()).toSeq
-                  case other => throw new IllegalArgumentException(
-                    s"bad equality_ids $other for $path")
-                }.getOrElse(throw new UnsupportedOperationException(
-                  s"equality delete without equality_ids: $path"))
-              deletes += DeleteFile(path, 2, seq, ids, fmt)
-            case other => throw new IllegalArgumentException(
-              s"unknown data_file.content $other for $path")
+          val seq = opt(e, "sequence_number").map(_.asInstanceOf[Long])
+            .getOrElse(mSeq)
+          decodeFile(e.get("data_file").asInstanceOf[GenericRecord], seq, v) match {
+            case d: DataFile =>
+              require(mContent == 0, s"data file ${d.path} in a delete manifest")
+              data += d
+            case d: DeleteFile => deletes += d
           }
         }
       }
     }
     (data.result(), deletes.result())
+  }
+
+  /** A record's field, None when the schema lacks it or it is null. */
+  private def opt(r: GenericRecord, name: String): Option[AnyRef] =
+    Option(r.getSchema.getField(name)).flatMap(_ => Option(r.get(name)))
+
+  /** The one decoder of a manifest entry's `data_file` record, at data
+    * sequence number `seq` in a format-version `v` table. Every read of
+    * the file plans from its `file_size_in_bytes`, so a missing or
+    * negative size refuses. Parquet/ORC read through Spark's native
+    * formats and AVRO through the explicit per-file reader
+    * ([[avroScan]]); any other format is a loud refusal, never a silent
+    * mis-read.
+    */
+  private def decodeFile(df: GenericRecord, seq: Long, v: Int): IceFile = {
+    val path = toLocal(df.get("file_path").toString)
+    val fmt = df.get("file_format").toString.toUpperCase
+    val content = opt(df, "content").map(_.asInstanceOf[Int]).getOrElse(0)
+    val bytes = opt(df, "file_size_in_bytes")
+      .map(_.asInstanceOf[Number].longValue()).filter(_ >= 0L).getOrElse(
+        throw new IllegalArgumentException(
+          s"manifest entry without a valid file_size_in_bytes: $path"))
+    require(fmt == "PARQUET" || fmt == "ORC" || fmt == "AVRO" ||
+      (content == 1 && fmt == "PUFFIN"),
+      s"unsupported ${if (content == 0) "data" else "delete"} file " +
+        s"format: $fmt ($path)")
+    content match {
+      case 0 =>
+        val part = opt(df, "partition").map { p =>
+          val r = p.asInstanceOf[GenericRecord]
+          r.getSchema.getFields.asScala.map { f =>
+            f.name() -> (r.get(f.name()) match {
+              case u: org.apache.avro.util.Utf8 => u.toString
+              case other => other
+            })
+          }.toMap
+        }.getOrElse(Map.empty[String, Any])
+        DataFile(path, seq, fmt, part, bytes)
+      case 1 if fmt == "PUFFIN" =>
+        // v3 DELETION VECTOR: a blob inside a Puffin file scoped to
+        // exactly one data file (replaces that file's position deletes);
+        // the manifest carries the blob coordinates
+        require(v >= 3,
+          s"PUFFIN deletion vector in a format-version $v table ($path)")
+        def dvField(n: String): AnyRef = opt(df, n).getOrElse(
+          throw new IllegalArgumentException(s"deletion vector without $n: $path"))
+        def longField(n: String): Long = dvField(n).asInstanceOf[Number].longValue()
+        DeleteFile(path, 1, seq, Nil, fmt, Some(DvRef(
+          toLocal(dvField("referenced_data_file").toString),
+          longField("content_offset"), longField("content_size_in_bytes"))),
+          bytes)
+      case 1 => DeleteFile(path, 1, seq, Nil, fmt, bytes = bytes)
+      case 2 =>
+        val ids = opt(df, "equality_ids").map {
+          case l: java.util.List[_] =>
+            l.asScala.map(_.asInstanceOf[Number].intValue()).toSeq
+          case other => throw new IllegalArgumentException(
+            s"bad equality_ids $other for $path")
+        }.getOrElse(throw new UnsupportedOperationException(
+          s"equality delete without equality_ids: $path"))
+        DeleteFile(path, 2, seq, ids, fmt, bytes = bytes)
+      case other => throw new IllegalArgumentException(
+        s"unknown data_file.content $other for $path")
+    }
   }
 
   /** Inverse of the exporter's manifest partition-value encoding
@@ -458,29 +478,25 @@ object IcebergImport {
             // from the incremental plan (a CDC consumer reading zero
             // rows for the batch, no error) — refuse loudly instead,
             // like every other unprovable shape here
-            val addedBy = Option(r.getSchema.getField("added_snapshot_id"))
-              .flatMap(_ => Option(r.get("added_snapshot_id")))
+            val addedBy = opt(r, "added_snapshot_id")
               .map(_.asInstanceOf[Long]).getOrElse(
                 throw new UnsupportedOperationException(
                   s"manifest-list row of snapshot $sid carries no " +
                     "added_snapshot_id — appends cannot be attributed " +
                     "to snapshots; read via CALL iceberg_import instead"))
-            val isData = Option(r.getSchema.getField("content"))
-              .forall(_ => r.get("content").asInstanceOf[Int] == 0)
+            val isData = opt(r, "content").forall(_.asInstanceOf[Int] == 0)
             if (isData && addedBy == sid) {
               val mPath = toLocal(r.get("manifest_path").toString)
               readAvro(mPath).foreach { e =>
-                val entrySnap = Option(e.getSchema.getField("snapshot_id"))
-                  .flatMap(_ => Option(e.get("snapshot_id")))
+                val entrySnap = opt(e, "snapshot_id")
                   .map(_.asInstanceOf[Long]).getOrElse(addedBy)
-                if (e.get("status").asInstanceOf[Int] == 1 && entrySnap == sid) {
-                  val df = e.get("data_file").asInstanceOf[GenericRecord]
-                  val fmt = df.get("file_format").toString.toUpperCase
-                  val path = toLocal(df.get("file_path").toString)
-                  require(fmt == "PARQUET" || fmt == "ORC" || fmt == "AVRO",
-                    s"unsupported data file format: $fmt ($path)")
-                  data += DataFile(path, 0L, fmt)
-                }
+                if (e.get("status").asInstanceOf[Int] == 1 && entrySnap == sid)
+                  decodeFile(e.get("data_file").asInstanceOf[GenericRecord],
+                    0L, v) match {
+                    case d: DataFile => data += d
+                    case d: DeleteFile => throw new IllegalArgumentException(
+                      s"delete file ${d.path} in a data manifest")
+                  }
               }
             }
           }
@@ -552,13 +568,11 @@ object IcebergImport {
     * classifiers can never drift on count-field handling.
     */
   private def manifestRemovesData(r: GenericRecord): Option[Boolean] = {
-    val content = Option(r.getSchema.getField("content"))
-      .map(_ => r.get("content").asInstanceOf[Int]).getOrElse(0)
+    val content = opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0)
     if (content != 0) None
     else Some {
       def cnt(n: String): Option[Int] =
-        Option(r.getSchema.getField(n)).flatMap(_ => Option(r.get(n)))
-          .map(_.asInstanceOf[Number].intValue())
+        opt(r, n).map(_.asInstanceOf[Number].intValue())
       cnt("deleted_files_count").orElse(cnt("deleted_data_files_count")) match {
         case Some(c) => c > 0
         case None => readAvro(toLocal(r.get("manifest_path").toString))
@@ -662,84 +676,51 @@ object IcebergImport {
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), p.schema)
     var data = boundScan(spark, p, p.positionDeletes.nonEmpty)
+    // (canonical path → data sequence number) of `files`, to broadcast
+    def seqs(files: Seq[IceFile], pathCol: String, seqCol: String) =
+      broadcast(spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](files.map(f =>
+          org.apache.spark.sql.Row(normStr(f.path), f.seq)).asJava),
+        StructType(Seq(StructField(pathCol, StringType),
+          StructField(seqCol, LongType)))))
 
     val anyDeletes = p.positionDeletes.nonEmpty || p.equalityDeletes.nonEmpty
     if (anyDeletes) {
-      // Spark renders local paths as file:/..., manifests as file:///...
-      // — normalize every path column to one form before comparing
-      data = data.withColumn("__ice_path", normPath(col("__ice_fp")))
       // data sequence number via a broadcast (path → seq) lookup — both
       // delete kinds compare against it: positional at `<=`, equality
       // strictly `<` (the spec's applicability rules), so rows from
       // files newer than the delete survive even when they match
-      val seqDf = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          p.dataFiles.map(f => org.apache.spark.sql.Row(
-            normStr(f.path), f.seq)).asJava),
-        StructType(Seq(StructField("__ice_seq_path", StringType),
-          StructField("__ice_seq", LongType))))
-      data = data.join(broadcast(seqDf),
-        col("__ice_path") === col("__ice_seq_path"), "left")
+      data = data.join(seqs(p.dataFiles, "__ice_seq_path", "__ice_seq"),
+        col("__ice_fp") === col("__ice_seq_path"), "left")
         .drop("__ice_seq_path")
     }
 
     if (p.positionDeletes.nonEmpty) {
       val (dvs, fileDeletes) = p.positionDeletes.partition(_.dv.isDefined)
-      // stamp each delete row with ITS OWN file's sequence number (a
-      // broadcast join on the delete file's _metadata path — delete
+      // delete files come in any of the three data formats
+      // (`write.delete.format`; the spec fixes their schema and ids).
+      // Each row is stamped with ITS OWN file's sequence number (delete
       // manifests carry the seq, the rows don't): an external v2 table
       // that drops a data file and later re-adds the same path must not
       // see stale position deletes re-applied to the new file
-      val delSeqDf = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          fileDeletes.map(f => org.apache.spark.sql.Row(
-            normStr(f.path), f.seq)).asJava),
-        StructType(Seq(StructField("__ice_del_src", StringType),
-          StructField("__ice_del_seq", LongType))))
-      // delete files themselves come in any of the three data formats
-      // (`write.delete.format`); each format group reads through its
-      // own source and the groups union — positional delete schema is
-      // fixed by the spec (file_path string, pos long; reserved ids)
-      val posSchema = StructType(Seq(StructField("file_path", StringType),
-        StructField("pos", LongType)))
-      val delRowsSchema = StructType(Seq(
-        StructField("__ice_del_path", StringType),
-        StructField("__ice_del_pos", LongType),
-        StructField("__ice_del_seq", LongType)))
-      val fileDelRows = fileDeletes.groupBy(_.format).toSeq.sortBy(_._1)
-        .map {
-          case ("PARQUET", fs) => spark.read.parquet(fs.map(_.path): _*)
-            .select(normPath(col("file_path")).as("__ice_del_path"),
-              col("pos").cast(LongType).as("__ice_del_pos"),
-              normPath(col("_metadata.file_path")).as("__ice_del_src_path"))
-          case ("ORC", fs) =>
-            spark.read.schema(posSchema).orc(fs.map(_.path): _*)
-              .select(normPath(col("file_path")).as("__ice_del_path"),
-                col("pos").as("__ice_del_pos"),
-                normPath(col("_metadata.file_path")).as("__ice_del_src_path"))
-          case ("AVRO", fs) => avroScan(spark, fs.map(_.path), posSchema,
-            Map("file_path" -> 2147483546, "pos" -> 2147483545))
-            .select(normPath(col("file_path")).as("__ice_del_path"),
-              col("pos").as("__ice_del_pos"),
-              normPath(col("__ice_fp")).as("__ice_del_src_path"))
-          case (other, fs) => throw new IllegalStateException(
-            s"unreachable delete format $other (${fs.head.path})")
-        }
-        .map(_.join(broadcast(delSeqDf),
-          col("__ice_del_src_path") === col("__ice_del_src"))
-          .select(col("__ice_del_path"), col("__ice_del_pos"),
-            col("__ice_del_seq")))
+      val fileDelRows =
+        if (fileDeletes.isEmpty) None
+        else Some(fileRows(spark, fileDeletes, PosDeleteSchema, PosDeleteIds)
+          .join(seqs(fileDeletes, "__ice_del_src", "__ice_del_seq"),
+            col("__ice_fp") === col("__ice_del_src"))
+          .select(normPath(col("file_path")).as("__ice_del_path"),
+            col("pos").as("__ice_del_pos"), col("__ice_del_seq")))
       // v3 deletion vectors: each DV's roaring bitmap expands into
       // (referenced file, position) rows IN EXECUTORS — one task per
       // DV, no driver-side materialization of potentially-millions of
       // positions; the seq rides the task payload (no lookup join)
       val dvRows =
         if (dvs.isEmpty) None
-        else Some(dvDeleteRows(spark, dvs, delRowsSchema))
+        else Some(dvDeleteRows(spark, dvs))
       val del = (fileDelRows ++ dvRows).reduce(_ unionByName _)
       data = data
         .withColumn("__ice_pos", col("__ice_ri"))
-        .join(del, col("__ice_path") === col("__ice_del_path") &&
+        .join(del, col("__ice_fp") === col("__ice_del_path") &&
           col("__ice_pos") === col("__ice_del_pos") &&
           col("__ice_seq") <= col("__ice_del_seq"), "left_anti")
         .drop("__ice_pos")
@@ -758,18 +739,8 @@ object IcebergImport {
             p.schema.fields.find(_.name == c).getOrElse(
               throw new IllegalArgumentException(
                 s"equality column $c missing from the table schema"))))
-          val del = files.groupBy(_.format).toSeq.sortBy(_._1)
-            .map {
-              case ("PARQUET", fs) => spark.read.parquet(fs.map(_.path): _*)
-              case ("ORC", fs) =>
-                spark.read.schema(eqSchema).orc(fs.map(_.path): _*)
-              case ("AVRO", fs) => avroScan(spark, fs.map(_.path), eqSchema,
-                cols.zip(ids).toMap)
-              case (other, fs) => throw new IllegalStateException(
-                s"unreachable delete format $other (${fs.head.path})")
-            }
-            .map(_.select(cols.map(c => col(c).as(s"__ice_eq_$c")): _*))
-            .reduce(_ unionByName _)
+          val del = fileRows(spark, files, eqSchema, cols.zip(ids).toMap)
+            .select(cols.map(c => col(c).as(s"__ice_eq_$c")): _*)
             .distinct()
           // null-safe equality per the spec (a null in the delete row
           // matches a null in the data row)
@@ -783,23 +754,25 @@ object IcebergImport {
   }
 
   /** Data scan with the spec's column-binding rules, emitting the
-    * Iceberg-named data columns plus `__ice_fp` / `__ice_ri` (file
-    * path / row position, for delete application; `__ice_ri` is null
+    * Iceberg-named data columns plus `__ice_fp` / `__ice_ri` (canonical
+    * [[normStr]] file path / row position, for delete application;
+    * `__ice_ri` is null
     * for ORC rows when no positional deletes need it — see
     * [[boundOrcScan]] for the ORC position derivation).
     *
-    * Binding is FIELD-ID-FIRST: if the first data file's footer
-    * carries field ids (parquet field ids / ORC `iceberg.id`
-    * attributes — external Iceberg engines stamp both), every file's
-    * footer id→name mapping is
-    * read and files are grouped by it; each group is scanned under its
+    * Binding is FIELD-ID-FIRST: if any data file's footer carries
+    * field ids (parquet field ids / ORC `iceberg.id` attributes —
+    * external Iceberg engines stamp both), files are grouped by their
+    * footer id→name mapping; each group is scanned under its
     * own physical names and renamed to the schema names, so a column
     * renamed by the external engine binds by ID instead of silently
     * null-filling under its old name. Ids the footer lacks fall back
     * to name mapping per the spec. Footer probing is driver-side
-    * O(files) — the cost Iceberg's own per-task footer opens pay at
-    * execution instead — and is SKIPPED entirely (one probe) for
-    * id-less tables, which includes every graft export.
+    * O(files) for every table, id-less ones included (every graft
+    * export): each parquet/ORC file's footer is opened once at its
+    * manifest length, in parallel — the cost Iceberg's own per-task
+    * footer opens pay at execution instead (see [[boundFormatScan]]
+    * for why no file is skipped).
     *
     * Id-less path: EXPLICIT schema, not footer inference — after
     * additive schema evolution a snapshot legitimately mixes files
@@ -808,21 +781,72 @@ object IcebergImport {
     * column → null.
     */
   private def boundScan(spark: SparkSession, p: Plan,
-      needPositions: Boolean): DataFrame = {
-    val byFmt = p.dataFiles.groupBy(_.format)
-    val parts = Seq.newBuilder[DataFrame]
-    byFmt.get("ORC").foreach(fs =>
-      parts += boundOrcScan(spark, p, fs.map(_.path), needPositions))
-    byFmt.get("PARQUET").foreach(fs => parts += boundFormatScan(
-      spark, p, fs.map(_.path),
-      Seq(col("_metadata.file_path").as("__ice_fp"),
-        col("_metadata.row_index").as("__ice_ri")),
-      footerIds(spark, _),
-      (schema, files) => spark.read.schema(schema).parquet(files: _*)))
-    byFmt.get("AVRO").foreach(fs =>
-      parts += boundAvroScan(spark, p, fs.map(_.path)))
-    parts.result().reduce(_ unionByName _)
+      needPositions: Boolean): DataFrame =
+    p.dataFiles.groupBy(_.format).toSeq.sortBy(_._1).map {
+      case ("ORC", fs) => boundOrcScan(spark, p, fs, needPositions)
+      case ("AVRO", fs) => boundAvroScan(spark, p, fs)
+      case (_, fs) => boundFormatScan(spark, p, fs,
+        Seq(filePath, col("_metadata.row_index").as("__ice_ri")),
+        footerIds(spark, _))
+    }.reduce(_ unionByName _)
+
+  /** The `__ice_fp` column of a native (parquet/ORC) read: Spark renders
+    * local paths `file:/…`, manifests `file:///…` — one [[normStr]] form
+    * for every comparison. */
+  private def filePath: Column =
+    normPath(col("_metadata.file_path")).as("__ice_fp")
+
+  /** The spec's positional delete rows: fixed schema, reserved ids. */
+  private[graft] val PosDeleteSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
+  private[graft] val PosDeleteIds =
+    Map("file_path" -> 2147483546, "pos" -> 2147483545)
+
+  /** Rows of foreign files in any mix of the three formats — the one
+    * PARQUET/ORC/AVRO dispatch of the delete-file reads: `schema`
+    * columns (bound by name for parquet/ORC, field-id-first through
+    * `nameToId` for avro) plus `__ice_fp`, the row's file in the
+    * canonical [[normStr]] form. Callers keep only their own `select`.
+    */
+  private[graft] def fileRows(spark: SparkSession, files: Seq[IceFile],
+      schema: StructType, nameToId: Map[String, Int]): DataFrame =
+    files.groupBy(_.format).toSeq.sortBy(_._1).map {
+      case ("AVRO", fs) =>
+        avroScan(spark, fs, schema, nameToId).drop("__ice_ri")
+      case (_, fs) => frameOf(spark, fs, schema).select(
+        schema.fieldNames.map(col).toSeq :+ filePath: _*)
+    }.reduce(_ unionByName _)
+
+  /** Spark's native read of PARQUET or ORC files (one format per call)
+    * under `schema`, through the index seeded from [[statusesOf]].
+    */
+  private def frameOf(spark: SparkSession, files: Seq[IceFile],
+      schema: StructType): DataFrame =
+    ParquetReadBridge.frame(spark, statusesOf(spark, files), schema,
+      if (files.head.format == "ORC") new OrcFileFormat
+      else new ParquetFileFormat)
+
+  /** The Hadoop statuses every foreign read plans from: each file at
+    * its manifest `file_size_in_bytes` (the length Iceberg's own readers
+    * open it at), so no read lists, globs or stats storage. Only a file
+    * built in code with [[UnknownBytes]] is stat'ed.
+    */
+  private[graft] def statusesOf(spark: SparkSession,
+      files: Seq[IceFile]): Seq[FileStatus] = {
+    lazy val conf = spark.sessionState.newHadoopConf()
+    files.map { f =>
+      val p = hadoopPath(f.path)
+      if (f.bytes == UnknownBytes) p.getFileSystem(conf).getFileStatus(p)
+      else new FileStatus(f.bytes, false, 0, 0L, 0L, p)
+    }
   }
+
+  /** A plan location as a Hadoop path: URIs as-is, local paths as
+    * `file:` URIs (built without touching the file, unlike `File.toURI`). */
+  private def hadoopPath(s: String): org.apache.hadoop.fs.Path =
+    if (hasScheme(s)) new org.apache.hadoop.fs.Path(s)
+    else new org.apache.hadoop.fs.Path("file", null,
+      new java.io.File(s).getAbsolutePath)
 
   /** AVRO data files (iceberg-core's third data format; Flink/CDC
     * writers emit them). This Spark build ships no Avro file source,
@@ -842,27 +866,34 @@ object IcebergImport {
     * readers use.
     */
   private def boundAvroScan(spark: SparkSession, p: Plan,
-      files: Seq[String]): DataFrame =
+      files: Seq[DataFile]): DataFrame =
     avroScan(spark, files, p.schema, p.fieldIdToName.map(_.swap))
 
   /** The reusable avro row scan behind [[boundAvroScan]] — also reads
     * avro-format DELETE files (`write.delete.format=avro` tables),
     * whose rows are plain records under the same binding rules.
     * Emits `schema` columns + `__ice_fp` (canonical file path) +
-    * `__ice_ri` (exact row position in file order).
+    * `__ice_ri` (exact row position in file order). Each task opens
+    * its file at the manifest length ([[statusesOf]]), never a stat.
     */
-  private[graft] def avroScan(spark: SparkSession, files: Seq[String],
+  private def avroScan(spark: SparkSession, files: Seq[IceFile],
       schema: StructType, nameToId: Map[String, Int]): DataFrame = {
     val bc = broadcastHadoopConf(spark)
-    val canonical = files.map(f =>
-      if (hasScheme(f)) f else normStr(new java.io.File(f).getAbsolutePath))
+    val located = statusesOf(spark, files).map(st =>
+      (normStr(st.getPath.toString), st.getLen))
     val rdd = spark.sparkContext
-      .parallelize(canonical, canonical.size)
-      .flatMap { path =>
-        val conf = rebuildHadoopConf(bc.value)
+      .parallelize(located, located.size)
+      .flatMap { case (path, len) =>
+        val hp = new org.apache.hadoop.fs.Path(path)
+        val in = hp.getFileSystem(rebuildHadoopConf(bc.value)).open(hp)
         val rd = new DataFileReader[GenericRecord](
-          new org.apache.avro.mapred.FsInput(
-            new org.apache.hadoop.fs.Path(path), conf),
+          new org.apache.avro.file.SeekableInput {
+            def seek(p: Long): Unit = in.seek(p)
+            def tell(): Long = in.getPos
+            def length(): Long = len
+            def read(b: Array[Byte], off: Int, n: Int): Int = in.read(b, off, n)
+            def close(): Unit = in.close()
+          },
           new GenericDatumReader[GenericRecord]())
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ =>
@@ -887,17 +918,16 @@ object IcebergImport {
     * __ice_del_seq)`. One task per DV reads its blob slice from the
     * Puffin file through the Hadoop FS and expands the 64-bit roaring
     * bitmap ([[parseDvBlob]]); the referenced path is canonicalized
-    * DRIVER-side (same [[normStr]] form the data scan's `__ice_path`
-    * carries) so the anti-join keys match without re-normalization.
+    * while planning, before any task runs (the same [[normStr]] form the
+    * data scan's `__ice_fp` carries), so the anti-join keys match
+    * without re-normalization.
     */
-  private def dvDeleteRows(spark: SparkSession, dvs: Seq[DeleteFile],
-      schema: StructType): DataFrame = {
+  private def dvDeleteRows(spark: SparkSession,
+      dvs: Seq[DeleteFile]): DataFrame = {
     val bc = broadcastHadoopConf(spark)
     val payload = dvs.map { d =>
       val r = d.dv.get
-      (normStr(r.referencedFile),
-        if (hasScheme(d.path)) d.path
-        else normStr(new java.io.File(d.path).getAbsolutePath),
+      (normStr(r.referencedFile), normStr(hadoopPath(d.path).toString),
         r.offset, r.length, d.seq)
     }
     val rdd = spark.sparkContext.parallelize(payload, payload.size)
@@ -912,7 +942,10 @@ object IcebergImport {
         parseDvBlob(bytes, puffin).map(pos =>
           org.apache.spark.sql.Row(ref, pos, seq))
       }
-    spark.createDataFrame(rdd, schema)
+    spark.createDataFrame(rdd, StructType(Seq(
+      StructField("__ice_del_path", StringType),
+      StructField("__ice_del_pos", LongType),
+      StructField("__ice_del_seq", LongType))))
   }
 
   /** Decode one v3 deletion-vector blob into sorted row positions.
@@ -1076,18 +1109,15 @@ object IcebergImport {
     * snapshots stay a single scan.
     */
   private def boundOrcScan(spark: SparkSession, p: Plan,
-      files: Seq[String], needPositions: Boolean): DataFrame = {
+      files: Seq[DataFile], needPositions: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val metaCols =
       if (needPositions)
-        Seq(col("_metadata.file_path").as("__ice_fp"),
-          col("_metadata.file_block_start").as("__ice_bs"),
+        Seq(filePath, col("_metadata.file_block_start").as("__ice_bs"),
           monotonically_increasing_id().as("__ice_mono"))
-      else Seq(col("_metadata.file_path").as("__ice_fp"),
-        lit(null).cast(LongType).as("__ice_ri"))
+      else Seq(filePath, lit(null).cast(LongType).as("__ice_ri"))
     val base = boundFormatScan(spark, p, files, metaCols,
-      orcFooterIds(spark, _),
-      (schema, fs) => spark.read.schema(schema).orc(fs: _*))
+      orcFooterIds(spark, _))
     if (!needPositions) base
     else {
       // counts come from BASE ITSELF, never a separate scan: split
@@ -1112,45 +1142,44 @@ object IcebergImport {
     }
   }
 
-  /** One format's data files under the spec's column-binding rules:
-    * field-id-first when the first file's footer carries ids (files
-    * grouped by their id→name map, each group scanned under its own
-    * physical names and renamed to schema names), explicit-schema name
-    * binding otherwise. See [[boundScan]]'s Scaladoc for why the
+  /** One format's (parquet or ORC) data files under the spec's
+    * column-binding rules: field-id-first when any file's footer carries
+    * ids (files grouped by their id→name map, each group scanned under
+    * its own physical names and renamed to schema names), explicit-schema
+    * name binding otherwise. See [[boundScan]]'s Scaladoc for why the
     * id-less path never infers from footers.
     */
   private def boundFormatScan(spark: SparkSession, p: Plan,
-      dataPaths: Seq[String], metaCols: Seq[Column],
-      probe: String => Option[Map[Int, String]],
-      readFiles: (StructType, Seq[String]) => DataFrame): DataFrame = {
+      dataFiles: Seq[DataFile], metaCols: Seq[Column],
+      probe: DataFile => Option[Map[Int, String]]): DataFrame = {
     // probe EVERY file (parallel footer reads), never just the head: a
     // migrated table mixes id-less files (name-mapping writers) with
     // id-stamped ones (Iceberg engines), and if the head happened to be
     // id-less, binding ALL files by name would silently null-fill any
     // column an engine renamed in the id-stamped files — an outcome
     // that flipped with manifest ordering
-    val probed = Manifests.fanOut(dataPaths, 2)(f =>
+    val probed = Manifests.fanOut(dataFiles, 2)(f =>
       (probe(f).getOrElse(Map.empty[Int, String]), f))
     probed.filter(_._1.nonEmpty) match {
       case Seq() =>
-        readFiles(p.schema, dataPaths)
+        frameOf(spark, dataFiles, p.schema)
           .select(p.schema.fields.map(f => col(f.name)).toSeq ++ metaCols: _*)
       case _ =>
         val nameToId = p.fieldIdToName.map(_.swap)
         probed
           .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-          .sortBy(_._2.head)
+          .sortBy(_._2.head.path)
           .map { case (idMap, files) =>
             val physNames = p.schema.fields.map(f =>
               idMap.getOrElse(nameToId(f.name), f.name))
             if (physNames.distinct.length != physNames.length)
               throw new UnsupportedOperationException(
-                s"field-id binding of ${files.head} maps two schema " +
+                s"field-id binding of ${files.head.path} maps two schema " +
                   s"columns to one physical name (${physNames.mkString(", ")})" +
                   " — refusing rather than mis-binding")
             val physSchema = StructType(p.schema.fields.zip(physNames)
               .map { case (f, n) => f.copy(name = n) })
-            readFiles(physSchema, files)
+            frameOf(spark, files, physSchema)
               .select(p.schema.fields.zip(physNames)
                 .map { case (f, n) => col(n).as(f.name) }.toSeq ++ metaCols: _*)
           }.reduce(_ unionByName _)
@@ -1162,18 +1191,15 @@ object IcebergImport {
     * file carries no ids (name-mapping writers, plain Spark ORC).
     */
   private def orcFooterIds(spark: SparkSession,
-      path: String): Option[Map[Int, String]] = {
-    val rd = org.apache.orc.OrcFile.createReader(
-      new org.apache.hadoop.fs.Path(
-        if (hasScheme(path)) path else new java.io.File(path).toURI.toString),
-      org.apache.orc.OrcFile.readerOptions(spark.sessionState.newHadoopConf()))
+      f: DataFile): Option[Map[Int, String]] = atFooter(spark, f) { (st, conf) =>
+    val rd = org.apache.orc.OrcFile.createReader(st.getPath,
+      org.apache.orc.OrcFile.readerOptions(conf).maxLength(st.getLen))
     try {
       val s = rd.getSchema
-      val ids = s.getFieldNames.asScala.zip(s.getChildren.asScala)
+      s.getFieldNames.asScala.zip(s.getChildren.asScala)
         .flatMap { case (n, t) => Option(t.getAttributeValue("iceberg.id"))
           .flatMap(v => scala.util.Try(v.trim.toInt).toOption).map(_ -> n) }
         .toMap
-      if (ids.isEmpty) None else Some(ids)
     } finally rd.close()
   }
 
@@ -1181,18 +1207,27 @@ object IcebergImport {
     * None when the file carries no ids (name-mapping writers).
     */
   private def footerIds(spark: SparkSession,
-      path: String): Option[Map[Int, String]] = {
+      f: DataFile): Option[Map[Int, String]] = atFooter(spark, f) { (st, conf) =>
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(
-          if (hasScheme(path)) path else new java.io.File(path).toURI.toString),
-        spark.sessionState.newHadoopConf()))
-    try {
-      val ids = rd.getFooter.getFileMetaData.getSchema.getFields.asScala
-        .flatMap(f => Option(f.getId).map(id => id.intValue() -> f.getName))
-        .toMap
-      if (ids.isEmpty) None else Some(ids)
-    } finally rd.close()
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    try rd.getFooter.getFileMetaData.getSchema.getFields.asScala
+      .flatMap(f => Option(f.getId).map(id => id.intValue() -> f.getName))
+      .toMap
+    finally rd.close()
+  }
+
+  /** One file's footer field ids as `ids` reads them, the footer opened
+    * at the file's manifest length; None when it stamps none. A file
+    * shorter than its manifest says fails naming the file, not with a
+    * bare EOF.
+    */
+  private def atFooter(spark: SparkSession, f: DataFile)(
+      ids: (FileStatus, org.apache.hadoop.conf.Configuration) => Map[Int, String])
+      : Option[Map[Int, String]] = {
+    val st = statusesOf(spark, Seq(f)).head
+    try Some(ids(st, spark.sessionState.newHadoopConf())).filter(_.nonEmpty)
+    catch { case e: java.io.EOFException => throw new java.io.IOException(
+      s"${f.path} is shorter than its manifest length ${st.getLen}", e) }
   }
 
   /** Serializable snapshot of the session Hadoop conf for executor-side
@@ -1223,7 +1258,7 @@ object IcebergImport {
     * with a single probe.
     */
   private[graft] def assertNameBindable(spark: SparkSession, p: Plan,
-      files: Seq[String]): Unit = {
+      files: Seq[DataFile]): Unit = {
     if (files.isEmpty) return
     // probe every file, not just the head: a mixed table (id-less files
     // behind an id-stamped tail, or vice versa) must be checked per
@@ -1235,7 +1270,7 @@ object IcebergImport {
           nameToId.get(sf.name).flatMap(idMap.get)
             .filter(_ != sf.name).map(phys => s"${sf.name} (stored as $phys)"))
         if (drifted.nonEmpty) throw new UnsupportedOperationException(
-          s"$f stores column(s) ${drifted.mkString(", ")} under a " +
+          s"${f.path} stores column(s) ${drifted.mkString(", ")} under a " +
             "physical name the schema renamed away — a name-bound " +
             "stream would silently null-fill them. Read via CALL " +
             "iceberg_import (field-id binding) instead")

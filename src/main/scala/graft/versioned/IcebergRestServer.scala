@@ -1947,8 +1947,9 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       .asInstanceOf[org.apache.spark.sql.types.StructType]
       // DVs name their referenced file in the manifest; file-based
       // positional deletes are read for their distinct file_path values
-      // (delete files are small — this is one skinny distinct scan per
-      // format group, the same readers readPlan applies them with). The
+      // (delete files are small — this is one skinny distinct scan
+      // through IcebergImport.fileRows, the reader readPlan applies
+      // them with). The
       // distinct collects to the driver, so it is SIZE-GUARDED: a commit
       // can only dirty files it lists, and a sane engine's per-commit
       // delete manifest names far fewer — a post past the cap is
@@ -1966,25 +1967,11 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       val dvDirty = posDeletes.flatMap(_.dv)
         .map(r => IcebergImport.normStr(r.referencedFile))
       val fileDels = posDeletes.filter(_.dv.isEmpty)
-      val posSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType)))
-      val readDirty: Seq[String] = fileDels.groupBy(_.format).toSeq
-        .sortBy(_._1).flatMap {
-          case ("PARQUET", fs) => guarded(s.read.parquet(fs.map(_.path): _*)
-            .select(col("file_path")).distinct())
-          case ("ORC", fs) => guarded(s.read.schema(posSchema)
-            .orc(fs.map(_.path): _*).select(col("file_path")).distinct())
-          case ("AVRO", fs) => guarded(IcebergImport.avroScan(s,
-            fs.map(_.path), posSchema,
-            Map("file_path" -> 2147483546, "pos" -> 2147483545))
-            .select(col("file_path")).distinct())
-          case (other, fs) => throw new UnsupportedOperationException(
-            s"unsupported positional delete file format $other " +
-              s"(${fs.head.path})")
-        }
+      val readDirty: Seq[String] =
+        if (fileDels.isEmpty) Nil
+        else guarded(IcebergImport.fileRows(s, fileDels,
+          IcebergImport.PosDeleteSchema, IcebergImport.PosDeleteIds)
+          .select(col("file_path")).distinct())
       val dirtyNorm = (dvDirty ++ readDirty).distinct
       if (dirtyNorm.size > maxDirty) throw new IllegalArgumentException(
         s"positional deletes reference more than $maxDirty distinct " +

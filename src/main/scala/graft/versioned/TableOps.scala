@@ -281,19 +281,6 @@ object TableOps {
         hadoopConf, schema, Map.empty), schema, Nil)
     }
 
-  /** [[statsForFiles]] over bare locations with no recorded length: each
-    * file is stat'ed once on the driver.
-    */
-  def statsForFiles(spark: SparkSession, repo: GraftRepo,
-      paths: Seq[String], schema: StructType,
-      spec: Seq[PartitionField]): Seq[FileEntry] = {
-    val conf = spark.sessionState.newHadoopConf()
-    statsForFiles(spark, repo, paths.map { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(conf).getFileStatus(path)
-    }, schema, spec, Nil, Blooms.DefaultItems)
-  }
-
   /** FileEntry metadata for an EXPLICIT list of parquet files (statuses
     * carrying the writer-reported lengths) from one scan of their data —
     * the bloom-table commit pass of [[LayoutWriter]], whose sidecar build

@@ -3,7 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.Scan
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
@@ -56,17 +56,20 @@ object ParquetReadBridge {
   }
 
   /** The same seeded read as a V1 DataFrame (`HadoopFsRelation`) — for
-    * DataFrame-side callers (CoW rewrites, compaction, stats scans) that
-    * would otherwise go through `spark.read.parquet(paths)` and its
-    * per-path glob/exists checks and listing. Columns are nullable, as
-    * with a user-specified schema on `spark.read`.
+    * DataFrame-side callers (CoW rewrites, compaction, stats scans,
+    * foreign Iceberg files) that would otherwise go through
+    * `spark.read.parquet(paths)` and its per-path glob/exists checks and
+    * listing. `format` is parquet for graft's own files; foreign ORC
+    * files pass Spark's ORC format. Columns are nullable, as with a
+    * user-specified schema on `spark.read`.
     */
   def frame(spark: SparkSession, files: Seq[FileStatus],
-      dataSchema: StructType): DataFrame = {
+      dataSchema: StructType,
+      format: FileFormat = new ParquetFileFormat): DataFrame = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     classic.baseRelationToDataFrame(HadoopFsRelation(
       index(classic, files, dataSchema), StructType(Nil), dataSchema.asNullable,
-      None, new ParquetFileFormat, Map.empty)(classic))
+      None, format, Map.empty)(classic))
   }
 
   // empty partition spec pinned: graft encodes partition values in

@@ -22,6 +22,7 @@ import graft.versioned.IcebergImport
   * positional+equality application order.
   */
 class IcebergImportSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+  import IcebergImportSpec._
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -45,68 +46,6 @@ class IcebergImportSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll
       .find(p => p.getFileName.toString.startsWith("part-") &&
         p.getFileName.toString.endsWith(".parquet")).get
     Files.move(part, out)
-  }
-
-  private val entrySchema = new Schema.Parser().parse(
-    """{"type":"record","name":"manifest_entry","fields":[
-      |{"name":"status","type":"int"},
-      |{"name":"snapshot_id","type":["null","long"],"default":null},
-      |{"name":"sequence_number","type":["null","long"],"default":null},
-      |{"name":"file_sequence_number","type":["null","long"],"default":null},
-      |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
-      |{"name":"content","type":"int"},
-      |{"name":"file_path","type":"string"},
-      |{"name":"file_format","type":"string"},
-      |{"name":"partition","type":{"type":"record","name":"r102","fields":[]}},
-      |{"name":"record_count","type":"long"},
-      |{"name":"file_size_in_bytes","type":"long"},
-      |{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],
-      |"default":null}]}}]}""".stripMargin.replaceAll("\n", ""))
-
-  private val listSchema = new Schema.Parser().parse(
-    """{"type":"record","name":"manifest_file","fields":[
-      |{"name":"manifest_path","type":"string"},
-      |{"name":"manifest_length","type":"long"},
-      |{"name":"partition_spec_id","type":"int"},
-      |{"name":"content","type":"int"},
-      |{"name":"sequence_number","type":"long"},
-      |{"name":"min_sequence_number","type":"long"},
-      |{"name":"added_snapshot_id","type":["null","long"],"default":null},
-      |{"name":"added_files_count","type":"int"},
-      |{"name":"existing_files_count","type":"int"},
-      |{"name":"deleted_files_count","type":"int"},
-      |{"name":"added_rows_count","type":"long"},
-      |{"name":"existing_rows_count","type":"long"},
-      |{"name":"deleted_rows_count","type":"long"}]}""".stripMargin
-      .replaceAll("\n", ""))
-
-  /** (path, content, seq or null → inherit, equalityIds) */
-  private def writeManifest(out: Path,
-      files: Seq[(Path, Int, Option[Long], Seq[Int])],
-      formatOf: Path => String = _ => "PARQUET"): Unit = {
-    val w = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](entrySchema))
-    w.setMeta("format-version", "2")
-    w.create(entrySchema, out.toFile)
-    try files.foreach { case (p, content, seq, eqIds) =>
-      val dfS = entrySchema.getField("data_file").schema()
-      val df = new GenericData.Record(dfS)
-      df.put("content", content)
-      df.put("file_path", p.toUri.toString)
-      df.put("file_format", formatOf(p))
-      df.put("partition",
-        new GenericData.Record(dfS.getField("partition").schema()))
-      df.put("record_count", 1L)
-      df.put("file_size_in_bytes", Files.size(p))
-      if (eqIds.nonEmpty)
-        df.put("equality_ids", eqIds.map(Int.box).asJava)
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1)
-      e.put("snapshot_id", 77L)
-      seq.foreach(sq => e.put("sequence_number", sq))
-      e.put("data_file", df)
-      w.append(e)
-    } finally w.close()
   }
 
   test("external-style v2 table: equality deletes apply to strictly " +
@@ -1413,5 +1352,71 @@ class IcebergImportSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll
           pf, srcTypeOf(pf), df.partition(pf.name))).toMap
       derived shouldBe fe.partValues
     }
+  }
+}
+
+/** Hand-written spec-text manifest layouts, shared with the other
+  * specs that need an external-style Iceberg table. */
+object IcebergImportSpec {
+  val entrySchema = new Schema.Parser().parse(
+    """{"type":"record","name":"manifest_entry","fields":[
+      |{"name":"status","type":"int"},
+      |{"name":"snapshot_id","type":["null","long"],"default":null},
+      |{"name":"sequence_number","type":["null","long"],"default":null},
+      |{"name":"file_sequence_number","type":["null","long"],"default":null},
+      |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
+      |{"name":"content","type":"int"},
+      |{"name":"file_path","type":"string"},
+      |{"name":"file_format","type":"string"},
+      |{"name":"partition","type":{"type":"record","name":"r102","fields":[]}},
+      |{"name":"record_count","type":"long"},
+      |{"name":"file_size_in_bytes","type":"long"},
+      |{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],
+      |"default":null}]}}]}""".stripMargin.replaceAll("\n", ""))
+
+  val listSchema = new Schema.Parser().parse(
+    """{"type":"record","name":"manifest_file","fields":[
+      |{"name":"manifest_path","type":"string"},
+      |{"name":"manifest_length","type":"long"},
+      |{"name":"partition_spec_id","type":"int"},
+      |{"name":"content","type":"int"},
+      |{"name":"sequence_number","type":"long"},
+      |{"name":"min_sequence_number","type":"long"},
+      |{"name":"added_snapshot_id","type":["null","long"],"default":null},
+      |{"name":"added_files_count","type":"int"},
+      |{"name":"existing_files_count","type":"int"},
+      |{"name":"deleted_files_count","type":"int"},
+      |{"name":"added_rows_count","type":"long"},
+      |{"name":"existing_rows_count","type":"long"},
+      |{"name":"deleted_rows_count","type":"long"}]}""".stripMargin
+      .replaceAll("\n", ""))
+
+  /** (path, content, seq or null → inherit, equalityIds) */
+  def writeManifest(out: Path,
+      files: Seq[(Path, Int, Option[Long], Seq[Int])],
+      formatOf: Path => String = _ => "PARQUET"): Unit = {
+    val w = new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](entrySchema))
+    w.setMeta("format-version", "2")
+    w.create(entrySchema, out.toFile)
+    try files.foreach { case (p, content, seq, eqIds) =>
+      val dfS = entrySchema.getField("data_file").schema()
+      val df = new GenericData.Record(dfS)
+      df.put("content", content)
+      df.put("file_path", p.toUri.toString)
+      df.put("file_format", formatOf(p))
+      df.put("partition",
+        new GenericData.Record(dfS.getField("partition").schema()))
+      df.put("record_count", 1L)
+      df.put("file_size_in_bytes", Files.size(p))
+      if (eqIds.nonEmpty)
+        df.put("equality_ids", eqIds.map(Int.box).asJava)
+      val e = new GenericData.Record(entrySchema)
+      e.put("status", 1)
+      e.put("snapshot_id", 77L)
+      seq.foreach(sq => e.put("sequence_number", sq))
+      e.put("data_file", df)
+      w.append(e)
+    } finally w.close()
   }
 }

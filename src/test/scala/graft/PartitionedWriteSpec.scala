@@ -248,8 +248,9 @@ class PartitionedWriteSpec extends AnyFunSuite with Matchers with BeforeAndAfter
     val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val scanned = graft.versioned.TableOps.statsForFiles(spark2, r,
-      entries.map(e => r.root.resolve(e.path).toString), schema,
-      snap.partitionFields).map(e => e.path -> e).toMap
+      graft.versioned.TableOps.statusesOf(r, entries), schema,
+      snap.partitionFields, Nil, graft.versioned.Blooms.DefaultItems)
+      .map(e => e.path -> e).toMap
     // parquet normalizes float/double zero bounds (min→-0.0, max→+0.0 —
     // conservative in the safe direction); the scan's Spark min/max
     // reports the sign it saw. Numerically equal, so compare modulo it.

@@ -1,17 +1,19 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.avro.file.DataFileWriter
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.matchers.should.Matchers
 
-import graft.versioned.{FileEntry, GraftRepo, TableOps}
+import graft.versioned.{FileEntry, GraftRepo, IcebergImport, TableOps}
 
 /** Reads plan from the snapshot's file entries: every read of graft data
   * files builds its file index from the entries' paths and recorded
@@ -20,7 +22,8 @@ import graft.versioned.{FileEntry, GraftRepo, TableOps}
   * index runs once a read passes 32 paths
   * (`spark.sql.sources.parallelPartitionDiscovery.threshold`). Because
   * reads trust the recorded `bytes`, every writer route is pinned to
-  * record the exact on-disk length.
+  * record the exact on-disk length. Foreign Iceberg files plan the same
+  * way from their manifests' `file_size_in_bytes`.
   */
 class ScanPlanningSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
 
@@ -91,8 +94,9 @@ class ScanPlanningSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll 
     r
   }
 
-  private def rowsOf(q: String): Seq[(Long, Int, String)] =
-    sql(q).collect().toIndexedSeq
+  private def rowsOf(q: String): Seq[(Long, Int, String)] = tuples(sql(q))
+  private def tuples(df: DataFrame): Seq[(Long, Int, String)] =
+    df.collect().toIndexedSeq
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sortBy(_._1)
   private def expected(keep: Long => Boolean = _ => true) =
     (0L until 200L).filter(keep).map(i => (i, (i % 5).toInt, s"v$i"))
@@ -210,5 +214,147 @@ class ScanPlanningSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll 
     val messages = Iterator.iterate[Throwable](e)(_.getCause)
       .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
     messages.exists(_.contains(gone.split('/').last)) shouldBe true
+  }
+
+  // ---- foreign Iceberg files -------------------------------------------
+
+  /** `db/t` of repo `r` exported as Iceberg: (dest dir, metadata path). */
+  private def exported(r: String): (Path, String) = {
+    val dest = Files.createTempDirectory("scanplan-ice")
+    (dest, sql(s"CALL g.system.iceberg_export('$r', 'main', 'db.t', '$dest')")
+      .collect().head.getString(0))
+  }
+
+  /** A 40-file merge-on-read table with an equality delete (k = 2) and
+    * positional deletes in every file (k >= 4), exported: (repo, dest,
+    * metadata path).
+    */
+  private def morExport(): (String, Path, String) = {
+    val r = fortyFiles(
+      tblProps = " TBLPROPERTIES('graft.delete.mode'='merge-on-read')")
+    sql(s"DELETE FROM g.$r.main.db.t WHERE k = 2")
+    sql(s"DELETE FROM g.$r.main.db.t WHERE k >= 4")
+    val (dest, meta) = exported(r)
+    (r, dest, meta)
+  }
+  private val morKept = expected(i => i % 5 == 0 || i % 5 == 1 || i % 5 == 3)
+
+  test("an import of a 40-file merge-on-read export with positional and " +
+    "equality deletes starts no listing job") {
+    val (r, _, meta) = morExport()
+    val plan = IcebergImport.plan(meta, None)
+    plan.dataFiles should have size 40
+    plan.positionDeletes should not be empty
+    plan.equalityDeletes should not be empty
+    rowsOf(s"SELECT * FROM g.$r.main.db.t") shouldBe morKept
+    noListing(tuples(IcebergImport.read(spark, meta, None))) shouldBe morKept
+  }
+
+  test("iceberg-changes triggers over a 40-file merge-on-read export start " +
+    "no listing job") {
+    val (_, dest, _) = morExport()
+    def trigger(name: String, option: String): DataFrame = {
+      noListing {
+        val q = spark.readStream.format("iceberg-changes")
+          .option(option, "true").load(dest.toString)
+          .writeStream.format("memory").queryName(name).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      spark.table(name)
+    }
+    // CDC: the first version's live rows, deletes applied, as inserts
+    val cdc = trigger("sp_cdc", "cdc")
+    cdc.filter("_change_type <> 'insert'").count() shouldBe 0
+    tuples(cdc.drop("_change_type")) shouldBe morKept
+    // append stream: the data files' raw rows (deletes skipped)
+    tuples(trigger("sp_raw", "skipDeletes")) shouldBe expected()
+  }
+
+  /** A one-snapshot Iceberg table `(id long, k int, v string)` over
+    * `files` of `format`, written from the spec text; its metadata path.
+    */
+  private def icebergTable(root: Path, files: Seq[Path],
+      format: String): String = {
+    import IcebergImportSpec.{listSchema, writeManifest}
+    val meta = Files.createDirectories(root.resolve("metadata"))
+    val manifest = meta.resolve("m0.avro")
+    writeManifest(manifest, files.map(f => (f, 0, Some(1L), Nil)), _ => format)
+    val list = meta.resolve("snap-1.avro")
+    val w = new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](listSchema))
+    w.setMeta("format-version", "2")
+    w.create(listSchema, list.toFile)
+    try {
+      val rec = new GenericData.Record(listSchema)
+      Seq[(String, Any)]("manifest_path" -> manifest.toUri.toString,
+        "manifest_length" -> Files.size(manifest), "partition_spec_id" -> 0,
+        "content" -> 0, "sequence_number" -> 1L, "min_sequence_number" -> 1L,
+        "added_snapshot_id" -> 1L, "added_files_count" -> files.size,
+        "existing_files_count" -> 0, "deleted_files_count" -> 0,
+        "added_rows_count" -> 200L, "existing_rows_count" -> 0L,
+        "deleted_rows_count" -> 0L)
+        .foreach { case (k, v) => rec.put(k, v.asInstanceOf[AnyRef]) }
+      w.append(rec)
+    } finally w.close()
+    val metaPath = meta.resolve("v1.metadata.json")
+    Files.writeString(metaPath,
+      s"""{"format-version":2,"table-uuid":"00000000-0000-0000-0000-000000000001",
+         |"location":"${root.toUri.toString.stripSuffix("/")}",
+         |"last-sequence-number":1,"last-updated-ms":0,"last-column-id":3,
+         |"schemas":[{"type":"struct","schema-id":0,"fields":[
+         |{"id":1,"name":"id","required":false,"type":"long"},
+         |{"id":2,"name":"k","required":false,"type":"int"},
+         |{"id":3,"name":"v","required":false,"type":"string"}]}],
+         |"current-schema-id":0,
+         |"partition-specs":[{"spec-id":0,"fields":[]}],"default-spec-id":0,
+         |"last-partition-id":999,
+         |"sort-orders":[{"order-id":0,"fields":[]}],"default-sort-order-id":0,
+         |"properties":{},"current-snapshot-id":1,
+         |"snapshots":[{"snapshot-id":1,"sequence-number":1,"timestamp-ms":0,
+         |"summary":{"operation":"append"},
+         |"manifest-list":"${list.toUri.toString}","schema-id":0}],
+         |"snapshot-log":[],"metadata-log":[]}""".stripMargin
+        .replaceAll("\n", ""))
+    metaPath.toString
+  }
+
+  test("an import of a 40-file ORC table starts no listing job") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("scanplan-orc")
+    val data = Files.createDirectories(root.resolve("data"))
+    val files = (0 until 40).map { f =>
+      val tmp = Files.createTempDirectory("scanplan-orc-part")
+      (f * 5 until f * 5 + 5).map(i => (i.toLong, i % 5, s"v$i"))
+        .toDF("id", "k", "v").coalesce(1).write.mode("overwrite")
+        .orc(tmp.toString)
+      val part = Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".orc")).get
+      Files.move(part, data.resolve(s"f$f.orc"))
+    }
+    val meta = icebergTable(root, files, "ORC")
+    noListing(tuples(IcebergImport.read(spark, meta, None))) shouldBe expected()
+  }
+
+  test("an import whose manifest size disagrees with the file fails naming " +
+    "the file") {
+    val (_, meta) = exported(fortyFiles())
+    val victim = IcebergImport.plan(meta, None).dataFiles.head
+    // a valid parquet file, shorter than the manifest records, in its
+    // place: a read that re-stats the file would return its (zero) rows
+    val tmp = Files.createTempDirectory("scanplan-swap")
+    spark.range(0).selectExpr("id", "CAST(id AS INT) AS k",
+      "CAST(id AS STRING) AS v").coalesce(1).write.mode("overwrite")
+      .parquet(tmp.toString)
+    val at = Paths.get(victim.path)
+    Files.move(Files.list(tmp).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get, at,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // the old file's checksum sidecar would fail the read on its own
+    Files.deleteIfExists(at.resolveSibling(s".${at.getFileName}.crc"))
+    Files.size(at) should be < victim.bytes
+    val e = intercept[Exception](IcebergImport.read(spark, meta, None).collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains(at.getFileName.toString)) shouldBe true
   }
 }
