@@ -456,7 +456,7 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
   private def scanFor(files: Seq[IcebergImport.DataFile]) = {
     val spark = SparkSession.active
     graftbridge.ParquetReadBridge.scan(spark,
-      IcebergImport.statusesOf(spark, files), schema, schema, Array.empty)
+      IcebergImport.statusesOf(files), schema, schema, Array.empty)
   }
 
   override def deserializeOffset(json: String): Offset = {

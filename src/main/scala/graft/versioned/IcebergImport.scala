@@ -64,8 +64,7 @@ object IcebergImport {
 
   /** A file a manifest names: its location, data sequence number,
     * `file_format`, and the `file_size_in_bytes` every read of it plans
-    * from ([[statusesOf]]). [[UnknownBytes]] marks a file built in code
-    * rather than decoded from a manifest.
+    * from ([[statusesOf]]).
     */
   sealed trait IceFile {
     def path: String
@@ -74,26 +73,22 @@ object IcebergImport {
     def bytes: Long
   }
 
-  val UnknownBytes: Long = -1L
-
   /** One live data file: path + its data sequence number (v1 → 0).
     * `partition` is the manifest's avro-decoded partition record keyed
     * by spec field name (Utf8 pre-lowered to String; logical types stay
     * their physical Integer/Long) — empty under an unpartitioned spec.
     */
-  final case class DataFile(path: String, seq: Long,
+  final case class DataFile(path: String, seq: Long, bytes: Long,
       format: String = "PARQUET",
-      partition: Map[String, Any] = Map.empty,
-      bytes: Long = UnknownBytes) extends IceFile
+      partition: Map[String, Any] = Map.empty) extends IceFile
 
   /** One live delete file. `equalityIds` is empty for positional
     * deletes (content=1) and the referenced schema field ids for
     * equality deletes (content=2).
     */
   final case class DeleteFile(path: String, content: Int, seq: Long,
-      equalityIds: Seq[Int], format: String = "PARQUET",
-      dv: Option[DvRef] = None,
-      bytes: Long = UnknownBytes) extends IceFile
+      equalityIds: Seq[Int], bytes: Long, format: String = "PARQUET",
+      dv: Option[DvRef] = None) extends IceFile
 
   /** A v3 DELETION VECTOR's location: a blob inside a Puffin file,
     * scoped to exactly one data file. */
@@ -230,8 +225,10 @@ object IcebergImport {
     // manifest list → (manifest path, content, sequence number); v1 has
     // neither content nor sequence numbers
     val manifests = readAvro(listPath).map { r =>
-      val content = opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0)
-      val seq = opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
+      val content = Option(r.getSchema.getField("content"))
+        .map(_ => r.get("content").asInstanceOf[Int]).getOrElse(0)
+      val seq = Option(r.getSchema.getField("sequence_number"))
+        .map(_ => r.get("sequence_number").asInstanceOf[Long]).getOrElse(0L)
       (toLocal(r.get("manifest_path").toString), content, seq)
     }
     val data = Seq.newBuilder[DataFile]
@@ -241,8 +238,9 @@ object IcebergImport {
         if (e.get("status").asInstanceOf[Int] != 2) { // 2 = DELETED: no longer live
           // spec inheritance: a null entry sequence_number on an ADDED
           // entry inherits the manifest's sequence number
-          val seq = opt(e, "sequence_number").map(_.asInstanceOf[Long])
-            .getOrElse(mSeq)
+          val seq = Option(e.getSchema.getField("sequence_number"))
+            .flatMap(_ => Option(e.get("sequence_number")))
+            .map(_.asInstanceOf[Long]).getOrElse(mSeq)
           decodeFile(e.get("data_file").asInstanceOf[GenericRecord], seq, v) match {
             case d: DataFile =>
               require(mContent == 0, s"data file ${d.path} in a delete manifest")
@@ -290,7 +288,7 @@ object IcebergImport {
             })
           }.toMap
         }.getOrElse(Map.empty[String, Any])
-        DataFile(path, seq, fmt, part, bytes)
+        DataFile(path, seq, bytes, fmt, part)
       case 1 if fmt == "PUFFIN" =>
         // v3 DELETION VECTOR: a blob inside a Puffin file scoped to
         // exactly one data file (replaces that file's position deletes);
@@ -300,11 +298,10 @@ object IcebergImport {
         def dvField(n: String): AnyRef = opt(df, n).getOrElse(
           throw new IllegalArgumentException(s"deletion vector without $n: $path"))
         def longField(n: String): Long = dvField(n).asInstanceOf[Number].longValue()
-        DeleteFile(path, 1, seq, Nil, fmt, Some(DvRef(
+        DeleteFile(path, 1, seq, Nil, bytes, fmt, Some(DvRef(
           toLocal(dvField("referenced_data_file").toString),
-          longField("content_offset"), longField("content_size_in_bytes"))),
-          bytes)
-      case 1 => DeleteFile(path, 1, seq, Nil, fmt, bytes = bytes)
+          longField("content_offset"), longField("content_size_in_bytes"))))
+      case 1 => DeleteFile(path, 1, seq, Nil, bytes, fmt)
       case 2 =>
         val ids = opt(df, "equality_ids").map {
           case l: java.util.List[_] =>
@@ -313,7 +310,7 @@ object IcebergImport {
             s"bad equality_ids $other for $path")
         }.getOrElse(throw new UnsupportedOperationException(
           s"equality delete without equality_ids: $path"))
-        DeleteFile(path, 2, seq, ids, fmt, bytes = bytes)
+        DeleteFile(path, 2, seq, ids, bytes, fmt)
       case other => throw new IllegalArgumentException(
         s"unknown data_file.content $other for $path")
     }
@@ -478,17 +475,20 @@ object IcebergImport {
             // from the incremental plan (a CDC consumer reading zero
             // rows for the batch, no error) — refuse loudly instead,
             // like every other unprovable shape here
-            val addedBy = opt(r, "added_snapshot_id")
+            val addedBy = Option(r.getSchema.getField("added_snapshot_id"))
+              .flatMap(_ => Option(r.get("added_snapshot_id")))
               .map(_.asInstanceOf[Long]).getOrElse(
                 throw new UnsupportedOperationException(
                   s"manifest-list row of snapshot $sid carries no " +
                     "added_snapshot_id — appends cannot be attributed " +
                     "to snapshots; read via CALL iceberg_import instead"))
-            val isData = opt(r, "content").forall(_.asInstanceOf[Int] == 0)
+            val isData = Option(r.getSchema.getField("content"))
+              .forall(_ => r.get("content").asInstanceOf[Int] == 0)
             if (isData && addedBy == sid) {
               val mPath = toLocal(r.get("manifest_path").toString)
               readAvro(mPath).foreach { e =>
-                val entrySnap = opt(e, "snapshot_id")
+                val entrySnap = Option(e.getSchema.getField("snapshot_id"))
+                  .flatMap(_ => Option(e.get("snapshot_id")))
                   .map(_.asInstanceOf[Long]).getOrElse(addedBy)
                 if (e.get("status").asInstanceOf[Int] == 1 && entrySnap == sid)
                   decodeFile(e.get("data_file").asInstanceOf[GenericRecord],
@@ -568,11 +568,13 @@ object IcebergImport {
     * classifiers can never drift on count-field handling.
     */
   private def manifestRemovesData(r: GenericRecord): Option[Boolean] = {
-    val content = opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0)
+    val content = Option(r.getSchema.getField("content"))
+      .map(_ => r.get("content").asInstanceOf[Int]).getOrElse(0)
     if (content != 0) None
     else Some {
       def cnt(n: String): Option[Int] =
-        opt(r, n).map(_.asInstanceOf[Number].intValue())
+        Option(r.getSchema.getField(n)).flatMap(_ => Option(r.get(n)))
+          .map(_.asInstanceOf[Number].intValue())
       cnt("deleted_files_count").orElse(cnt("deleted_data_files_count")) match {
         case Some(c) => c > 0
         case None => readAvro(toLocal(r.get("manifest_path").toString))
@@ -762,8 +764,8 @@ object IcebergImport {
     *
     * Binding is FIELD-ID-FIRST: if any data file's footer carries
     * field ids (parquet field ids / ORC `iceberg.id` attributes —
-    * external Iceberg engines stamp both), files are grouped by their
-    * footer id→name mapping; each group is scanned under its
+    * external Iceberg engines stamp both), files are grouped by the
+    * physical names their footer ids give; each group is scanned under its
     * own physical names and renamed to the schema names, so a column
     * renamed by the external engine binds by ID instead of silently
     * null-filling under its old name. Ids the footer lacks fall back
@@ -771,7 +773,7 @@ object IcebergImport {
     * O(files) for every table, id-less ones included (every graft
     * export): each parquet/ORC file's footer is opened once at its
     * manifest length, in parallel — the cost Iceberg's own per-task
-    * footer opens pay at execution instead (see [[boundFormatScan]]
+    * footer opens pay at execution instead (see [[formatScan]]
     * for why no file is skipped).
     *
     * Id-less path: EXPLICIT schema, not footer inference — after
@@ -785,9 +787,10 @@ object IcebergImport {
     p.dataFiles.groupBy(_.format).toSeq.sortBy(_._1).map {
       case ("ORC", fs) => boundOrcScan(spark, p, fs, needPositions)
       case ("AVRO", fs) => boundAvroScan(spark, p, fs)
-      case (_, fs) => boundFormatScan(spark, p, fs,
+      case (_, fs) => formatScan(spark, fs, p.schema,
+        p.fieldIdToName.map(_.swap),
         Seq(filePath, col("_metadata.row_index").as("__ice_ri")),
-        footerIds(spark, _))
+        deleteFile = false)
     }.reduce(_ unionByName _)
 
   /** The `__ice_fp` column of a native (parquet/ORC) read: Spark renders
@@ -802,19 +805,22 @@ object IcebergImport {
   private[graft] val PosDeleteIds =
     Map("file_path" -> 2147483546, "pos" -> 2147483545)
 
-  /** Rows of foreign files in any mix of the three formats — the one
-    * PARQUET/ORC/AVRO dispatch of the delete-file reads: `schema`
-    * columns (bound by name for parquet/ORC, field-id-first through
-    * `nameToId` for avro) plus `__ice_fp`, the row's file in the
-    * canonical [[normStr]] form. Callers keep only their own `select`.
+  /** Rows of foreign delete files in any mix of the three formats — the
+    * one PARQUET/ORC/AVRO dispatch of the delete-file reads: `schema`
+    * columns, bound field-id-first through `nameToId` like the data
+    * scan, plus `__ice_fp`, the row's file in the canonical [[normStr]]
+    * form. A delete file that carries a `schema` column neither by id
+    * nor by name refuses: read as nulls, its rows would delete the wrong
+    * data rows. Callers keep only their own `select`.
     */
   private[graft] def fileRows(spark: SparkSession, files: Seq[IceFile],
       schema: StructType, nameToId: Map[String, Int]): DataFrame =
     files.groupBy(_.format).toSeq.sortBy(_._1).map {
       case ("AVRO", fs) =>
-        avroScan(spark, fs, schema, nameToId).drop("__ice_ri")
-      case (_, fs) => frameOf(spark, fs, schema).select(
-        schema.fieldNames.map(col).toSeq :+ filePath: _*)
+        avroScan(spark, fs, schema, nameToId, deleteFile = true)
+          .drop("__ice_ri")
+      case (_, fs) =>
+        formatScan(spark, fs, schema, nameToId, Seq(filePath), deleteFile = true)
     }.reduce(_ unionByName _)
 
   /** Spark's native read of PARQUET or ORC files (one format per call)
@@ -822,24 +828,17 @@ object IcebergImport {
     */
   private def frameOf(spark: SparkSession, files: Seq[IceFile],
       schema: StructType): DataFrame =
-    ParquetReadBridge.frame(spark, statusesOf(spark, files), schema,
+    ParquetReadBridge.frame(spark, statusesOf(files), schema,
       if (files.head.format == "ORC") new OrcFileFormat
       else new ParquetFileFormat)
 
-  /** The Hadoop statuses every foreign read plans from: each file at
-    * its manifest `file_size_in_bytes` (the length Iceberg's own readers
-    * open it at), so no read lists, globs or stats storage. Only a file
-    * built in code with [[UnknownBytes]] is stat'ed.
+  /** The Hadoop statuses every parquet/ORC foreign read plans from:
+    * each file at its manifest `file_size_in_bytes` (the length
+    * Iceberg's own readers open it at), so no read lists, globs or
+    * stats storage.
     */
-  private[graft] def statusesOf(spark: SparkSession,
-      files: Seq[IceFile]): Seq[FileStatus] = {
-    lazy val conf = spark.sessionState.newHadoopConf()
-    files.map { f =>
-      val p = hadoopPath(f.path)
-      if (f.bytes == UnknownBytes) p.getFileSystem(conf).getFileStatus(p)
-      else new FileStatus(f.bytes, false, 0, 0L, 0L, p)
-    }
-  }
+  private[graft] def statusesOf(files: Seq[IceFile]): Seq[FileStatus] =
+    files.map(f => new FileStatus(f.bytes, false, 0, 0L, 0L, hadoopPath(f.path)))
 
   /** A plan location as a Hadoop path: URIs as-is, local paths as
     * `file:` URIs (built without touching the file, unlike `File.toURI`). */
@@ -873,32 +872,27 @@ object IcebergImport {
     * avro-format DELETE files (`write.delete.format=avro` tables),
     * whose rows are plain records under the same binding rules.
     * Emits `schema` columns + `__ice_fp` (canonical file path) +
-    * `__ice_ri` (exact row position in file order). Each task opens
-    * its file at the manifest length ([[statusesOf]]), never a stat.
+    * `__ice_ri` (exact row position in file order). A `deleteFile`
+    * lacking a `schema` column refuses (see [[fileRows]]).
     */
   private def avroScan(spark: SparkSession, files: Seq[IceFile],
-      schema: StructType, nameToId: Map[String, Int]): DataFrame = {
+      schema: StructType, nameToId: Map[String, Int],
+      deleteFile: Boolean = false): DataFrame = {
     val bc = broadcastHadoopConf(spark)
-    val located = statusesOf(spark, files).map(st =>
-      (normStr(st.getPath.toString), st.getLen))
+    val located = files.map(f => normStr(hadoopPath(f.path).toString))
     val rdd = spark.sparkContext
       .parallelize(located, located.size)
-      .flatMap { case (path, len) =>
-        val hp = new org.apache.hadoop.fs.Path(path)
-        val in = hp.getFileSystem(rebuildHadoopConf(bc.value)).open(hp)
+      .flatMap { path =>
         val rd = new DataFileReader[GenericRecord](
-          new org.apache.avro.file.SeekableInput {
-            def seek(p: Long): Unit = in.seek(p)
-            def tell(): Long = in.getPos
-            def length(): Long = len
-            def read(b: Array[Byte], off: Int, n: Int): Int = in.read(b, off, n)
-            def close(): Unit = in.close()
-          },
+          new org.apache.avro.mapred.FsInput(new org.apache.hadoop.fs.Path(path),
+            rebuildHadoopConf(bc.value)),
           new GenericDatumReader[GenericRecord]())
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ =>
             try rd.close() catch { case _: Exception => () }))
         val binder = avroBinder(rd.getSchema, schema.fieldNames.toSeq, nameToId)
+        if (deleteFile) schema.fieldNames.filterNot(binder.contains)
+          .foreach(n => throw missingColumn(path, n))
         var i = -1L
         rd.iterator().asScala.map { rec =>
           i += 1
@@ -1090,7 +1084,7 @@ object IcebergImport {
   /** ORC data files (Hive-lineage shops; iceberg-core writes ORC too).
     * Binding is field-id-first like parquet — iceberg-orc stamps each
     * column's field id as the ORC type attribute `iceberg.id`
-    * ([[orcFooterIds]]) — with name binding (name-mapping semantics:
+    * ([[orcFooter]]) — with name binding (name-mapping semantics:
     * absent column → null) when the footers carry no ids.
     *
     * Spark's ORC `_metadata` struct has NO `row_index` (parquet-only in
@@ -1116,8 +1110,8 @@ object IcebergImport {
         Seq(filePath, col("_metadata.file_block_start").as("__ice_bs"),
           monotonically_increasing_id().as("__ice_mono"))
       else Seq(filePath, lit(null).cast(LongType).as("__ice_ri"))
-    val base = boundFormatScan(spark, p, files, metaCols,
-      orcFooterIds(spark, _))
+    val base = formatScan(spark, files, p.schema,
+      p.fieldIdToName.map(_.swap), metaCols, deleteFile = false)
     if (!needPositions) base
     else {
       // counts come from BASE ITSELF, never a separate scan: split
@@ -1142,90 +1136,103 @@ object IcebergImport {
     }
   }
 
-  /** One format's (parquet or ORC) data files under the spec's
-    * column-binding rules: field-id-first when any file's footer carries
-    * ids (files grouped by their id→name map, each group scanned under
-    * its own physical names and renamed to schema names), explicit-schema
-    * name binding otherwise. See [[boundScan]]'s Scaladoc for why the
-    * id-less path never infers from footers.
+  /** One format's (parquet or ORC) files under the spec's column-binding
+    * rules, emitting `schema` columns + `metaCols`: each schema column
+    * binds to the physical column its footer stamps with the column's
+    * field id (`nameToId`), else by name; files are grouped by the
+    * resulting physical names, each group scanned under its own names
+    * and renamed to schema names. A data file lacking a column reads it
+    * as null (name mapping after additive schema evolution); a
+    * `deleteFile` lacking one refuses (see [[fileRows]]). See
+    * [[boundScan]]'s Scaladoc for why an id-less file is never read by
+    * footer inference.
     */
-  private def boundFormatScan(spark: SparkSession, p: Plan,
-      dataFiles: Seq[DataFile], metaCols: Seq[Column],
-      probe: DataFile => Option[Map[Int, String]]): DataFrame = {
+  private def formatScan(spark: SparkSession, files: Seq[IceFile],
+      schema: StructType, nameToId: Map[String, Int], metaCols: Seq[Column],
+      deleteFile: Boolean): DataFrame = {
+    val footer: IceFile => Footer =
+      if (files.head.format == "ORC") orcFooter(spark, _)
+      else parquetFooter(spark, _)
+    val sameName = spark.sessionState.conf.resolver
     // probe EVERY file (parallel footer reads), never just the head: a
     // migrated table mixes id-less files (name-mapping writers) with
     // id-stamped ones (Iceberg engines), and if the head happened to be
     // id-less, binding ALL files by name would silently null-fill any
     // column an engine renamed in the id-stamped files — an outcome
     // that flipped with manifest ordering
-    val probed = Manifests.fanOut(dataFiles, 2)(f =>
-      (probe(f).getOrElse(Map.empty[Int, String]), f))
-    probed.filter(_._1.nonEmpty) match {
-      case Seq() =>
-        frameOf(spark, dataFiles, p.schema)
-          .select(p.schema.fields.map(f => col(f.name)).toSeq ++ metaCols: _*)
-      case _ =>
-        val nameToId = p.fieldIdToName.map(_.swap)
-        probed
-          .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-          .sortBy(_._2.head.path)
-          .map { case (idMap, files) =>
-            val physNames = p.schema.fields.map(f =>
-              idMap.getOrElse(nameToId(f.name), f.name))
-            if (physNames.distinct.length != physNames.length)
-              throw new UnsupportedOperationException(
-                s"field-id binding of ${files.head.path} maps two schema " +
-                  s"columns to one physical name (${physNames.mkString(", ")})" +
-                  " — refusing rather than mis-binding")
-            val physSchema = StructType(p.schema.fields.zip(physNames)
-              .map { case (f, n) => f.copy(name = n) })
-            frameOf(spark, files, physSchema)
-              .select(p.schema.fields.zip(physNames)
-                .map { case (f, n) => col(n).as(f.name) }.toSeq ++ metaCols: _*)
-          }.reduce(_ unionByName _)
+    val bound = Manifests.fanOut(files, 2) { f =>
+      val cols = footer(f)
+      val ids = idsOf(cols)
+      val phys = schema.fieldNames.toSeq.map(n =>
+        nameToId.get(n).flatMap(ids.get).getOrElse(n))
+      if (deleteFile) phys.filterNot(n => cols.exists(c => sameName(c._1, n)))
+        .foreach(n => throw missingColumn(f.path, n))
+      (phys, f)
     }
+    bound.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
+      .sortBy(_._2.head.path)
+      .map { case (phys, fs) =>
+        if (phys.distinct.length != phys.length)
+          throw new UnsupportedOperationException(
+            s"field-id binding of ${fs.head.path} maps two schema " +
+              s"columns to one physical name (${phys.mkString(", ")})" +
+              " — refusing rather than mis-binding")
+        val named = schema.fields.toSeq.zip(phys)
+        frameOf(spark, fs, StructType(named.map { case (f, n) => f.copy(name = n) }))
+          .select(named.map { case (f, n) => col(n).as(f.name) } ++ metaCols: _*)
+      }.reduce(_ unionByName _)
   }
 
-  /** The footer's field-id → column-name map of one ORC file (from the
-    * `iceberg.id` type attributes iceberg-orc stamps), or None when the
-    * file carries no ids (name-mapping writers, plain Spark ORC).
-    */
-  private def orcFooterIds(spark: SparkSession,
-      f: DataFile): Option[Map[Int, String]] = atFooter(spark, f) { (st, conf) =>
-    val rd = org.apache.orc.OrcFile.createReader(st.getPath,
-      org.apache.orc.OrcFile.readerOptions(conf).maxLength(st.getLen))
-    try {
-      val s = rd.getSchema
-      s.getFieldNames.asScala.zip(s.getChildren.asScala)
-        .flatMap { case (n, t) => Option(t.getAttributeValue("iceberg.id"))
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption).map(_ -> n) }
-        .toMap
-    } finally rd.close()
-  }
+  /** A delete file's refusal to bind `column` (it would read as nulls). */
+  private def missingColumn(path: String, column: String) =
+    new IllegalArgumentException(s"delete file $path carries no column " +
+      s"$column (by field id or by name) — refusing rather than deleting " +
+      "by nulls")
 
-  /** The footer's field-id → column-name map of one parquet file, or
-    * None when the file carries no ids (name-mapping writers).
-    */
-  private def footerIds(spark: SparkSession,
-      f: DataFile): Option[Map[Int, String]] = atFooter(spark, f) { (st, conf) =>
-    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-    try rd.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .flatMap(f => Option(f.getId).map(id => id.intValue() -> f.getName))
-      .toMap
-    finally rd.close()
-  }
+  /** A parquet/ORC file's top-level footer columns: physical name and
+    * the field id its writer stamped, if any. */
+  private type Footer = Seq[(String, Option[Int])]
 
-  /** One file's footer field ids as `ids` reads them, the footer opened
-    * at the file's manifest length; None when it stamps none. A file
-    * shorter than its manifest says fails naming the file, not with a
-    * bare EOF.
+  /** A footer's field-id → physical-name map (empty for id-less files). */
+  private def idsOf(cols: Footer): Map[Int, String] =
+    cols.collect { case (n, Some(id)) => id -> n }.toMap
+
+  /** One ORC file's footer columns (iceberg-orc stamps field ids as the
+    * type attribute `iceberg.id`; name-mapping writers and plain Spark
+    * ORC stamp none).
     */
-  private def atFooter(spark: SparkSession, f: DataFile)(
-      ids: (FileStatus, org.apache.hadoop.conf.Configuration) => Map[Int, String])
-      : Option[Map[Int, String]] = {
-    val st = statusesOf(spark, Seq(f)).head
-    try Some(ids(st, spark.sessionState.newHadoopConf())).filter(_.nonEmpty)
+  private def orcFooter(spark: SparkSession, f: IceFile): Footer =
+    atFooter(spark, f) { (st, conf) =>
+      val rd = org.apache.orc.OrcFile.createReader(st.getPath,
+        org.apache.orc.OrcFile.readerOptions(conf).maxLength(st.getLen))
+      try {
+        val s = rd.getSchema
+        s.getFieldNames.asScala.toSeq.zip(s.getChildren.asScala).map {
+          case (n, t) => n -> Option(t.getAttributeValue("iceberg.id"))
+            .flatMap(v => scala.util.Try(v.trim.toInt).toOption) }
+      } finally rd.close()
+    }
+
+  /** One parquet file's footer columns (parquet field ids; name-mapping
+    * writers stamp none).
+    */
+  private def parquetFooter(spark: SparkSession, f: IceFile): Footer =
+    atFooter(spark, f) { (st, conf) =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try rd.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
+        .map(c => c.getName -> Option(c.getId).map(_.intValue()))
+      finally rd.close()
+    }
+
+  /** One file's footer as `read` decodes it, opened at the file's
+    * manifest length. A file shorter than its manifest says fails naming
+    * the file, not with a bare EOF.
+    */
+  private def atFooter(spark: SparkSession, f: IceFile)(
+      read: (FileStatus, org.apache.hadoop.conf.Configuration) => Footer): Footer = {
+    val st = statusesOf(Seq(f)).head
+    try read(st, spark.sessionState.newHadoopConf())
     catch { case e: java.io.EOFException => throw new java.io.IOException(
       s"${f.path} is shorter than its manifest length ${st.getLen}", e) }
   }
@@ -1265,16 +1272,15 @@ object IcebergImport {
     // file — the loop below naturally skips id-less footers
     val nameToId = p.fieldIdToName.map(_.swap)
     files.foreach { f =>
-      footerIds(spark, f).foreach { idMap =>
-        val drifted = p.schema.fields.flatMap(sf =>
-          nameToId.get(sf.name).flatMap(idMap.get)
-            .filter(_ != sf.name).map(phys => s"${sf.name} (stored as $phys)"))
-        if (drifted.nonEmpty) throw new UnsupportedOperationException(
-          s"${f.path} stores column(s) ${drifted.mkString(", ")} under a " +
-            "physical name the schema renamed away — a name-bound " +
-            "stream would silently null-fill them. Read via CALL " +
-            "iceberg_import (field-id binding) instead")
-      }
+      val idMap = idsOf(parquetFooter(spark, f))
+      val drifted = p.schema.fields.flatMap(sf =>
+        nameToId.get(sf.name).flatMap(idMap.get)
+          .filter(_ != sf.name).map(phys => s"${sf.name} (stored as $phys)"))
+      if (drifted.nonEmpty) throw new UnsupportedOperationException(
+        s"${f.path} stores column(s) ${drifted.mkString(", ")} under a " +
+          "physical name the schema renamed away — a name-bound " +
+          "stream would silently null-fill them. Read via CALL " +
+          "iceberg_import (field-id binding) instead")
     }
   }
 

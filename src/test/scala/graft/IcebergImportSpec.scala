@@ -333,6 +333,54 @@ class IcebergImportSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll
       (10 until 15).map(i => (i, s"b$i")))
   }
 
+  test("equality deletes bind field-id-first: a parquet delete file " +
+    "written under a column's pre-rename name deletes by id; an id-less " +
+    "one lacking the column refuses instead of deleting by nulls") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.MetadataBuilder
+    import spark.implicits._
+    val root = Files.createTempDirectory("ice-eq-fid")
+    val dataDir = Files.createDirectories(root.resolve("data"))
+    val metaDir = Files.createDirectories(root.resolve("metadata"))
+    def idMeta(id: Int) =
+      new MetadataBuilder().putLong("parquet.field.id", id.toLong).build()
+    // data file @ seq 1 under the current names; row 5's `v` is null
+    val data = dataDir.resolve("a.parquet")
+    writeOneParquet((0 until 6).map(i => (i, if (i == 5) null else s"a$i"))
+      .toDF("id", "v")
+      .select(col("id").as("id", idMeta(1)), col("v").as("v", idMeta(2))),
+      data)
+    // equality deletes @ seq 2 on field id 2, written BEFORE `old_v` was
+    // renamed to `v`: one stamped with the id, one id-less
+    val stamped = dataDir.resolve("eq-ids.parquet")
+    writeOneParquet(Seq("a1", "a3").toDF("old_v")
+      .select(col("old_v").as("old_v", idMeta(2))), stamped)
+    val idless = dataDir.resolve("eq-noids.parquet")
+    writeOneParquet(Seq("a2").toDF("old_v"), idless)
+    val fields =
+      """{"id":1,"name":"id","required":false,"type":"int"},
+        |{"id":2,"name":"v","required":false,"type":"string"}"""
+        .stripMargin.replaceAll("\n", "")
+    def tableWith(del: Path, snapId: Long): Path = {
+      val dir = Files.createDirectories(metaDir.resolve(s"s$snapId"))
+      val mData = dir.resolve("m-data.avro")
+      writeManifest(mData, Seq((data, 0, Some(1L), Nil)))
+      val mDel = dir.resolve("m-del.avro")
+      writeManifest(mDel, Seq((del, 2, Some(2L), Seq(2))))
+      val listPath = dir.resolve(s"snap-$snapId.avro")
+      writeList(listPath, snapId, Seq((mData, 0, 1L, 1L), (mDel, 1, 2L, 2L)))
+      v2Metadata(dir, root, listPath, snapId, fields, 2)
+    }
+    // id binding deletes a1 and a3; name binding would read the delete
+    // rows as nulls, delete row 5 and keep a1/a3
+    IcebergImport.read(spark, tableWith(stamped, 96L)).orderBy("id")
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq shouldBe
+      Seq((0, "a0"), (2, "a2"), (4, "a4"), (5, null))
+    val err = intercept[IllegalArgumentException](
+      IcebergImport.read(spark, tableWith(idless, 97L)).collect())
+    err.getMessage should (include(idless.toString) and include("column v"))
+  }
+
   test("v1 LEGACY foreign layout: deflate-compressed avro (iceberg-core's " +
     "default codec), required entry snapshot_id, *_data_files_count " +
     "names, EXISTING kept and DELETED skipped") {
@@ -543,7 +591,7 @@ class IcebergImportSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll
     val dataDir = Files.createDirectories(root.resolve("data"))
     val metaDir = Files.createDirectories(root.resolve("metadata"))
     // two ORC files with field ids but DIFFERENT id->name maps → two
-    // scan groups in boundFormatScan; positional deletes force the
+    // scan groups in formatScan; positional deletes force the
     // position-derivation join over their union
     val fileA = dataDir.resolve("a.orc") // pre-rename physical names
     writeOrcWithIds(fileA, (0 until 6).map(i => (i, s"a$i")),

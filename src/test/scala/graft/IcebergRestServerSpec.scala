@@ -4380,12 +4380,12 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
           val postedPlan = basePlan.copy(
             dataFiles = basePlan.dataFiles ++ adds.map(p =>
               graft.versioned.IcebergImport.DataFile(
-                p.toString, nextSeq)),
+                p.toString, nextSeq, Files.size(p))),
             deleteFiles =
               posFiles.map(p => graft.versioned.IcebergImport.DeleteFile(
-                p.toString, 1, nextSeq, Nil)) ++
+                p.toString, 1, nextSeq, Nil, Files.size(p))) ++
               eqFiles.map(p => graft.versioned.IcebergImport.DeleteFile(
-                p.toString, 2, nextSeq, Seq(idFieldId))))
+                p.toString, 2, nextSeq, Seq(idFieldId), Files.size(p))))
           val expected = graft.versioned.IcebergImport
             .readPlan(spark, postedPlan)
             .collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sorted
