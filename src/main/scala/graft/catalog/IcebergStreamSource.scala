@@ -12,7 +12,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.versioned.{IcebergImport, Json}
+import graft.versioned.{IcebergImport, IcebergMeta, Json}
 
 /** Structured-Streaming source over an EXTERNAL Apache Iceberg table —
   * the continuous leg of the consumer-side interop (batch =
@@ -86,6 +86,14 @@ private object IcebergChangesProvider {
       "iceberg-changes needs a path: .load(<table dir or metadata json>)"))
   def isCdc(options: CaseInsensitiveStringMap): Boolean =
     options.getOrDefault("cdc", "false").toBoolean
+
+  private val VersionRe = """v(\d+)\.metadata\.json$""".r
+  /** N of a `vN.metadata.json` location; 0 for any other name. */
+  def versionOf(metaLoc: String): Int =
+    VersionRe.findFirstMatchIn(metaLoc).map(_.group(1).toInt).getOrElse(0)
+  /** The location of version `k` beside `metaLoc`. */
+  def versionLoc(metaLoc: String, k: Int): String =
+    VersionRe.replaceFirstIn(metaLoc, s"v$k.metadata.json")
 }
 
 final class IcebergChangesTable(loc: String, schema0: StructType)
@@ -163,11 +171,7 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
   // a given retained set; expiring versions a checkpointed offset still
   // depends on breaks resumability (the documented retention contract).
 
-  private val VersionRe = """v(\d+)\.metadata\.json$""".r
-  private def versionOf(metaLoc: String): Int =
-    VersionRe.findFirstMatchIn(metaLoc).map(_.group(1).toInt).getOrElse(0)
-  private def versionLoc(metaLoc: String, k: Int): String =
-    VersionRe.replaceFirstIn(metaLoc, s"v$k.metadata.json")
+  import IcebergChangesProvider.{versionLoc, versionOf}
 
   /** path → version that first listed it; grown monotonically. Size is
     * O(live files) — the same order as any Iceberg planner's file list
@@ -305,15 +309,13 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
     * delete files pass here — delete-file presence is [[planOf]]'s
     * contract (refuse unless skipDeletes).
     */
-  private def guardSnapshots(metaLoc: String, k: Int): Unit =
-    IcebergImport.snapshotInfos(metaLoc).foreach { s =>
+  private def guardSnapshots(meta: IcebergMeta.Table, k: Int): Unit =
+    meta.snapshots.foreach { s =>
       if (!seenSnaps.contains(s.id)) {
         // classify BEFORE marking seen: a refused snapshot must refuse
         // again on the engine's retry, not slip through as already-seen
         if (k > guardFrom) {
-          val op = s.summaryOp.getOrElse(
-            if (IcebergImport.provablyAppendOnlyAt(s.manifestList)) "append"
-            else "summary-less (and not provably append-only)")
+          val op = IcebergImport.operationOf(s)
           lazy val remedy = "an append-only stream tracking consumption " +
             "by path would re-emit the rewritten rows as new. Restart " +
             "the stream with a fresh checkpoint (re-reads the current " +
@@ -356,8 +358,9 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
     * refuse rather than silently null-fill (the batch import
     * field-id-binds instead; point users there).
     */
-  private def planOf(metaLoc: String): IcebergImport.Plan = {
-    val p = IcebergImport.plan(metaLoc, None)
+  private def planOf(metaLoc: String,
+      meta: IcebergMeta.Table): IcebergImport.Plan = {
+    val p = IcebergImport.plan(meta, None)
     if (p.deleteFiles.nonEmpty && !skipDeletes)
       throw new UnsupportedOperationException(
         s"$metaLoc has ${p.deleteFiles.size} delete file(s); an " +
@@ -396,8 +399,9 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
         val loc = versionLoc(metaLoc, k)
         try {
           IcebergChangesMicroBatchStream.replayedVersions.incrementAndGet()
-          guardSnapshots(loc, k)
-          val files = IcebergImport.plan(loc, None).dataFiles
+          val meta = IcebergImport.metadataAt(loc)
+          guardSnapshots(meta, k)
+          val files = IcebergImport.plan(meta, None).dataFiles
           guardLiveSet(files.map(_.path), k)
           val fresh = files.map(_.path).filterNot(firstSeen.contains)
           fresh.foreach(firstSeen.update(_, k))
@@ -413,8 +417,9 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
         // leave a retry re-diffing older versions against k's live set
         builtThrough = math.max(builtThrough, k)
       }
-      guardSnapshots(metaLoc, v)
-      val p = planOf(metaLoc)
+      val meta = IcebergImport.metadataAt(metaLoc)
+      guardSnapshots(meta, v)
+      val p = planOf(metaLoc, meta)
       guardLiveSet(p.dataFiles.map(_.path), v)
       if (v > builtThrough) {
         val fresh = p.dataFiles.map(_.path).filterNot(firstSeen.contains)
@@ -501,13 +506,10 @@ final class IcebergCdcMicroBatchStream(loc: String,
     protected val maxStepsPerTrigger: Option[Int] = None)
     extends StagedCdcStream {
 
-  private val VersionRe = """v(\d+)\.metadata\.json$""".r
-  private def versionOf(metaLoc: String): Int =
-    VersionRe.findFirstMatchIn(metaLoc).map(_.group(1).toInt).getOrElse(0)
+  import IcebergChangesProvider.{versionLoc, versionOf}
   override protected def stageName: String = "graft-cdc-staged"
   override protected def tagOf(token: String): String =
-    if (token.isEmpty) "0"
-    else VersionRe.findFirstMatchIn(token).map(_.group(1)).getOrElse("0")
+    versionOf(token).toString
   override protected def computeDiff(from: Option[String],
       to: String): DataFrame =
     IcebergImport.changesBetweenVersions(SparkSession.active, from, to)
@@ -525,11 +527,10 @@ final class IcebergCdcMicroBatchStream(loc: String,
     val headV = versionOf(head)
     val fromV = if (from.isEmpty) 0 else versionOf(from)
     var target = math.min(fromV.toLong + steps, headV.toLong).toInt
-    while (target < headV && !IcebergImport.existsAt(
-        VersionRe.replaceFirstIn(head, s"v$target.metadata.json")))
+    while (target < headV &&
+        !IcebergImport.existsAt(versionLoc(head, target)))
       target += 1
-    if (target >= headV) head
-    else VersionRe.replaceFirstIn(head, s"v$target.metadata.json")
+    if (target >= headV) head else versionLoc(head, target)
   }
 
   override protected def mkOffset(token: String): Offset =

@@ -4,14 +4,18 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.UUID
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.ParquetReadBridge
 import org.apache.spark.sql.types._
+
+import IcebergMeta.{PartitionCodec, partitionCodec}
 
 /** Export a graft snapshot as APACHE ICEBERG table metadata so external
   * engines — Trino, DuckDB's iceberg extension, any iceberg-core
@@ -63,10 +67,6 @@ import org.apache.spark.sql.types._
   * stay correct either way.
   */
 object IcebergExport {
-
-  /** Iceberg spec: reserved field ids of the positional-delete schema. */
-  val DeletePathFieldId = 2147483546L
-  val DeletePosFieldId = 2147483545L
 
   /** The exported Iceberg snapshot id of a graft table snapshot: the
     * stable 64-bit name-UUID of the graft snapshot sha. ONE definition —
@@ -179,21 +179,69 @@ object IcebergExport {
     }
   }
 
-  /** Write Iceberg metadata for `ref:key` under `dest` (a fresh export
-    * directory). Returns the path of the written metadata JSON. This
-    * overload has no SparkSession, so non-equality merge-on-read
-    * tombstones refuse.
-    */
-  def export(repo: GraftRepo, ref: String, key: String, dest: Path): Path =
-    export(repo, ref, key, dest, None)
-
-  /** `spark` enables the v2 positional-delete path for merge-on-read
-    * snapshots (CALL graft.system.iceberg_export passes the active
-    * session).
+  /** Write Iceberg metadata for `ref:key` under `dest`. Returns the path
+    * of the written metadata JSON.
+    *
+    * History: `maxSnapshots` > 1 additionally exports up to that many of
+    * the branch's PRIOR table versions (first-parent commit walk) as real
+    * Iceberg snapshots with `snapshot-log` and parent-snapshot-id links,
+    * so external engines time travel over graft history. History covers
+    * the longest eligible suffix of the chain: it stops at a schema or
+    * partition-spec change (the export carries ONE schema), at a version
+    * whose files were vacuumed away, or at the table's creation.
+    * Added/existing attribution is real: inline manifests stamp per-entry
+    * ADDED-vs-EXISTING with the adding snapshot's id (files carried from
+    * an older exported version never re-read as new), and chunk manifests
+    * attribute whole reused chunks via the list row — so incremental
+    * append consumers ([[IcebergImport.readChanges]] included) see
+    * exactly the appended rows. An append-fast-path TAIL chunk rewrite
+    * (carried entries next to new ones in one freshly-written chunk)
+    * splits into an added and a carried (EXISTING, explicit ids)
+    * sub-manifest — the split is window-dependent, so split parts
+    * content-address off the carried set while uniform chunks keep the
+    * window-independent name that cross-emission reuse relies on.
+    *
+    * @param spark         enables the v2 positional-delete path for
+    *                      merge-on-read snapshots (CALL
+    *                      graft.system.iceberg_export passes the active
+    *                      session); without one, non-equality
+    *                      merge-on-read tombstones refuse
+    * @param maxSnapshots  table versions to export (see History above)
+    * @param version       numbers the written metadata file
+    *                      (`v<N>.metadata.json`, version-hint updated to
+    *                      N) — the HadoopCatalog discovery convention.
+    *                      Re-exports into the SAME dest (sync mode) bump
+    *                      it so external readers follow the hint to the
+    *                      newest table state while older metadata
+    *                      versions stay readable in place
+    * @param formatVersion forces the exported Iceberg format version: 0 =
+    *                      auto (v1 for clean snapshots, v2 once delete
+    *                      files or chunk manifests exist), 2 = force v2,
+    *                      3 = v3 — merge-on-read positional tombstones
+    *                      export as PUFFIN DELETION VECTORS (one blob per
+    *                      dirty data file, see [[writeDeletionVectors]])
+    *                      instead of positional delete parquets, and the
+    *                      metadata carries v3 row lineage (`next-row-id`,
+    *                      per-snapshot `first-row-id`, per-data-manifest
+    *                      `first_row_id` with null entry ids → readers
+    *                      assign by the spec's inheritance rule). Row ids
+    *                      are synthetic per export — graft tracks no row
+    *                      identity, so lineage is NOT preserved across
+    *                      rewrites; each exported snapshot is
+    *                      self-consistent
+    * @param extraProps    land in the exported metadata's `properties` map
+    *                      — the REST catalog stamps `write.data.path` here
+    *                      so compliant external writers stage data files
+    *                      directly in the repo's data plane (zero-copy
+    *                      commit registration)
     */
   def export(repo: GraftRepo, ref: String, key: String, dest: Path,
-      spark: Option[SparkSession]): Path =
-    export(repo, ref, key, dest, spark, maxSnapshots = 1)
+      spark: Option[SparkSession] = None, maxSnapshots: Int = 1,
+      version: Int = 1, formatVersion: Int = 0,
+      extraProps: Map[String, String] = Map.empty): Path =
+    java.nio.file.Paths.get(export(repo, ref, key,
+      new NioDestIO(dest): DestIO, spark, maxSnapshots, version,
+      formatVersion, extraProps))
 
   /** One exported table version (internal, pass 1 → pass 2).
     * `chunkRefs` — the graft snapshot's manifest segmentation
@@ -214,73 +262,6 @@ object IcebergExport {
       existingRows: Long, seq: Long, minSeq: Long, specId: Int,
       addedSnapshotId: Long, firstRowId: Option[Long] = None)
 
-  /** Full export. `maxSnapshots` > 1 additionally exports up to that
-    * many of the branch's PRIOR table versions (first-parent commit
-    * walk) as real Iceberg snapshots with `snapshot-log` and
-    * parent-snapshot-id links, so external engines time travel over
-    * graft history. History covers the longest eligible suffix of the
-    * chain: it stops at a schema or partition-spec change (the export
-    * carries ONE schema), at a version whose files were vacuumed away,
-    * or at the table's creation. Added/existing attribution is real
-    * (r10): inline manifests stamp per-entry ADDED-vs-EXISTING with the
-    * adding snapshot's id (files carried from an older exported version
-    * never re-read as new), and chunk manifests attribute whole reused
-    * chunks via the list row — so incremental append consumers
-    * ([[IcebergImport.readChanges]] included) see exactly the appended
-    * rows. An append-fast-path TAIL chunk rewrite (carried entries next
-    * to new ones in one freshly-written chunk) splits into an added and
-    * a carried (EXISTING, explicit ids) sub-manifest — the split is
-    * window-dependent, so split parts content-address off the carried
-    * set while uniform chunks keep the window-independent name that
-    * cross-emission reuse relies on.
-    */
-  def export(repo: GraftRepo, ref: String, key: String, dest: Path,
-      spark: Option[SparkSession], maxSnapshots: Int): Path =
-    export(repo, ref, key, dest, spark, maxSnapshots, version = 1)
-
-  /** `version` numbers the written metadata file (`v<N>.metadata.json`,
-    * version-hint updated to N) — the HadoopCatalog discovery
-    * convention. Re-exports into the SAME dest (sync mode) bump it so
-    * external readers follow the hint to the newest table state while
-    * older metadata versions stay readable in place.
-    */
-  def export(repo: GraftRepo, ref: String, key: String, dest: Path,
-      spark: Option[SparkSession], maxSnapshots: Int, version: Int): Path =
-    java.nio.file.Paths.get(export(repo, ref, key,
-      new NioDestIO(dest): DestIO, spark, maxSnapshots, version,
-      formatVersion = 0))
-
-  /** `formatVersion` forces the exported Iceberg format version:
-    * 0 = auto (v1 for clean snapshots, v2 once delete files or chunk
-    * manifests exist — the pre-r10 behavior), 2 = force v2, 3 = v3 —
-    * merge-on-read positional tombstones export as PUFFIN DELETION
-    * VECTORS (one blob per dirty data file, see
-    * [[writeDeletionVectors]]) instead of positional delete parquets,
-    * and the metadata carries v3 row lineage (`next-row-id`,
-    * per-snapshot `first-row-id`, per-data-manifest `first_row_id`
-    * with null entry ids → readers assign by the spec's inheritance
-    * rule). Row ids are synthetic per export — graft tracks no row
-    * identity, so lineage is NOT preserved across rewrites; each
-    * exported snapshot is self-consistent.
-    */
-  def export(repo: GraftRepo, ref: String, key: String, dest: Path,
-      spark: Option[SparkSession], maxSnapshots: Int, version: Int,
-      formatVersion: Int): Path =
-    export(repo, ref, key, dest, spark, maxSnapshots, version,
-      formatVersion, Map.empty[String, String])
-
-  /** `extraProps` land in the exported metadata's `properties` map —
-    * the REST catalog stamps `write.data.path` here so compliant
-    * external writers stage data files directly in the repo's data
-    * plane (zero-copy commit registration).
-    */
-  def export(repo: GraftRepo, ref: String, key: String, dest: Path,
-      spark: Option[SparkSession], maxSnapshots: Int, version: Int,
-      formatVersion: Int, extraProps: Map[String, String]): Path =
-    java.nio.file.Paths.get(export(repo, ref, key,
-      new NioDestIO(dest): DestIO, spark, maxSnapshots, version,
-      formatVersion, extraProps))
-
   /** String-dest form: a dest with a URI scheme (`s3a://bucket/tbl`,
     * `hdfs://…`, `file:///…`) routes every dest byte through the Hadoop
     * FileSystem for that scheme ([[HadoopDestIO]], resolved via the
@@ -292,12 +273,12 @@ object IcebergExport {
       spark: Option[SparkSession], maxSnapshots: Int, version: Int,
       formatVersion: Int = 0): String =
     export(repo, ref, key, DestIO.of(dest), spark, maxSnapshots, version,
-      formatVersion)
+      formatVersion, Map.empty)
 
   private[versioned] def export(repo: GraftRepo, ref: String, key: String,
       dest: DestIO, spark: Option[SparkSession], maxSnapshots: Int,
-      version: Int, formatVersion: Int = 0,
-      extraProps: Map[String, String] = Map.empty): String = {
+      version: Int, formatVersion: Int,
+      extraProps: Map[String, String]): String = {
     require(formatVersion == 0 || formatVersion == 2 || formatVersion == 3,
       s"format_version must be 0 (auto), 2 or 3 — got $formatVersion")
     val headCommit = repo.resolve(ref)
@@ -344,7 +325,7 @@ object IcebergExport {
     val pfAll = snap.partitionFields
     val srcTypeOf: PartitionField => DataType = pf =>
       schema.fields.find(_.name == pf.source).map(_.dataType).getOrElse(NullType)
-    val unmappable = pfAll.filter(pf => partitionAvroSchema(pf, srcTypeOf(pf)).isEmpty)
+    val unmappable = pfAll.filter(pf => partitionCodec(pf, srcTypeOf(pf)).isEmpty)
     val incomplete = pfAll.nonEmpty &&
       snap.files.exists(f => pfAll.exists(pf => !f.partValues.contains(pf.name)))
     val (specFields, fallbackReason) =
@@ -390,18 +371,14 @@ object IcebergExport {
     dest.mkdirs("metadata")
     val nowMs = System.currentTimeMillis()
 
-    // partition-spec fields JSON (shared by metadata JSON + manifest meta)
-    val specFieldList: java.util.List[Any] = java.util.List.of(
-      specFields.zipWithIndex.map { case (pf, i) =>
-        val m = new java.util.LinkedHashMap[String, Any]
-        m.put("name", pf.name)
-        m.put("transform", icebergTransform(pf))
-        m.put("source-id", schema.fieldIndex(pf.source) + 1)
-        m.put("field-id", 1000 + i)
-        m
-      }: _*)
-    val specFieldsJson = new com.fasterxml.jackson.databind.ObjectMapper()
-      .writeValueAsString(specFieldList)
+    // the one schema and partition spec the metadata JSON and every
+    // manifest's key-values carry
+    val iceSchema = icebergSchema(phys)
+    val spec0 = partitionSpec(specFields, schema)
+    // each spec field with its manifest value codec, for every manifest
+    val codecs =
+      specFields.map(pf => pf -> partitionCodec(pf, srcTypeOf(pf)).get)
+    val specFieldsJson = IcebergMeta.specFieldsJson(spec0.fields)
 
     // ---- pass 1: per-version delete files + manifest entries -----------
     // Equality-expressible tombstones (EqualTo/In conjunctions) export
@@ -551,8 +528,8 @@ object IcebergExport {
     // snapshot_id is omitted for chunk manifests (readers inherit it
     // from the list row, the spec's v1/v2 inheritance rule)
     val cfgSha = shaHex(
-      s"${repo.root.toUri}|${icebergSchemaJson(phys)}|$specFieldsJson|$v")
-    val snapMaps = artifacts.map { a =>
+      s"${repo.root.toUri}|${iceSchema.json}|$specFieldsJson|$v")
+    val snapshots = artifacts.map { a =>
       val snapSeq = math.max(prevSeq + 1,
         (a.dataEntries ++ a.deleteEntries).map(_.seq).maxOption.getOrElse(1L))
       prevSeq = snapSeq; lastSnapSeq = snapSeq
@@ -560,7 +537,7 @@ object IcebergExport {
         if (a.chunkRefs.isEmpty) {
           val rel = s"metadata/${UUID.randomUUID()}-m0.avro"
           val bytes = manifestBytes(a.dataEntries, Some(a.snapshotId),
-            icebergSchemaJson(phys), specFields, srcTypeOf, specFieldsJson, v,
+            iceSchema, codecs, specFieldsJson, v,
             manifestContent = "data", specId = 0)
           dest.writeAtomic(rel, bytes)
           val (added, carried) =
@@ -597,9 +574,8 @@ object IcebergExport {
                 def bytesOf() = manifestBytes(es,
                   entrySnapshotId =
                     if (explicitIds) Some(a.snapshotId) else None,
-                  icebergSchemaJson(phys), specFields, srcTypeOf,
-                  specFieldsJson, v, manifestContent = "data",
-                  specId = 0)
+                  iceSchema, codecs, specFieldsJson, v,
+                  manifestContent = "data", specId = 0)
                 // reuse bumps mtime FIRST: the expire sweep's age guard
                 // then protects the file through this emission's
                 // reuse-to-publish window even if no kept version
@@ -674,9 +650,9 @@ object IcebergExport {
         if (entries.isEmpty) None else {
           val rel = s"metadata/${UUID.randomUUID()}-m1.avro"
           val (sf, sfJson) =
-            if (specId == 0) (specFields, specFieldsJson) else (Nil, "[]")
+            if (specId == 0) (codecs, specFieldsJson) else (Nil, "[]")
           val bytes = manifestBytes(entries, Some(a.snapshotId),
-            icebergSchemaJson(phys), sf, srcTypeOf, sfJson, v,
+            iceSchema, sf, sfJson, v,
             manifestContent = "deletes", specId)
           dest.writeAtomic(rel, bytes)
           Some((rel, bytes.length.toLong, entries, specId))
@@ -691,79 +667,38 @@ object IcebergExport {
             MRow(rel, len, 1, entries.size, 0, entries.map(_.rows).sum, 0L,
               snapSeq, entries.map(_.seq).minOption.getOrElse(1L), specId,
               a.snapshotId) }))
-      val snapMap = new java.util.LinkedHashMap[String, Any]
-      snapMap.put("snapshot-id", a.snapshotId)
-      parentId.foreach(p => snapMap.put("parent-snapshot-id", p))
-      if (v >= 2) snapMap.put("sequence-number", snapSeq)
-      if (v >= 3) snapMap.put("first-row-id", snapFirstRowId)
-      snapMap.put("timestamp-ms", a.commitTs)
-      val summary = new java.util.LinkedHashMap[String, Any]
       // classified in pass 1 (append / replace / overwrite) — incremental
       // append consumers filter on it, so a rewrite must never read as an
       // append (double-counted rows) and a compaction reads as "replace"
-      // (skipped, per the spec)
-      summary.put("operation", a.operation)
-      // added-* reflect THIS snapshot's additions (chunk reuse makes the
-      // distinction real); total-* carry the full live state
-      summary.put("added-data-files", dataRows.map(_.addedFiles).sum.toString)
-      summary.put("added-records", dataRows.map(_.addedRows).sum.toString)
-      summary.put("total-data-files", a.dataEntries.size.toString)
-      summary.put("total-records", a.dataEntries.map(_.rows).sum.toString)
-      if (a.deleteEntries.nonEmpty) {
-        summary.put("added-delete-files", a.deleteEntries.size.toString)
-        summary.put("added-position-deletes", a.deleteEntries
-          .filter(_.content == 1).map(_.rows).sum.toString)
-        summary.put("added-equality-deletes", a.deleteEntries
-          .filter(_.content == 2).map(_.rows).sum.toString)
-      }
-      snapMap.put("summary", summary)
-      snapMap.put("manifest-list", dest.uriOf(listRel))
-      snapMap.put("schema-id", 0)
+      // (skipped, per the spec). added-* reflect THIS snapshot's
+      // additions (chunk reuse makes the distinction real); total-* carry
+      // the full live state
+      val summary = ListMap(
+        "operation" -> a.operation,
+        "added-data-files" -> dataRows.map(_.addedFiles).sum.toString,
+        "added-records" -> dataRows.map(_.addedRows).sum.toString,
+        "total-data-files" -> a.dataEntries.size.toString,
+        "total-records" -> a.dataEntries.map(_.rows).sum.toString) ++
+        (if (a.deleteEntries.isEmpty) Nil else Seq(
+          "added-delete-files" -> a.deleteEntries.size.toString,
+          "added-position-deletes" -> a.deleteEntries
+            .filter(_.content == 1).map(_.rows).sum.toString,
+          "added-equality-deletes" -> a.deleteEntries
+            .filter(_.content == 2).map(_.rows).sum.toString))
+      val iceSnap = IcebergMeta.Snapshot(a.snapshotId, parentId,
+        if (v >= 2) Some(snapSeq) else None,
+        if (v >= 3) Some(snapFirstRowId) else None, a.commitTs, Some(summary),
+        Some(dest.uriOf(listRel)), Some(iceSchema.id))
       parentId = Some(a.snapshotId)
-      snapMap
+      iceSnap
     }
     val snapshotId = artifacts.last.snapshotId // head = current snapshot
     // ---- table metadata JSON -------------------------------------------
-    val meta = new java.util.LinkedHashMap[String, Any]
-    meta.put("format-version", v)
-    // STABLE across commits (real Iceberg table identity): derived from
-    // the graft table's coordinates, not the exported snapshot — clients
-    // that cache the uuid (iceberg-core's assert-table-uuid requirement,
-    // REST commit flows) must see the same table after a refresh
-    meta.put("table-uuid", UUID.nameUUIDFromBytes(
-      s"graft:${repo.root}:$ref:$key".getBytes(StandardCharsets.UTF_8))
-      .toString)
-    meta.put("location", dest.uriOf("").stripSuffix("/"))
-    if (v >= 2) meta.put("last-sequence-number", lastSnapSeq)
-    if (v >= 3) meta.put("next-row-id", rowCursor)
-    meta.put("last-updated-ms", nowMs)
-    meta.put("last-column-id", lastColumnId(phys))
-    val schemaMap = icebergSchemaMap(phys)
-    if (v == 1) meta.put("schema", schemaMap) // v1 legacy single schema
-    meta.put("schemas", java.util.List.of(schemaMap))
-    meta.put("current-schema-id", 0)
-    if (v == 1) meta.put("partition-spec", specFieldList) // v1 legacy flat list
-    val spec0 = new java.util.LinkedHashMap[String, Any]
-    spec0.put("spec-id", 0)
-    spec0.put("fields", specFieldList)
     // global (equality) deletes under a partitioned table live in an
     // auxiliary unpartitioned spec
     val usesGlobalDeleteSpec = specFields.nonEmpty &&
       artifacts.exists(_.deleteEntries.exists(_.content == 2))
-    if (usesGlobalDeleteSpec) {
-      val spec1 = new java.util.LinkedHashMap[String, Any]
-      spec1.put("spec-id", 1)
-      spec1.put("fields", java.util.List.of())
-      meta.put("partition-specs", java.util.List.of(spec0, spec1))
-    } else meta.put("partition-specs", java.util.List.of(spec0))
-    meta.put("default-spec-id", 0)
-    meta.put("last-partition-id", 999 + specFields.length)
-    val order0 = new java.util.LinkedHashMap[String, Any]
-    order0.put("order-id", 0)
-    order0.put("fields", java.util.List.of())
-    meta.put("sort-orders", java.util.List.of(order0))
-    meta.put("default-sort-order-id", 0)
-    val props = new java.util.LinkedHashMap[String, Any]
+    val props = new java.util.LinkedHashMap[String, String]
     // USER table properties round-trip to external readers (an engine
     // that sets `owner` or a write.* knob over REST must see it echoed
     // on the next load); graft.* keys are engine state (tombstones,
@@ -791,16 +726,9 @@ object IcebergExport {
     props.put("graft.source-tags", tagSig)
     fallbackReason.foreach(r => props.put("graft.export.partition-fallback", r))
     extraProps.foreach { case (k, vv) => props.put(k, vv) }
-    meta.put("properties", props)
-    meta.put("current-snapshot-id", snapshotId)
     // the spec's branch-ref map: clients (and REST commit flows, which
     // build assert-ref-snapshot-id requirements from it) address the
-    // current state as branch `main`
-    val mainRef = new java.util.LinkedHashMap[String, Any]
-    mainRef.put("snapshot-id", snapshotId)
-    mainRef.put("type", "branch")
-    val refsMap = new java.util.LinkedHashMap[String, Any]
-    refsMap.put("main", mainRef)
+    // current state as branch `main`.
     // graft TAGS serve as READ-ONLY Iceberg tag refs: a tag whose
     // commit holds this table at one of the EXPORTED versions maps to
     // that snapshot, so engines can `VERSION AS OF '<tag>'` by name
@@ -809,47 +737,53 @@ object IcebergExport {
     // tagged commit", which is exactly an Iceberg tag's meaning.
     // Resolution is O(1) commit loads per tag (control-plane few);
     // tags outside the served history window — or predating the
-    // table — are simply not stamped.
-    locally {
-      val sidToIce = artifacts.map(a => a.snap.id -> a.snapshotId).toMap
-      // resolved from the SAME tag snapshot the signature was derived
-      // from (tagEntries), not a re-list — see the consistency note at
-      // the graft.source-tags stamp above
-      tagEntries.foreach { case (t, cid) =>
-        if (!refsMap.containsKey(t)) {
-          scala.util.Try(repo.commit(cid)).toOption
-            .flatMap(c => c.tables.get(key))
-            .flatMap(sidToIce.get)
-            .foreach { sid =>
-              val m = new java.util.LinkedHashMap[String, Any]
-              m.put("snapshot-id", sid)
-              m.put("type", "tag")
-              refsMap.put(t, m)
-            }
-        }
-      }
+    // table — are simply not stamped. Resolved from the SAME tag
+    // snapshot the signature was derived from (tagEntries), not a
+    // re-list — see the consistency note at the graft.source-tags stamp
+    val sidToIce = artifacts.map(a => a.snap.id -> a.snapshotId).toMap
+    val tagRefs = tagEntries.filter(_._1 != "main").flatMap { case (t, cid) =>
+      scala.util.Try(repo.commit(cid)).toOption
+        .flatMap(c => c.tables.get(key))
+        .flatMap(sidToIce.get)
+        .map(sid => t -> IcebergMeta.Ref(sid, "tag"))
     }
-    meta.put("refs", refsMap)
-    meta.put("snapshots", java.util.List.of(snapMaps: _*))
-    // oldest → newest state-change log; external engines time travel
-    // with FOR TIMESTAMP/VERSION AS OF against it
-    meta.put("snapshot-log", java.util.List.of(artifacts.map { a =>
-      val e = new java.util.LinkedHashMap[String, Any]
-      e.put("timestamp-ms", a.commitTs)
-      e.put("snapshot-id", a.snapshotId)
-      e
-    }: _*))
-    meta.put("metadata-log", java.util.List.of())
+    val meta = IcebergMeta.Table(
+      formatVersion = v,
+      // STABLE across commits (real Iceberg table identity): derived from
+      // the graft table's coordinates, not the exported snapshot —
+      // clients that cache the uuid (iceberg-core's assert-table-uuid
+      // requirement, REST commit flows) must see the same table after a
+      // refresh
+      uuid = UUID.nameUUIDFromBytes(
+        s"graft:${repo.root}:$ref:$key".getBytes(StandardCharsets.UTF_8))
+        .toString,
+      location = dest.uriOf("").stripSuffix("/"),
+      lastSequenceNumber = if (v >= 2) Some(lastSnapSeq) else None,
+      nextRowId = if (v >= 3) Some(rowCursor) else None,
+      lastUpdatedMs = nowMs,
+      lastColumnId = lastColumnId(phys),
+      schemas = Seq(iceSchema), currentSchemaId = iceSchema.id,
+      specs = spec0 +: (if (usesGlobalDeleteSpec)
+        Seq(IcebergMeta.PartitionSpec(1, Nil)) else Nil),
+      defaultSpecId = 0, lastPartitionId = 999 + specFields.length,
+      sortOrders = Seq(IcebergMeta.Unsorted), defaultSortOrderId = 0,
+      properties = ListMap.from(props.asScala),
+      currentSnapshotId = Some(snapshotId),
+      refs = ListMap("main" ->
+        IcebergMeta.Ref(snapshotId, "branch")) ++ tagRefs,
+      snapshots = snapshots,
+      // oldest → newest state-change log; external engines time travel
+      // with FOR TIMESTAMP/VERSION AS OF against it
+      snapshotLog = artifacts.map(a => (a.commitTs, a.snapshotId)),
+      metadataLog = Nil)
 
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val metaRel = s"metadata/v$version.metadata.json"
     // pre-publish re-verify of every reused content-addressed file: a
     // concurrent expire sweep on a setTimes-less backend could have
     // deleted one inside the reuse-to-publish window (see ReuseLedger)
     reuse.verify(dest)
     dest.writeAtomic(metaRel,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(meta)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      IcebergMeta.render(meta).getBytes(StandardCharsets.UTF_8))
     // HadoopCatalog-style discovery: readers resolve v<hint>.metadata.json.
     // replaceString, not writeString: external readers and the
     // iceberg-changes stream poll the hint WHILE sync emissions rewrite
@@ -931,25 +865,21 @@ object IcebergExport {
   private def statPathIds(phys: StructType)
       : Seq[(String, Int, DataType)] = {
     val out = Seq.newBuilder[(String, Int, DataType)]
-    def walk(prefix: Seq[String], fields: java.util.List[_]): Unit =
-      fields.forEach { fo =>
-        val fm = fo.asInstanceOf[java.util.Map[String, Any]]
-        val name = fm.get("name").asInstanceOf[String]
-        val id = fm.get("id").asInstanceOf[Int]
+    def walk(prefix: Seq[String], fields: Seq[JsonNode]): Unit =
+      fields.foreach { f =>
+        val name = f.get("name").asText()
         val path = (prefix :+ name).mkString(".")
-        fm.get("type") match {
-          case t: java.util.Map[_, _] if t.get("type") == "struct" =>
-            walk(prefix :+ name,
-              t.asInstanceOf[java.util.Map[String, Any]]
-                .get("fields").asInstanceOf[java.util.List[_]])
-          case _: java.util.Map[_, _] => () // list/map: repeated leaves
-          case _ =>
-            TableOps.leafField(phys, path).foreach(dt => out += ((path, id, dt)))
-        }
+        val t = f.get("type")
+        if (t.isTextual) TableOps.leafField(phys, path)
+          .foreach(dt => out += ((path, f.get("id").asInt(), dt)))
+        else if (t.get("type").asText() == "struct")
+          walk(prefix :+ name, t.get("fields").elements().asScala.toSeq)
+        // list/map: repeated leaves carry no row-level stats
       }
-    walk(Nil, schemaNodes(phys)._1.get("fields").asInstanceOf[java.util.List[_]])
+    walk(Nil, schemaNodes(phys)._1)
     out.result()
   }
+
 
   // ---- equality delete files (v2) --------------------------------------
 
@@ -1232,8 +1162,9 @@ object IcebergExport {
             org.apache.spark.sql.functions.concat(
               lit("untagged delete source (path rendering mismatch): "),
               col("__src")))).otherwise(col("__gid")).as("__gid"),
-        col("file_path").as("file_path", idMeta(DeletePathFieldId)),
-        col("pos").as("pos", idMeta(DeletePosFieldId)))
+        col("file_path").as("file_path",
+          idMeta(IcebergImport.PosDeleteIds("file_path"))),
+        col("pos").as("pos", idMeta(IcebergImport.PosDeleteIds("pos"))))
       .repartition(col("__gid"))
       .sortWithinPartitions("__gid", "file_path", "pos")
       .write.mode("overwrite").partitionBy("__gid").parquet(tmp.toString)
@@ -1466,112 +1397,74 @@ object IcebergExport {
 
   /** Iceberg type node (JSON string for primitives, object for
     * struct/list/map) plus the name-mapping child entries nested fields
-    * need (null for primitives), allocating nested field ids from
+    * need (empty for primitives), allocating nested field ids from
     * `next`. Mapping names follow the spec's canonical child names —
     * struct children by field name, `element` for list, `key`/`value`
     * for map — which bind Spark's parquet 3-level list / key_value
     * layout in every Iceberg reader's name-mapping resolver.
     */
   private def typeNode(dt: DataType, next: () => Int)
-      : (Any, java.util.List[Any]) = dt match {
+      : (JsonNode, Seq[JsonNode]) = dt match {
     case s: StructType =>
       // ids for all direct children first, then recurse — Iceberg's own
       // assignFreshIds order, keeps sibling ids contiguous
-      val ids = s.fields.map(_ => next())
-      val fields = new java.util.ArrayList[Any]
-      val mapping = new java.util.ArrayList[Any]
-      s.fields.zip(ids).foreach { case (f, id) =>
-        val (t, childMap) = typeNode(f.dataType, next)
-        val m = new java.util.LinkedHashMap[String, Any]
-        m.put("id", id)
-        m.put("name", f.name)
-        m.put("required", false)
-        m.put("type", t)
-        fields.add(m)
-        mapping.add(mappingEntry(id, f.name, childMap))
-      }
-      val m = new java.util.LinkedHashMap[String, Any]
-      m.put("type", "struct")
-      m.put("fields", fields)
-      (m, mapping)
+      val (fields, mapping) = structNodes(s, s.fields.map(_ => next()), next)
+      (IcebergMeta.obj("type" -> "struct", "fields" -> fields), mapping)
     case a: ArrayType =>
       val eid = next()
       val (t, childMap) = typeNode(a.elementType, next)
-      val m = new java.util.LinkedHashMap[String, Any]
-      m.put("type", "list")
-      m.put("element-id", eid)
-      m.put("element", t)
-      m.put("element-required", !a.containsNull)
-      val mapping = new java.util.ArrayList[Any]
-      mapping.add(mappingEntry(eid, "element", childMap))
-      (m, mapping)
+      (IcebergMeta.obj("type" -> "list", "element-id" -> eid, "element" -> t,
+        "element-required" -> !a.containsNull),
+        Seq(mappingEntry(eid, "element", childMap)))
     case mt: MapType =>
       val kid = next()
       val (kt, kMap) = typeNode(mt.keyType, next)
       val vid = next()
       val (vt, vMap) = typeNode(mt.valueType, next)
-      val m = new java.util.LinkedHashMap[String, Any]
-      m.put("type", "map")
-      m.put("key-id", kid)
-      m.put("key", kt)
-      m.put("value-id", vid)
-      m.put("value", vt)
-      m.put("value-required", !mt.valueContainsNull)
-      val mapping = new java.util.ArrayList[Any]
-      mapping.add(mappingEntry(kid, "key", kMap))
-      mapping.add(mappingEntry(vid, "value", vMap))
-      (m, mapping)
-    case other => (icebergType(other), null)
+      (IcebergMeta.obj("type" -> "map", "key-id" -> kid, "key" -> kt,
+        "value-id" -> vid, "value" -> vt,
+        "value-required" -> !mt.valueContainsNull),
+        Seq(mappingEntry(kid, "key", kMap), mappingEntry(vid, "value", vMap)))
+    case other => (IcebergMeta.tree(icebergType(other)), Nil)
   }
+
+  /** The field nodes (graft columns are all optional) and name-mapping
+    * entries of struct `s` whose fields take `ids`. */
+  private def structNodes(s: StructType, ids: Seq[Int], next: () => Int)
+      : (Seq[JsonNode], Seq[JsonNode]) =
+    s.fields.toSeq.zip(ids).map { case (f, id) =>
+      val (t, childMap) = typeNode(f.dataType, next)
+      (IcebergMeta.obj("id" -> id, "name" -> f.name, "required" -> false,
+        "type" -> t), mappingEntry(id, f.name, childMap))
+    }.unzip
 
   private def mappingEntry(id: Int, name: String,
-      children: java.util.List[Any]): java.util.Map[String, Any] = {
-    val m = new java.util.LinkedHashMap[String, Any]
-    m.put("field-id", id)
-    m.put("names", java.util.List.of(name))
-    if (children != null && !children.isEmpty) m.put("fields", children)
-    m
-  }
+      children: Seq[JsonNode]): JsonNode =
+    IcebergMeta.obj("field-id" -> id, "names" -> Seq(name),
+      "fields" -> Option(children).filter(_.nonEmpty))
 
-  /** Schema map + name-mapping list + last allocated field id, built in
-    * ONE deterministic traversal so every caller (metadata JSON, each
+  /** Schema fields + name-mapping list + last allocated field id, built
+    * in ONE deterministic traversal so every caller (metadata JSON, each
     * manifest's embedded schema, `schema.name-mapping.default`,
     * `last-column-id`) sees identical ids: top-level columns keep ids
     * 1..n (the ids equality-delete `equality_ids` and manifest stats
     * maps are keyed by), nested fields allocate n+1 onward.
     */
   private def schemaNodes(phys: StructType)
-      : (java.util.Map[String, Any], java.util.List[Any], Int) = {
+      : (Seq[JsonNode], Seq[JsonNode], Int) = {
     var lastId = phys.fields.length
-    val next = () => { lastId += 1; lastId }
-    val fields = new java.util.ArrayList[Any]
-    val mapping = new java.util.ArrayList[Any]
-    phys.fields.zipWithIndex.foreach { case (f, i) =>
-      val (t, childMap) = typeNode(f.dataType, next)
-      val m = new java.util.LinkedHashMap[String, Any]
-      m.put("id", i + 1)
-      m.put("name", f.name)
-      m.put("required", false) // graft parquet columns are all optional
-      m.put("type", t)
-      fields.add(m)
-      mapping.add(mappingEntry(i + 1, f.name, childMap))
-    }
-    val m = new java.util.LinkedHashMap[String, Any]
-    m.put("type", "struct")
-    m.put("schema-id", 0)
-    m.put("fields", fields)
-    (m, mapping, lastId)
+    val (fields, mapping) = structNodes(phys, 1 to lastId,
+      () => { lastId += 1; lastId })
+    (fields, mapping, lastId)
   }
 
-  private def icebergSchemaMap(phys: StructType): java.util.Map[String, Any] =
-    schemaNodes(phys)._1
+  /** The Iceberg schema graft serves for `phys`. Every table version is
+    * served as schema id 0: the exported metadata carries one schema. */
+  private[versioned] def icebergSchema(phys: StructType): IcebergMeta.Schema =
+    IcebergMeta.Schema(0, IcebergMeta.tree(schemaNodes(phys)._1))
 
   private[versioned] def lastColumnId(phys: StructType): Int =
     schemaNodes(phys)._3
-
-  private[versioned] def icebergSchemaJson(phys: StructType): String =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-      .writeValueAsString(icebergSchemaMap(phys))
 
   /** Spec name-mapping (`schema.name-mapping.default`): parquet columns
     * carry no Iceberg field ids, so readers bind file columns to schema
@@ -1579,13 +1472,24 @@ object IcebergExport {
     */
   private def nameMappingJson(phys: StructType): String =
     new com.fasterxml.jackson.databind.ObjectMapper()
-      .writeValueAsString(schemaNodes(phys)._2)
+      .writeValueAsString(IcebergMeta.tree(schemaNodes(phys)._2))
 
   // ---- partition spec export -------------------------------------------
 
+  /** Spec 0 of a table partitioned by `fields` over the LOGICAL `schema`
+    * (a partition field's source is the logical column name, renamed with
+    * its column): source ids are the top-level column ids, partition
+    * field ids 1000 onward. */
+  private[versioned] def partitionSpec(fields: Seq[PartitionField],
+      schema: StructType): IcebergMeta.PartitionSpec =
+    IcebergMeta.PartitionSpec(0, fields.zipWithIndex.map { case (pf, i) =>
+      IcebergMeta.SpecField(pf.name, icebergTransform(pf),
+        Some(schema.fieldIndex(pf.source) + 1), 1000 + i)
+    })
+
   /** Iceberg transform name (spec's canonical singular forms; graft's
     * field model uses Iceberg's Java-API plural temporal names). */
-  private[versioned] def icebergTransform(pf: PartitionField): String = pf.transform match {
+  private def icebergTransform(pf: PartitionField): String = pf.transform match {
     case "identity" => "identity"
     case "bucket" => s"bucket[${pf.numBuckets}]"
     case "truncate" => s"truncate[${pf.numBuckets}]"
@@ -1595,101 +1499,6 @@ object IcebergExport {
     case "hours" => "hour"
     case other => throw new UnsupportedOperationException(
       s"unknown transform: $other")
-  }
-
-  private def logical(t: Schema.Type, logicalType: String,
-      adjustToUtc: Option[Boolean] = None): Schema = {
-    val sc = Schema.create(t)
-    sc.addProp("logicalType", logicalType)
-    adjustToUtc.foreach(b => sc.addProp("adjust-to-utc", b: java.lang.Boolean))
-    sc
-  }
-
-  /** Avro schema of the transform RESULT type (pre-null-union), per the
-    * Iceberg spec's transform result-type table. None = this field has
-    * no manifest value mapping (identity/truncate on an exotic source)
-    * and forces the unpartitioned fallback.
-    */
-  private def partitionAvroSchema(pf: PartitionField,
-      srcType: DataType): Option[Schema] = pf.transform match {
-    case "identity" => srcType match {
-      case ByteType | ShortType | IntegerType => Some(s(Schema.Type.INT))
-      case LongType => Some(s(Schema.Type.LONG))
-      case StringType => Some(s(Schema.Type.STRING))
-      case BooleanType => Some(s(Schema.Type.BOOLEAN))
-      case FloatType => Some(s(Schema.Type.FLOAT))
-      case DoubleType => Some(s(Schema.Type.DOUBLE))
-      case DateType => Some(logical(Schema.Type.INT, "date"))
-      case TimestampType =>
-        Some(logical(Schema.Type.LONG, "timestamp-micros", Some(true)))
-      case TimestampNTZType =>
-        Some(logical(Schema.Type.LONG, "timestamp-micros", Some(false)))
-      case _ => None
-    }
-    case "bucket" => Some(s(Schema.Type.INT))
-    case "truncate" => srcType match {
-      case ByteType | ShortType | IntegerType => Some(s(Schema.Type.INT))
-      case LongType => Some(s(Schema.Type.LONG))
-      case StringType => Some(s(Schema.Type.STRING))
-      case _ => None
-    }
-    case "years" | "months" | "hours" => Some(s(Schema.Type.INT))
-    case "days" => Some(logical(Schema.Type.INT, "date"))
-    case _ => None
-  }
-
-  /** Typed manifest value for one recorded partition-directory string
-    * ([[Partitioning.valuesFromPath]] output: unescaped; nulls are the
-    * hive marker). Directory formats are [[Partitioning]]'s: temporal
-    * transforms use lexically-ordered UTC patterns, integral truncate
-    * records the floor, bucket the int, identity the plain rendering.
-    */
-  private def partitionValue(pf: PartitionField, srcType: DataType,
-      raw: String): Any = {
-    if (raw == Partitioning.NullMarker) return null
-    def micros(sTxt: String): Long = {
-      val ldt = java.time.LocalDateTime.parse(sTxt.replace(' ', 'T'))
-      ldt.toInstant(java.time.ZoneOffset.UTC).getEpochSecond * 1000000L +
-        ldt.getNano / 1000L
-    }
-    pf.transform match {
-      case "identity" => srcType match {
-        case ByteType | ShortType | IntegerType => raw.toInt: Integer
-        case LongType => raw.toLong: java.lang.Long
-        case StringType => raw
-        case BooleanType => raw.toBoolean: java.lang.Boolean
-        case FloatType => raw.toFloat: java.lang.Float
-        case DoubleType => raw.toDouble: java.lang.Double
-        case DateType =>
-          java.time.LocalDate.parse(raw).toEpochDay.toInt: Integer
-        case TimestampType | TimestampNTZType => micros(raw): java.lang.Long
-        case other => throw new UnsupportedOperationException(
-          s"identity partition value on ${other.simpleString}")
-      }
-      case "bucket" => raw.toInt: Integer
-      case "truncate" => srcType match {
-        case ByteType | ShortType | IntegerType => raw.toLong.toInt: Integer
-        case LongType => raw.toLong: java.lang.Long
-        case StringType => raw
-        case other => throw new UnsupportedOperationException(
-          s"truncate partition value on ${other.simpleString}")
-      }
-      // temporal transform results count from the 1970 epoch (spec):
-      // year -> years, month -> months, day -> days (date), hour -> hours
-      case "years" => raw.toInt - 1970: Integer
-      case "months" =>
-        val Array(y, m) = raw.split('-')
-        (y.toInt - 1970) * 12 + (m.toInt - 1): Integer
-      case "days" =>
-        java.time.LocalDate.parse(raw).toEpochDay.toInt: Integer
-      case "hours" =>
-        val p = raw.split('-')
-        val ldt = java.time.LocalDateTime.of(p(0).toInt, p(1).toInt,
-          p(2).toInt, p(3).toInt, 0)
-        (ldt.toEpochSecond(java.time.ZoneOffset.UTC) / 3600).toInt: Integer
-      case other => throw new UnsupportedOperationException(
-        s"unknown transform: $other")
-    }
   }
 
   // ---- Avro layouts ----------------------------------------------------
@@ -1716,13 +1525,12 @@ object IcebergExport {
     * entry's sequence-number pair, data_file.content, and drops v1's
     * block_size_in_bytes.
     */
-  private def manifestEntrySchema(specFields: Seq[PartitionField],
-      srcTypeOf: PartitionField => DataType, v: Int): Schema = {
+  private def manifestEntrySchema(
+      specFields: Seq[(PartitionField, PartitionCodec)], v: Int): Schema = {
     val partition = Schema.createRecord("r102", null, null, false)
     partition.setFields(java.util.List.of(
-      specFields.zipWithIndex.map { case (pf, i) =>
-        field(pf.name, 1000 + i,
-          partitionAvroSchema(pf, srcTypeOf(pf)).get, optional = true)
+      specFields.zipWithIndex.map { case ((pf, codec), i) =>
+        field(pf.name, 1000 + i, codec.avro, optional = true)
       }: _*))
     val dataFile = Schema.createRecord("r2", null, null, false)
     val dfFields = Seq.newBuilder[Schema.Field]
@@ -1795,17 +1603,16 @@ object IcebergExport {
     * references them.
     */
   private def manifestBytes(entries: Seq[MEntry],
-      entrySnapshotId: Option[Long], schemaJson: String,
-      specFields: Seq[PartitionField],
-      srcTypeOf: PartitionField => DataType,
+      entrySnapshotId: Option[Long], schema: IcebergMeta.Schema,
+      specFields: Seq[(PartitionField, PartitionCodec)],
       specFieldsJson: String, v: Int, manifestContent: String,
       specId: Int): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()
-    val entrySchema = manifestEntrySchema(specFields, srcTypeOf, v)
+    val entrySchema = manifestEntrySchema(specFields, v)
     val writer = new DataFileWriter[GenericRecord](
       new GenericDatumWriter[GenericRecord](entrySchema))
-    writer.setMeta("schema", schemaJson)
-    writer.setMeta("schema-id", "0")
+    writer.setMeta("schema", schema.json)
+    writer.setMeta("schema-id", schema.id.toString)
     writer.setMeta("partition-spec", specFieldsJson)
     writer.setMeta("partition-spec-id", specId.toString)
     writer.setMeta("format-version", v.toString)
@@ -1825,13 +1632,14 @@ object IcebergExport {
           df.put("content_size_in_bytes", c.length)
         }
         val part = new GenericData.Record(partSchema)
-        specFields.foreach { pf =>
+        specFields.foreach { case (pf, codec) =>
           // export() guarantees every live data file records every
           // field; a delete file inherits its referenced data file's
           // values (absent only in the unpartitioned-spec case, where
           // the record has no fields)
-          part.put(pf.name, partitionValue(pf, srcTypeOf(pf),
-            me.partValues(pf.name)))
+          val raw = me.partValues(pf.name)
+          part.put(pf.name,
+            if (raw == Partitioning.NullMarker) null else codec.toManifest(raw))
         }
         df.put("partition", part)
         df.put("record_count", me.rows)
@@ -1979,7 +1787,9 @@ object IcebergExport {
     * Pass 0 only when no export to this dest can be in flight; even
     * with the guard, do not let a single emission straddle the window,
     * and note a concurrent emission REUSING a dead-only chunk manifest
-    * still races the sweep (same straddle caveat).
+    * still races the sweep (same straddle caveat). A version file, list
+    * or manifest that is missing is skipped as vanished; any other read
+    * failure throws before the sweep deletes anything.
     */
   def expireDest(dest: Path, keepVersions: Int,
       olderThanMs: Long = 600000L): (Int, Int) =
@@ -1991,7 +1801,7 @@ object IcebergExport {
       olderThanMs: Long): (Int, Int) =
     expireDest(DestIO.of(dest), keepVersions, olderThanMs)
 
-  private[versioned] def expireDest(dest: DestIO, keepVersions: Int,
+  private[graft] def expireDest(dest: DestIO, keepVersions: Int,
       olderThanMs: Long): (Int, Int) = {
     require(keepVersions >= 1, "keepVersions must be >= 1")
     val cutoff = System.currentTimeMillis() - olderThanMs
@@ -2000,49 +1810,48 @@ object IcebergExport {
         (try dest.mtimeMs(rel) <= cutoff // <= : olderThanMs=0 means "now"
         catch { case _: Exception => false })
     if (!dest.isDirectory("metadata")) return (0, 0)
-    val Re = """v(\d+)\.metadata\.json""".r
-    val versions = dest.listNames("metadata")
-      .flatMap {
-        case Re(n) => Some(n.toInt)
-        case _ => None
-      }.sorted
+    val versions = IcebergSync.versionsOf(dest).sorted
     val kept = versions.takeRight(keepVersions)
     val dead = versions.dropRight(keepVersions)
 
     // everything a version set can reach: manifest lists → manifests →
-    // (delete manifests only) delete parquets under dest — all as
-    // dest-relative paths (URIs outside the dest are never swept anyway)
-    def readAvro(rel: String): Seq[GenericRecord] = {
-      val rd = new org.apache.avro.file.DataFileReader[GenericRecord](
-        new org.apache.avro.file.SeekableByteArrayInput(dest.readBytes(rel)),
-        new org.apache.avro.generic.GenericDatumReader[GenericRecord]())
-      try rd.iterator().asScala.toList finally rd.close()
-    }
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    // (delete manifests only) delete files under dest — all as
+    // dest-relative paths (URIs outside the dest are never swept anyway).
+    // A file missing here vanished under a concurrent sweep and is
+    // skipped; any other read failure aborts the sweep before it deletes
+    // anything — a kept version whose files could not be read would
+    // leave them unreferenced, and the sweep would delete live files.
+    def present(rel: String): Option[Array[Byte]] =
+      try Some(dest.readBytes(rel))
+      catch {
+        case _: java.nio.file.NoSuchFileException |
+             _: java.io.FileNotFoundException => None
+      }
+    // decoded entry paths are local paths for `file:` locations
+    def relOfFile(loc: String): Option[String] = dest.relOf(
+      if (DestIO.hasScheme(loc)) loc
+      else java.nio.file.Paths.get(loc).toUri.toString)
     def reach(vs: Seq[Int]): scala.collection.mutable.Set[String] = {
       val out = scala.collection.mutable.Set.empty[String]
       vs.foreach { v =>
-        try {
-          val meta = om.readTree(dest.readString(s"metadata/v$v.metadata.json"))
-          val snaps = meta.get("snapshots")
-          (0 until snaps.size()).foreach { i =>
-            dest.relOf(snaps.get(i).get("manifest-list").asText()).foreach { list =>
+        present(s"metadata/v$v.metadata.json").foreach { b =>
+          val meta = IcebergMeta.parse(new String(b, StandardCharsets.UTF_8))
+          meta.snapshots.foreach { snap =>
+            dest.relOf(snap.manifestList).foreach { list =>
               out += list
-              if (dest.isFile(list)) readAvro(list).foreach { mf =>
-                dest.relOf(mf.get("manifest_path").toString).foreach { m =>
-                  out += m
-                  val isDelete = Option(mf.getSchema.getField("content"))
-                    .exists(_ => mf.get("content").asInstanceOf[Int] == 1)
-                  if (isDelete && dest.isFile(m)) readAvro(m).foreach { e =>
-                    val df = e.get("data_file").asInstanceOf[GenericRecord]
-                    dest.relOf(df.get("file_path").toString)
-                      .foreach(out += _)
+              present(list).toSeq.flatMap(IcebergMeta.manifestFiles)
+                .foreach { m =>
+                  dest.relOf(m.path).foreach { rel =>
+                    out += rel
+                    if (m.content == 1) present(rel).toSeq
+                      .flatMap(IcebergMeta.entries(_, m))
+                      .foreach(e => relOfFile(e.file(meta.formatVersion).path)
+                        .foreach(out += _))
                   }
                 }
-              }
             }
           }
-        } catch { case _: Exception => () } // version vanished under us
+        }
       }
       out
     }
@@ -2055,12 +1864,6 @@ object IcebergExport {
     // sweeps below need only (not referenced) && sweepable; the guard
     // bounds reclamation delay, never safety.
 
-    var metaDeleted = 0
-    // superseded version files are safe at any age (they are OLD by
-    // construction); the orphan sweeps below are what need the guard
-    dead.foreach { v =>
-      if (dest.delete(s"metadata/v$v.metadata.json")) metaDeleted += 1
-    }
     val avroCandidates = dest.listNames("metadata")
       .filter(_.endsWith(".avro")).map(n => s"metadata/$n")
       .filterNot(referenced.contains)
@@ -2082,12 +1885,15 @@ object IcebergExport {
     val lateRefs: scala.collection.Set[String] =
       if (avroCandidates.isEmpty && dataCandidates.isEmpty) Set.empty
       else {
-        val late = dest.listNames("metadata").flatMap {
-          case Re(n) => Some(n.toInt)
-          case _ => None
-        }.filterNot(versions.contains)
+        val late = IcebergSync.versionsOf(dest).filterNot(versions.contains)
         if (late.isEmpty) Set.empty else reach(late.sorted)
       }
+    var metaDeleted = 0
+    // superseded version files are safe at any age (they are OLD by
+    // construction); the orphan sweeps below are what need the guard
+    dead.foreach { v =>
+      if (dest.delete(s"metadata/v$v.metadata.json")) metaDeleted += 1
+    }
     avroCandidates.filterNot(lateRefs.contains)
       .foreach { rel => if (dest.delete(rel)) metaDeleted += 1 }
 

@@ -111,6 +111,7 @@ object IcebergImport {
   // store an external engine wrote it to.
 
   import DestIO.hasScheme
+  import IcebergMeta.toLocal
 
   private def hadoopFs(s: String): org.apache.hadoop.fs.FileSystem = {
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
@@ -146,10 +147,6 @@ object IcebergImport {
     * `v<N>.metadata.json`, so re-reading the same dir after a sync-mode
     * re-export sees the new table state; a file path is used as-is.
     */
-  def resolveMetadata(p: Path): Path =
-    Paths.get(resolveMetadataLoc(p.toString))
-
-  /** String/URI form of [[resolveMetadata]]. */
   def resolveMetadataLoc(p: String): String =
     if (!isDirAt(p)) p
     else {
@@ -171,48 +168,38 @@ object IcebergImport {
     * None — time travel over a history export's `snapshots` list.
     * `metadataLoc` may be a local path or a URI with a Hadoop scheme.
     */
-  /** format version + current schema (+ its field id → name map) of a
-    * parsed metadata tree — shared by [[plan]] and [[changesPlan]].
-    */
-  private def parseHeader(meta: com.fasterxml.jackson.databind.JsonNode)
-      : (Int, StructType, Map[Int, String]) = {
-    val v = meta.get("format-version").asInt()
-    require(v == 1 || v == 2 || v == 3,
-      s"unsupported Iceberg format-version: $v")
-    // current schema: v2 `schemas` + current-schema-id, v1 may have only
-    // the legacy single `schema`
-    val schemaNode = {
-      val byId = Option(meta.get("schemas")).filter(_.isArray).flatMap { arr =>
-        val want = Option(meta.get("current-schema-id")).map(_.asInt()).getOrElse(0)
-        arr.elements().asScala.find(s =>
-          Option(s.get("schema-id")).forall(_.asInt() == want))
-      }
-      byId.orElse(Option(meta.get("schema"))).getOrElse(
-        throw new IllegalArgumentException("metadata has no schema"))
+  def plan(metadataLoc: String, snapshotId: Option[Long]): Plan =
+    plan(metadataAt(metadataLoc), snapshotId)
+
+  /** The table-metadata document at `metadataLoc` (a file, or a table
+    * directory resolved through its version hint). */
+  private[graft] def metadataAt(metadataLoc: String): IcebergMeta.Table =
+    IcebergMeta.parse(readStringAt(resolveMetadataLoc(metadataLoc)))
+
+  /** [[plan]] over an already-parsed metadata document. */
+  private[graft] def plan(meta: IcebergMeta.Table,
+      snapshotId: Option[Long]): Plan =
+    snapshotId.orElse(meta.currentSnapshotId) match {
+      case None => emptyPlan(meta)
+      case Some(id) =>
+        val (data, deletes) =
+          filesOfManifestList(meta.snapshot(id).manifestList, meta.formatVersion)
+        emptyPlan(meta).copy(dataFiles = data, deleteFiles = deletes)
     }
-    val schema = structOf(schemaNode)
-    val idToName = schemaNode.get("fields").elements().asScala.map(f =>
-      f.get("id").asInt() -> f.get("name").asText()).toMap
-    (v, schema, idToName)
+
+  /** A file-less plan under the table's current schema. */
+  private def emptyPlan(meta: IcebergMeta.Table): Plan = {
+    val s = meta.currentSchema
+    Plan(meta.formatVersion, structOf(s.node),
+      s.fields.elements().asScala.map(f =>
+        f.get("id").asInt() -> f.get("name").asText()).toMap, Nil, Nil)
   }
 
-  def plan(metadataLoc: String, snapshotId: Option[Long]): Plan = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = mapper.readTree(readStringAt(resolveMetadataLoc(metadataLoc)))
-    val (v, schema, idToName) = parseHeader(meta)
-
-    val snapIdOpt = snapshotId.orElse(
-      Option(meta.get("current-snapshot-id")).map(_.asLong()).filter(_ != -1L))
-    if (snapIdOpt.isEmpty) return Plan(v, schema, idToName, Nil, Nil)
-    val snapId = snapIdOpt.get
-    val snap = meta.get("snapshots").elements().asScala
-      .find(_.get("snapshot-id").asLong() == snapId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot-id $snapId not in snapshots"))
-    val listPath = toLocal(snap.get("manifest-list").asText())
-    val (data, deletes) = filesOfManifestList(listPath, v)
-    Plan(v, schema, idToName, data, deletes)
-  }
+  /** The manifests a manifest list names, with their bytes. */
+  private def manifestsOf(listLoc: String)
+      : Seq[(IcebergMeta.ManifestFile, () => Array[Byte])] =
+    IcebergMeta.manifestFiles(readBytesAt(toLocal(listLoc)))
+      .map(m => m -> (() => readBytesAt(toLocal(m.path))))
 
   /** Live file sets reachable from one manifest list (the per-snapshot
     * entry point plan() walks; also the unit a REST commit posts via its
@@ -221,103 +208,23 @@ object IcebergImport {
     */
   private[graft] def filesOfManifestList(listLoc: String,
       v: Int): (Seq[DataFile], Seq[DeleteFile]) = {
-    val listPath = toLocal(listLoc)
-    // manifest list → (manifest path, content, sequence number); v1 has
-    // neither content nor sequence numbers
-    val manifests = readAvro(listPath).map { r =>
-      val content = Option(r.getSchema.getField("content"))
-        .map(_ => r.get("content").asInstanceOf[Int]).getOrElse(0)
-      val seq = Option(r.getSchema.getField("sequence_number"))
-        .map(_ => r.get("sequence_number").asInstanceOf[Long]).getOrElse(0L)
-      (toLocal(r.get("manifest_path").toString), content, seq)
-    }
     val data = Seq.newBuilder[DataFile]
     val deletes = Seq.newBuilder[DeleteFile]
-    manifests.foreach { case (mPath, mContent, mSeq) =>
-      readAvro(mPath).foreach { e =>
-        if (e.get("status").asInstanceOf[Int] != 2) { // 2 = DELETED: no longer live
-          // spec inheritance: a null entry sequence_number on an ADDED
-          // entry inherits the manifest's sequence number
-          val seq = Option(e.getSchema.getField("sequence_number"))
-            .flatMap(_ => Option(e.get("sequence_number")))
-            .map(_.asInstanceOf[Long]).getOrElse(mSeq)
-          decodeFile(e.get("data_file").asInstanceOf[GenericRecord], seq, v) match {
-            case d: DataFile =>
-              require(mContent == 0, s"data file ${d.path} in a delete manifest")
-              data += d
-            case d: DeleteFile => deletes += d
-          }
+    manifestsOf(listLoc).foreach { case (m, bytes) =>
+      IcebergMeta.entries(bytes(), m).filterNot(_.deleted).foreach {
+        _.file(v) match {
+          case d: DataFile =>
+            require(m.content == 0, s"data file ${d.path} in a delete manifest")
+            data += d
+          case d: DeleteFile => deletes += d
         }
       }
     }
     (data.result(), deletes.result())
   }
 
-  /** A record's field, None when the schema lacks it or it is null. */
-  private def opt(r: GenericRecord, name: String): Option[AnyRef] =
-    Option(r.getSchema.getField(name)).flatMap(_ => Option(r.get(name)))
-
-  /** The one decoder of a manifest entry's `data_file` record, at data
-    * sequence number `seq` in a format-version `v` table. Every read of
-    * the file plans from its `file_size_in_bytes`, so a missing or
-    * negative size refuses. Parquet/ORC read through Spark's native
-    * formats and AVRO through the explicit per-file reader
-    * ([[avroScan]]); any other format is a loud refusal, never a silent
-    * mis-read.
-    */
-  private def decodeFile(df: GenericRecord, seq: Long, v: Int): IceFile = {
-    val path = toLocal(df.get("file_path").toString)
-    val fmt = df.get("file_format").toString.toUpperCase
-    val content = opt(df, "content").map(_.asInstanceOf[Int]).getOrElse(0)
-    val bytes = opt(df, "file_size_in_bytes")
-      .map(_.asInstanceOf[Number].longValue()).filter(_ >= 0L).getOrElse(
-        throw new IllegalArgumentException(
-          s"manifest entry without a valid file_size_in_bytes: $path"))
-    require(fmt == "PARQUET" || fmt == "ORC" || fmt == "AVRO" ||
-      (content == 1 && fmt == "PUFFIN"),
-      s"unsupported ${if (content == 0) "data" else "delete"} file " +
-        s"format: $fmt ($path)")
-    content match {
-      case 0 =>
-        val part = opt(df, "partition").map { p =>
-          val r = p.asInstanceOf[GenericRecord]
-          r.getSchema.getFields.asScala.map { f =>
-            f.name() -> (r.get(f.name()) match {
-              case u: org.apache.avro.util.Utf8 => u.toString
-              case other => other
-            })
-          }.toMap
-        }.getOrElse(Map.empty[String, Any])
-        DataFile(path, seq, bytes, fmt, part)
-      case 1 if fmt == "PUFFIN" =>
-        // v3 DELETION VECTOR: a blob inside a Puffin file scoped to
-        // exactly one data file (replaces that file's position deletes);
-        // the manifest carries the blob coordinates
-        require(v >= 3,
-          s"PUFFIN deletion vector in a format-version $v table ($path)")
-        def dvField(n: String): AnyRef = opt(df, n).getOrElse(
-          throw new IllegalArgumentException(s"deletion vector without $n: $path"))
-        def longField(n: String): Long = dvField(n).asInstanceOf[Number].longValue()
-        DeleteFile(path, 1, seq, Nil, bytes, fmt, Some(DvRef(
-          toLocal(dvField("referenced_data_file").toString),
-          longField("content_offset"), longField("content_size_in_bytes"))))
-      case 1 => DeleteFile(path, 1, seq, Nil, bytes, fmt)
-      case 2 =>
-        val ids = opt(df, "equality_ids").map {
-          case l: java.util.List[_] =>
-            l.asScala.map(_.asInstanceOf[Number].intValue()).toSeq
-          case other => throw new IllegalArgumentException(
-            s"bad equality_ids $other for $path")
-        }.getOrElse(throw new UnsupportedOperationException(
-          s"equality delete without equality_ids: $path"))
-        DeleteFile(path, 2, seq, ids, bytes, fmt)
-      case other => throw new IllegalArgumentException(
-        s"unknown data_file.content $other for $path")
-    }
-  }
-
   /** Inverse of the exporter's manifest partition-value encoding
-    * ([[IcebergExport]]'s `partitionValue`): one avro-decoded manifest
+    * ([[IcebergMeta.partitionCodec]]): one avro-decoded manifest
     * partition value → the directory string [[Partitioning]] records in
     * `FileEntry.partitionValues`. This is what lets an EXTERNAL
     * engine's commit land on a partitioned graft table with working
@@ -332,50 +239,12 @@ object IcebergImport {
     * (IcebergImportSpec).
     */
   private[graft] def rawPartitionValue(pf: PartitionField,
-      srcType: DataType, v: Any): String = {
-    if (v == null) return Partitioning.NullMarker
-    def i = v.asInstanceOf[Number].intValue()
-    def l = v.asInstanceOf[Number].longValue()
-    def microsRaw(us: Long): String = {
-      val ldt = java.time.LocalDateTime.ofEpochSecond(
-        java.lang.Math.floorDiv(us, 1000000L),
-        (java.lang.Math.floorMod(us, 1000000L) * 1000L).toInt,
-        java.time.ZoneOffset.UTC)
-      val base = ldt.format(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd HH:mm:ss"))
-      val frac = java.lang.Math.floorMod(us, 1000000L)
-      if (frac == 0L) base
-      else base + "." + f"$frac%06d".reverse.dropWhile(_ == '0').reverse
-    }
-    pf.transform match {
-      case "identity" => srcType match {
-        case ByteType | ShortType | IntegerType | LongType => l.toString
-        case StringType => v.toString
-        case BooleanType => v.toString
-        case DateType => java.time.LocalDate.ofEpochDay(l).toString
-        case TimestampType | TimestampNTZType => microsRaw(l)
-        case other => throw new UnsupportedOperationException(
-          s"identity partition value on ${other.simpleString}")
-      }
-      case "bucket" => i.toString
-      case "truncate" => srcType match {
-        case ByteType | ShortType | IntegerType | LongType => l.toString
-        case StringType => v.toString
-        case other => throw new UnsupportedOperationException(
-          s"truncate partition value on ${other.simpleString}")
-      }
-      case "years" => f"${1970 + i}%04d"
-      case "months" =>
-        f"${1970 + java.lang.Math.floorDiv(i, 12)}%04d-${java.lang.Math.floorMod(i, 12) + 1}%02d"
-      case "days" => java.time.LocalDate.ofEpochDay(l).toString
-      case "hours" =>
-        java.time.LocalDateTime.ofEpochSecond(l * 3600L, 0,
-          java.time.ZoneOffset.UTC).format(
-          java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd-HH"))
-      case other => throw new UnsupportedOperationException(
-        s"unknown transform: $other")
-    }
-  }
+      srcType: DataType, v: Any): String =
+    if (v == null) Partitioning.NullMarker
+    else IcebergMeta.partitionCodec(pf, srcType).getOrElse(
+      throw new UnsupportedOperationException(
+        s"${pf.transform} partition value on ${srcType.simpleString}"))
+      .fromManifest(v)
 
   /** Incremental APPEND scan plan — the data files ADDED by each
     * snapshot in `(fromId, toId]` along the parent-snapshot chain (the
@@ -398,18 +267,10 @@ object IcebergImport {
     */
   def changesPlan(metadataLoc: String, fromId: Option[Long],
       toId: Option[Long]): Plan = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = mapper.readTree(readStringAt(resolveMetadataLoc(metadataLoc)))
-    val (v, schema, idToName) = parseHeader(meta)
-    val snaps = Option(meta.get("snapshots")).map(
-      _.elements().asScala.toSeq).getOrElse(Nil)
-    def nodeOpt(id: Long) = snaps.find(_.get("snapshot-id").asLong() == id)
-    def node(id: Long) = nodeOpt(id)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot-id $id not in snapshots"))
-    val headId = toId.orElse(Option(meta.get("current-snapshot-id"))
-      .map(_.asLong()).filter(_ != -1L))
-    if (headId.isEmpty) return Plan(v, schema, idToName, Nil, Nil)
+    val meta = metadataAt(metadataLoc)
+    val headId = toId.orElse(meta.currentSnapshotId)
+    if (headId.isEmpty) return emptyPlan(meta)
+    def nodeOpt(id: Long) = meta.snapshots.find(_.id == id)
 
     // parent walk newest → oldest, stopping AT fromId (exclusive). A
     // parent id that is no longer in `snapshots` marks the expiration
@@ -417,21 +278,17 @@ object IcebergImport {
     // snapshot's parent pointer) — crossing it means the range's appends
     // are not reconstructible, which REFUSES with the retention story
     // spelled out rather than a bare "not in snapshots" crash.
-    val range = scala.collection.mutable.ListBuffer
-      .empty[com.fasterxml.jackson.databind.JsonNode]
-    var cur: Option[com.fasterxml.jackson.databind.JsonNode] =
-      Some(node(headId.get))
+    val range = scala.collection.mutable.ListBuffer.empty[IcebergMeta.Snapshot]
+    var cur: Option[IcebergMeta.Snapshot] = Some(meta.snapshot(headId.get))
     var expiredParent: Option[Long] = None
-    while (cur.isDefined &&
-        !fromId.contains(cur.get.get("snapshot-id").asLong())) {
+    while (cur.isDefined && !fromId.contains(cur.get.id)) {
       range += cur.get
-      val pid = Option(cur.get.get("parent-snapshot-id"))
-        .filterNot(_.isNull).map(_.asLong())
+      val pid = cur.get.parentId
       cur = pid.flatMap(nodeOpt)
       if (pid.isDefined && cur.isEmpty) expiredParent = pid
     }
     if (cur.isEmpty && expiredParent.isDefined) {
-      val oldest = range.last.get("snapshot-id").asLong()
+      val oldest = range.last.id
       throw new IllegalArgumentException(fromId match {
         case Some(f) =>
           s"snapshot $f is not a RETAINED ancestor of ${headId.get} — " +
@@ -453,52 +310,32 @@ object IcebergImport {
 
     val data = Seq.newBuilder[DataFile]
     range.toSeq.reverse.foreach { s => // oldest → newest
-      val sid = s.get("snapshot-id").asLong()
-      // `summary` (and its operation) is OPTIONAL in v1 metadata — a
-      // summary-less snapshot might have deleted rows, so defaulting it
-      // to "append" would silently miss deletions. Prove append-only
-      // from the manifest list instead (no delete manifests, no
-      // DELETED-status data entries) and refuse when the proof fails.
-      val op = Option(s.get("summary")).flatMap(n => Option(n.get("operation")))
-        .filterNot(_.isNull).map(_.asText()).getOrElse {
-          if (provablyAppendOnly(toLocal(s.get("manifest-list").asText())))
-            "append"
-          else "summary-less (and not provably append-only)"
-        }
-      op match {
+      val sid = s.id
+      operationOf(s) match {
         case "replace" => () // compaction: rewritten rows, nothing new
         case "append" =>
-          readAvro(toLocal(s.get("manifest-list").asText())).foreach { r =>
+          manifestsOf(s.manifestList).foreach { case (m, bytes) =>
             // added_snapshot_id is REQUIRED by the spec (v1 and v2): a
             // manifest-list row without it cannot be attributed, and
             // defaulting it would silently drop that manifest's appends
             // from the incremental plan (a CDC consumer reading zero
             // rows for the batch, no error) — refuse loudly instead,
             // like every other unprovable shape here
-            val addedBy = Option(r.getSchema.getField("added_snapshot_id"))
-              .flatMap(_ => Option(r.get("added_snapshot_id")))
-              .map(_.asInstanceOf[Long]).getOrElse(
-                throw new UnsupportedOperationException(
-                  s"manifest-list row of snapshot $sid carries no " +
-                    "added_snapshot_id — appends cannot be attributed " +
-                    "to snapshots; read via CALL iceberg_import instead"))
-            val isData = Option(r.getSchema.getField("content"))
-              .forall(_ => r.get("content").asInstanceOf[Int] == 0)
-            if (isData && addedBy == sid) {
-              val mPath = toLocal(r.get("manifest_path").toString)
-              readAvro(mPath).foreach { e =>
-                val entrySnap = Option(e.getSchema.getField("snapshot_id"))
-                  .flatMap(_ => Option(e.get("snapshot_id")))
-                  .map(_.asInstanceOf[Long]).getOrElse(addedBy)
-                if (e.get("status").asInstanceOf[Int] == 1 && entrySnap == sid)
-                  decodeFile(e.get("data_file").asInstanceOf[GenericRecord],
-                    0L, v) match {
+            val addedBy = m.addedSnapshotId.getOrElse(
+              throw new UnsupportedOperationException(
+                s"manifest-list row of snapshot $sid carries no " +
+                  "added_snapshot_id — appends cannot be attributed " +
+                  "to snapshots; read via CALL iceberg_import instead"))
+            if (m.content == 0 && addedBy == sid)
+              IcebergMeta.entries(bytes(), m)
+                .filter(e => e.added && e.snapshotId.contains(sid))
+                .foreach {
+                  _.file(meta.formatVersion) match {
                     case d: DataFile => data += d
                     case d: DeleteFile => throw new IllegalArgumentException(
                       s"delete file ${d.path} in a data manifest")
                   }
-              }
-            }
+                }
           }
         case other => throw new UnsupportedOperationException(
           s"incremental append scan crossed a '$other' snapshot ($sid) — " +
@@ -506,39 +343,20 @@ object IcebergImport {
             "snapshots and diff instead")
       }
     }
-    Plan(v, schema, idToName, data.result(), Nil)
+    emptyPlan(meta).copy(dataFiles = data.result())
   }
 
-  /** One snapshot's guard-relevant metadata: id, the summary's operation
-    * (absent in summary-less v1 metadata), and its manifest-list
-    * location — consumed by the `iceberg-changes` streaming guard, which
-    * must classify snapshots it has not seen before without paying a
-    * manifest scan for ordinary appends.
+  /** A snapshot's summary operation. `summary` (and its operation) is
+    * OPTIONAL in v1 metadata — a summary-less snapshot might have deleted
+    * rows, so defaulting it to "append" would silently miss deletions.
+    * Append-only is proven from the manifest list instead (no delete
+    * manifests, no DELETED-status data entries); a failed proof reads as
+    * an operation no append-only consumer accepts.
     */
-  private[graft] final case class SnapshotInfo(id: Long,
-      summaryOp: Option[String], manifestList: String)
-
-  /** Every snapshot listed in the metadata at `metadataLoc` (JSON parse
-    * only — no Avro IO).
-    */
-  private[graft] def snapshotInfos(metadataLoc: String): Seq[SnapshotInfo] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = mapper.readTree(readStringAt(resolveMetadataLoc(metadataLoc)))
-    Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Nil).map { s =>
-        SnapshotInfo(s.get("snapshot-id").asLong(),
-          Option(s.get("summary")).flatMap(n => Option(n.get("operation")))
-            .filterNot(_.isNull).map(_.asText()),
-          toLocal(s.get("manifest-list").asText()))
-      }
-  }
-
-  /** [[provablyAppendOnly]] for callers outside this object (the
-    * streaming guard's fallback classification of summary-less
-    * snapshots).
-    */
-  private[graft] def provablyAppendOnlyAt(manifestListLoc: String): Boolean =
-    provablyAppendOnly(manifestListLoc)
+  private[graft] def operationOf(s: IcebergMeta.Snapshot): String =
+    s.operation.getOrElse(
+      if (provablyAppendOnly(s.manifestList)) "append"
+      else "summary-less (and not provably append-only)")
 
   /** True when the snapshot behind this manifest list removed live DATA
     * files (DELETED-status entries in a data manifest) — i.e. rows were
@@ -548,7 +366,7 @@ object IcebergImport {
     * when present, by an entry-status scan otherwise.
     */
   private[graft] def removedDataFiles(manifestListLoc: String): Boolean =
-    readAvro(manifestListLoc).exists(r => manifestRemovesData(r).contains(true))
+    manifestsOf(manifestListLoc).exists(m => manifestRemovesData(m).contains(true))
 
   /** Append-only proof for a summary-less snapshot: its manifest list
     * has no delete manifests (content != 0) and no manifest that removed
@@ -556,7 +374,7 @@ object IcebergImport {
     * delete files; any rewrite/delete does.
     */
   private def provablyAppendOnly(manifestListLoc: String): Boolean =
-    readAvro(manifestListLoc).forall(r => manifestRemovesData(r).contains(false))
+    manifestsOf(manifestListLoc).forall(m => manifestRemovesData(m).contains(false))
 
   /** Does this manifest-list row's DATA manifest remove live files?
     * None for a delete manifest (content != 0 — the MoR shape, governed
@@ -567,20 +385,14 @@ object IcebergImport {
     * (∀ false: no removals AND no delete manifests), so the two
     * classifiers can never drift on count-field handling.
     */
-  private def manifestRemovesData(r: GenericRecord): Option[Boolean] = {
-    val content = Option(r.getSchema.getField("content"))
-      .map(_ => r.get("content").asInstanceOf[Int]).getOrElse(0)
-    if (content != 0) None
-    else Some {
-      def cnt(n: String): Option[Int] =
-        Option(r.getSchema.getField(n)).flatMap(_ => Option(r.get(n)))
-          .map(_.asInstanceOf[Number].intValue())
-      cnt("deleted_files_count").orElse(cnt("deleted_data_files_count")) match {
-        case Some(c) => c > 0
-        case None => readAvro(toLocal(r.get("manifest_path").toString))
-          .exists(_.get("status").asInstanceOf[Int] == 2)
-      }
-    }
+  private def manifestRemovesData(
+      mb: (IcebergMeta.ManifestFile, () => Array[Byte])): Option[Boolean] = {
+    val (m, bytes) = mb
+    if (m.content != 0) None
+    else Some(m.deletedFiles match {
+      case Some(c) => c > 0
+      case None => IcebergMeta.entries(bytes(), m).exists(_.deleted)
+    })
   }
 
   /** The rows APPENDED between two snapshots as a DataFrame (see
@@ -1297,18 +1109,6 @@ object IcebergImport {
   /** file:/x, file://x, file:///x → file:///x (other schemes untouched). */
   private def normPath(c: Column): Column =
     regexp_replace(c, "^file:/+", "file:///")
-
-  /** URI string or bare path → form Spark's parquet reader accepts. */
-  private def toLocal(s: String): String =
-    if (s.startsWith("file:")) Paths.get(java.net.URI.create(s)).toString
-    else s
-
-  private def readAvro(p: String): Seq[GenericRecord] = {
-    val rd = new DataFileReader[GenericRecord](
-      new org.apache.avro.file.SeekableByteArrayInput(readBytesAt(p)),
-      new GenericDatumReader[GenericRecord]())
-    try rd.iterator().asScala.toList finally rd.close()
-  }
 
   private val DecimalRe = """decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)""".r
 

@@ -692,16 +692,12 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           repo.dataLocation(stageRel(ref, key)).stripSuffix("/"))
       val v = IcebergSync.latestVersion(dest)
       val current = if (v == 0) None else scala.util.Try {
-        val props = mapper.readTree(Files.readString(
-          dest.resolve(s"metadata/v$v.metadata.json"))).get("properties")
-        props.get("graft.source-snapshot").asText() == want &&
+        val props = IcebergSync.propertiesOf(new NioDestIO(dest), v)
+        props.get("graft.source-snapshot").contains(want) &&
           // the served refs map bakes tag state in — a tag create/drop
           // must re-export even though the data snapshot is unchanged
-          Option(props.get("graft.source-tags"))
-            .exists(_.asText() == repo.tagSignature) &&
-          stageProps.forall { case (k, vv) =>
-            Option(props.get(k)).exists(_.asText() == vv)
-          }
+          props.get("graft.source-tags").contains(repo.tagSignature) &&
+          stageProps.forall { case (k, vv) => props.get(k).contains(vv) }
       }.toOption.filter(identity)
       if (current.isDefined) dest.resolve(s"metadata/v$v.metadata.json")
       else IcebergExport.export(repo, ref, key, dest, spark,
@@ -831,54 +827,21 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       ref: String, key: String,
       schema: org.apache.spark.sql.types.StructType,
       spec: Seq[PartitionField], props: Map[String, String]): ObjectNode = {
-    val destRoot = destRootOf(prefix, ref, key)
-    val schemaNode = mapper.readTree(
-      IcebergExport.icebergSchemaJson(schema)).asInstanceOf[ObjectNode]
-    schemaNode.put("schema-id", 0)
-    val nameToId = schemaNode.get("fields").elements().asScala
-      .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
-    val meta = mapper.createObjectNode()
-    meta.put("format-version", formatVersion)
-    meta.put("table-uuid", java.util.UUID.randomUUID().toString)
-    meta.put("location", destRoot.toString)
-    meta.put("last-sequence-number", 0)
-    meta.put("last-updated-ms", System.currentTimeMillis())
-    meta.put("last-column-id", IcebergExport.lastColumnId(schema))
-    meta.put("current-schema-id", 0)
-    meta.set[ObjectNode]("schemas", mapper.createArrayNode().add(schemaNode))
-    val specFields = mapper.createArrayNode()
-    spec.zipWithIndex.foreach { case (pf, i) =>
-      val f = mapper.createObjectNode()
-      f.put("name", pf.name)
-      f.put("transform", IcebergExport.icebergTransform(pf))
-      f.put("source-id", nameToId(pf.source))
-      f.put("field-id", 1000 + i)
-      specFields.add(f)
-    }
-    val spec0 = mapper.createObjectNode()
-    spec0.put("spec-id", 0)
-    spec0.set[ObjectNode]("fields", specFields)
-    meta.set[ObjectNode]("partition-specs",
-      mapper.createArrayNode().add(spec0))
-    meta.put("default-spec-id", 0)
-    meta.put("last-partition-id", 999 + spec.size)
-    val so = mapper.createObjectNode()
-    so.put("order-id", 0)
-    so.set[ObjectNode]("fields", mapper.createArrayNode())
-    meta.set[ObjectNode]("sort-orders", mapper.createArrayNode().add(so))
-    meta.put("default-sort-order-id", 0)
-    meta.put("current-snapshot-id", -1L)
-    meta.set[ObjectNode]("snapshots", mapper.createArrayNode())
-    meta.set[ObjectNode]("snapshot-log", mapper.createArrayNode())
-    meta.set[ObjectNode]("metadata-log", mapper.createArrayNode())
-    meta.set[ObjectNode]("refs", mapper.createObjectNode())
-    val pr = meta.putObject("properties")
-    props.foreach { case (k, v) => pr.put(k, v) }
-    pr.put("write.data.path",
-      repo.dataLocation(stageRel(ref, key)).stripSuffix("/"))
-    pr.put("graft.rest.staged", "true")
+    val iceSchema = IcebergExport.icebergSchema(schema)
+    val meta = IcebergMeta.Table(formatVersion,
+      java.util.UUID.randomUUID().toString,
+      destRootOf(prefix, ref, key).toString, Some(0L), None,
+      System.currentTimeMillis(), IcebergExport.lastColumnId(schema),
+      Seq(iceSchema), iceSchema.id,
+      Seq(IcebergExport.partitionSpec(spec, schema)), 0, 999 + spec.size,
+      Seq(IcebergMeta.Unsorted), 0,
+      scala.collection.immutable.ListMap.from(props) ++ Seq(
+        "write.data.path" ->
+          repo.dataLocation(stageRel(ref, key)).stripSuffix("/"),
+        "graft.rest.staged" -> "true"),
+      None, scala.collection.immutable.ListMap.empty, Nil, Nil, Nil)
     val o = mapper.createObjectNode()
-    o.set[ObjectNode]("metadata", meta)
+    o.set[ObjectNode]("metadata", IcebergMeta.node(meta))
     o.set[ObjectNode]("config", mapper.createObjectNode())
     o
   }
@@ -889,32 +852,28 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       schemaNode: JsonNode): Seq[PartitionField] = {
     val idToName = Option(schemaNode.get("fields")).toSeq
       .flatMap(_.elements().asScala).map(fieldIdName).toMap
-    specNode.map(n => Option(n.get("fields")).getOrElse(n))
-      .map(_.elements().asScala.map(partitionFieldOf(_, idToName)).toSeq)
-      .getOrElse(Nil)
-  }
-
-  /** One posted Iceberg partition field → graft [[PartitionField]]. */
-  private def partitionFieldOf(f: com.fasterxml.jackson.databind.JsonNode,
-      idToName: Map[Int, String]): PartitionField = {
-    val source = idToName.getOrElse(Option(f.get("source-id"))
-      .map(_.asInt()).getOrElse(throw new IllegalArgumentException(
-        "partition field is missing 'source-id'")),
-      throw new IllegalArgumentException(
-        s"partition source-id ${f.get("source-id")} not in schema"))
-    val name = Option(f.get("name")).map(_.asText()).getOrElse(source)
     val BucketRe = """bucket\[(\d+)\]""".r
     val TruncRe = """truncate\[(\d+)\]""".r
-    text(f, "transform") match {
-      case "identity" => PartitionField(name, "identity", source)
-      case BucketRe(n) => PartitionField(name, "bucket", source, n.toInt)
-      case TruncRe(w) => PartitionField(name, "truncate", source, w.toInt)
-      case "year" => PartitionField(name, "years", source)
-      case "month" => PartitionField(name, "months", source)
-      case "day" => PartitionField(name, "days", source)
-      case "hour" => PartitionField(name, "hours", source)
-      case other => throw new UnsupportedOperationException(
-        s"unsupported partition transform: $other")
+    specNode.toSeq.flatMap(n => IcebergMeta.specFields(
+      Option(n.get("fields")).getOrElse(n).elements().asScala.toSeq)).map { f =>
+      val id = f.sourceId.getOrElse(throw new IllegalArgumentException(
+        "partition field is missing 'source-id'"))
+      val source = idToName.getOrElse(id, throw new IllegalArgumentException(
+        s"partition source-id $id not in schema"))
+      val name = Some(f.name).filter(_.nonEmpty).getOrElse(source)
+      f.transform match {
+        case "" => throw new IllegalArgumentException(
+          "request is missing 'transform'")
+        case "identity" => PartitionField(name, "identity", source)
+        case BucketRe(n) => PartitionField(name, "bucket", source, n.toInt)
+        case TruncRe(w) => PartitionField(name, "truncate", source, w.toInt)
+        case "year" => PartitionField(name, "years", source)
+        case "month" => PartitionField(name, "months", source)
+        case "day" => PartitionField(name, "days", source)
+        case "hour" => PartitionField(name, "hours", source)
+        case other => throw new UnsupportedOperationException(
+          s"unsupported partition transform: $other")
+      }
     }
   }
 
@@ -968,7 +927,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         Some(serve(repo, prefix, ref, key))
       else if (reqs.exists(r => text(r, "type") == "assert-create")) None
       else throw new NoSuchElementException(s"no such table: $key @ $ref")
-    val served = metaPath.map(p => mapper.readTree(Files.readString(p)))
+    val served = metaPath.map(p => IcebergMeta.parse(Files.readString(p)))
     reqs.foreach(checkRequirement(_, served, ref, key))
     val u = parseUpdates(change, served, key)
     // TAG ref writes (set-snapshot-ref type=tag / remove-snapshot-ref)
@@ -980,8 +939,8 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         "tag ref writes are their own commit over REST — post other " +
           "updates separately")
     val destRoot = destRootOf(prefix, ref, key)
-    metaPath match {
-      case Some(p) => stageUpdate(repo, ref, key, destRoot, p, served.get, u)
+    served match {
+      case Some(t) => stageUpdate(repo, ref, key, destRoot, t, u)
       case None => stageCreate(repo, ref, dirs, key, destRoot, u)
     }
   }
@@ -990,7 +949,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * is None for a table the change creates: only `assert-create`
     * holds there).
     */
-  private def checkRequirement(r: JsonNode, served: Option[JsonNode],
+  private def checkRequirement(r: JsonNode, served: Option[IcebergMeta.Table],
       ref: String, key: String): Unit = (text(r, "type"), served) match {
     case ("assert-create", exists) =>
       // definitive, not retryable: the CTAS lost its race (or the
@@ -1002,7 +961,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       s"unsupported requirement on a staged create: $other")
     case ("assert-table-uuid", Some(served)) =>
       val want = text(r, "uuid")
-      val have = served.get("table-uuid").asText()
+      val have = served.uuid
       if (want != have) throw new RestConflict("CommitFailedException",
         s"table uuid changed for $key: expected $want, found $have")
     case ("assert-ref-snapshot-id", Some(served)) =>
@@ -1014,10 +973,8 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       // must not exist yet") validates against the served refs map,
       // which bakes graft tag state in
       val have =
-        if (rn == "main") Option(served.get("current-snapshot-id"))
-          .map(_.asLong()).filter(_ != -1L)
-        else Option(served.get("refs")).flatMap(rs => Option(rs.get(rn)))
-          .flatMap(n => Option(n.get("snapshot-id"))).map(_.asLong())
+        if (rn == "main") served.currentSnapshotId
+        else served.refs.get(rn).map(_.snapshotId)
       if (want != have) throw new RestConflict("CommitFailedException",
         s"ref $rn of $key moved: expected snapshot " +
           s"${want.getOrElse("<none>")}, now at ${have.getOrElse("<none>")}")
@@ -1026,26 +983,24 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       // posts (schema updates; partition evolution; sort orders, which
       // graft serves as 0 always — orders are advisory — validated so an
       // engine's sort-order commit round-trips): requirement field,
-      // served field, served default
-      val (field, servedField, default, what) = t match {
+      // served value
+      val (field, have, what) = t match {
         case "assert-current-schema-id" => ("current-schema-id",
-          "current-schema-id", 0, "current schema")
+          served.currentSchemaId, "current schema")
         case "assert-last-assigned-field-id" => ("last-assigned-field-id",
-          "last-column-id", 0, "last assigned field id")
+          served.lastColumnId, "last assigned field id")
         case "assert-default-sort-order-id" => ("default-sort-order-id",
-          "default-sort-order-id", 0, "default sort order")
+          served.defaultSortOrderId, "default sort order")
         case "assert-default-spec-id" => ("default-spec-id",
-          "default-spec-id", 0, "default partition spec")
+          served.defaultSpecId, "default partition spec")
         case "assert-last-assigned-partition-id" =>
-          ("last-assigned-partition-id", "last-partition-id", 999,
+          ("last-assigned-partition-id", served.lastPartitionId,
             "last assigned partition field id")
         case other => throw new UnsupportedOperationException(
           s"unsupported commit requirement: $other")
       }
       val want = Option(r.get(field)).map(_.asInt()).getOrElse(
         throw new IllegalArgumentException(s"$t carries no $field"))
-      val have = Option(served.get(servedField)).map(_.asInt())
-        .getOrElse(default)
       if (want != have) throw new RestConflict("CommitFailedException",
         s"$what changed: expected $want, found $have")
   }
@@ -1061,7 +1016,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * a staged create, whose identity/serving details (uuid, format
     * version, location) graft assigns itself on export.
     */
-  private def parseUpdates(change: JsonNode, served: Option[JsonNode],
+  private def parseUpdates(change: JsonNode, served: Option[IcebergMeta.Table],
       key: String): Updates = {
     // graft.* table properties are engine state (MoR tombstones, commit
     // sequence, staging markers): a REST client rewriting them could
@@ -1072,7 +1027,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           s"$k is engine-managed graft state; not settable over REST")
       k
     }
-    def once(what: String, seen: Option[JsonNode],
+    def once(what: String, seen: Option[Any],
         node: => Option[JsonNode]): Option[JsonNode] = {
       if (seen.isDefined) throw new UnsupportedOperationException(
         s"one $what per commit ($key)")
@@ -1084,7 +1039,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         text(u, "action") match {
           case "add-snapshot" =>
             acc.copy(snap = once("add-snapshot", acc.snap,
-              Option(u.get("snapshot"))))
+              Option(u.get("snapshot"))).map(IcebergMeta.parseSnapshot))
           case "set-snapshot-ref" =>
             val rn = Option(u.get("ref-name")).map(_.asText()).getOrElse("main")
             val rt = Option(u.get("type")).map(_.asText()).getOrElse("branch")
@@ -1151,8 +1106,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
               .getOrElse(throw new IllegalArgumentException(
                 "upgrade-format-version carries no format-version"))
             served.foreach { s =>
-              val have = Option(s.get("format-version")).map(_.asInt())
-                .getOrElse(2)
+              val have = s.formatVersion
               if (want != have) throw new UnsupportedOperationException(
                 s"this server serves format-version $have; start the " +
                   s"REST server with formatVersion=$want to change it " +
@@ -1164,8 +1118,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           case "assign-uuid" =>
             val want = text(u, "uuid")
             served.foreach { s =>
-              val have = Option(s.get("table-uuid")).map(_.asText())
-                .getOrElse("")
+              val have = s.uuid
               if (want != have) throw new IllegalArgumentException(
                 s"assign-uuid $want does not match the table's identity " +
                   s"$have")
@@ -1187,10 +1140,9 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * posted location either does not exist or is not avro — never a
     * commit-state-unknown 500.
     */
-  private def postedFiles(snap: JsonNode, version: Int)
+  private def postedFiles(snap: IcebergMeta.Snapshot, version: Int)
       : (Seq[IcebergImport.DataFile], Seq[IcebergImport.DeleteFile]) =
-    try IcebergImport.filesOfManifestList(text(snap, "manifest-list"),
-      version)
+    try IcebergImport.filesOfManifestList(snap.manifestList, version)
     catch {
       case e @ (_: java.io.IOException |
                 _: org.apache.avro.AvroRuntimeException) =>
@@ -1223,19 +1175,16 @@ final class IcebergRestServer private (single: Option[GraftRepo],
   }
 
   /** A change to an existing table, lowered against its served
-    * metadata at `metaPath`. */
+    * metadata. */
   private def stageUpdate(repo: GraftRepo, ref: String, key: String,
-      destRoot: Path, metaPath: Path, served: JsonNode, u: Updates)
+      destRoot: Path, served: IcebergMeta.Table, u: Updates)
       : Staged = {
     val Updates(snapNode, newSchemaNode, newSpecNode, sawSetDefaultSpec,
       setCurrentSchema, setRefTarget, tagCreate, tagRemove, setProps,
       removeProps) = u
-    val servedGraftSnap =
-      served.get("properties").get("graft.source-snapshot").asText()
-    val servedSnapId = Option(served.get("current-snapshot-id"))
-      .map(_.asLong()).filter(_ != -1L)
-    val servedSchemaId =
-      Option(served.get("current-schema-id")).map(_.asInt()).getOrElse(0)
+    val servedGraftSnap = served.properties("graft.source-snapshot")
+    val servedSnapId = served.currentSnapshotId
+    val servedSchemaId = served.currentSchemaId
 
     // set-current-schema must point at the schema this commit added
     // (-1 = "last added", the form engines post) or the served current
@@ -1247,11 +1196,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           s"set-current-schema references schema-id $sid, which this " +
             "commit does not add")
     }
-    val curSchemaNode = Option(served.get("schemas"))
-      .map(_.elements().asScala.toSeq).getOrElse(Nil)
-      .find(s => Option(s.get("schema-id")).exists(_.asInt() == servedSchemaId))
-      .getOrElse(throw new IllegalStateException(
-        s"served metadata has no schema $servedSchemaId"))
+    val curSchemaNode = served.currentSchema.node
     // lower the posted Iceberg schema onto graft TableChanges by FIELD
     // ID diff against the served schema (field ids are the identity
     // Iceberg evolution preserves)
@@ -1392,22 +1337,20 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     // client bug that would otherwise land the posted snapshot while
     // the engine believes the ref moved somewhere else
     setRefTarget.foreach { tgt =>
-      val addedId = Option(snap.get("snapshot-id")).map(_.asLong())
-      if (!addedId.contains(tgt) && !servedSnapId.contains(tgt))
+      if (snap.id != tgt && !servedSnapId.contains(tgt))
         throw new IllegalArgumentException(
           s"set-snapshot-ref names snapshot $tgt, but this commit adds " +
-            s"${addedId.getOrElse("<none>")} — post a rollback (bare " +
+            s"${snap.id} — post a rollback (bare " +
             "set-snapshot-ref) or a consistent commit")
     }
-    val op = Option(snap.get("summary")).flatMap(s =>
-      Option(s.get("operation"))).map(_.asText()).getOrElse("append")
+    val op = snap.operation.getOrElse("append")
     if (!Set("append", "overwrite", "delete", "replace")(op))
       throw new UnsupportedOperationException(
         s"unsupported commit operation over REST: '$op' (accepted: " +
           "append, overwrite, delete, replace)")
     // a snapshot written under the schema this same commit adds is
     // fine; any OTHER unknown schema-id is a client bug
-    Option(snap.get("schema-id")).map(_.asInt()).foreach { sid =>
+    snap.schemaId.foreach { sid =>
       val addedId = newSchemaNode.flatMap(s =>
         Option(s.get("schema-id")).map(_.asInt()))
       if (sid != servedSchemaId && !addedId.contains(sid))
@@ -1440,9 +1383,8 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     // ([[materializePosDeletes]]): reference parity with
     // LakeFSTableOperations.commit (java:115-147), which accepts any
     // metadata swap.
-    val (postedData, postedDeletes) =
-      postedFiles(snap, served.get("format-version").asInt())
-    val basePlan = IcebergImport.plan(metaPath.toString, None)
+    val (postedData, postedDeletes) = postedFiles(snap, served.formatVersion)
+    val basePlan = IcebergImport.plan(served, None)
     // delete files the posted snapshot RELISTS from the served export
     // are the table's OWN tombstones coming back (a real engine reuses
     // existing delete manifests on every commit — an append on a
@@ -2610,6 +2552,25 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       case _ => throwNoNs(ns)
     }
 
+  /** The served identity of view `key` on `ref`: stable across loads. */
+  private def viewUuid(repo: GraftRepo, ref: String, key: String): String =
+    java.util.UUID.nameUUIDFromBytes(s"graft-view:${repo.root}:$ref:$key"
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
+
+  /** The SQL of a posted view version: its `spark`-dialect representation,
+    * else the only one posted. */
+  private def viewSql(vv: JsonNode): String = {
+    val reps = Option(vv.get("representations")).toSeq
+      .flatMap(_.elements().asScala).toSeq
+    val rep = reps.find(r => Option(r.get("dialect"))
+        .exists(_.asText() == "spark"))
+      .orElse(reps.headOption).getOrElse(
+        throw new IllegalArgumentException(
+          "view-version carries no SQL representation"))
+    Option(rep.get("sql")).map(_.asText()).getOrElse(
+      throw new IllegalArgumentException("representation carries no sql"))
+  }
+
   /** LoadViewResult: real spec-shaped view metadata from the graft
     * [[ViewDef]] — ONE current version (graft versions views by branch
     * commit, so each served head has exactly one definition), the SQL
@@ -2628,28 +2589,6 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       .fromJson(vd.schemaJson).asInstanceOf[org.apache.spark.sql.types.StructType]
     val dest = prefix.fold(exportRoot)(exportRoot.resolve)
       .resolve(ref).resolve(key)
-    val meta = mapper.createObjectNode()
-    meta.put("view-uuid", java.util.UUID.nameUUIDFromBytes(
-      s"graft-view:${repo.root}:$ref:$key"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString)
-    meta.put("format-version", 1)
-    meta.put("location", dest.toAbsolutePath.normalize.toString)
-    meta.put("current-version-id", 1)
-    val ts = repo.resolve(ref).ts
-    val ver = mapper.createObjectNode()
-    ver.put("version-id", 1)
-    ver.put("timestamp-ms", ts)
-    ver.put("schema-id", 0)
-    val sum = ver.putObject("summary")
-    sum.put("engine-name", "graft")
-    val reps = ver.putArray("representations")
-    val rep = mapper.createObjectNode()
-    rep.put("type", "sql"); rep.put("sql", vd.sql)
-    rep.put("dialect", "spark")
-    reps.add(rep)
-    if (vd.catalog != null && vd.catalog.nonEmpty)
-      ver.put("default-catalog", vd.catalog)
-    val dns = ver.putArray("default-namespace")
     // creation-time namespace with the BRANCH segment rebound to the
     // served ref. Canonical storage is [repo, branch, db...] (native
     // createView and createRestView both write it), so two leading
@@ -2675,19 +2614,11 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           refs.contains(vd.namespace.head) &&
           !refs.contains(vd.namespace(1))) 1 else 2
       }
-    (ref +: vd.namespace.drop(lead)).foreach(dns.add)
-    meta.set[ObjectNode]("versions", mapper.createArrayNode().add(ver))
-    val vl = mapper.createArrayNode()
-    val vle = mapper.createObjectNode()
-    vle.put("timestamp-ms", ts); vle.put("version-id", 1)
-    vl.add(vle)
-    meta.set[ObjectNode]("version-log", vl)
-    val schemaNode = mapper.readTree(
-      IcebergExport.icebergSchemaJson(schema)).asInstanceOf[ObjectNode]
-    schemaNode.put("schema-id", 0)
-    meta.set[ObjectNode]("schemas", mapper.createArrayNode().add(schemaNode))
-    val pr = meta.putObject("properties")
-    vd.properties.foreach { case (k, v) => pr.put(k, v) }
+    val meta = IcebergMeta.View(viewUuid(repo, ref, key),
+      dest.toAbsolutePath.normalize.toString, repo.resolve(ref).ts,
+      IcebergExport.icebergSchema(schema), vd.sql,
+      Option(vd.catalog).filter(_.nonEmpty), ref +: vd.namespace.drop(lead),
+      vd.properties)
     // memoized WRITE-ONCE per view DEFINITION (ts excluded from the
     // key): an unrelated branch commit bumps the head ts but must not
     // churn a new metadata file per commit — and the response body is
@@ -2703,17 +2634,12 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     val metaPath = metaDir.resolve(s"view-$hash.metadata.json")
     if (!Files.exists(metaPath)) {
       val tmp = Files.createTempFile(metaDir, ".view", ".tmp")
-      Files.write(tmp, mapper.writeValueAsBytes(meta))
+      Files.write(tmp, IcebergMeta.renderView(meta))
       Files.move(tmp, metaPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    val o = mapper.createObjectNode()
-    o.put("metadata-location", metaPath.toString)
-    o.set[ObjectNode]("metadata",
-      mapper.readTree(Files.readString(metaPath)).asInstanceOf[ObjectNode])
-    o.set[ObjectNode]("config", mapper.createObjectNode())
-    o
+    loadResult(metaPath)
   }
 
   /** CreateViewRequest → a graft versioned view: the `spark`-dialect
@@ -2740,15 +2666,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     val schema = IcebergImport.structOf(schemaNode)
     val vv = Option(req.get("view-version")).getOrElse(
       throw new IllegalArgumentException("create carries no view-version"))
-    val reps = Option(vv.get("representations")).toSeq
-      .flatMap(_.elements().asScala).toSeq
-    val rep = reps.find(r => Option(r.get("dialect"))
-        .exists(_.asText() == "spark"))
-      .orElse(reps.headOption).getOrElse(
-        throw new IllegalArgumentException(
-          "view-version carries no SQL representation"))
-    val sql = Option(rep.get("sql")).map(_.asText()).getOrElse(
-      throw new IllegalArgumentException("representation carries no sql"))
+    val sql = viewSql(vv)
     val dcat = Option(vv.get("default-catalog")).map(_.asText()).getOrElse("")
     val dns = Option(vv.get("default-namespace")).toSeq
       .flatMap(_.elements().asScala).map(_.asText()).toSeq
@@ -2793,9 +2711,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         text(r, "type") match {
           case "assert-view-uuid" =>
             val want = text(r, "uuid")
-            val have = java.util.UUID.nameUUIDFromBytes(
-              s"graft-view:${repo.root}:$ref:$key"
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
+            val have = viewUuid(repo, ref, key)
             if (want != have) throw new RestConflict("CommitFailedException",
               s"view uuid changed: expected $want, found $have")
           case other => throw new UnsupportedOperationException(
@@ -2839,16 +2755,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         case None => // properties-only commit
           cur.copy(properties = (cur.properties -- removeProps) ++ setProps)
         case Some(vv) =>
-          val reps = Option(vv.get("representations")).toSeq
-            .flatMap(_.elements().asScala).toSeq
-          val rep = reps.find(r => Option(r.get("dialect"))
-              .exists(_.asText() == "spark"))
-            .orElse(reps.headOption).getOrElse(
-              throw new IllegalArgumentException(
-                "view-version carries no SQL representation"))
-          val sql = Option(rep.get("sql")).map(_.asText()).getOrElse(
-            throw new IllegalArgumentException(
-              "representation carries no sql"))
+          val sql = viewSql(vv)
           val schema = schemaNode.map(IcebergImport.structOf)
             .map(_.json).getOrElse(cur.schemaJson)
           val dns = Option(vv.get("default-namespace")).toSeq
@@ -3221,7 +3128,7 @@ object IcebergRestServer {
       entries: Seq[FileEntry], message: String) extends Landable
 
   /** The updates of one table change, parsed once ([[parseUpdates]]). */
-  private final case class Updates(snap: Option[JsonNode] = None,
+  private final case class Updates(snap: Option[IcebergMeta.Snapshot] = None,
       schema: Option[JsonNode] = None, spec: Option[JsonNode] = None,
       setDefaultSpec: Boolean = false, currentSchema: Option[Int] = None,
       refTarget: Option[Long] = None,

@@ -190,7 +190,7 @@ object IcebergSync {
     versionsOf(dest).maxOption.getOrElse(0)
 
   /** Every v<N>.metadata.json version number present in the dest. */
-  private def versionsOf(dest: DestIO): Seq[Int] = {
+  private[versioned] def versionsOf(dest: DestIO): Seq[Int] = {
     if (!dest.isDirectory("metadata")) return Nil
     val Re = """v(\d+)\.metadata\.json""".r
     dest.listNames("metadata").flatMap {
@@ -223,21 +223,14 @@ object IcebergSync {
       dests: Seq[String]): Map[String, Option[String]] = {
     val anc = repo.ancestors(commit) // includes `commit` itself
     val snapsAt = repo.commit(commit).tables.values.toSet
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     dests.map { d =>
       val dio = DestIO.of(d)
-      val versions = versionsOf(dio).sorted(Ordering[Int].reverse)
-      val hit = versions.iterator.flatMap { v =>
-        scala.util.Try {
-          val props = om.readTree(
-            dio.readString(s"metadata/v$v.metadata.json")).get("properties")
-          (v, props.get("graft.source-commit").asText(),
-            props.get("graft.source-snapshot").asText())
-        }.toOption
-      }.find { case (_, srcCommit, srcSnap) =>
-        anc.contains(srcCommit) && snapsAt.contains(srcSnap)
+      val hit = versionsOf(dio).sorted(Ordering[Int].reverse).find { v =>
+        scala.util.Try(propertiesOf(dio, v)).toOption.exists(props =>
+          props.get("graft.source-commit").exists(anc.contains) &&
+            props.get("graft.source-snapshot").exists(snapsAt.contains))
       }
-      d -> hit.map { case (v, _, _) => dio.displayPath(s"metadata/v$v.metadata.json") }
+      d -> hit.map(v => dio.displayPath(s"metadata/v$v.metadata.json"))
     }.toMap
   }
 
@@ -247,12 +240,13 @@ object IcebergSync {
   private def exportedSnapshot(dest: DestIO): Option[String] = {
     val v = latestVersion(dest)
     if (v == 0) None
-    else scala.util.Try {
-      val meta = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(dest.readString(s"metadata/v$v.metadata.json"))
-      meta.get("properties").get("graft.source-snapshot").asText()
-    }.toOption
+    else scala.util.Try(propertiesOf(dest, v)).toOption
+      .flatMap(_.get("graft.source-snapshot"))
   }
+
+  /** The table properties of the dest's metadata version `v`. */
+  private[versioned] def propertiesOf(dest: DestIO, v: Int): Map[String, String] =
+    IcebergMeta.parse(dest.readString(s"metadata/v$v.metadata.json")).properties
 
   /** Export the next metadata version into `dest` (used by both the
     * sync-mode CALL and the post-commit follower). `Reg.dest` with a
@@ -264,7 +258,7 @@ object IcebergSync {
       spark: Option[org.apache.spark.sql.SparkSession]): String = {
     val d = DestIO.of(reg.dest)
     IcebergExport.export(repo, reg.ref, reg.table, d, spark, reg.snapshots,
-      latestVersion(d) + 1, reg.formatVersion)
+      latestVersion(d) + 1, reg.formatVersion, Map.empty)
   }
 
   /** Post-ref-advance hook: re-emit every drifted registration on

@@ -1496,17 +1496,17 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
   private def stageDvCommit(scratch: java.nio.file.Path, snapId: Long,
       dataFiles: Seq[java.nio.file.Path], puffin: java.nio.file.Path,
       dvs: Seq[(String, Long, Long)]): java.nio.file.Path = {
-    def entry(p: String, content: Int, fmt: String,
+    def entry(f: java.nio.file.Path, content: Int, fmt: String,
         dv: Option[(String, Long, Long)]): GenericRecord = {
       val dfS = wDvEntrySchema.getField("data_file").schema()
       val df = new GenericData.Record(dfS)
       df.put("content", content)
-      df.put("file_path", p)
+      df.put("file_path", f.toUri.toString)
       df.put("file_format", fmt)
       df.put("partition",
         new GenericData.Record(dfS.getField("partition").schema()))
       df.put("record_count", 1L)
-      df.put("file_size_in_bytes", 1L)
+      df.put("file_size_in_bytes", Files.size(f))
       dv.foreach { case (ref, o, l) =>
         df.put("referenced_data_file", ref)
         df.put("content_offset", o)
@@ -1528,9 +1528,9 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
       m
     }
     val dataM = writeM(s"m-$snapId-data.avro",
-      dataFiles.map(p => entry(p.toUri.toString, 0, "PARQUET", None)))
+      dataFiles.map(p => entry(p, 0, "PARQUET", None)))
     val delM = writeM(s"m-$snapId-dv.avro",
-      dvs.map(d => entry(puffin.toUri.toString, 1, "PUFFIN", Some(d))))
+      dvs.map(d => entry(puffin, 1, "PUFFIN", Some(d))))
     val list = scratch.resolve(s"snap-$snapId.avro")
     val lw = new DataFileWriter[GenericRecord](
       new GenericDatumWriter[GenericRecord](wListSchema))
