@@ -354,8 +354,8 @@ final class IcebergChangesMicroBatchStream(loc: String, schema: StructType,
     * delete refusal (unless skipDeletes), parquet-only data, and
     * name-bindability — this stream reads through ONE shared DSv2
     * reader factory bound by column NAME, so a file whose footer ids
-    * say a schema column lives under a renamed physical name must
-    * refuse rather than silently null-fill (the batch import
+    * bind a schema column elsewhere (renamed, or a retired id) must
+    * refuse rather than silently read it wrong (the batch import
     * field-id-binds instead; point users there).
     */
   private def planOf(metaLoc: String,

@@ -86,6 +86,11 @@ private[graft] trait DestIO {
   /** Location string the parquet-hadoop writers/readers accept for a
     * file at `rel` (HadoopOutputFile/HadoopInputFile). */
   def hadoopLocation(rel: String): String
+  /** The Hadoop path of the file at `rel`. Built from the URI form:
+    * `Path(String)` would percent-encode an already-encoded location
+    * again (a hive-escaped partition directory's `%3A` read as `%253A`). */
+  def hadoopPath(rel: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(java.net.URI.create(hadoopLocation(rel)))
 }
 
 private[graft] object DestIO {
@@ -348,6 +353,7 @@ private[graft] final class HadoopDestIO(
     try fs.delete(p(rel), false)
     catch { case _: java.io.FileNotFoundException => false }
   override def hadoopLocation(rel: String): String = p(rel).toString
+  override def hadoopPath(rel: String): HPath = p(rel)
 }
 
 private[graft] object HadoopDestIO {

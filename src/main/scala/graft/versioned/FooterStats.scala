@@ -78,9 +78,8 @@ object FooterStats {
     * whose parquet statistics are missing/empty in ANY row group are
     * omitted entirely (conservative).
     */
-  def read(pathStr: String, conf: Configuration, physSchema: StructType,
-      ndv: Map[String, Long]): WrittenFile = {
-    val path = new org.apache.hadoop.fs.Path(pathStr)
+  def read(path: org.apache.hadoop.fs.Path, conf: Configuration,
+      physSchema: StructType, ndv: Map[String, Long]): WrittenFile = {
     val inFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(inFile)
     try {
@@ -127,7 +126,7 @@ object FooterStats {
           }
         }
       } }
-      WrittenFile(pathStr, rows, bytes, mins.toMap, maxs.toMap, nulls.toMap,
+      WrittenFile(path.toString, rows, bytes, mins.toMap, maxs.toMap, nulls.toMap,
         ndv)
     } finally reader.close()
   }

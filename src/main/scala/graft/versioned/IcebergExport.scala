@@ -83,6 +83,13 @@ object IcebergExport {
     */
   private[versioned] val MaxEqualityRows = 1024
 
+  /** The format version an export writes: `formatVersion` when set,
+    * else (0, auto) v1 unless the table `needsV2` — v1 is the widest
+    * reader compatibility (all live tombstones pruned away by
+    * stats/blooms also land there). */
+  private[versioned] def versionOf(formatVersion: Int, needsV2: Boolean): Int =
+    if (formatVersion != 0) formatVersion else if (needsV2) 2 else 1
+
   /** One written delete parquet (v2 export only).
     *
     * @param partValues partition values of the single data file a
@@ -477,17 +484,12 @@ object IcebergExport {
       SnapArtifacts(h, c.ts, sid, dataEntries, deleteEntries,
         h.manifestRefs, operation)
     }
-    // v1 when nothing needs v2: widest reader compatibility (all live
-    // tombstones pruned away by stats/blooms also land here). Segmented
-    // snapshots also force v2: chunk manifests omit each entry's
-    // snapshot_id and rely on inheritance from the manifest-list row —
-    // a v2 rule (the field is required in v1), so a strict v1 reader
-    // could reject them.
-    val v =
-      if (formatVersion != 0) formatVersion
-      else if (artifacts.exists(a =>
-        a.deleteEntries.nonEmpty || a.chunkRefs.nonEmpty)) 2
-      else 1
+    // segmented snapshots force v2 too: chunk manifests omit each
+    // entry's snapshot_id and rely on inheritance from the manifest-list
+    // row — a v2 rule (the field is required in v1), so a strict v1
+    // reader could reject them
+    val v = versionOf(formatVersion, artifacts.exists(a =>
+      a.deleteEntries.nonEmpty || a.chunkRefs.nonEmpty))
 
     // ---- pass 2: manifests + manifest lists, oldest → newest -----------
     // Entries keep their own explicit sequences (graft commit seq + 1)

@@ -45,20 +45,21 @@ import org.apache.spark.sql.types._
   * exports time travel via the `snapshotId` overloads); PARQUET, ORC
   * and AVRO data files (ORC positional deletes via a derived per-file
   * row position — see [[boundOrcScan]]; AVRO through the explicit
-  * per-file reader — see [[boundAvroScan]]); positional AND equality
+  * per-file reader — see [[avroScan]]); positional AND equality
   * delete files in ANY of the three formats (`write.delete.format` —
   * graft's own exporter writes only parquet positional ones, but
   * external CDC writers — Flink upserts — emit equality deletes); v3
   * DELETION VECTORS (Puffin-backed roaring bitmaps, one per data file
   * — see [[dvDeleteRows]]/[[parseDvBlob]]); and
   * NESTED schemas (struct/list/map columns parse recursively; equality
-  * deletes may only reference top-level fields). Column binding is
-  * FIELD-ID-FIRST when the data files' footers carry parquet field ids
-  * (external Iceberg engines stamp them; TOP-LEVEL columns renamed by
-  * such an engine bind correctly by id — see [[boundScan]]; fields
-  * renamed INSIDE a struct still bind by name) and BY NAME otherwise — correct for any writer that uses
-  * `schema.name-mapping.default` with physical names, which includes
-  * every [[IcebergExport]] output.
+  * deletes may only reference top-level fields). Every file of every
+  * format binds its columns by ONE rule, [[bind]] (the spec's column
+  * projection): by field id where the file stamps ids, by name only for
+  * a column the file stamps no id on — so a column an engine renamed,
+  * at the top level or inside a struct, binds by id, and a column
+  * stamped with a retired id reads null. Id-less files (every
+  * [[IcebergExport]] output, any writer using physical names) bind by
+  * name, ignoring case as Spark's resolver does.
   */
 object IcebergImport {
 
@@ -94,12 +95,15 @@ object IcebergImport {
     * scoped to exactly one data file. */
   final case class DvRef(referencedFile: String, offset: Long, length: Long)
 
+  /** A planned read. `fields` is `schema`'s field-id tree ([[Field]]). */
   final case class Plan(
       formatVersion: Int,
       schema: StructType,
-      fieldIdToName: Map[Int, String],
+      fields: Seq[Field],
       dataFiles: Seq[DataFile],
       deleteFiles: Seq[DeleteFile]) {
+    def fieldIdToName: Map[Int, String] =
+      fields.flatMap(f => f.id.map(_ -> f.name)).toMap
     def dataPaths: Seq[String] = dataFiles.map(_.path)
     def positionDeletes: Seq[DeleteFile] = deleteFiles.filter(_.content == 1)
     def equalityDeletes: Seq[DeleteFile] = deleteFiles.filter(_.content == 2)
@@ -190,9 +194,7 @@ object IcebergImport {
   /** A file-less plan under the table's current schema. */
   private def emptyPlan(meta: IcebergMeta.Table): Plan = {
     val s = meta.currentSchema
-    Plan(meta.formatVersion, structOf(s.node),
-      s.fields.elements().asScala.map(f =>
-        f.get("id").asInt() -> f.get("name").asText()).toMap, Nil, Nil)
+    Plan(meta.formatVersion, structOf(s.node), fieldsOf(s.node), Nil, Nil)
   }
 
   /** The manifests a manifest list names, with their bytes. */
@@ -574,33 +576,28 @@ object IcebergImport {
     * for ORC rows when no positional deletes need it — see
     * [[boundOrcScan]] for the ORC position derivation).
     *
-    * Binding is FIELD-ID-FIRST: if any data file's footer carries
-    * field ids (parquet field ids / ORC `iceberg.id` attributes —
-    * external Iceberg engines stamp both), files are grouped by the
-    * physical names their footer ids give; each group is scanned under its
-    * own physical names and renamed to the schema names, so a column
-    * renamed by the external engine binds by ID instead of silently
-    * null-filling under its old name. Ids the footer lacks fall back
-    * to name mapping per the spec. Footer probing is driver-side
-    * O(files) for every table, id-less ones included (every graft
-    * export): each parquet/ORC file's footer is opened once at its
-    * manifest length, in parallel — the cost Iceberg's own per-task
-    * footer opens pay at execution instead (see [[formatScan]]
-    * for why no file is skipped).
+    * Every file binds its columns through [[bind]] against its own
+    * footer (parquet field ids, ORC `iceberg.id` attributes, avro
+    * `field-id` props — external Iceberg engines stamp them): a column
+    * an engine renamed binds by ID instead of null-filling under its
+    * old name, and one stamped with a retired id reads null. Footer
+    * probing is driver-side O(files) for every table, id-less ones
+    * included (every graft export): each parquet/ORC file's footer is
+    * opened once at its manifest length, in parallel — the cost
+    * Iceberg's own per-task footer opens pay at execution instead (see
+    * [[formatScan]] for why no file is skipped).
     *
-    * Id-less path: EXPLICIT schema, not footer inference — after
-    * additive schema evolution a snapshot legitimately mixes files
-    * with and without the newer columns, and inference would bind to
-    * one arbitrary file's footer. Name-mapping semantics: absent
-    * column → null.
+    * EXPLICIT schema, never footer inference — after additive schema
+    * evolution a snapshot legitimately mixes files with and without
+    * the newer columns, and inference would bind to one arbitrary
+    * file's footer. Absent column → null.
     */
   private def boundScan(spark: SparkSession, p: Plan,
       needPositions: Boolean): DataFrame =
     p.dataFiles.groupBy(_.format).toSeq.sortBy(_._1).map {
       case ("ORC", fs) => boundOrcScan(spark, p, fs, needPositions)
-      case ("AVRO", fs) => boundAvroScan(spark, p, fs)
-      case (_, fs) => formatScan(spark, fs, p.schema,
-        p.fieldIdToName.map(_.swap),
+      case ("AVRO", fs) => avroScan(spark, fs, p.schema, p.fields)
+      case (_, fs) => formatScan(spark, fs, p.schema, p.fields,
         Seq(filePath, col("_metadata.row_index").as("__ice_ri")),
         deleteFile = false)
     }.reduce(_ unionByName _)
@@ -619,21 +616,24 @@ object IcebergImport {
 
   /** Rows of foreign delete files in any mix of the three formats — the
     * one PARQUET/ORC/AVRO dispatch of the delete-file reads: `schema`
-    * columns, bound field-id-first through `nameToId` like the data
-    * scan, plus `__ice_fp`, the row's file in the canonical [[normStr]]
-    * form. A delete file that carries a `schema` column neither by id
-    * nor by name refuses: read as nulls, its rows would delete the wrong
-    * data rows. Callers keep only their own `select`.
+    * columns (top-level, with the field ids `nameToId` gives them),
+    * bound through [[bind]] like the data scan, plus `__ice_fp`, the
+    * row's file in the canonical [[normStr]] form. A delete file that
+    * carries a `schema` column neither by id nor by name refuses: read
+    * as nulls, its rows would delete the wrong data rows. Callers keep
+    * only their own `select`.
     */
   private[graft] def fileRows(spark: SparkSession, files: Seq[IceFile],
-      schema: StructType, nameToId: Map[String, Int]): DataFrame =
+      schema: StructType, nameToId: Map[String, Int]): DataFrame = {
+    val fields = schema.fieldNames.toSeq.map(n => Field(n, nameToId.get(n)))
     files.groupBy(_.format).toSeq.sortBy(_._1).map {
       case ("AVRO", fs) =>
-        avroScan(spark, fs, schema, nameToId, deleteFile = true)
+        avroScan(spark, fs, schema, fields, deleteFile = true)
           .drop("__ice_ri")
       case (_, fs) =>
-        formatScan(spark, fs, schema, nameToId, Seq(filePath), deleteFile = true)
+        formatScan(spark, fs, schema, fields, Seq(filePath), deleteFile = true)
     }.reduce(_ unionByName _)
+  }
 
   /** Spark's native read of PARQUET or ORC files (one format per call)
     * under `schema`, through the index seeded from [[statusesOf]].
@@ -659,60 +659,53 @@ object IcebergImport {
     else new org.apache.hadoop.fs.Path("file", null,
       new java.io.File(s).getAbsolutePath)
 
-  /** AVRO data files (iceberg-core's third data format; Flink/CDC
-    * writers emit them). This Spark build ships no Avro file source,
-    * so the scan is an explicit per-file distributed read: one task
-    * opens its file through the Hadoop FS (conf rebuilt from a
-    * broadcast key-value snapshot of the session's), streams
-    * GenericRecords through avro's DataFileReader, binds TOP-LEVEL
-    * columns FIELD-ID-FIRST from the writer schema's `field-id` props
-    * (iceberg-avro stamps them; plain-name binding when absent, absent
-    * column → null per name mapping) and converts values by the table
-    * schema's Spark type ([[avroValue]]). Row positions are EXACT for
-    * free — the task counts records in file order — so positional
-    * deletes need no derivation at all (cf. the ORC path). Files are
-    * deliberately not split: an avro split cannot know its global row
-    * offset without reading every prior block header, so it is one
-    * task per file — the same per-file task shape Iceberg's own avro
-    * readers use.
-    */
-  private def boundAvroScan(spark: SparkSession, p: Plan,
-      files: Seq[DataFile]): DataFrame =
-    avroScan(spark, files, p.schema, p.fieldIdToName.map(_.swap))
+  /** [[hadoopPath]] as the URI string a task rebuilds it from
+    * (`new Path(URI)`, which decodes nothing twice). */
+  private def uriOf(s: String): String = hadoopPath(s).toUri.toString
 
-  /** The reusable avro row scan behind [[boundAvroScan]] — also reads
-    * avro-format DELETE files (`write.delete.format=avro` tables),
-    * whose rows are plain records under the same binding rules.
-    * Emits `schema` columns + `__ice_fp` (canonical file path) +
-    * `__ice_ri` (exact row position in file order). A `deleteFile`
-    * lacking a `schema` column refuses (see [[fileRows]]).
+  /** AVRO data or delete files (iceberg-core's third data format;
+    * Flink/CDC writers emit them). This Spark build ships no Avro file
+    * source, so the scan is an explicit per-file distributed read: one
+    * task opens its file through the Hadoop FS (conf rebuilt from a
+    * broadcast key-value snapshot of the session's), binds the writer
+    * schema ([[avroFields]]) through [[bind]], streams GenericRecords
+    * through avro's DataFileReader and converts each value by its
+    * physical type ([[physical]], [[avroValue]]) into the table
+    * schema's row positions. Emits `schema` columns + `__ice_fp`
+    * (canonical file path) + `__ice_ri` (exact row position in file
+    * order — the task counts records, so positional deletes need no
+    * derivation, cf. the ORC path). A `deleteFile` lacking a `schema`
+    * column refuses (see [[fileRows]]). Files are deliberately not
+    * split: an avro split cannot know its global row offset without
+    * reading every prior block header, so it is one task per file —
+    * the same per-file task shape Iceberg's own avro readers use.
     */
   private def avroScan(spark: SparkSession, files: Seq[IceFile],
-      schema: StructType, nameToId: Map[String, Int],
+      schema: StructType, fields: Seq[Field],
       deleteFile: Boolean = false): DataFrame = {
     val bc = broadcastHadoopConf(spark)
-    val located = files.map(f => normStr(hadoopPath(f.path).toString))
+    // each row keyed like the joins key it (normStr of the plan path),
+    // the file opened from its URI: apart, so neither form is re-encoded
+    val located = files.map(f => (normStr(f.path), uriOf(f.path)))
     val rdd = spark.sparkContext
       .parallelize(located, located.size)
-      .flatMap { path =>
+      .flatMap { case (path, uri) =>
         val rd = new DataFileReader[GenericRecord](
-          new org.apache.avro.mapred.FsInput(new org.apache.hadoop.fs.Path(path),
+          new org.apache.avro.mapred.FsInput(
+            new org.apache.hadoop.fs.Path(java.net.URI.create(uri)),
             rebuildHadoopConf(bc.value)),
           new GenericDatumReader[GenericRecord]())
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ =>
             try rd.close() catch { case _: Exception => () }))
-        val binder = avroBinder(rd.getSchema, schema.fieldNames.toSeq, nameToId)
-        if (deleteFile) schema.fieldNames.filterNot(binder.contains)
-          .foreach(n => throw missingColumn(path, n))
+        val bound = bind(fields, avroFields(rd.getSchema), path)
+        if (deleteFile) requireAll(path, schema, bound)
+        val phys = physical(schema, bound)
         var i = -1L
         rd.iterator().asScala.map { rec =>
           i += 1
           org.apache.spark.sql.Row.fromSeq(
-            schema.fields.toSeq.map(f =>
-              binder.get(f.name)
-                .map(an => avroValue(rec.get(an), f.dataType)).orNull)
-              :+ path :+ i)
+            phys.fields.toSeq.map(f => avroValue(rec, f)) :+ path :+ i)
         }
       }
     spark.createDataFrame(rdd, StructType(schema.fields.toSeq :+
@@ -733,13 +726,12 @@ object IcebergImport {
     val bc = broadcastHadoopConf(spark)
     val payload = dvs.map { d =>
       val r = d.dv.get
-      (normStr(r.referencedFile), normStr(hadoopPath(d.path).toString),
-        r.offset, r.length, d.seq)
+      (normStr(r.referencedFile), uriOf(d.path), r.offset, r.length, d.seq)
     }
     val rdd = spark.sparkContext.parallelize(payload, payload.size)
       .flatMap { case (ref, puffin, off, len, seq) =>
         val conf = rebuildHadoopConf(bc.value)
-        val hp = new org.apache.hadoop.fs.Path(puffin)
+        val hp = new org.apache.hadoop.fs.Path(java.net.URI.create(puffin))
         val fs = hp.getFileSystem(conf)
         val bytes = new Array[Byte](len.toInt)
         scala.util.Using.resource(fs.open(hp)) { in =>
@@ -797,41 +789,29 @@ object IcebergImport {
     out.result()
   }
 
-  /** table-schema column name → avro writer-schema field name.
-    * Field-id-first when the writer schema carries any `field-id`
-    * props; plain name binding otherwise. Unmatched names are absent
-    * from the map (null-filled by the caller — name-mapping semantics).
-    */
-  private[versioned] def avroBinder(writer: org.apache.avro.Schema,
-      names: Seq[String], nameToId: Map[String, Int]): Map[String, String] = {
-    // iceberg-avro stamps field-id as a NUMERIC json prop — read via
-    // getObjectProp (getProp is textual-only and would return null)
-    def idOf(f: org.apache.avro.Schema.Field): Option[Int] =
-      Option(f.getObjectProp("field-id")).flatMap {
-        case n: Number => Some(n.intValue())
-        case s: String => scala.util.Try(s.trim.toInt).toOption
-        case _ => None
-      }
-    val fields = writer.getFields.asScala
-    val hasIds = fields.exists(f => idOf(f).isDefined)
-    names.flatMap { n =>
-      val target =
-        if (hasIds) nameToId.get(n).flatMap(id =>
-          fields.find(f => idOf(f).contains(id)).map(_.name()))
-          // a writer field the footer stamped NO id for still binds by
-          // name (the spec's name-mapping fallback — the parquet/ORC
-          // paths do the same); without this a later-added column in a
-          // partially-id-stamped avro file silently reads as null.
-          // The fallback applies ONLY to id-less writer fields: an old
-          // file whose `x` carries a RETIRED id (column dropped and
-          // re-added under a fresh id) must read as null, not as the
-          // dead column's bytes.
-          .orElse(Option(writer.getField(n))
-            .filter(f => idOf(f).isEmpty).map(_.name()))
-        else Option(writer.getField(n)).map(_.name())
-      target.map(n -> _)
-    }.toMap
+  /** An avro record's fields as [[bind]] sees them (iceberg-avro stamps
+    * `field-id` as a NUMERIC json prop — read via getObjectProp, getProp
+    * is textual-only). */
+  private[versioned] def avroFields(s: org.apache.avro.Schema): Seq[Field] = {
+    import org.apache.avro.Schema.Type._
+    s.getType match {
+      case RECORD => s.getFields.asScala.toSeq.map(f =>
+        Field(f.name(), Option(f.getObjectProp("field-id")).flatMap {
+          case n: Number => Some(n.intValue())
+          case s: String => scala.util.Try(s.trim.toInt).toOption
+          case _ => None
+        }, avroFields(f.schema())))
+      case UNION =>
+        s.getTypes.asScala.find(_.getType != NULL).toSeq.flatMap(avroFields)
+      case _ => Nil
+    }
   }
+
+  /** `rec`'s value of the field `f` names, null when the record has no
+    * such field. */
+  private def avroValue(rec: GenericRecord, f: StructField): Any =
+    Option(rec.getSchema.getField(f.name))
+      .map(_ => avroValue(rec.get(f.name), f.dataType)).orNull
 
   /** One avro datum → the Spark-external value for `dt` (recursive).
     * Covers the Iceberg avro encodings: micros timestamps, epoch-day
@@ -864,9 +844,7 @@ object IcebergImport {
           java.time.ZoneOffset.UTC)
       case st: StructType =>
         val rec = v.asInstanceOf[GenericRecord]
-        org.apache.spark.sql.Row.fromSeq(st.fields.toSeq.map(f =>
-          Option(rec.getSchema.getField(f.name))
-            .map(_ => avroValue(rec.get(f.name), f.dataType)).orNull))
+        org.apache.spark.sql.Row.fromSeq(st.fields.toSeq.map(avroValue(rec, _)))
       case ArrayType(et, _) =>
         v.asInstanceOf[java.util.Collection[_]].asScala
           .map(avroValue(_, et)).toSeq
@@ -893,11 +871,9 @@ object IcebergImport {
       s"unsupported avro binary encoding: ${other.getClass}")
   }
 
-  /** ORC data files (Hive-lineage shops; iceberg-core writes ORC too).
-    * Binding is field-id-first like parquet — iceberg-orc stamps each
-    * column's field id as the ORC type attribute `iceberg.id`
-    * ([[orcFooter]]) — with name binding (name-mapping semantics:
-    * absent column → null) when the footers carry no ids.
+  /** ORC data files (Hive-lineage shops; iceberg-core writes ORC too),
+    * bound like parquet ([[formatScan]]; iceberg-orc stamps field ids as
+    * the ORC type attribute `iceberg.id`, see [[orcFooter]]).
     *
     * Spark's ORC `_metadata` struct has NO `row_index` (parquet-only in
     * this build), so when positional deletes are in the snapshot the
@@ -922,8 +898,8 @@ object IcebergImport {
         Seq(filePath, col("_metadata.file_block_start").as("__ice_bs"),
           monotonically_increasing_id().as("__ice_mono"))
       else Seq(filePath, lit(null).cast(LongType).as("__ice_ri"))
-    val base = formatScan(spark, files, p.schema,
-      p.fieldIdToName.map(_.swap), metaCols, deleteFile = false)
+    val base = formatScan(spark, files, p.schema, p.fields, metaCols,
+      deleteFile = false)
     if (!needPositions) base
     else {
       // counts come from BASE ITSELF, never a separate scan: split
@@ -948,101 +924,159 @@ object IcebergImport {
     }
   }
 
-  /** One format's (parquet or ORC) files under the spec's column-binding
-    * rules, emitting `schema` columns + `metaCols`: each schema column
-    * binds to the physical column its footer stamps with the column's
-    * field id (`nameToId`), else by name; files are grouped by the
-    * resulting physical names, each group scanned under its own names
-    * and renamed to schema names. A data file lacking a column reads it
-    * as null (name mapping after additive schema evolution); a
-    * `deleteFile` lacking one refuses (see [[fileRows]]). See
-    * [[boundScan]]'s Scaladoc for why an id-less file is never read by
-    * footer inference.
+  /** One format's (parquet or ORC) files, emitting `schema` columns +
+    * `metaCols`: each file's footer ([[parquetFooter]], [[orcFooter]])
+    * binds through [[bind]]; files are grouped by the resulting
+    * [[physical]] schema, each group is scanned under it and cast back
+    * to the schema's names. A `deleteFile` lacking a column refuses (see
+    * [[fileRows]]). See [[boundScan]]'s Scaladoc for why a file is never
+    * read by footer inference.
     */
   private def formatScan(spark: SparkSession, files: Seq[IceFile],
-      schema: StructType, nameToId: Map[String, Int], metaCols: Seq[Column],
+      schema: StructType, fields: Seq[Field], metaCols: Seq[Column],
       deleteFile: Boolean): DataFrame = {
-    val footer: IceFile => Footer =
+    val footer: IceFile => Seq[Field] =
       if (files.head.format == "ORC") orcFooter(spark, _)
       else parquetFooter(spark, _)
-    val sameName = spark.sessionState.conf.resolver
     // probe EVERY file (parallel footer reads), never just the head: a
     // migrated table mixes id-less files (name-mapping writers) with
     // id-stamped ones (Iceberg engines), and if the head happened to be
     // id-less, binding ALL files by name would silently null-fill any
     // column an engine renamed in the id-stamped files — an outcome
     // that flipped with manifest ordering
-    val bound = Manifests.fanOut(files, 2) { f =>
-      val cols = footer(f)
-      val ids = idsOf(cols)
-      val phys = schema.fieldNames.toSeq.map(n =>
-        nameToId.get(n).flatMap(ids.get).getOrElse(n))
-      if (deleteFile) phys.filterNot(n => cols.exists(c => sameName(c._1, n)))
-        .foreach(n => throw missingColumn(f.path, n))
-      (phys, f)
-    }
-    bound.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
+    Manifests.fanOut(files, 2) { f =>
+      val bound = bind(fields, footer(f), f.path)
+      if (deleteFile) requireAll(f.path, schema, bound)
+      (physical(schema, bound), f)
+    }.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
       .sortBy(_._2.head.path)
       .map { case (phys, fs) =>
-        if (phys.distinct.length != phys.length)
-          throw new UnsupportedOperationException(
-            s"field-id binding of ${fs.head.path} maps two schema " +
-              s"columns to one physical name (${phys.mkString(", ")})" +
-              " — refusing rather than mis-binding")
-        val named = schema.fields.toSeq.zip(phys)
-        frameOf(spark, fs, StructType(named.map { case (f, n) => f.copy(name = n) }))
-          .select(named.map { case (f, n) => col(n).as(f.name) } ++ metaCols: _*)
+        frameOf(spark, fs, phys).select(phys.fields.toSeq.zip(schema.fields)
+          .map { case (pf, f) => col(pf.name).cast(f.dataType).as(f.name) }
+          ++ metaCols: _*)
       }.reduce(_ unionByName _)
   }
 
-  /** A delete file's refusal to bind `column` (it would read as nulls). */
-  private def missingColumn(path: String, column: String) =
-    new IllegalArgumentException(s"delete file $path carries no column " +
-      s"$column (by field id or by name) — refusing rather than deleting " +
-      "by nulls")
+  /** One column of a table schema or of a file's footer: its name, the
+    * field id stamped on it (a table schema stamps every one; a footer
+    * may stamp all, some or none) and, for a struct, its fields. */
+  final case class Field(name: String, id: Option[Int],
+      fields: Seq[Field] = Nil)
 
-  /** A parquet/ORC file's top-level footer columns: physical name and
-    * the field id its writer stamped, if any. */
-  private type Footer = Seq[(String, Option[Int])]
+  /** Where one schema column reads from in one file: the physical
+    * column's name and, for a struct, where each field reads from
+    * (None: absent, reads null). */
+  private[versioned] final case class Bound(name: String,
+      fields: Seq[Option[Bound]])
 
-  /** A footer's field-id → physical-name map (empty for id-less files). */
-  private def idsOf(cols: Footer): Map[Int, String] =
-    cols.collect { case (n, Some(id)) => id -> n }.toMap
+  /** THE column binding of foreign Iceberg files, every format — the
+    * spec's column projection: a `schema` column reads the `file`
+    * column stamped with its field id; a file column stamped with ANY
+    * id never binds by name (so a column dropped and re-added under a
+    * fresh id reads null in files holding the retired id); only a file
+    * column with no id binds by name (name mapping), ignoring case as
+    * Spark's default resolver does ([[byName]]). Struct fields bind
+    * by the same rule, recursively; structs inside lists and maps bind
+    * by name. Two columns bound to physical names Spark's readers
+    * cannot tell apart (equal ignoring case) refuse rather than
+    * mis-bind.
+    */
+  private[versioned] def bind(schema: Seq[Field], file: Seq[Field],
+      path: String): Seq[Option[Bound]] = {
+    val bound = schema.map { s =>
+      s.id.flatMap(id => file.find(_.id.contains(id)))
+        .orElse(byName(file.filter(_.id.isEmpty), s.name))
+        .map(f => Bound(f.name, bind(s.fields, f.fields, path)))
+    }
+    val names = bound.flatten.map(_.name)
+    if (names.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.size != names.size)
+      throw new UnsupportedOperationException(
+        s"field-id binding of $path maps two schema columns to one " +
+          s"physical name (${names.mkString(", ")}) — refusing rather " +
+          "than mis-binding")
+    bound
+  }
+
+  /** The column named `name`: the exact name first, else the one equal
+    * ignoring case (a Hive-migrated file's `ID` for the schema's `id`). */
+  private def byName(file: Seq[Field], name: String): Option[Field] =
+    file.find(_.name == name).orElse(file.find(_.name.equalsIgnoreCase(name)))
+
+  /** `st` renamed to where each column reads from in one file
+    * ([[bind]]): an absent one takes a name no file column carries, so
+    * a read under the result null-fills it. */
+  private def physical(st: StructType, bound: Seq[Option[Bound]]): StructType =
+    StructType(st.fields.zip(bound).zipWithIndex.map {
+      case ((f, Some(b)), _) => f.copy(name = b.name, dataType = f.dataType match {
+        case s: StructType => physical(s, b.fields)
+        case t => t
+      })
+      case ((f, None), i) => f.copy(name = s"__ice_absent_$i")
+    })
+
+  /** The field-id tree of an Iceberg schema (or struct type) node: what
+    * [[bind]] binds files against. */
+  private[versioned] def fieldsOf(node: com.fasterxml.jackson.databind.JsonNode)
+      : Seq[Field] =
+    node.get("fields").elements().asScala.toSeq.map { f =>
+      val t = f.get("type")
+      Field(f.get("name").asText(), Option(f.get("id")).map(_.asInt()),
+        if (t.path("type").asText() == "struct") fieldsOf(t) else Nil)
+    }
+
+  /** A delete file's refusal to bind a column (it would read as nulls). */
+  private def requireAll(path: String, schema: StructType,
+      bound: Seq[Option[Bound]]): Unit =
+    schema.fieldNames.zip(bound).collectFirst { case (n, None) => n }
+      .foreach(n => throw new IllegalArgumentException(
+        s"delete file $path carries no column $n (by field id or by " +
+          "name) — refusing rather than deleting by nulls"))
 
   /** One ORC file's footer columns (iceberg-orc stamps field ids as the
     * type attribute `iceberg.id`; name-mapping writers and plain Spark
-    * ORC stamp none).
-    */
-  private def orcFooter(spark: SparkSession, f: IceFile): Footer =
+    * ORC stamp none). */
+  private def orcFooter(spark: SparkSession, f: IceFile): Seq[Field] =
     atFooter(spark, f) { (st, conf) =>
       val rd = org.apache.orc.OrcFile.createReader(st.getPath,
         org.apache.orc.OrcFile.readerOptions(conf).maxLength(st.getLen))
-      try {
-        val s = rd.getSchema
-        s.getFieldNames.asScala.toSeq.zip(s.getChildren.asScala).map {
-          case (n, t) => n -> Option(t.getAttributeValue("iceberg.id"))
-            .flatMap(v => scala.util.Try(v.trim.toInt).toOption) }
-      } finally rd.close()
+      try orcFields(rd.getSchema) finally rd.close()
+    }
+
+  /** An ORC struct type's fields as [[bind]] sees them. */
+  private[versioned] def orcFields(t: org.apache.orc.TypeDescription)
+      : Seq[Field] =
+    if (t.getCategory != org.apache.orc.TypeDescription.Category.STRUCT) Nil
+    else t.getFieldNames.asScala.toSeq.zip(t.getChildren.asScala).map {
+      case (n, c) => Field(n, Option(c.getAttributeValue("iceberg.id"))
+        .flatMap(v => scala.util.Try(v.trim.toInt).toOption), orcFields(c))
     }
 
   /** One parquet file's footer columns (parquet field ids; name-mapping
-    * writers stamp none).
-    */
-  private def parquetFooter(spark: SparkSession, f: IceFile): Footer =
+    * writers stamp none). */
+  private def parquetFooter(spark: SparkSession, f: IceFile): Seq[Field] =
     atFooter(spark, f) { (st, conf) =>
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try rd.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
-        .map(c => c.getName -> Option(c.getId).map(_.intValue()))
+      try parquetFields(rd.getFooter.getFileMetaData.getSchema)
       finally rd.close()
     }
+
+  /** A parquet group's columns as [[bind]] sees them: a struct is a group
+    * without a LIST/MAP annotation. */
+  private[versioned] def parquetFields(g: org.apache.parquet.schema.GroupType)
+      : Seq[Field] =
+    g.getFields.asScala.toSeq.map(c => Field(c.getName,
+      Option(c.getId).map(_.intValue()),
+      if (c.isPrimitive || c.getLogicalTypeAnnotation != null) Nil
+      else parquetFields(c.asGroupType())))
 
   /** One file's footer as `read` decodes it, opened at the file's
     * manifest length. A file shorter than its manifest says fails naming
     * the file, not with a bare EOF.
     */
   private def atFooter(spark: SparkSession, f: IceFile)(
-      read: (FileStatus, org.apache.hadoop.conf.Configuration) => Footer): Footer = {
+      read: (FileStatus, org.apache.hadoop.conf.Configuration) => Seq[Field])
+      : Seq[Field] = {
     val st = statusesOf(Seq(f)).head
     try read(st, spark.sessionState.newHadoopConf())
     catch { case e: java.io.EOFException => throw new java.io.IOException(
@@ -1067,41 +1101,37 @@ object IcebergImport {
     conf
   }
 
-  /** Guard for callers that scan plan parquet files OUTSIDE
-    * [[boundScan]]'s field-id-first binding (the streaming source binds
-    * by NAME through one shared DSv2 reader factory, which cannot switch
-    * physical schemas per file group): if any file's footer ids map a
-    * schema column to a DIFFERENT physical name (external engine renamed
-    * a column after writing), a name-bound scan would silently null-fill
-    * it — refuse loudly instead. Id-less files (every graft export) pass
-    * with a single probe.
+  /** Guard for callers that read plan parquet files by NAME (the
+    * streaming source reads through one shared DSv2 reader factory,
+    * which cannot switch physical schemas per file): refuse unless
+    * [[bind]] binds every file as it would with the footer's ids
+    * ignored — else a renamed column would read null, one whose id was
+    * retired the dead column's values. Id-less files (every graft
+    * export) pass.
     */
   private[graft] def assertNameBindable(spark: SparkSession, p: Plan,
       files: Seq[DataFile]): Unit = {
-    if (files.isEmpty) return
-    // probe every file, not just the head: a mixed table (id-less files
-    // behind an id-stamped tail, or vice versa) must be checked per
-    // file — the loop below naturally skips id-less footers
-    val nameToId = p.fieldIdToName.map(_.swap)
+    def noIds(fs: Seq[Field]): Seq[Field] =
+      fs.map(f => Field(f.name, None, noIds(f.fields)))
     files.foreach { f =>
-      val idMap = idsOf(parquetFooter(spark, f))
-      val drifted = p.schema.fields.flatMap(sf =>
-        nameToId.get(sf.name).flatMap(idMap.get)
-          .filter(_ != sf.name).map(phys => s"${sf.name} (stored as $phys)"))
-      if (drifted.nonEmpty) throw new UnsupportedOperationException(
-        s"${f.path} stores column(s) ${drifted.mkString(", ")} under a " +
-          "physical name the schema renamed away — a name-bound " +
-          "stream would silently null-fill them. Read via CALL " +
-          "iceberg_import (field-id binding) instead")
+      val cols = parquetFooter(spark, f)
+      if (bind(p.fields, cols, f.path) != bind(p.fields, noIds(cols), f.path))
+        throw new UnsupportedOperationException(
+          s"${f.path} stores a column under a name its field id does " +
+            "not bind (renamed, or dropped and re-added) — a name-bound " +
+            "stream would read it wrong. Read via CALL iceberg_import " +
+            "(field-id binding) instead")
     }
   }
 
   /** Driver-side twin of [[normPath]] for plan paths ([[toLocal]] output:
     * absolute local paths or non-file URIs) — renders the same canonical
-    * form `normPath(_metadata.file_path)` produces on executors.
+    * form `normPath(_metadata.file_path)` produces on executors: a
+    * local path percent-encoded as Spark renders it (a hive-escaped
+    * directory's space and `%`).
     */
   private[graft] def normStr(s: String): String =
-    if (s.startsWith("/")) "file://" + s
+    if (s.startsWith("/")) "file://" + new java.net.URI(null, null, s, null).getRawPath
     else if (s.startsWith("file:"))
       "file:///" + s.stripPrefix("file:").dropWhile(_ == '/')
     else s

@@ -814,6 +814,12 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     loadResult(serve(repo, prefix, ref, key))
   }
 
+  /** The format version of a staged create: what the exporter writes
+    * for a table without delete files (the staged commit may carry
+    * none), never the server's 0 (auto). */
+  private def stagedVersion: Int =
+    IcebergExport.versionOf(formatVersion, needsV2 = false)
+
   /** The staged-create LoadTableResult: snapshot-less Iceberg metadata
     * built IN MEMORY from the posted schema/spec/properties — no
     * branch commit, no file written, so an abandoned stage leaves
@@ -828,7 +834,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       schema: org.apache.spark.sql.types.StructType,
       spec: Seq[PartitionField], props: Map[String, String]): ObjectNode = {
     val iceSchema = IcebergExport.icebergSchema(schema)
-    val meta = IcebergMeta.Table(formatVersion,
+    val meta = IcebergMeta.Table(stagedVersion,
       java.util.UUID.randomUUID().toString,
       destRootOf(prefix, ref, key).toString, Some(0L), None,
       System.currentTimeMillis(), IcebergExport.lastColumnId(schema),
@@ -1005,6 +1011,14 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         s"$what changed: expected $want, found $have")
   }
 
+  /** The updates a view commit takes: its version (+ the pointer to
+    * it), its schema and properties, and the identity/version/location
+    * no-ops — the one place a view's vocabulary is decided. */
+  private val ViewActions = Set("add-view-version",
+    "set-current-view-version", "add-schema", "set-properties",
+    "remove-properties", "assign-uuid", "upgrade-format-version",
+    "set-location")
+
   /** Parse a change's updates: at most one add-snapshot (+ its
     * set-snapshot-ref), at most one add-schema (+ set-current-schema)
     * — the spec's schema-evolution commit, lowered onto graft's
@@ -1014,10 +1028,11 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * writes, property updates, and the advisory updates graft accepts
     * as validated no-ops; anything else refuses. `served` is None for
     * a staged create, whose identity/serving details (uuid, format
-    * version, location) graft assigns itself on export.
+    * version, location) graft assigns itself on export, and for a
+    * `view` change, which takes only the [[ViewActions]].
     */
   private def parseUpdates(change: JsonNode, served: Option[IcebergMeta.Table],
-      key: String): Updates = {
+      key: String, view: Boolean = false): Updates = {
     // graft.* table properties are engine state (MoR tombstones, commit
     // sequence, staging markers): a REST client rewriting them could
     // resurrect deleted rows — same guard as native ALTER's SetProperty
@@ -1037,8 +1052,11 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     Option(change.get("updates")).toSeq.flatMap(_.elements().asScala)
       .foldLeft(Updates()) { (acc, u) =>
         text(u, "action") match {
-          case "add-snapshot" =>
-            acc.copy(snap = once("add-snapshot", acc.snap,
+          case a if view && !ViewActions(a) =>
+            throw new UnsupportedOperationException(
+              s"unsupported view update over REST: $a")
+          case a @ "add-snapshot" =>
+            acc.copy(snap = once(a, acc.snap,
               Option(u.get("snapshot"))).map(IcebergMeta.parseSnapshot))
           case "set-snapshot-ref" =>
             val rn = Option(u.get("ref-name")).map(_.asText()).getOrElse("main")
@@ -1069,14 +1087,14 @@ final class IcebergRestServer private (single: Option[GraftRepo],
             acc.copy(removeProps = acc.removeProps ++
               Option(u.get("removals")).toSeq
                 .flatMap(_.elements().asScala).map(n => guardProp(n.asText())))
-          case "add-schema" =>
-            acc.copy(schema = once("add-schema", acc.schema,
+          case a @ "add-schema" =>
+            acc.copy(schema = once(a, acc.schema,
               Option(u.get("schema"))))
           case "set-current-schema" =>
             acc.copy(currentSchema = Some(Option(u.get("schema-id"))
               .map(_.asInt()).getOrElse(-1)))
-          case "add-partition-spec" =>
-            acc.copy(spec = once("add-partition-spec", acc.spec,
+          case a @ "add-partition-spec" =>
+            acc.copy(spec = once(a, acc.spec,
               Option(u.get("spec")).orElse(Some(u))))
           case "set-default-spec" => acc.copy(setDefaultSpec = true)
           // graft tables have no sort orders; an engine's declared
@@ -1125,6 +1143,10 @@ final class IcebergRestServer private (single: Option[GraftRepo],
             }
             acc
           case "set-location" if served.isEmpty => acc
+          case a @ "add-view-version" if view =>
+            acc.copy(viewVersion = once(a, acc.viewVersion,
+              Option(u.get("view-version"))))
+          case "set-current-view-version" if view => acc
           case other => throw new UnsupportedOperationException(
             s"unsupported metadata update over REST: $other (supported: " +
               "add-snapshot + set-snapshot-ref + set-properties + " +
@@ -1161,9 +1183,9 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     TableOps.validateSpec(schema, spec)
     // first snapshot's files (a zero-row CTAS may post none); the
     // engine wrote its manifest list against the staged metadata this
-    // server handed out, which serves at `formatVersion`
+    // server handed out
     val entries = u.snap.map { snap =>
-      val (postedData, postedDeletes) = postedFiles(snap, formatVersion)
+      val (postedData, postedDeletes) = postedFiles(snap, stagedVersion)
       if (postedDeletes.nonEmpty) throw new UnsupportedOperationException(
         "a staged create's first snapshot carries delete files")
       ingestEntries(repo, ref, key, destRoot, postedData, schema,
@@ -1181,7 +1203,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       : Staged = {
     val Updates(snapNode, newSchemaNode, newSpecNode, sawSetDefaultSpec,
       setCurrentSchema, setRefTarget, tagCreate, tagRemove, setProps,
-      removeProps) = u
+      removeProps, _) = u
     val servedGraftSnap = served.properties("graft.source-snapshot")
     val servedSnapId = served.currentSnapshotId
     val servedSchemaId = served.currentSchemaId
@@ -1552,7 +1574,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     val eqFilter =
       if (eqDeletes.isEmpty) None
       else Some(equalityTombstoneFilter(repo, destRoot, eqDeletes,
-        basePlan.fieldIdToName, hconf))
+        basePlan))
     val entries = ingestEntries(repo, ref, key, destRoot, addedFiles,
       ev.schema, ev.mapping, ev.spec, hconf)
     val rows = entries.map(_.rows).sum
@@ -1943,7 +1965,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       val eqFilter =
         if (eqDeletes.isEmpty) None
         else Some(equalityTombstoneFilter(repo, destRoot, eqDeletes,
-          basePlan.fieldIdToName, hconf))
+          basePlan))
       val servedMaxSeq = (basePlan.dataFiles.iterator.map(_.seq) ++
         basePlan.deleteFiles.iterator.map(_.seq) ++ Iterator(0L)).max
       val subSeq = servedMaxSeq + 1
@@ -2231,7 +2253,9 @@ final class IcebergRestServer private (single: Option[GraftRepo],
 
   /** Posted equality delete files → ONE graft tombstone predicate: the
     * exact inverse of the exporter's tombstone → equality-delete
-    * mapping. Each file's value rows (read driver-side, O(delete rows))
+    * mapping. Each file's value rows — read in any of the three formats
+    * through [[IcebergImport.fileRows]], bound by field id like every
+    * foreign read, one small Spark job per equality column set —
     * become per-row equality conjunctions over the referenced columns
     * (In(...) for the common single-column id case), Or-combined across
     * rows and files. Capped at [[IcebergExport.MaxEqualityRows]] total —
@@ -2239,14 +2263,17 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * exporter makes in the other direction.
     */
   private def equalityTombstoneFilter(repo: GraftRepo, destRoot: Path,
-      eqDeletes: Seq[IcebergImport.DeleteFile],
-      fieldIdToName: Map[Int, String],
-      hconf: org.apache.hadoop.conf.Configuration)
+      eqDeletes: Seq[IcebergImport.DeleteFile], basePlan: IcebergImport.Plan)
       : org.apache.spark.sql.sources.Filter = {
     import org.apache.spark.sql.sources
+    val s = spark.getOrElse(throw new UnsupportedOperationException(
+      "equality-delete commits need the serving SparkSession: the " +
+        "delete files are read with a Spark job"))
+    // a path string IcebergImport opens as-is (Path.toString is the
+    // decoded form; repo.dataLocation's URI would be encoded twice)
     def localOf(loc: String): String =
       repo.dataIO.relOf(loc) match {
-        case Some(rel) => repo.dataLocation(rel)
+        case Some(rel) => repo.dataIO.hadoopPath(rel).toString
         case None =>
           val local = java.nio.file.Paths.get(loc).toAbsolutePath.normalize
           if (!local.startsWith(destRoot) || !Files.isRegularFile(local))
@@ -2257,116 +2284,56 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           local.toString
       }
     var totalRows = 0L
-    val perFile = eqDeletes.map { d =>
-      if (d.format != "PARQUET") throw new UnsupportedOperationException(
-        s"equality delete files must be parquet over REST: ${d.path} " +
-          s"is ${d.format}")
-      if (d.equalityIds.isEmpty) throw new IllegalArgumentException(
-        s"equality delete without equality_ids: ${d.path}")
-      // the served schema (what the engine saw and what the delete
-      // file's columns are named after) uses PHYSICAL column names by
-      // design (IcebergExport class doc) — which is exactly the name
-      // space tombstone predicates live in, so the served name is used
-      // VERBATIM; remapping through nameMapping would mis-target the
-      // rename-then-re-add-same-name edge (the re-added logical name
-      // maps to a FRESH physical name, not this column's bytes)
-      val physCols = d.equalityIds.map(id => fieldIdToName.getOrElse(id,
-        throw new IllegalArgumentException(
-          s"equality_ids references unknown field id $id")))
-      val rows = readEqualityRows(localOf(d.path), hconf, physCols)
-      totalRows += rows.size
-      if (totalRows > IcebergExport.MaxEqualityRows)
-        throw new UnsupportedOperationException(
-          s"equality delete commit carries more than " +
-            s"${IcebergExport.MaxEqualityRows} value rows — post the " +
-            "copy-on-write rewrite instead")
-      if (rows.isEmpty) None
-      else if (rows.exists(_.values.exists(_ == null)))
-        throw new UnsupportedOperationException(
-          s"equality delete ${d.path} carries NULL values — the spec's " +
-            "null-safe match is not expressible as a graft tombstone; " +
-            "post the CoW rewrite instead")
-      else if (physCols.size == 1)
-        Some(sources.In(physCols.head, rows.map(_(physCols.head)).toArray))
-      else Some(rows.map { r =>
-        physCols.map { pc =>
-          sources.EqualTo(pc, r(pc)): sources.Filter
-        }.reduce(sources.And(_, _))
-      }.reduce(sources.Or(_, _)))
-    }
-    val filters = perFile.flatten
+    val perGroup = eqDeletes.groupBy(_.equalityIds).toSeq
+      .sortBy(_._1.mkString(",")).map { case (ids, files) =>
+        if (ids.isEmpty) throw new IllegalArgumentException(
+          s"equality delete without equality_ids: ${files.head.path}")
+        // the served schema (what the engine saw and what the delete
+        // file's columns are named after) uses PHYSICAL column names by
+        // design (IcebergExport class doc) — which is exactly the name
+        // space tombstone predicates live in, so the served name is
+        // used VERBATIM; remapping through nameMapping would mis-target
+        // the rename-then-re-add-same-name edge (the re-added logical
+        // name maps to a FRESH physical name, not this column's bytes)
+        val cols = ids.map(id => basePlan.fieldIdToName.getOrElse(id,
+          throw new IllegalArgumentException(
+            s"equality_ids references unknown field id $id")))
+        val eqSchema = org.apache.spark.sql.types.StructType(
+          cols.map(basePlan.schema(_)))
+        val rows = IcebergImport.fileRows(s,
+          files.map(d => d.copy(path = localOf(d.path))), eqSchema,
+          cols.zip(ids).toMap)
+          .select((cols :+ "__ice_fp").map(col): _*)
+          .limit(IcebergExport.MaxEqualityRows + 1).collect()
+        totalRows += rows.length
+        if (totalRows > IcebergExport.MaxEqualityRows)
+          throw new UnsupportedOperationException(
+            s"equality delete commit carries more than " +
+              s"${IcebergExport.MaxEqualityRows} value rows — post the " +
+              "copy-on-write rewrite instead")
+        rows.foreach { r =>
+          cols.indices.foreach { i =>
+            if (r.isNullAt(i)) throw new UnsupportedOperationException(
+              s"equality delete ${r.getString(cols.size)} carries NULL " +
+                "values — the spec's null-safe match is not expressible " +
+                "as a graft tombstone; post the CoW rewrite instead")
+            if (FilterJson.toJson(sources.EqualTo(cols(i), r.get(i))).isEmpty)
+              throw new UnsupportedOperationException(
+                s"equality delete column '${cols(i)}' has unsupported " +
+                  s"type ${eqSchema(i).dataType.simpleString}")
+          }
+        }
+        if (rows.isEmpty) None
+        else if (cols.size == 1)
+          Some(sources.In(cols.head, rows.map(_.get(0))))
+        else Some(rows.map(r => cols.indices.map(i =>
+          sources.EqualTo(cols(i), r.get(i)): sources.Filter)
+          .reduce(sources.And(_, _))).reduce(sources.Or(_, _)))
+      }
+    val filters = perGroup.flatten
     if (filters.isEmpty) throw new IllegalArgumentException(
       "equality delete commit carries no value rows")
     filters.reduce(sources.Or(_, _))
-  }
-
-  /** Driver-side value-row read of an equality delete parquet: the
-    * requested columns' values in [[FilterJson]]'s canonical decoded
-    * forms (Long / Double / String / Boolean / java.sql.Date /
-    * java.sql.Timestamp). Delete files are O(deleted keys), so this is
-    * the same bounded cost the footer-stats pass pays per data file.
-    */
-  private def readEqualityRows(loc: String,
-      hconf: org.apache.hadoop.conf.Configuration,
-      wantCols: Seq[String]): Seq[Map[String, Any]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val reader = org.apache.parquet.hadoop.ParquetReader.builder(
-      new org.apache.parquet.hadoop.example.GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(loc)).withConf(hconf).build()
-    val out = scala.collection.mutable.ArrayBuffer[Map[String, Any]]()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        val gt = g.getType
-        out += wantCols.map { c =>
-          val idx =
-            try gt.getFieldIndex(c)
-            catch { case _: Exception =>
-              throw new IllegalArgumentException(
-                s"equality delete $loc has no column '$c'")
-            }
-          if (g.getFieldRepetitionCount(idx) == 0) c -> null
-          else {
-            val pt = gt.getType(idx).asPrimitiveType()
-            val ann = Option(pt.getLogicalTypeAnnotation)
-            val value: Any = pt.getPrimitiveTypeName match {
-              case BINARY if ann.exists(
-                _.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]) =>
-                g.getString(idx, 0)
-              case INT32 if ann.exists(
-                _.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]) =>
-                java.sql.Date.valueOf(
-                  java.time.LocalDate.ofEpochDay(g.getInteger(idx, 0).toLong))
-              case INT64 if ann.exists(
-                _.isInstanceOf[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation]) =>
-                val t = ann.get
-                  .asInstanceOf[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation]
-                val raw = g.getLong(idx, 0)
-                val us = t.getUnit match {
-                  case LogicalTypeAnnotation.TimeUnit.MICROS => raw
-                  case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
-                  case other => throw new UnsupportedOperationException(
-                    s"equality delete timestamp unit $other")
-                }
-                java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-                  Math.floorDiv(us, 1000000L),
-                  Math.floorMod(us, 1000000L) * 1000L))
-              case INT32 => g.getInteger(idx, 0).toLong
-              case INT64 => g.getLong(idx, 0)
-              case BOOLEAN => g.getBoolean(idx, 0)
-              case FLOAT => g.getFloat(idx, 0).toDouble
-              case DOUBLE => g.getDouble(idx, 0)
-              case other => throw new UnsupportedOperationException(
-                s"equality delete column '$c' has unsupported type $other")
-            }
-            c -> value
-          }
-        }.toMap
-        g = reader.read()
-      }
-    } finally reader.close()
-    out.toSeq
   }
 
   /** Refuse an identity partition declaration the file's own parquet
@@ -2718,45 +2685,16 @@ final class IcebergRestServer private (single: Option[GraftRepo],
             s"unsupported view commit requirement: $other")
         }
       }
-    var vvNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var schemaNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var setProps = Map.empty[String, String]
-    var removeProps = Set.empty[String]
-    Option(req.get("updates")).toSeq
-      .flatMap(_.elements().asScala).foreach { u =>
-        text(u, "action") match {
-          case "assign-uuid" | "upgrade-format-version" |
-               "set-location" | "set-current-view-version" => ()
-          case "add-schema" =>
-            schemaNode = Some(Option(u.get("schema")).getOrElse(
-              throw new IllegalArgumentException(
-                "add-schema carries no schema")))
-          case "add-view-version" =>
-            if (vvNode.isDefined) throw new UnsupportedOperationException(
-              "one add-view-version per commit")
-            vvNode = Some(Option(u.get("view-version")).getOrElse(
-              throw new IllegalArgumentException(
-                "add-view-version carries no view-version")))
-          case "set-properties" =>
-            setProps ++= Option(u.get("updates")).toSeq
-              .flatMap(_.fields().asScala)
-              .map(e => e.getKey -> e.getValue.asText())
-          case "remove-properties" =>
-            removeProps ++= Option(u.get("removals")).toSeq
-              .flatMap(_.elements().asScala).map(_.asText())
-          case other => throw new UnsupportedOperationException(
-            s"unsupported view update over REST: $other")
-        }
-      }
+    val u = parseUpdates(req, None, key, view = true)
     repo.commitRetryViews(ref, s"rest: replace view $key") { base =>
       val cur = base.viewMap.getOrElse(key,
         throw new NoSuchElementException(s"no such view: $key @ $ref"))
-      val next = vvNode match {
+      val next = u.viewVersion match {
         case None => // properties-only commit
-          cur.copy(properties = (cur.properties -- removeProps) ++ setProps)
+          cur.copy(properties = (cur.properties -- u.removeProps) ++ u.setProps)
         case Some(vv) =>
           val sql = viewSql(vv)
-          val schema = schemaNode.map(IcebergImport.structOf)
+          val schema = u.schema.map(IcebergImport.structOf)
             .map(_.json).getOrElse(cur.schemaJson)
           val dns = Option(vv.get("default-namespace")).toSeq
             .flatMap(_.elements().asScala).map(_.asText()).toSeq
@@ -2774,7 +2712,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
               .getOrElse(cur.catalog),
             queryColumnNames = Nil, columnAliases = Nil,
             columnComments = Nil,
-            properties = (cur.properties -- removeProps) ++ setProps)
+            properties = (cur.properties -- u.removeProps) ++ u.setProps)
       }
       base.viewMap + (key -> next)
     }
@@ -3135,7 +3073,8 @@ object IcebergRestServer {
       tagCreate: Option[(String, Long)] = None,
       tagRemove: Option[String] = None,
       setProps: Map[String, String] = Map.empty,
-      removeProps: Set[String] = Set.empty)
+      removeProps: Set[String] = Set.empty,
+      viewVersion: Option[JsonNode] = None)
 
   /** A change only the single-table route takes, as its own commit: a
     * tag ref write, a rollback, a partition-spec change or a `replace`

@@ -306,7 +306,7 @@ private[versioned] final class LayoutDataWriter(
     // footers of files THIS task just wrote: local, page-hot, a few KB —
     // the stats collection is fully distributed, the driver only renders
     GraftWrittenFiles(closedNdv.toSeq.map { case (path, ndv) =>
-      FooterStats.read(path, conf.value, physSchema, ndv)
+      FooterStats.read(new Path(path), conf.value, physSchema, ndv)
     })
   }
 

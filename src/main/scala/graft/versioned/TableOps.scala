@@ -277,7 +277,7 @@ object TableOps {
       schema: StructType,
       hadoopConf: org.apache.hadoop.conf.Configuration): Seq[FileEntry] =
     Manifests.fanOut(rels, 2) { rel =>
-      LayoutWriter.entryOf(rel, FooterStats.read(repo.dataLocation(rel),
+      LayoutWriter.entryOf(rel, FooterStats.read(repo.dataIO.hadoopPath(rel),
         hadoopConf, schema, Map.empty), schema, Nil)
     }
 
@@ -294,8 +294,9 @@ object TableOps {
       files: Seq[FileStatus], schema: StructType, spec: Seq[PartitionField],
       bloomCols: Seq[String], bloomItems: Long): Seq[FileEntry] = {
     if (files.isEmpty) return Nil
-    // keyed as input_file_name() renders a path
-    val bytesOf = files.map(f => f.getPath.toUri.toString -> f.getLen).toMap
+    // keyed as input_file_name() renders a path (its URI); the repo path
+    // comes from the status, whose decoded form dataRelOf takes
+    val statusOf = files.map(f => f.getPath.toUri.toString -> f).toMap
     val written = ParquetReadBridge.frame(spark, files, schema)
     val leaves = scanStatLeaves(schema)
     val statCols = leaves.flatMap { case (n, _) =>
@@ -311,8 +312,8 @@ object TableOps {
     written.groupBy(input_file_name().as("__file"))
       .agg(count(lit(1)).as("__rows"), (statCols.toIndexedSeq ++ bloomAggs): _*)
       .collect().toIndexedSeq.map { r =>
-        val file = r.getAs[String]("__file")
-        val rel = repo.dataRelOf(file)
+        val st = statusOf(r.getAs[String]("__file"))
+        val rel = repo.dataRelOf(st.getPath.toString)
         def stats(prefix: String): Map[String, String] =
           leaves.flatMap { case (n, _) =>
             Option(r.getAs[String](s"$prefix:$n")).map(n -> _)
@@ -328,7 +329,7 @@ object TableOps {
           Option(r.getAs[Array[Byte]](s"bloom:$c")).map(c -> _)).toMap
         if (sidecar.nonEmpty) Blooms.write(repo.dataIO, rel, sidecar)
         FileEntry(rel, r.getAs[Long]("__rows"), stats("min"), stats("max"),
-          pvals, Some(bytesOf(file)),
+          pvals, Some(st.getLen),
           bloomCols = if (sidecar.isEmpty) None else Some(sidecar.keys.toSeq.sorted),
           nulls = Some(longStats("nulls")),
           ndv = Some(longStats("ndv")))
@@ -442,8 +443,7 @@ object TableOps {
 
   private[versioned] def statusOf(repo: GraftRepo, rel: String,
       bytes: Long): FileStatus =
-    new FileStatus(bytes, false, 0, 0L, 0L,
-      new org.apache.hadoop.fs.Path(repo.dataLocation(rel)))
+    new FileStatus(bytes, false, 0, 0L, 0L, repo.dataIO.hadoopPath(rel))
 
   /** DataFrame over a snapshot, scanning only files that survive stats
     * pruning against `filters`.

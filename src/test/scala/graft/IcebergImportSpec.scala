@@ -1401,6 +1401,167 @@ class IcebergImportSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll
       derived shouldBe fe.partValues
     }
   }
+
+  /** A snapshot of `data` (seq 1) plus `deletes` (seq 2, equality on
+    * `eqIds`), every file in `format`, under the schema `fieldsJson`. */
+  private def tableOf(name: String, format: String, data: Seq[Path],
+      deletes: Seq[Path], eqIds: Seq[Int], fieldsJson: String,
+      lastColId: Int): Path = {
+    val metaDir = Files.createDirectories(
+      Files.createTempDirectory(name).resolve("metadata"))
+    val mData = metaDir.resolve("m-data.avro")
+    writeManifest(mData, data.map(d => (d, 0, Some(1L), Nil)), _ => format)
+    val mDel = metaDir.resolve("m-del.avro")
+    writeManifest(mDel, deletes.map(d => (d, 2, Some(2L), eqIds)), _ => format)
+    val listPath = metaDir.resolve("snap-61.avro")
+    writeList(listPath, 61L, (mData, 0, 1L, 1L) +:
+      (if (deletes.isEmpty) Nil else Seq((mDel, 1, 2L, 2L))))
+    v2Metadata(metaDir, metaDir.getParent, listPath, 61L, fieldsJson, lastColId)
+  }
+
+  test("a column dropped and re-added under a fresh id reads null in " +
+    "parquet and ORC files holding the retired id; an equality-delete " +
+    "file holding only the retired id refuses instead of deleting by " +
+    "the dead column's values") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.MetadataBuilder
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("ice-retired")
+    def idMeta(id: Int) =
+      new MetadataBuilder().putLong("parquet.field.id", id.toLong).build()
+    // `x` was id 2, dropped, and re-added as id 7: old files hold the
+    // dead values under the same name
+    def parquet(name: String, rows: Seq[(Int, String)], xId: Int): Path = {
+      val f = dataDir.resolve(name)
+      writeOneParquet(rows.toDF("id", "x").select(col("id").as("id", idMeta(1)),
+        col("x").as("x", idMeta(xId))), f)
+      f
+    }
+    def orc(name: String, rows: Seq[(Int, String)], xId: Int): Path = {
+      val f = dataDir.resolve(name)
+      writeOrcWithIds(f, rows, ("id", "x"), (1, xId))
+      f
+    }
+    val fields =
+      """{"id":1,"name":"id","required":false,"type":"int"},
+        |{"id":7,"name":"x","required":false,"type":"string"}"""
+        .stripMargin.replaceAll("\n", "")
+    Seq(("PARQUET", parquet _, "parquet"), ("ORC", orc _, "orc")).foreach {
+      case (format, write, ext) =>
+        val old = write(s"old.$ext", Seq((0, "dead0"), (1, "dead1")), 2)
+        val cur = write(s"new.$ext", Seq((10, "x10"), (11, "x11")), 7)
+        withClue(format) {
+          val meta = tableOf(s"ice-ret-$ext", format, Seq(old, cur), Nil,
+            Nil, fields, 7)
+          IcebergImport.read(spark, meta, None).orderBy("id").collect()
+            .map(r => (r.getInt(0), r.getString(1))).toSeq shouldBe
+            Seq((0, null), (1, null), (10, "x10"), (11, "x11"))
+          // a by-name stream would read the dead values: it refuses
+          if (format == "PARQUET") {
+            val plan = IcebergImport.plan(meta)
+            intercept[UnsupportedOperationException](IcebergImport
+              .assertNameBindable(spark, plan, plan.dataFiles))
+          }
+          // the delete's `x` carries the retired id 2, not the x (id 7)
+          // its equality_ids name: by name it would delete row 1
+          val del = write(s"eq-del.$ext", Seq((1, "dead1")), 2)
+          val err = intercept[IllegalArgumentException](
+            IcebergImport.read(spark, tableOf(s"ice-ret-del-$ext", format,
+              Seq(old, cur), Seq(del), Seq(7), fields, 7), None).collect())
+          err.getMessage should (include(del.toString) and include("column x"))
+        }
+    }
+  }
+
+  test("a field renamed inside a struct binds by id; a struct field the " +
+    "file lacks reads null") {
+    import org.apache.spark.sql.functions.{col, struct}
+    import org.apache.spark.sql.types.MetadataBuilder
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("ice-nested")
+    def idMeta(id: Int) =
+      new MetadataBuilder().putLong("parquet.field.id", id.toLong).build()
+    // written while s.a was still named s.old_a (id 3)
+    val f = dataDir.resolve("n.parquet")
+    writeOneParquet(Seq((1, 10, "b1"), (2, 20, "b2")).toDF("id", "a", "b")
+      .select(col("id").as("id", idMeta(1)),
+        struct(col("a").as("old_a", idMeta(3)), col("b").as("b", idMeta(4)))
+          .as("s", idMeta(2))), f)
+    val fields =
+      """{"id":1,"name":"id","required":false,"type":"int"},
+        |{"id":2,"name":"s","required":false,"type":{"type":"struct",
+        |"fields":[{"id":3,"name":"a","required":false,"type":"int"},
+        |{"id":4,"name":"b","required":false,"type":"string"},
+        |{"id":5,"name":"c","required":false,"type":"long"}]}}"""
+        .stripMargin.replaceAll("\n", "")
+    IcebergImport.read(spark, tableOf("ice-nested-t", "PARQUET", Seq(f), Nil,
+      Nil, fields, 5), None).orderBy("id")
+      .selectExpr("id", "s.a", "s.b", "s.c").collect().map(_.toSeq).toSeq shouldBe
+      Seq(Seq(1, 10, "b1", null), Seq(2, 20, "b2", null))
+  }
+
+  test("AVRO data and delete files under an identity-partition directory " +
+    "whose name a URI quotes (`%3A`, a space): equality and positional " +
+    "deletes still apply") {
+    val root = Files.createTempDirectory("ice-avro-esc")
+    val dataDir = Files.createDirectories(
+      root.resolve("data").resolve("ts=2024-06-01T07%3A08 x"))
+    val metaDir = Files.createDirectories(root.resolve("metadata"))
+    val fileA = dataDir.resolve("a-data.avro") // ids 0..4
+    writeAvroData(fileA,
+      """{"type":"record","name":"r","fields":[
+        |{"name":"id","type":["null","int"],"default":null,"field-id":1},
+        |{"name":"v","type":["null","string"],"default":null,"field-id":2}]}"""
+        .stripMargin.replaceAll("\n", ""),
+      (0 until 5).map(i => Map[String, Any]("id" -> i, "v" -> s"a$i")))
+    // (fileA, pos 0) kills id=0; equality on id kills id=3
+    val delPos = dataDir.resolve("del-pos.avro")
+    writeAvroData(delPos,
+      """{"type":"record","name":"pd","fields":[
+        |{"name":"file_path","type":"string","field-id":2147483546},
+        |{"name":"pos","type":"long","field-id":2147483545}]}"""
+        .stripMargin.replaceAll("\n", ""),
+      Seq(Map[String, Any]("file_path" -> fileA.toUri.toString, "pos" -> 0L)))
+    val delEq = dataDir.resolve("del-eq.avro")
+    writeAvroData(delEq,
+      """{"type":"record","name":"ed","fields":[
+        |{"name":"id","type":["null","int"],"default":null,"field-id":1}]}"""
+        .stripMargin.replaceAll("\n", ""),
+      Seq(Map[String, Any]("id" -> 3)))
+    val mData = metaDir.resolve("m-data.avro")
+    writeManifest(mData, Seq((fileA, 0, Some(1L), Nil)), _ => "AVRO")
+    val mDel = metaDir.resolve("m-del.avro")
+    writeManifest(mDel, Seq((delPos, 1, Some(2L), Nil),
+      (delEq, 2, Some(2L), Seq(1))), _ => "AVRO")
+    val listPath = metaDir.resolve("snap-97.avro")
+    writeList(listPath, 97L, Seq((mData, 0, 1L, 1L), (mDel, 1, 2L, 2L)))
+    val metaPath = v2Metadata(metaDir, root, listPath, 97L,
+      """{"id":1,"name":"id","required":false,"type":"int"},
+        |{"id":2,"name":"v","required":false,"type":"string"}"""
+        .stripMargin.replaceAll("\n", ""), 2)
+    IcebergImport.read(spark, metaPath).orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq shouldBe
+      Seq((1, "a1"), (2, "a2"), (4, "a4"))
+  }
+
+  test("id-less parquet columns bind by name ignoring case, as Spark's " +
+    "resolver does: a data file's `ID` reads as the schema's `id`, and " +
+    "an equality delete keyed `ID` applies") {
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("ice-case")
+    val data = dataDir.resolve("d.parquet")
+    writeOneParquet(Seq((1, "a"), (2, "b"), (3, "c")).toDF("ID", "V"), data)
+    val del = dataDir.resolve("eq-del.parquet")
+    writeOneParquet(Seq(2).toDF("ID"), del)
+    val fields =
+      """{"id":1,"name":"id","required":false,"type":"int"},
+        |{"id":2,"name":"v","required":false,"type":"string"}"""
+        .stripMargin.replaceAll("\n", "")
+    IcebergImport.read(spark, tableOf("ice-case-t", "PARQUET", Seq(data),
+      Seq(del), Seq(1), fields, 2), None).orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq shouldBe
+      Seq((1, "a"), (3, "c"))
+  }
 }
 
 /** Hand-written spec-text manifest layouts, shared with the other

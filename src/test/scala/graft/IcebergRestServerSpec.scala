@@ -1126,7 +1126,7 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
     */
   private def stageEqDeleteCommit(scratch: java.nio.file.Path, snapId: Long,
       dataFiles: Seq[java.nio.file.Path], eqFile: java.nio.file.Path,
-      eqIds: Seq[Int]): java.nio.file.Path = {
+      eqIds: Seq[Int], delFormat: String = "PARQUET"): java.nio.file.Path = {
     def writeManifest(name: String, entries: Seq[(java.nio.file.Path, Int, Option[Seq[Int]])])
         : java.nio.file.Path = {
       val m = scratch.resolve(name)
@@ -1139,7 +1139,7 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
         val df = new GenericData.Record(dfS)
         df.put("content", content)
         df.put("file_path", p.toUri.toString)
-        df.put("file_format", "PARQUET")
+        df.put("file_format", if (content == 2) delFormat else "PARQUET")
         df.put("partition",
           new GenericData.Record(dfS.getField("partition").schema()))
         df.put("record_count", 1L)
@@ -1879,6 +1879,8 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
       c0 shouldBe 200
       staged.has("metadata-location") shouldBe false // staged, not committed
       val sm = staged.get("metadata")
+      // a version the spec defines, never the server's 0 (auto)
+      Seq(1, 2, 3) should contain (sm.get("format-version").asInt())
       sm.get("current-snapshot-id").asLong() shouldBe -1L
       // the catalog is untouched: the table does not exist yet
       get(s"/v1/namespaces/${enc("main", "db")}/tables/c", srv)._1 shouldBe 404
@@ -2020,6 +2022,94 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
         s"/v1/namespaces/${enc("main", "db")}/tables/m", bodyU, srv)
       cU shouldBe 400
       eU.get("error").get("message").asText() should include ("field id")
+    } finally srv.close()
+  }
+
+  test("writable server: ORC and AVRO equality deletes land as graft " +
+    "tombstones like parquet ones; posted files under a directory name a " +
+    "URI quotes (an engine's URL-escaped partition value) register and " +
+    "read") {
+    import spark.implicits._
+    sql("CREATE NAMESPACE g.restmorf")
+    val root = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.catalog.g.root"), "restmorf")
+    val srv = IcebergRestServer.start(GraftRepo.open(root),
+      Files.createTempDirectory("graft-restmorf-exports"), Some(spark),
+      writable = true)
+    val scratch = Files.createTempDirectory("rest-morf-scratch")
+    try {
+      sql("CREATE NAMESPACE g.restmorf.main.db")
+      sql("CREATE TABLE g.restmorf.main.db.m (id INT, v STRING)")
+      sql("INSERT INTO g.restmorf.main.db.m VALUES (1,'a'), (2,'b'), (3,'c')")
+      val esc = "t=2024-06-01 07%3A08"
+      def dataDirOf(meta: JsonNode) = java.nio.file.Paths.get(URI.create(
+        meta.get("properties").get("write.data.path").asText() + "/"))
+        .resolve(esc)
+      def basePaths(load: JsonNode) = graft.versioned.IcebergImport.plan(
+        java.nio.file.Paths.get(load.get("metadata-location").asText()))
+        .dataPaths.map(java.nio.file.Paths.get(_))
+      // a zero-copy append under `esc`: its footer is read in place
+      locally {
+        val (_, load) = get(s"/v1/namespaces/${enc("main", "db")}/tables/m", srv)
+        val f = dataDirOf(load.get("metadata")).resolve("w4.parquet")
+        writeOneParquet(Seq((4, "d")).toDF("id", "v"), f)
+        val (c, e) = send("POST",
+          s"/v1/namespaces/${enc("main", "db")}/tables/m",
+          commitBody(load.get("metadata"), 7510L,
+            stageWriterCommit(scratch, 7510L, basePaths(load) :+ f)), srv)
+        withClue(e.toString) { c shouldBe 200 }
+      }
+      // one equality delete on `id`, written by `write` in `format`
+      def post(snapId: Long, format: String)(
+          write: (java.nio.file.Path, Int) => Unit): Unit = {
+        val (_, load) = get(s"/v1/namespaces/${enc("main", "db")}/tables/m", srv)
+        val meta = load.get("metadata")
+        val idFieldId = {
+          val it = meta.get("schemas").elements().next().get("fields").elements()
+          Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+            .find(_.get("name").asText() == "id").get.get("id").asInt()
+        }
+        val del = dataDirOf(meta)
+          .resolve(s"eq-del-$snapId.${format.toLowerCase}")
+        Files.createDirectories(del.getParent)
+        write(del, idFieldId)
+        val body = commitBody(meta, snapId, stageEqDeleteCommit(scratch,
+          snapId, basePaths(load), del, Seq(idFieldId), delFormat = format))
+          .replace("\"operation\":\"append\"", "\"operation\":\"delete\"")
+        val (c, e) = send("POST",
+          s"/v1/namespaces/${enc("main", "db")}/tables/m", body, srv)
+        withClue(e.toString) { c shouldBe 200 }
+      }
+      // ORC as Spark writes it: id-less, bound by the served name
+      post(7511L, "ORC") { (del, _) =>
+        import scala.jdk.CollectionConverters._
+        val tmp = Files.createTempDirectory("rest-orc-eq")
+        Seq(2).toDF("id").coalesce(1).write.mode("overwrite").orc(tmp.toString)
+        Files.move(Files.list(tmp).iterator().asScala.find(p =>
+          p.getFileName.toString.startsWith("part-") &&
+            p.getFileName.toString.endsWith(".orc")).get, del)
+      }
+      // AVRO as iceberg-avro writes it: the field id stamped
+      post(7512L, "AVRO") { (del, idFieldId) =>
+        val sch = new Schema.Parser().parse(
+          s"""{"type":"record","name":"d","fields":[
+             |{"name":"id","type":"int","field-id":$idFieldId}]}"""
+            .stripMargin.replaceAll("\n", ""))
+        val w = new DataFileWriter[GenericRecord](
+          new GenericDatumWriter[GenericRecord](sch))
+        w.create(sch, del.toFile)
+        try {
+          val r = new GenericData.Record(sch)
+          r.put("id", 3)
+          w.append(r)
+        } finally w.close()
+      }
+      sql("SELECT id, v FROM g.restmorf.main.db.m")
+        .collect().map(r => (r.getInt(0), r.getString(1))).sorted.toSeq shouldBe
+        Seq((1, "a"), (4, "d"))
+      val g = GraftRepo.open(root)
+      graft.versioned.Tombstones.of(
+        g.snapshot(g.resolve("main").tables("db/m"))).size shouldBe 2
     } finally srv.close()
   }
 
@@ -2298,6 +2388,44 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
       intercept[Exception] {
         sql("SELECT * FROM g.restv.main.db.w").collect()
       }
+    } finally srv.close()
+  }
+
+  test("views over REST: a view commit parses its updates with the table " +
+    "parser — engine-managed graft.* property keys refuse on a view too") {
+    sql("CREATE NAMESPACE g.restvp")
+    val root = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.catalog.g.root"), "restvp")
+    val srv = IcebergRestServer.start(GraftRepo.open(root),
+      Files.createTempDirectory("graft-restvp-exports"), Some(spark),
+      writable = true)
+    try {
+      sql("CREATE NAMESPACE g.restvp.main.db")
+      send("POST", s"/v1/namespaces/${enc("main", "db")}/views",
+        """{"name":"w","schema":{"type":"struct","schema-id":0,"fields":[
+          |{"id":1,"name":"one","required":false,"type":"int"}]},
+          |"view-version":{"version-id":1,"timestamp-ms":1700000000000,
+          |"schema-id":0,"summary":{},
+          |"representations":[{"type":"sql","sql":"SELECT 1 AS one",
+          |"dialect":"spark"}],
+          |"default-namespace":["main","db"]}}"""
+          .stripMargin.replaceAll("\n", ""), srv)._1 shouldBe 200
+      def update(updates: String): (Int, JsonNode) =
+        send("POST", s"/v1/namespaces/${enc("main", "db")}/views/w",
+          s"""{"requirements":[],"updates":[$updates]}""", srv)
+      val (cG, eG) = update(
+        """{"action":"set-properties","updates":{"graft.x":"1"}}""")
+      cG shouldBe 400
+      eG.get("error").get("message").asText() should include ("engine-managed")
+      update("""{"action":"remove-properties","removals":["graft.x"]}""")
+        ._1 shouldBe 400
+      // table-only updates refuse on a view
+      update("""{"action":"add-sort-order","sort-order":{"order-id":0,
+        |"fields":[]}}""".stripMargin.replaceAll("\n", ""))._1 shouldBe 400
+      val (cP, eP) = update(
+        """{"action":"set-properties","updates":{"owner":"v"}}""")
+      withClue(eP.toString) { cP shouldBe 200 }
+      eP.get("metadata").get("properties").get("owner").asText() shouldBe "v"
     } finally srv.close()
   }
 

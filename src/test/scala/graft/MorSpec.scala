@@ -200,6 +200,31 @@ class MorSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
       (1 to 20).filterNot(i => i % 4 == 1 && i > 5)
   }
 
+  test("MoR table identity-partitioned on a microsecond TIMESTAMP: files " +
+    "under hive-escaped partition directories read, delete and export") {
+    val r = setup()
+    // blooms route the commit's stats through a scan of the new files
+    sql(s"CREATE TABLE g.$r.main.db.ts (id INT, t TIMESTAMP) " +
+      "PARTITIONED BY (t) " +
+      "TBLPROPERTIES('graft.delete.mode'='merge-on-read', " +
+      "'graft.bloom.columns'='id')")
+    // the directory value `2024-06-01 07%3A08%3A09.00012` carries a
+    // space and escaped colons: its location URI is percent-encoded
+    sql(s"INSERT INTO g.$r.main.db.ts VALUES " +
+      "(1, TIMESTAMP'2024-06-01 07:08:09.000120'), " +
+      "(2, TIMESTAMP'2024-06-01 07:08:09.000120'), " +
+      "(3, TIMESTAMP'2024-06-02 10:11:12.345678')")
+    ids(s"SELECT id FROM g.$r.main.db.ts WHERE id = 1") shouldBe Seq(1)
+    sql(s"DELETE FROM g.$r.main.db.ts WHERE id = 2")
+    Tombstones.of(repoOf(r).snapshot(
+      repoOf(r).headCommit("main").tables("db/ts"))) should have size 1
+    ids(s"SELECT id FROM g.$r.main.db.ts ORDER BY id") shouldBe Seq(1, 3)
+    val dest = Files.createTempDirectory("mor-ts-export")
+    sql(s"CALL g.system.iceberg_export('$r', 'main', 'db.ts', '$dest')")
+    graft.versioned.IcebergImport.read(spark, dest.toString, None)
+      .select("id").collect().map(_.getInt(0)).sorted.toSeq shouldBe Seq(1, 3)
+  }
+
   test("CoW rewrites conflict with concurrent MoR deletes (signature check)") {
     import graft.catalog.GraftCoWWrite
     import graft.versioned.MergeConflictException
